@@ -21,56 +21,3 @@ def _doc_ids(spark, sf_dir, modulo=50):
     return load_table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % modulo == 0
     )
-
-
-#: libwebp-authored lossy fixtures for the mm_lossy_webp_rgba_sums
-#: golden row (base64; oracle values pinned from libwebp's own
-#: decode at authoring time — see queries_staged_r12.py)
-LOSSY_WEBP_FIXTURES = {
-    "blobs_64x48_q75": (
-        "UklGRhIBAABXRUJQVlA4IAYBAADwCACdASpAADAAPnUsj0e8oqEhOr5jkA6JbACsOUFR"
-        "Xh59580Cv/3fhbDYgpPAtHmpC8h0sofioOX10CN0mFL8RWviwB6Hm55ej1JfnzlSAAD+"
-        "7gPfRvh1tGyRaxBpPRx04GSrhO9D8XiWmeKZslh8yxAlpkdmOYP20U1caVrve1GgD5TX"
-        "BYnK5Zhg1si9vAdsJMuPUMa7CKF2R9aSNCjnXzYSFf3AEc2F/+XXGUjOYhUYxMD4U06y"
-        "ea1jXT2A/P5fhbTJ/I2gqtNAXB8lXdLY4n27mCjfOcRndazaV/4+LNLuu3467+j5Yxb/"
-        "AUALVMHjRzUyDLyYAH+qr1O6Z2l+XQywAAAA"
-    ),
-    "grad_16x16_q95": (
-        "UklGRjwAAABXRUJQVlA4IDAAAADwAQCdASoQABAAAIAIJaQAAueJmapgMoAA/v//Ayln"
-        "4++cHrdBblUTyOvzIjxkAAA="
-    ),
-    "noise_alpha_37x53_q60": (
-        "UklGRjYGAABXRUJQVlA4WAoAAAAQAAAAJAAANAAAQUxQSBcAAAABmQpE9D9ANmmTtP8/"
-        "3r0QMQHJmsQFAwBWUDgg+AUAAJAaAJ0BKiUANQA+qUKYSaYjoiEwDqjAFQlsAJ0yhGVf"
-        "ME6N6QfUzYZxtAX/gPUB/leUA9wHmA/Yj9Vfdz/2/qA/y3qAf2v0mfUA/sP+99hr9QPS"
-        "6/8P+0+BL+//9T9yPbI9QD0AM3HvH783sSPYcH06f47wBlA/WP9f6AcXv9d8Ab6P/avO"
-        "76qP73/3v8/5jvzf+3/s78Bn6v+iJ6qP109l79mxvlFDjMRu2BYqaJ9el29cOP0tnsEs"
-        "wtK9Te5br4rW59dHkFoWTAdeepGxMI64INBN2gJQntJ7gW5gAOJZUELCs1Iq5qraf0mM"
-        "TYG5TO76IO23WrHi3rTnjmLtwIYrK8PutZfPLaQZ+YtSQuUMzkr61jINM9P01nldLy10"
-        "nyKSZxmENN8eXOIuFm6shOHX5rGv06eif/NlwHGvDI0g6og9if+CaF0IdVyhKI3mS7cZ"
-        "ju54cdcI5cPA/ma88+lGu4qb+NH2olHi1ArARbTNx0y4oRk6wK5uCR7ZM0dVSZfpsp5v"
-        "ESsMVbfz7EA5OkjFEi7VQMiFzLZ4rW65MUec4o1l3PM5Ur6HRAUydoq6vLiqb1xEn0b+"
-        "iSRA1kruGdWnPyfBp/bZSY4MXbB2Ck6itxhmWlMg/8t8xWTMRxqhYEJQKwQ37N1Pyfde"
-        "nsLr9ELf9H6LErKm+0MDK8hEER/fiPMu5KvtHapn6iBfLrRt9mJPksqurQ0qa/TxT9AC"
-        "YdzzOxK0MTq/xhmiwSSdUpkEBEBKV+DpuKpt63yXTEwxkULnrb+OXENMlX/4MDIrMExI"
-        "7oVwOWhyqW3hQWfj2fbcWkTDiwE4aHAMaVPvPvqcYhqq7g8OT+CaK3bOmpWfomWqqiLa"
-        "q/xlvzC37SfiekQmc/UyuvGl5/HBuUI5X30UYk7yB+KMHJcPawroQPDz1xTM5rtnXqrx"
-        "viUmSBC8SHXQoRmZzTFZfn8Z+PHskXgFhLZ4mSUKpwaT5+oWCYA+QjApaFzeU0PXKhSD"
-        "hLACCP0TOJCDwbTISEGjHrSaRcGY1dUXZnp1d65XQWrfQy/v9hNMd3pta0MsOPl9iL/b"
-        "2Xjbg2wR+pEifGOMdgHIjidws72bgK3L1QsSvWOECsnWBgDO68KzklQUtlt+HgtLsC5t"
-        "EJiqPW3EUvz8pax/tfBZljuZ7zqUdSxLf+ua0t+jm2sn9uK5Gf8My/9ppYL1ylN/B0WU"
-        "A3p5lDw2MQGlZOgpPJMQ/aPlt+IKCP+Mpw5IaAYK6ECyOipqO2G4qVo1B3D6+oOewBqI"
-        "xW1bed1KFby45H9smKWRTtZ5w/53UrY1TnSJFLh3KOL5zQCdCQ+CGF175+VbWiPGeTN5"
-        "s+/Iz28oq2hQBGtSt/JD8CCTTHZqiYME+fyhlkz48gkssa3wWFuNqbPJvYEtmOhoP2ME"
-        "240WTcHvAsa/EBZbRmL3XVFafel/pVlzr+GfbWE+mUoxGVBbzZVShvlOByqoUb2XxuKC"
-        "F6gOxLULfo4LfKkRiNUset0XJgXbDr0vCE2XsATVM10Wf771V3pJf+hwErK3aKpMlLRJ"
-        "QR6p3VdukoyKCdJWMEFmq1j2jqF4gXBfItgDXCkTQAuj4sUvPDwxe+LDIZOkjySk77hT"
-        "xG8iZiH5snvGte3SYvzpPVDpaHskXj9yFEF0vScaMLvc8C7SVc7HwUN53ub98OsZxaig"
-        "5NVADrSe8LPRnvK3Gdl1gC4LOc6lLkvji7fLIzDnvZ0v9LHKNMezr+p7wp9+WxIu8fPT"
-        "JSYHkODkrKYrIpt6IrYDcPd0D+5BiV/18BQfiZ7q31gBuaKPvh9pSZ0HFpQuLu28+pYP"
-        "zw040LM3X4kYqhtE1wkyveCUUxGDrwVrHibsBSwfnZppKBYkIjvgSaCcuOTDF0UCuinQ"
-        "Bqycv0a/9T18Gts6w4yPofW4TUkgasJkA8OEwuiwP90rImrfh++i/APGcNJCO8Ts4jEf"
-        "irN6MOvt4j9/9+HmaAsO4msDL83KjGUjM4H/QQEXb9ik5YwtL+/vj8r3448CTk3/awDY"
-        "gKaMVrQK64HU331lqKAAAAA="
-    ),
-}

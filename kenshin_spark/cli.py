@@ -10,6 +10,7 @@ root. Usage::
     python -m kenshin_spark.cli search --root ... --pattern '^sys\\.'
     python -m kenshin_spark.cli delete --root ... --metric sys.cpu.old
     python -m kenshin_spark.cli expire --root ... --now 1700000000
+    python -m kenshin_spark.cli migrate --root ...   # adopt a legacy tree
 """
 
 from __future__ import annotations
@@ -25,13 +26,29 @@ from kenshin_spark.session import get_spark
 from kenshin_spark.store import ParquetTieredStore
 
 
-def _store(args) -> ParquetTieredStore:
+def _spark_schema(args):
     spark = get_spark("kenshin-cli", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     schema = Schema.from_strings(
         "cli", ".*", args.retentions, xff=args.xff, agg_method=args.agg
     )
+    return spark, schema
+
+
+def _store(args) -> ParquetTieredStore:
+    spark, schema = _spark_schema(args)
     return ParquetTieredStore(spark, schema, args.root)
+
+
+def cmd_migrate(args) -> None:
+    """Adopt a tree written outside the manifest log (the root every
+    other verb refuses to open) into one commit, then report it."""
+    spark, schema = _spark_schema(args)
+    store = ParquetTieredStore.migrate(spark, schema, args.root)
+    print(json.dumps({
+        "committed_seq": store.commit.epoch(),
+        "files": len(store.commit.live_files()),
+    }))
 
 
 def cmd_info(args) -> None:
@@ -142,7 +159,7 @@ def cmd_validate(args) -> None:
 
 
 def cmd_recover(args) -> None:
-    """Crash recovery after an interrupted compact/delete swap: restore
+    """Crash recovery after an interrupted whole-directory swap: restore
     any .bak whose live directory is missing (the change-schema .bak
     dance, bin/kenshin-change-schema.py:103-112). Run on store open
     after an unclean shutdown."""
@@ -235,21 +252,16 @@ def cmd_gc(args) -> None:
 def cmd_vacuum(args) -> None:
     """Physically reclaim manifest-retired files older than --grace
     seconds (tombstone-aged — the VACUUM retention contract: a scan
-    must finish within the grace window of the snapshot it planned).
-    No-op and says so on a listing-planned (seqlock) store."""
+    must finish within the grace window of the snapshot it planned)."""
     store = _store(args)
-    if not store.commit.plans_from_manifest:
-        print(json.dumps({"backend": "seqlock", "removed": []}))
-        return
     removed = store.vacuum(grace_s=args.grace)
     print(json.dumps({"backend": "manifest", "removed": removed}))
 
 
 def cmd_history(args) -> None:
-    """Print the retained commit log (manifest stores) newest-first,
-    one JSON object per line: seq, ts, op, checkpoint, adds/drops
-    counts — DESCRIBE HISTORY for the store. Empty under a
-    listing-planned (seqlock) backend."""
+    """Print the retained commit log newest-first, one JSON object per
+    line: seq, ts, op, checkpoint, adds/drops counts — DESCRIBE HISTORY
+    for the store."""
     store = _store(args)
     for rec in store.history(limit=args.limit):
         print(json.dumps(rec, sort_keys=True))
@@ -390,6 +402,7 @@ def main(argv: list[str] | None = None) -> int:
     e = sub.add_parser("expire")
     e.add_argument("--now", type=int, default=None)
     sub.add_parser("recover")
+    sub.add_parser("migrate")
     bk = sub.add_parser("backup")
     bk.add_argument("--dest", required=True)
     ex = sub.add_parser("explain")
@@ -459,6 +472,7 @@ def main(argv: list[str] | None = None) -> int:
         "delete": cmd_delete,
         "expire": cmd_expire,
         "recover": cmd_recover,
+        "migrate": cmd_migrate,
         "backup": cmd_backup,
         "explain": cmd_explain,
         "change-schema": cmd_change_schema,

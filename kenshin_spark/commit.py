@@ -1,58 +1,34 @@
-"""The store's commit surface as a narrow, swappable protocol.
+"""The store's commit protocol: a manifest log on plain parquet.
 
-``ParquetTieredStore`` needs exactly three primitives from whatever
-layer makes its file layout transactional (VERDICT r8 "What's missing"
-#1 names extracting them as the seam to a snapshotting table format):
+``ParquetTieredStore`` makes its file layout transactional with one
+mechanism, :class:`ManifestCommitProtocol`. Every write stages its
+files invisibly, then one atomic publication of a commit record makes
+them live; readers plan every scan from the committed file list, never
+from a directory listing. A read is therefore one plain call against an
+immutable snapshot: no validation loop, no retry budget, no
+missing-file tolerance, and no destructive window for a reader to race.
 
-1. ``guard_transition()`` — a critical section around a DESTRUCTIVE
-   file transition (day-dir swap, tier swap, expiry delete), so readers
-   can detect that file listings moved under them;
-2. ``epoch()`` — a cheap, monotonic version readers validate against;
-3. ``consistent_read(fn)`` — run a driver-side read so its result is
-   never a torn view of an in-flight transition.
+The log has the shape of a transactional table format's, so each piece
+maps onto the native feature of one if the store ever moves to Delta
+Lake or Apache Iceberg:
 
-Plus one piece of session plumbing: ``reader_conf()`` — the SQL confs a
-dedicated serving-reader session needs under this protocol.
-
-Backends
---------
-
-:class:`SeqlockCommitProtocol` (default, plain parquet) is the
-hand-built equivalent the engine has load-tested at 1M points / 8
-socket clients: an epoch sidecar flipped odd/even around transitions
-(a filesystem seqlock), bounded validate-and-retry reads, and
-``ignoreMissingFiles`` on the serving reader so a tier-wide scan
-overlapping a swap skips the vanished file instead of starving.
-
-:class:`SnapshotCommitProtocol` is the adapter shape for a
-transactional table format (Delta Lake / Apache Iceberg), which gives
-every primitive natively — the mapping, so the swap is mechanical when
-a jar is available (none ships in this sandbox; the class is exercised
-against an injected snapshot provider in tests):
-
-=========================  ==========================================
-seqlock primitive          table-format native feature
-=========================  ==========================================
-``guard_transition()``     no-op — commits are atomic in the
-                           transaction log (Delta: optimistic commit
-                           of a new table version; Iceberg: atomic
-                           metadata-pointer swap to a new snapshot)
-``epoch()``                Delta: table version; Iceberg: snapshot id
-``consistent_read(fn)``    plain ``fn()`` — readers plan from the log
-                           (Delta) / manifests (Iceberg), never the
-                           live directory, so snapshot isolation is
-                           the default; pinned reads are time travel
-                           (``VERSION AS OF`` / ``snapshot-id``)
-``reader_conf()``          empty — no ``ignoreMissingFiles``, no
-                           reader-session clone required
-``_seq.json`` + CAS claim  Delta: the commit version itself;
-                           Iceberg: sequence number
-``.bak`` swap recovery     obsolete — the log is the source of truth
-mor log + ``compact()``    Delta: MERGE + OPTIMIZE (deletion vectors);
-                           Iceberg: v2 merge-on-read + rewrite_data_files
-``changed_between`` CDC    Delta: Change Data Feed ``table_changes``;
-                           Iceberg: incremental snapshot reads
-=========================  ==========================================
+===========================  ========================================
+manifest-log mechanism       table-format native feature
+===========================  ========================================
+``epoch()``                  Delta: table version; Iceberg: snapshot id
+``txn()`` / ``commit_txn``   Delta: optimistic commit of a new table
+                             version; Iceberg: atomic metadata-pointer
+                             swap to a new snapshot
+``live_files(seq=)``         pinned reads are time travel
+                             (``VERSION AS OF`` / ``snapshot-id``)
+tombstones + ``vacuum``      Delta: RemoveFile + VACUUM; Iceberg:
+                             expire_snapshots
+mor log + ``compact()``      Delta: MERGE + OPTIMIZE (deletion vectors);
+                             Iceberg: v2 merge-on-read +
+                             rewrite_data_files
+``changed_between`` CDC      Delta: Change Data Feed ``table_changes``;
+                             Iceberg: incremental snapshot reads
+===========================  ========================================
 
 Reference analog for the contract itself: the atomic whole-file update
 the native engine gets from its preallocated format
@@ -62,34 +38,9 @@ the native engine gets from its preallocated format
 from __future__ import annotations
 
 import json
-import logging
 import posixpath
 import time
-from abc import ABC, abstractmethod
 from contextlib import contextmanager
-from typing import Callable
-
-_LOG = logging.getLogger(__name__)
-
-
-def _is_stale_read(exc: Exception) -> bool:
-    """A scan that listed files before a concurrent swap/expiry deleted
-    them — Spark surfaces it as FAILED_READ_FILE.FILE_NOT_EXIST (or a
-    raw FileNotFoundException from the committer), and a vanished
-    directory at planning time as [PATH_NOT_FOUND]. These file-level
-    error classes are the ONLY errors ``consistent_read`` retries — a
-    broad substring like 'does not exist' would also match permanent
-    AnalysisExceptions (missing table/view/column, a genuinely wrong
-    path) and burn the whole retry budget on them (ADVICE r8)."""
-    text = f"{type(exc).__name__}: {exc}"
-    return any(
-        marker in text
-        for marker in (
-            "FAILED_READ_FILE",
-            "FileNotFoundException",
-            "PATH_NOT_FOUND",
-        )
-    )
 
 
 def _is_not_found(exc: Exception) -> bool:
@@ -97,7 +48,7 @@ def _is_not_found(exc: Exception) -> bool:
     translate to "not written yet". Local fast path raises
     FileNotFoundError; the py4j path surfaces Hadoop's
     FileNotFoundException inside a Py4JJavaError, so match on the
-    rendered text the same way ``_is_stale_read`` does."""
+    rendered text."""
     if isinstance(exc, (FileNotFoundError, NotADirectoryError)):
         return True
     text = f"{type(exc).__name__}: {exc}"
@@ -106,216 +57,6 @@ def _is_not_found(exc: Exception) -> bool:
         or "PATH_NOT_FOUND" in text
         or "No such file" in text
     )
-
-
-class CommitProtocol(ABC):
-    """What a store needs from its transactional layer — see module
-    docstring. Implementations must be cheap to call on every read."""
-
-    #: observability counters (S8 self-metrics shape); implementations
-    #: share the key set so dashboards don't care which backend runs
-    stats: dict
-
-    #: True when readers must plan scans from the protocol's committed
-    #: file list (``live_files``) instead of directory listings — the
-    #: store gates every read and write shape on this one flag
-    plans_from_manifest: bool = False
-
-    @abstractmethod
-    def epoch(self) -> int:
-        """Monotonic version readers validate against."""
-
-    @abstractmethod
-    def guard_transition(self):
-        """Context manager around a destructive file transition."""
-
-    @abstractmethod
-    def consistent_read(
-        self,
-        fn: Callable,
-        retries: int = 10,
-        backoff_s: float = 0.05,
-        deadline_s: float = 30.0,
-        flags: dict | None = None,
-    ):
-        """Run driver-side read ``fn`` (re-invoked from scratch on
-        retry) such that the result is never a torn view. ``flags``,
-        when a dict is passed, is filled in-place with per-READ
-        degradation markers (``degraded``/``epoch_races``/
-        ``stale_retries``) — the per-request sibling of the process-wide
-        ``stats`` counters, so a serving layer can propagate "this
-        response may reflect a mid-swap listing" to the caller
-        (ADVICE r8: a warning log alone leaves the client blind)."""
-
-    def reader_conf(self) -> dict[str, str]:
-        """SQL confs a dedicated serving-reader session needs."""
-        return {}
-
-
-class SeqlockCommitProtocol(CommitProtocol):
-    """Plain-parquet backend: epoch sidecar flipped odd/even around
-    destructive transitions; validated, bounded-retry reads.
-
-    Degradation order under sustained swap fire (a long maintenance
-    pass swapping day after day, where epoch movement overlaps almost
-    every scan): (1) a clean read at a stable even epoch — the
-    guarantee; (2) after ``retries`` epoch-moved validation failures,
-    the first ERROR-FREE read even if the epoch moved during it —
-    availability over the microsecond mid-listing gap (and on the mor
-    append log a completed scan is prefix-correct anyway); (3)
-    ``retries`` consecutive stale-read failures → re-raise. Budgets are
-    COUNT-based, never wall-based: a slow scan queued behind
-    maintenance must not burn the retry budget before its first stale
-    failure. ``deadline_s`` bounds only the in-flight wait spin, so a
-    reader polling a store whose writer crashed mid-guard (epoch stuck
-    odd) degrades to plain reads instead of hanging."""
-
-    def __init__(self, fs, epoch_path: str, label: str = ""):
-        self.fs = fs
-        self.epoch_path = epoch_path
-        self.label = label or epoch_path
-        self.stats = {
-            "inflight_waits": 0,
-            "stale_retries": 0,
-            "epoch_races": 0,
-            "degraded_returns": 0,
-        }
-        self._depth = 0  # in-process nesting (compact() -> _compact_day())
-
-    def epoch(self) -> int:
-        try:
-            return int(self.fs.read_text(self.epoch_path))
-        except Exception:
-            return 0
-
-    @contextmanager
-    def guard_transition(self):
-        """Bump the epoch to odd for the duration of a destructive file
-        transition; back to even after. Guards ONLY the rename/delete
-        window, never the (non-destructive, underscore-staged) tmp
-        writes — so readers spin for milliseconds, not for the length
-        of a compaction job."""
-        if self._depth:
-            self._depth += 1
-            try:
-                yield
-            finally:
-                self._depth -= 1
-            return
-        e = self.epoch()
-        if e % 2:  # crash debris: a guard death left it odd; re-even it
-            e += 1
-        self._depth = 1
-        self.fs.write_text_atomic(self.epoch_path, str(e + 1))
-        try:
-            yield
-        finally:
-            self._depth = 0
-            self.fs.write_text_atomic(self.epoch_path, str(e + 2))
-
-    def consistent_read(
-        self,
-        fn: Callable,
-        retries: int = 10,
-        backoff_s: float = 0.05,
-        deadline_s: float = 30.0,
-        flags: dict | None = None,
-    ):
-        wait_deadline = time.monotonic() + deadline_s
-        validations = 0
-        stale = 0
-        waits = 0
-        stats = self.stats
-        while True:
-            e0 = self.epoch()
-            if e0 % 2 and time.monotonic() < wait_deadline:
-                # transition in flight — wait out the renames
-                waits += 1
-                stats["inflight_waits"] += 1
-                time.sleep(min(backoff_s * waits, 0.5))
-                continue
-            try:
-                out = fn()
-            except Exception as exc:
-                if not _is_stale_read(exc):
-                    raise
-                stale += 1
-                stats["stale_retries"] += 1
-                if stale >= retries:
-                    raise
-                time.sleep(min(backoff_s * stale, 0.5))
-                continue
-            if e0 % 2 == 0 and self.epoch() == e0:
-                return out
-            validations += 1
-            stats["epoch_races"] += 1
-            if validations >= retries:
-                stats["degraded_returns"] += 1
-                # error-free but epoch moved — see degradation order in
-                # the class docstring. Don't degrade silently (ADVICE
-                # r8): the serving reader runs with
-                # ignoreMissingFiles=true, so a degraded return can
-                # omit day partitions deleted mid-scan and the client
-                # would otherwise see an ordinary response with only a
-                # process-local counter as evidence.
-                _LOG.warning(
-                    "consistent_read degraded return after %d epoch "
-                    "races (store=%s): result may reflect a mid-swap "
-                    "listing; degraded_returns=%d",
-                    validations,
-                    self.label,
-                    stats["degraded_returns"],
-                )
-                if flags is not None:
-                    flags["degraded"] = True
-                    flags["epoch_races"] = validations
-                    flags["stale_retries"] = stale
-                return out
-
-    def reader_conf(self) -> dict[str, str]:
-        # a tier-wide scan overlapping a day-swap must skip the
-        # vanished file instead of failing the whole job; exactness
-        # still comes from the epoch validation above
-        return {"spark.sql.files.ignoreMissingFiles": "true"}
-
-
-class SnapshotCommitProtocol(CommitProtocol):
-    """Table-format backend (Delta/Iceberg): every primitive is native,
-    so this adapter is mostly the ABSENCE of machinery — see the module
-    docstring mapping. ``snapshot_fn`` supplies the current table
-    version (Delta: ``DESCRIBE HISTORY`` latest version / the
-    DeltaLog's snapshot version; Iceberg: ``snapshot_id()``); tests
-    inject a counter, a real deployment injects the format's API. No
-    table-format jar ships in this sandbox, so this class is the
-    documented, unit-tested seam — not dead code: everything above it
-    (serving, maintenance, CDC) already talks to the protocol, and a
-    store constructed with this backend skips the sidecar writes
-    entirely."""
-
-    def __init__(self, snapshot_fn: Callable[[], int]):
-        self.snapshot_fn = snapshot_fn
-        self.stats = {
-            "inflight_waits": 0,
-            "stale_retries": 0,
-            "epoch_races": 0,
-            "degraded_returns": 0,
-        }
-
-    def epoch(self) -> int:
-        return int(self.snapshot_fn())
-
-    @contextmanager
-    def guard_transition(self):
-        # commits are atomic in the transaction log; readers planning
-        # from the log can never observe a half-applied transition
-        yield
-
-    def consistent_read(self, fn: Callable, retries: int = 10,
-                        backoff_s: float = 0.05, deadline_s: float = 30.0,
-                        flags: dict | None = None):
-        # snapshot isolation is the default read mode — one shot, no
-        # validation loop, no retry budget, and never a degraded return
-        return fn()
 
 
 class ManifestConflict(RuntimeError):
@@ -371,7 +112,7 @@ class ManifestTxn:
         self.clears.append(rel)
 
 
-class ManifestCommitProtocol(CommitProtocol):
+class ManifestCommitProtocol:
     """Snapshot isolation on plain parquet via a manifest log — the
     local stand-in for a Delta/Iceberg commit log (VERDICT r9 "What's
     missing" #1), built from the store's own atomic-rename sidecar
@@ -387,21 +128,13 @@ class ManifestCommitProtocol(CommitProtocol):
     Readers plan every scan from ``live_files()`` — never a directory
     listing — so a maintenance pass can rewrite, retire, or logically
     delete files while scans run and no reader ever observes a missing
-    file or a half-applied transition. Consequences, each the inverse
-    of a seqlock cost:
-
-    - ``consistent_read`` is ONE plain call — no validation loop, no
-      retry budget, no degraded-return class (the read planned from an
-      immutable snapshot);
-    - ``reader_conf()`` is empty — ``ignoreMissingFiles`` existed only
-      to survive listings racing renames, and readers don't list;
-    - ``guard_transition()`` is a no-op — the destructive window is
-      gone because nothing destructive happens at commit time: writers
-      stage files invisibly, the manifest flip is atomic, and
-      superseded files are retired LOGICALLY, then physically reclaimed
-      by ``ParquetTieredStore.vacuum`` after a grace period (the
-      VACUUM-retention contract every snapshotting format has: a scan
-      must finish within the grace window of the snapshot it planned).
+    file or a half-applied transition. Nothing destructive happens at
+    commit time: writers stage files invisibly, the manifest flip is
+    atomic, and superseded files are retired LOGICALLY, then physically
+    reclaimed by ``ParquetTieredStore.vacuum`` after a grace period
+    (the VACUUM-retention contract every snapshotting format has: a
+    scan must finish within the grace window of the snapshot it
+    planned).
 
     At 100 TB the log has Delta's ``_delta_log`` shape (since r11):
     commits between checkpoints write O(changed-files) DELTAS
@@ -413,10 +146,8 @@ class ManifestCommitProtocol(CommitProtocol):
     ``store.vacuum`` trims the log to the latest checkpoint + its
     tail (time travel ends there, like Delta's VACUUM). Single writer
     by design, like the reference daemon's one writeForever thread
-    (rurouni/writer.py) and the seqlock backend.
+    (rurouni/writer.py).
     """
-
-    plans_from_manifest = True
 
     #: a full snapshot (checkpoint) every N commits; the commits in
     #: between write O(changed-files) DELTAS — exactly Delta Lake's
@@ -435,12 +166,6 @@ class ManifestCommitProtocol(CommitProtocol):
         self.checkpoint_every = int(
             checkpoint_every or self.CHECKPOINT_EVERY
         )
-        self.stats = {
-            "inflight_waits": 0,
-            "stale_retries": 0,
-            "epoch_races": 0,
-            "degraded_returns": 0,
-        }
         self._cache: (
             tuple[int, dict[str, int], dict[str, float]] | None
         ) = None
@@ -745,21 +470,3 @@ class ManifestCommitProtocol(CommitProtocol):
             f"manifest commit under {self.dir}: lost 64 consecutive "
             "CAS races — writer storm or clock livelock"
         )
-
-    # -- the protocol surface -----------------------------------------
-
-    @contextmanager
-    def guard_transition(self):
-        # commits are an atomic pointer flip and mutations are staged
-        # invisibly first — there is no destructive window to guard
-        yield
-
-    def consistent_read(self, fn: Callable, retries: int = 10,
-                        backoff_s: float = 0.05, deadline_s: float = 30.0,
-                        flags: dict | None = None):
-        # snapshot isolation: the scan plans from an immutable committed
-        # file list — one shot, no validation, never a degraded return
-        return fn()
-
-    def reader_conf(self) -> dict[str, str]:
-        return {}

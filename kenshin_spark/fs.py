@@ -8,7 +8,9 @@ plain local path, a ``file:`` URI, ``hdfs://`` or ``s3a://`` all take the
 same code path; nothing touches ``os``/``shutil`` directly, which only
 ever worked on a single node.
 
-Commit protocol for directory swaps (``compact`` / ``delete_metrics``):
+Whole-directory swap (``swap``; the corpus pipeline's state tables use
+it, and ``recover_swap`` heals a store tier or catalog staged away by
+one):
 
     1. write the replacement to ``<live>.tmp``  (a normal Spark write)
     2. rename ``<live>``  → ``<live>.bak``
@@ -49,11 +51,11 @@ class HadoopFS:
         # own integrity (atomic tmp+rename of whole small files).
         self._fs.setWriteChecksum(False)
         self._fs.setVerifyChecksum(False)
-        # local-scheme fast path for the TINY metadata files (seqlock
-        # epoch, seq sidecar): each py4j call costs ~10 ms, so a
-        # tmp+rename through the JVM is ~50 ms — measured at 18 s of a
-        # 50 s maintenance pass (2 epoch writes x ~190 day-swaps) and
-        # 10 ms on every serving read. Python os.replace has IDENTICAL
+        # local-scheme fast path for the TINY metadata files (manifest
+        # records and pointer, seq sidecar): each py4j call costs ~10
+        # ms, so a tmp+rename through the JVM is ~50 ms — measured at
+        # 18 s of a 50 s maintenance pass and 10 ms on every serving
+        # read. Python os.replace has IDENTICAL
         # atomic-rename semantics on a local filesystem, so file:/bare
         # paths take it; hdfs:/s3a: keep the Hadoop API.
         scheme = self._fs.getUri().getScheme()
@@ -64,8 +66,7 @@ class HadoopFS:
 
     # -- predicates / listing ---------------------------------------------
     # Each py4j round trip costs ~10 ms; the metadata ops below run
-    # hundreds of times per maintenance pass (and per manifest-mode
-    # adopt), so file:/bare paths take the os equivalents with the SAME
+    # hundreds of times per maintenance pass (and per adopt), so file:/bare paths take the os equivalents with the SAME
     # observable semantics — measured at 2x the manifest backend's
     # whole writer wall in the r10 1M load capture. hdfs:/s3a: keep the
     # Hadoop API.

@@ -165,43 +165,24 @@ def change_schema(
     the new policy object; REBUILD builds at ``tmp_root`` then swaps it in
     with a ``.bak`` of the original (bin/kenshin-change-schema.py:115-125).
     """
-    # the re-opened store keeps the original's storage mode and commit
-    # backend (a manifest-backed store re-opened as seqlock would list
-    # directories and see retired files awaiting vacuum)
-    kwargs = {"mode": store.mode}
-    if store.commit.plans_from_manifest:
-        kwargs["commit_protocol"] = "manifest"
     action = diff_schema(store.schema, new_schema)
     if action in (NO_CHANGE, CHANGE_META):
         return SchemaChangeResult(
             action,
-            ParquetTieredStore(spark, new_schema, store.root, **kwargs),
+            ParquetTieredStore(spark, new_schema, store.root, mode=store.mode),
         )
     tmp_root = tmp_root or store.root + ".tmp"
-    rebuilt = rebuild_store(spark, store, new_schema, tmp_root, now)
+    rebuild_store(spark, store, new_schema, tmp_root, now)
     bak = store.root + ".bak"
     if os.path.exists(bak):
         raise FileExistsError(f"backup already exists: {bak}")
     os.rename(store.root, bak)
+    # the rebuilt tree carries its own manifest log, and its keys are
+    # root-relative, so the whole-root swap moves a valid log along —
+    # exactly the reference's .bak dance
+    # (bin/kenshin-change-schema.py:103-112)
     os.rename(tmp_root, store.root)
-    # the REBUILT tree was written by build_tiers_from_layered under its
-    # own (seqlock-default) store — a whole-root swap is outside the
-    # manifest log's history, exactly like the reference's .bak dance
-    # (bin/kenshin-change-schema.py:103-112). When the SOURCE store was
-    # manifest-backed, every other handle to this root (serving
-    # reader_clones, a StreamingIngest re-open) still plans from the
-    # manifest, so bootstrap one for the rebuilt tree — without it they
-    # read epoch 0 and silently see every tier as empty (ADVICE r10)
-    new_store = ParquetTieredStore(
-        spark, new_schema, store.root, **kwargs
+    return SchemaChangeResult(
+        REBUILD,
+        ParquetTieredStore(spark, new_schema, store.root, mode=store.mode),
     )
-    if (
-        new_store.commit.plans_from_manifest
-        and new_store.commit.epoch() == 0
-    ):
-        # only when the rebuilt tree carries no manifest of its own
-        # (it usually does since r11 — fresh roots default to the
-        # manifest backend, and the root swap moves _manifest along,
-        # its keys being root-relative)
-        new_store.init_manifest_from_tree()
-    return SchemaChangeResult(REBUILD, new_store)

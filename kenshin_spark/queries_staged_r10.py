@@ -5,11 +5,8 @@ dead-letter quality gate, W4 age routing), bucketed co-located joins,
 real multimodal containers built by the engine's own encoders, and the
 new Bloom membership pre-pass.
 
-Same staging mechanism and double gate
-(``tests/test_queries_staged_r10.py``, sf0.001 + sf0.01) as every
-earlier bank. Promote with
-``python tools/promote_staged.py queries_staged_r10`` once round 9's
-window clears.
+Gated by ``tests/test_queries_staged_r10.py`` (sf0.001 + sf0.01);
+registered into ``QUERIES`` at the bottom of ``kenshin_spark/queries.py``.
 """
 
 from __future__ import annotations

@@ -4,10 +4,8 @@ bottom-k hash states), cross-method dedup agreement, quantized-ANN
 recall, Holt aberration counts, anomaly band counts, and the
 nearest-neighbor resize loop verified to the pixel sum.
 
-Same staging mechanism and gate (``tests/test_queries_staged_r11.py``)
-as the earlier banks. Promote with
-``python tools/promote_staged.py queries_staged_r11`` once round 10's
-window clears.
+Gated by ``tests/test_queries_staged_r11.py``; registered into
+``QUERIES`` at the bottom of ``kenshin_spark/queries.py``.
 """
 
 from __future__ import annotations
@@ -2204,7 +2202,6 @@ def q_store_manifest_snapshot_lifecycle(spark, sf_dir):
             _workdir(sf_dir, "store_manifest_snapshot_lifecycle"), "store"
         ),
         mode="mor",
-        commit_protocol="manifest",
     )
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots.where(F.col("ts") % 120 == 0))
@@ -2239,7 +2236,7 @@ def _set_manifest_oracle():
             "read back — planned from the committed file list, never a "
             "directory listing — must equal the week's LWW grid minus "
             "the expired day (kenshin_spark/commit.py "
-            "ManifestCommitProtocol, store.py manifest branches)"
+            "ManifestCommitProtocol, store.py ParquetTieredStore)"
         ),
     )
 

@@ -10,10 +10,8 @@ the triage verdict for every batch document. The DuckDB oracle replays
 the full chain (md5 fingerprints, seeded-md5 minhashes, band keys,
 exact Jaccard) bit-for-bit.
 
-Same staging mechanism and gate (``tests/test_queries_staged_r9.py``)
-as the round-5/6/7/8 banks. Promote with
-``python tools/promote_staged.py queries_staged_r9`` once round 8's
-window clears.
+Gated by ``tests/test_queries_staged_r9.py``; registered into
+``QUERIES`` at the bottom of ``kenshin_spark/queries.py``.
 """
 
 from __future__ import annotations

@@ -117,23 +117,6 @@ def _recv_exact(sock, n: int) -> bytes | None:
     return buf
 
 
-def flags_kw(flags: dict | None) -> dict:
-    """kwargs for an endpoint fn that may or may not accept the
-    per-request ``flags`` out-param (plain lambdas in tests don't)."""
-    return {"flags": flags} if flags is not None else {}
-
-
-def _rows_body(rows, flags: dict | None) -> dict:
-    body = {"rows": [list(r) for r in rows]}
-    if flags and flags.get("degraded"):
-        # the per-request sibling of the process-wide read_retry_stats:
-        # this response was served past the epoch-validation budget and
-        # may reflect a mid-swap listing (ADVICE r8 — clients must not
-        # be blind to it). Additive key: rows shape is unchanged.
-        body["degraded"] = True
-    return body
-
-
 class HttpFetchServer:
     """``/fetch`` + ``/hot`` (+ optional ``/render``) as JSON.
     ``fetch_fn(metrics, from, until, now)`` returns
@@ -142,11 +125,7 @@ class HttpFetchServer:
     returns datapoints; ``render_fn(target, from, until, now)`` resolves
     a graphite target expression (glob + function chain — see
     ``functions.targets.parse_target``) to the same row shape, giving
-    the wire surface graphite-web's /render parity. Endpoint fns MAY
-    additionally accept ``flags: dict`` (the ``store_serving_fns`` /
-    ``store_render_fn`` wrappers do): when a consistent read degrades
-    past its validation budget, the JSON body carries
-    ``"degraded": true`` alongside the rows."""
+    the wire surface graphite-web's /render parity."""
 
     def __init__(
         self,
@@ -167,40 +146,27 @@ class HttpFetchServer:
                 q = parse_qs(url.query)
                 try:
                     if url.path == "/fetch":
-                        flags = outer._flags_for(outer.fetch_fn)
                         rows = outer.fetch_fn(
                             q.get("metric", []),
                             int(q["from"][0]),
                             int(q["until"][0]),
                             int(q["now"][0]),
-                            **flags_kw(flags),
                         )
-                        body = _rows_body(rows, flags)
+                        body = {"rows": [list(r) for r in rows]}
                     elif url.path == "/hot" and outer.hot_fn is not None:
-                        flags = outer._flags_for(outer.hot_fn)
                         body = {
                             "datapoints": [
-                                list(p)
-                                for p in outer.hot_fn(
-                                    q["metric"][0], **flags_kw(flags)
-                                )
+                                list(p) for p in outer.hot_fn(q["metric"][0])
                             ]
                         }
-                        if flags and flags.get("degraded"):
-                            # same contract as _rows_body: a /hot served
-                            # past the validation budget must not leave
-                            # the client blind (ADVICE r9)
-                            body["degraded"] = True
                     elif url.path == "/render" and outer.render_fn is not None:
-                        flags = outer._flags_for(outer.render_fn)
                         rows = outer.render_fn(
                             q["target"][0],
                             int(q["from"][0]),
                             int(q["until"][0]),
                             int(q["now"][0]),
-                            **flags_kw(flags),
                         )
-                        body = _rows_body(rows, flags)
+                        body = {"rows": [list(r) for r in rows]}
                     else:
                         self.send_error(404)
                         return
@@ -223,29 +189,9 @@ class HttpFetchServer:
         self.fetch_fn = fetch_fn
         self.hot_fn = hot_fn
         self.render_fn = render_fn
-        # which endpoint fns accept the per-request flags out-param
-        # (decided once at wiring time; plain lambdas never do)
-        import inspect
-
-        def accepts(fn):
-            try:
-                return fn is not None and "flags" in inspect.signature(
-                    fn
-                ).parameters
-            except (TypeError, ValueError):
-                return False
-
-        self._flag_aware = {
-            id(fn) for fn in (fetch_fn, hot_fn, render_fn) if accepts(fn)
-        }
         self._server = ThreadingHTTPServer((host, port), Handler)
         self.address: tuple[str, int] = self._server.server_address[:2]
         self._thread: threading.Thread | None = None
-
-    def _flags_for(self, fn) -> dict | None:
-        """A fresh per-request flags dict for flag-aware endpoint fns,
-        None for plain callables (no kwarg injected)."""
-        return {} if id(fn) in self._flag_aware else None
 
     def start(self) -> tuple[str, int]:
         self._thread = threading.Thread(
@@ -261,33 +207,16 @@ class HttpFetchServer:
 
 def reader_clone(store):
     """A READER clone of *store* on an isolated child ``SparkSession``
-    (same SparkContext/executors, separate SQL conf) with
-    ``spark.sql.files.ignoreMissingFiles=true`` — the serving-side
-    session every endpoint must read through so a tier-wide scan
-    overlapping a maintenance day-swap skips the vanished file instead
-    of failing (and eventually starving) the whole request. Exactness
-    still comes from the seqlock: a read validated at a stable even
-    epoch saw no swap. Missing-file tolerance stays scoped to this
-    session only; the writer's own reads keep failing loudly."""
+    (same SparkContext/executors, separate SQL conf), planning from the
+    same committed manifest. Serving scans then scope their planning
+    conf overrides (``kenshin_spark.store._explicit_list_planning``) to
+    their own session, never the writer's."""
     session = store.spark.newSession()
-    # the commit protocol knows what its readers need: the seqlock
-    # backend asks for ignoreMissingFiles (exactness comes from epoch
-    # validation); a snapshot-isolated backend asks for nothing
-    for k, v in store.commit.reader_conf().items():
-        session.conf.set(k, v)
     session.conf.set(
         "spark.sql.legacy.parquet.nanosAsLong",
         store.spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
     )
-    kwargs = {}
-    if store.commit.plans_from_manifest:
-        # the clone must plan from the same committed file list — a
-        # default (seqlock) clone of a manifest store would list
-        # directories and see retired files awaiting vacuum
-        kwargs["commit_protocol"] = "manifest"
-    return type(store)(
-        session, store.schema, store.root, mode=store.mode, **kwargs
-    )
+    return type(store)(session, store.schema, store.root, mode=store.mode)
 
 
 def store_serving_fns(store, reader=None) -> tuple[
@@ -295,29 +224,17 @@ def store_serving_fns(store, reader=None) -> tuple[
     Callable[[list[str], int, int, int], list[tuple]],
 ]:
     """``(lookup, fetch_fn)`` over a ``ParquetTieredStore`` for the two
-    servers, each wrapped in ``consistent_read`` — so a response is
-    never a torn read against an in-flight compaction/expiry swap
-    (the plain-parquet gap a snapshotting table format closes natively;
-    reference analog: cache queries answered mid-writeForever flush,
+    servers, each run through ``consistent_read`` — a scan planned from
+    the committed manifest, so a response is never a torn read against
+    a concurrent compaction/expiry commit (reference analog: cache
+    queries answered mid-writeForever flush,
     rurouni/protocols.py:65-84). ``lookup`` serves the tier-0 points
     for one metric (the cache-query shape); ``fetch_fn`` the R1 grid
     fetch.
 
-    Reads go through a READER clone of the store on an isolated child
-    ``SparkSession`` (same SparkContext/executors, separate SQL conf)
-    with ``spark.sql.files.ignoreMissingFiles=true``: a tier-wide scan
-    overlapping a day-swap then skips the vanished file instead of
-    failing the whole job. Exactness still comes from the seqlock —
-    a read validated at a stable even epoch saw no swap, and one that
-    raced a swap is retried. Without this, a maintenance pass that
-    swaps hundreds of fragmented days back-to-back starves tier-wide
-    serving scans: every ~1 s attempt overlaps SOME swap and a bounded
-    retry budget eventually errors (measured in the 1M load capture).
-    Missing-file tolerance is scoped to the serving session only — the
-    writer's own reads keep failing loudly on vanished files, which is
-    the correct behavior everywhere except under a live swap. Pass
-    ``reader`` explicitly to override (tests; a Delta/Iceberg-backed
-    store needs neither the clone nor the conf).
+    Reads go through a ``reader_clone`` of the store on an isolated
+    child ``SparkSession``. Pass ``reader`` explicitly to override
+    (tests, or to share one clone across endpoints).
 
     Every lookup additionally tags its jobs with the ``serving``
     scheduler pool (a per-thread local property — exactly right here,
@@ -334,32 +251,31 @@ def store_serving_fns(store, reader=None) -> tuple[
         reader = reader_clone(store)
     sc = reader.spark.sparkContext
 
-    def _pooled(fn, flags=None):
+    def _pooled(fn):
         sc.setLocalProperty("spark.scheduler.pool", SERVING_POOL)
         try:
-            return reader.consistent_read(fn, flags=flags)
+            return reader.consistent_read(fn)
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
 
-    def lookup(metric: str, flags: dict | None = None) -> Datapoints:
+    def lookup(metric: str) -> Datapoints:
         return _pooled(
             lambda: [
                 (r["ts"], r["value"])
                 for r in reader.read(0)
                 .where(F.col("metric") == metric)
                 .collect()
-            ],
-            flags,
+            ]
         )
 
-    def fetch_fn(metrics, frm, until, now, flags: dict | None = None):
+    def fetch_fn(metrics, frm, until, now):
         def _go():
             df = reader.fetch(metrics, frm, until, now)
             if df is None:
                 return []
             return [(r["metric"], r["ts"], r["value"]) for r in df.collect()]
 
-        return _pooled(_go, flags)
+        return _pooled(_go)
 
     lookup.reader_store = fetch_fn.reader_store = reader  # introspection
     return lookup, fetch_fn
@@ -374,11 +290,8 @@ def store_render_fn(
     verb runs, packaged for the HTTP server.
 
     Reads go through the same ``reader_clone`` + serving-pool treatment
-    as ``store_serving_fns`` (VERDICT r8 "What's wrong" #2: without the
-    ignoreMissingFiles reader session, a tier-wide render scan under a
-    maintenance swap-storm exhausts its bounded stale retries and
-    errors — the exact starvation the 1M load capture showed for
-    /fetch). Pass ``reader`` to share one clone across endpoints."""
+    as ``store_serving_fns``. Pass ``reader`` to share one clone across
+    endpoints."""
     from kenshin_spark.functions.render import apply_chain
     from kenshin_spark.functions.targets import parse_target
 
@@ -388,10 +301,7 @@ def store_render_fn(
         reader = reader_clone(store)
     sc = reader.spark.sparkContext
 
-    def render_fn(
-        target: str, frm: int, until: int, now: int,
-        flags: dict | None = None,
-    ) -> list[tuple]:
+    def render_fn(target: str, frm: int, until: int, now: int) -> list[tuple]:
         def _go():
             glob, chain = parse_target(target)
             grid = reader.fetch_glob(glob, frm, until, now)
@@ -405,7 +315,7 @@ def store_render_fn(
 
         sc.setLocalProperty("spark.scheduler.pool", SERVING_POOL)
         try:
-            return reader.consistent_read(_go, flags=flags)
+            return reader.consistent_read(_go)
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
 

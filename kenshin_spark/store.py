@@ -33,7 +33,6 @@ from __future__ import annotations
 import json
 import logging
 import os
-import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,13 +41,7 @@ from pyspark.sql import types as T
 import threading
 from contextlib import contextmanager
 
-from kenshin_spark.commit import (  # _is_stale_read re-exported for tests
-    CommitProtocol,
-    ManifestCommitProtocol,
-    ManifestTxn,
-    SeqlockCommitProtocol,
-    _is_stale_read,  # noqa: F401
-)
+from kenshin_spark.commit import ManifestCommitProtocol, ManifestTxn
 from kenshin_spark.config import AGG_SQL, Schema
 from kenshin_spark.fs import HadoopFS
 
@@ -122,6 +115,32 @@ CATALOG_SCHEMA = T.StructType(
 )
 
 
+def _unlogged_files(fs: HadoopFS, root: str, n_tiers: int):
+    """``(path, size)`` of every plain ``part-*`` parquet file in the
+    catalog and the tiers' ``day=`` partitions — what a listing-planned
+    writer (or a bare ``df.write.parquet``) leaves behind. Files
+    ``_adopt`` moved into the tree carry its ``<tag>-`` prefix instead,
+    so a root whose first write crashed before committing never counts:
+    its adopted files stay invisible until ``vacuum`` reclaims them."""
+    dirs = [os.path.join(root, "_catalog")]
+    for i in range(n_tiers):
+        tier = os.path.join(root, f"tier={i}")
+        dirs += [
+            os.path.join(tier, n)
+            for n in fs.list_names(tier)
+            if n.startswith("day=")
+        ]
+    for d in dirs:
+        for fname, size in fs.list_files(d):
+            if fname.startswith("part-") and fname.endswith(".parquet"):
+                yield os.path.join(d, fname), size
+
+
+class LegacyTreeError(RuntimeError):
+    """The root holds data files written outside the manifest log —
+    run the ``migrate`` CLI verb (``ParquetTieredStore.migrate``) once."""
+
+
 class ParquetTieredStore:
     """``mode="cow"`` (default): every upsert merges and rewrites the
     touched partitions — reads are cheapest, writes pay partition-sized
@@ -138,7 +157,6 @@ class ParquetTieredStore:
         schema: Schema,
         root: str,
         mode: str = "cow",
-        commit_protocol: CommitProtocol | str | None = None,
     ):
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown store mode {mode!r}")
@@ -152,50 +170,52 @@ class ParquetTieredStore:
         # dynamic mode: .partitionBy().mode("overwrite") rewrites only the
         # partitions present in the written frame — the MERGE primitive here
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        #: the commit surface (swap guard / epoch / consistent_read) as a
-        #: swappable protocol. Default (None) resolves per-root: a root
-        #: with a manifest log — or a FRESH root — gets the manifest-log
-        #: backend (snapshot isolation on plain parquet: readers plan
-        #: from the committed file list, O(1) consistent reads, no
-        #: retries, safe on object stores without atomic rename); a
-        #: pre-existing root WITHOUT a manifest keeps the legacy seqlock
-        #: (retrofitting a manifest onto a root with retired files would
-        #: need a listing rebuild that can resurrect them — see
-        #: init_manifest_from_tree). Pass ``"seqlock"``/``"manifest"``
-        #: to force either; a Delta/Iceberg-backed store passes a
-        #: SnapshotCommitProtocol and every primitive degenerates to the
-        #: format's native feature (see kenshin_spark.commit).
-        if commit_protocol is None:
-            commit_protocol = (
-                "manifest" if self._root_wants_manifest() else "seqlock"
+        #: the commit protocol (kenshin_spark.commit): readers plan from
+        #: the committed file list, writers stage invisibly and publish
+        #: one commit record per transaction
+        self.commit = ManifestCommitProtocol(self.fs, root, label=root)
+        n_tiers = len(schema.archives)
+        if self.commit.epoch() == 0 and any(
+            _unlogged_files(self.fs, root, n_tiers)
+        ):
+            raise LegacyTreeError(
+                f"{root} holds data files written outside the manifest "
+                "log; reading it would silently see an empty store. "
+                "Adopt them once with: python -m kenshin_spark.cli "
+                f"--root {root} migrate"
             )
-        if commit_protocol == "manifest":
-            commit_protocol = ManifestCommitProtocol(self.fs, root, label=root)
-        elif commit_protocol == "seqlock":
-            commit_protocol = None
-        self.commit: CommitProtocol = commit_protocol or SeqlockCommitProtocol(
-            self.fs, os.path.join(root, "_swap_epoch"), label=root
-        )
 
-    def _root_wants_manifest(self) -> bool:
-        """Protocol auto-selection for ``commit_protocol=None``: a root
-        already under the manifest log, or a root with no prior write
-        history at all, runs the manifest backend (the scale-safe
-        default); a legacy root — data or seqlock sidecars but no
-        manifest — stays on seqlock so its retired-but-undeleted files
-        are never mistaken for live ones."""
-        if self.fs.exists(posixpath.join(self.root, "_manifest", "_latest")):
-            return True
-        # legacy markers: any prior write leaves at least one of these
-        for marker in ("_swap_epoch", "_seq.json", "_seq.d"):
-            if self.fs.exists(posixpath.join(self.root, marker)):
-                return False
-        for i in range(len(self.schema.archives)):
-            if self.fs.exists(self.tier_path(i)):
-                return False
-        if self.fs.exists(posixpath.join(self.root, "_catalog")):
-            return False
-        return True
+    @classmethod
+    def migrate(
+        cls,
+        spark: SparkSession,
+        schema: Schema,
+        root: str,
+        mode: str = "cow",
+    ) -> "ParquetTieredStore":
+        """Adopt a tree written outside the manifest log — the root the
+        constructor refuses — by enumerating its plain ``part-*`` data
+        files into one ``op="migrate"`` commit, then open it. An interrupted
+        ``.bak`` swap is restored first so its files are counted.
+        Refuses when a manifest already exists: after retirements, a
+        listing would resurrect files awaiting vacuum. The CLI verb
+        ``migrate`` runs this."""
+        fs = HadoopFS(spark, root)
+        commit = ManifestCommitProtocol(fs, root, label=root)
+        if commit.epoch() != 0:
+            raise RuntimeError(
+                f"migrate: manifest already exists at {root} (epoch "
+                f"{commit.epoch()}); a listing rebuild would resurrect "
+                "retired files"
+            )
+        n_tiers = len(schema.archives)
+        for i in range(n_tiers):
+            fs.recover_swap(os.path.join(root, f"tier={i}"))
+        fs.recover_swap(os.path.join(root, "_catalog"))
+        with commit.txn(op="migrate") as tx:
+            for path, size in _unlogged_files(fs, root, n_tiers):
+                tx.add(os.path.relpath(path, root), size)
+        return cls(spark, schema, root, mode=mode)
 
     @property
     def _seq_sidecar(self) -> str:
@@ -216,8 +236,8 @@ class ParquetTieredStore:
         in-memory counter; it is written AFTER the claim, so a crash
         wastes a stamp instead of ever reusing one. No max(_seq) scan
         over the tier — at 100 TB that would be a full-table aggregate
-        just to open the store. Legacy stores without a sidecar fall back
-        to the tier scan once."""
+        just to open the store. A missing or torn sidecar falls back to
+        the tier scan once."""
         hint = self._last_seq_or_none()
         n = hint or 0
         if hint is None:
@@ -239,85 +259,14 @@ class ParquetTieredStore:
         )
         return n
 
-    # -- the commit surface (swap guard / epoch / consistent_read) --------
-    # delegated to self.commit — SeqlockCommitProtocol on plain parquet,
-    # SnapshotCommitProtocol on a transactional table format (see
-    # kenshin_spark.commit for the primitive-by-primitive mapping)
-
-    @property
-    def _epoch_sidecar(self) -> str:
-        return os.path.join(self.root, "_swap_epoch")
-
-    @property
-    def read_retry_stats(self) -> dict:
-        """consistent_read observability (the S8 self-metrics shape): how
-        often serving reads waited on / raced / degraded past the commit
-        protocol — a silently-degrading replica shows up here."""
-        return self.commit.stats
-
-    def swap_epoch(self) -> int:
-        """Monotonic version over DESTRUCTIVE file transitions (day-dir
-        swaps, tier swaps, expiry deletes): under the default seqlock
-        backend, ODD while one is in flight, EVEN when quiescent; under
-        a table format, the table version/snapshot id. Plain Parquet has
-        no snapshot isolation (fs.py's object-store caveat), so without
-        the seqlock a serving read that lists files just before
-        ``compact()`` promotes a day dir fails FAILED_READ_FILE mid-scan
-        — or worse, reads the gap between the two renames and silently
-        misses the day. Writers are single-process by design (the
-        reference daemon's one writeForever thread, rurouni/writer.py);
-        nesting inside one store object is handled by the protocol."""
-        return self.commit.epoch()
-
-    def _swap_guard(self):
-        """Critical section around a destructive file transition —
-        ``commit.guard_transition()``; a no-op under snapshot-isolated
-        backends whose commits are atomic in the transaction log."""
-        return self.commit.guard_transition()
-
-    def consistent_read(
-        self,
-        fn,
-        retries: int = 10,
-        backoff_s: float = 0.05,
-        deadline_s: float = 30.0,
-        flags: dict | None = None,
-    ):
-        """Run driver-side read ``fn`` (build-DataFrame-and-collect; it is
-        re-invoked from scratch on retry) so the result is never a torn
-        view of an in-flight transition. The serving layer
-        (serving.store_serving_fns) wraps every lookup in this — the
-        analog of the reference daemon answering cache queries while
-        writeForever flushes (rurouni/protocols.py:65-84). Degradation
-        order, retry budgets, and the stale-marker scope live with the
-        backend (kenshin_spark.commit.SeqlockCommitProtocol); on a table
-        format this is one plain ``fn()``. ``flags`` (a dict, optional)
-        receives per-read degradation markers — see
-        ``CommitProtocol.consistent_read``."""
-        return self.commit.consistent_read(
-            fn, retries=retries, backoff_s=backoff_s, deadline_s=deadline_s,
-            flags=flags,
-        )
-
-    def retry_metrics(self, now: int) -> list[tuple[str, int, float]]:
-        """``read_retry_stats`` + the current swap epoch as self-metric
-        points in the S8 shape (``rurouni.*`` instrumentation,
-        rurouni/state/instrumentation.py:66-113) — feed through
-        ``StreamingIngest.process_batch`` so a serving replica's seqlock
-        pressure is queryable like any other metric. Name the replica
-        via the store's schema so fleets aggregate per schema."""
-        pts = [
-            (f"rurouni.store.{self.schema.name}.read.{k}", now, float(v))
-            for k, v in self.read_retry_stats.items()
-        ]
-        pts.append(
-            (
-                f"rurouni.store.{self.schema.name}.swap_epoch",
-                now,
-                float(self.swap_epoch()),
-            )
-        )
-        return pts
+    def consistent_read(self, fn):
+        """Run driver-side read ``fn`` — the seam every serving lookup
+        goes through (serving.store_serving_fns), the analog of the
+        reference daemon answering cache queries while writeForever
+        flushes (rurouni/protocols.py:65-84). Scans plan from an
+        immutable committed snapshot, so one plain call is never a
+        torn view of a concurrent commit."""
+        return fn()
 
     def prune_seq_claims(self) -> int:
         """GC the CAS claim markers below the committed sidecar hint —
@@ -350,14 +299,7 @@ class ParquetTieredStore:
         the long coarse tiers. The ``day`` column stores ``ts // unit``."""
         return HOUR if self.schema.archives[i].retention <= HOT_RETENTION_CUTOFF else DAY
 
-    # -- manifest-mode plumbing --------------------------------------------
-
-    @property
-    def _manifest_mode(self) -> bool:
-        """True when the commit protocol keeps a committed file list —
-        reads then plan from it (never a directory listing) and every
-        write stages invisibly + flips the manifest atomically."""
-        return self.commit.plans_from_manifest
+    # -- manifest plumbing -------------------------------------------------
 
     def _rel(self, path: str) -> str:
         """``path`` relative to the store root — the manifest's key
@@ -366,12 +308,9 @@ class ParquetTieredStore:
 
     def _plan_abs(
         self, path: str, version: int | None = None
-    ) -> list[str] | None:
-        """The committed live files under ``path`` as absolute paths, or
-        None when this backend plans from directory listings.
+    ) -> list[str]:
+        """The committed live files under ``path`` as absolute paths.
         ``version`` pins a historical manifest seq (time travel)."""
-        if not self._manifest_mode:
-            return None
         return [
             os.path.join(self.root, rel)
             for rel, _ in self.commit.live_files(
@@ -380,16 +319,11 @@ class ParquetTieredStore:
         ]
 
     def _check_version(self, version: int | None) -> None:
-        """Validate a time-travel pin: manifest-backed stores only, and
-        the seq must be a committed one (0 = 'before anything' is not a
-        readable snapshot; > epoch does not exist yet)."""
+        """Validate a time-travel pin: the seq must be a committed one
+        (0 = 'before anything' is not a readable snapshot; > epoch does
+        not exist yet)."""
         if version is None:
             return
-        if not self._manifest_mode:
-            raise ValueError(
-                "version-pinned reads need the manifest commit protocol "
-                "(listing-planned stores keep no file-list history)"
-            )
         latest = self.commit.epoch()
         if not (1 <= version <= latest):
             raise ValueError(
@@ -399,7 +333,7 @@ class ParquetTieredStore:
     def _adopt(
         self, df: DataFrame, dest_path: str, partitioned: bool = True
     ) -> list[tuple[str, int]]:
-        """Manifest-mode write primitive: write ``df`` to a private
+        """The write primitive: write ``df`` to a private
         ``_stage/<tag>`` directory (underscore-prefixed — invisible to
         partition discovery), then MOVE the data files into the live
         tree under tag-unique names. Readers plan from the committed
@@ -438,41 +372,6 @@ class ParquetTieredStore:
             _move(stage, dest_path)
         self.fs.delete(stage)
         return adopted
-
-    def init_manifest_from_tree(self) -> int:
-        """Bootstrap the manifest for a tree written OUTSIDE the log — a
-        schema-change REBUILD swaps in a root built by a fresh (seqlock)
-        store, so a manifest-mode re-open would read epoch 0 and see
-        every tier as empty (ADVICE r10). Enumerates every data file on
-        disk into one commit. Refuses when a manifest already exists:
-        after retirements, a listing would resurrect files awaiting
-        vacuum."""
-        if not self._manifest_mode:
-            return 0
-        if self.commit.epoch() != 0:
-            raise RuntimeError(
-                "init_manifest_from_tree: manifest already exists at "
-                f"{self.root} (epoch {self.commit.epoch()}); a listing "
-                "rebuild would resurrect retired files"
-            )
-
-        def _adopt_dir(tx, d: str) -> None:
-            for fname, size in self.fs.list_files(d):
-                if fname.endswith(".parquet"):
-                    tx.add(self._rel(os.path.join(d, fname)), size)
-
-        with self.commit.txn(op="init") as tx:
-            roots = [
-                self.tier_path(i)
-                for i in range(len(self.schema.archives))
-            ]
-            roots.append(self.catalog_path)
-            for r in roots:
-                for dname in self.fs.list_names(r):
-                    if dname.startswith("day="):
-                        _adopt_dir(tx, os.path.join(r, dname))
-                _adopt_dir(tx, r)
-        return self.commit.epoch()
 
     def restore(self, version: int) -> int:
         """Roll the live file set back to manifest seq ``version`` —
@@ -516,12 +415,9 @@ class ParquetTieredStore:
         of the snapshot it planned, exactly like Delta's
         ``VACUUM ... RETAIN`` / Iceberg's ``expire_snapshots``). Also
         trims superseded manifest generations past the grace window.
-        No-op under listing-planned backends (their mutations delete
-        eagerly under the swap guard). Returns the paths removed."""
+        Returns the paths removed."""
         import time as _time
 
-        if not self._manifest_mode:
-            return []
         cutoff = (now if now is not None else _time.time()) - grace_s
         live = {rel for rel, _ in self.commit.live_files("")}
         tombs = self.commit.tombstones()
@@ -671,29 +567,17 @@ class ParquetTieredStore:
         return self._last_seq_or_none() or 0
 
     def _tier_empty(self, path: str, version: int | None = None) -> bool:
-        """True when the tier has no data partitions — absent entirely, or
-        expiry dropped every day= child (schema inference would fail).
-        Under a manifest backend the committed file list is the truth
-        (the directory may hold retired files awaiting vacuum)."""
-        if self._manifest_mode:
-            return not self.commit.live_files(
-                self._rel(path), seq=version
-            )
-        if not self.fs.exists(path):
-            return True
-        return not any(
-            n.startswith("day=") for n in self.fs.list_names(path)
-        )
+        """True when the tier has no live data files — the committed
+        file list is the truth (the directory may hold retired files
+        awaiting vacuum)."""
+        return not self.commit.live_files(self._rel(path), seq=version)
 
     def _tier_schema(self) -> T.StructType:
         """The physical schema of every tier, known a priori from the
         store mode (mor tiers ALWAYS carry ``_seq`` — every write path
         stamps it; cow tiers never do). Handing it to the reader skips
         planning-time schema inference entirely: one less footer read
-        per scan at 100 TB, and — load-tested to matter — no footer IO
-        left to race a concurrent day-swap (inference reads a data file
-        during ANALYSIS, before ``ignoreMissingFiles`` applies, so a
-        swap there surfaced as an unretryable AnalysisException)."""
+        per scan at 100 TB."""
         if self.mode == "mor":
             return T.StructType(
                 list(STORED_SCHEMA) + [T.StructField("_seq", T.LongType(), True)]
@@ -703,43 +587,16 @@ class ParquetTieredStore:
     def _scan_tier(self, path: str, version: int | None = None) -> DataFrame:
         reader = self.spark.read.schema(self._tier_schema())
         files = self._plan_abs(path, version=version)
-        if files is None:
-            return reader.parquet(path)
         # plan from the committed file list — partition values (day=) are
         # still derived from the paths via basePath; a retired file that
         # physically remains on disk (awaiting vacuum) is never scanned
         with _explicit_list_planning(self.spark):
             return reader.option("basePath", path).parquet(*files)
 
-    def _dayless_schema(self) -> T.StructType:
-        """``_tier_schema`` without the ``day`` partition column — the
-        physical schema of files READ WITHOUT basePath (a single day
-        partition's files carry no partition-derived column)."""
-        return T.StructType(
-            [f for f in self._tier_schema() if f.name != "day"]
-        )
-
-    def _scan_day(self, i: int, day: int) -> DataFrame | None:
-        """One day partition of tier i WITHOUT the day column (the
-        compaction-stage read shape), planned per the backend; None when
-        the partition has no live data."""
-        day_dir = os.path.join(self.tier_path(i), f"day={day}")
-        if self._manifest_mode:
-            files = self._plan_abs(day_dir)
-            if not files:
-                return None
-            with _explicit_list_planning(self.spark):
-                return self.spark.read.schema(
-                    self._dayless_schema()
-                ).parquet(*files)
-        if not self.fs.exists(day_dir):
-            return None
-        return self.spark.read.parquet(day_dir)
-
     def read(self, i: int, version: int | None = None) -> DataFrame:
         """Tier i as ``(metric, ts, value)``; empty frame if never
-        written. ``version`` pins a historical manifest seq (manifest
-        stores only — Delta's ``versionAsOf``): the scan plans from the
+        written. ``version`` pins a historical manifest seq (Delta's
+        ``versionAsOf``): the scan plans from the
         file list as committed at that seq, so it sees the tier exactly
         as it stood THEN — including through later compactions and
         expiries, which ``read_at``'s row-stamp MVCC cannot reach back
@@ -757,12 +614,9 @@ class ParquetTieredStore:
         return self._resolve(self._scan_tier(path, version=version))
 
     def history(self, limit: int | None = None) -> list[dict]:
-        """The retained commit log, newest first (manifest stores; ``[]``
-        under listing-planned backends) — seq, unix ts, op label, and
-        adds/drops counts per commit. History ends where vacuum trimmed
-        the log, exactly like time travel."""
-        if not self._manifest_mode:
-            return []
+        """The retained commit log, newest first — seq, unix ts, op
+        label, and adds/drops counts per commit. History ends where
+        vacuum trimmed the log, exactly like time travel."""
         return self.commit.history(limit=limit)
 
     def touched_days(self, i: int, seq_a: int, seq_b: int) -> list[int]:
@@ -901,20 +755,12 @@ class ParquetTieredStore:
         out = self._with_day(slots, i)
         if self.mode == "mor":
             out = out.withColumn("_seq", F.lit(self._next_seq()))
-        if self._manifest_mode:
-            # stage + adopt invisibly, then one atomic pointer flip that
-            # retires the whole old tier — readers mid-scan keep their
-            # snapshot's files (vacuum reclaims them after the grace)
-            adds = self._adopt(out, self.tier_path(i))
-            with self.commit.txn(op="overwrite") as tx:
-                tx.replace(f"tier={i}", adds)
-            return
-        # destructive for the whole job (overwrite deletes in-commit), so
-        # the guard spans the write — initial loads aren't the serving path
-        with self._swap_guard():
-            out.write.mode("overwrite").partitionBy("day").parquet(
-                self.tier_path(i)
-            )
+        # stage + adopt invisibly, then one atomic pointer flip that
+        # retires the whole old tier — readers mid-scan keep their
+        # snapshot's files (vacuum reclaims them after the grace)
+        adds = self._adopt(out, self.tier_path(i))
+        with self.commit.txn(op="overwrite") as tx:
+            tx.replace(f"tier={i}", adds)
 
     def upsert(
         self, i: int, slots: DataFrame, days: list[int] | None = None
@@ -929,7 +775,9 @@ class ParquetTieredStore:
         bookkeeping pass) — skips the distinct-days probe job the cow
         merge path otherwise runs. Must equal what the probe would
         return; ignored on paths that never probe (mor append,
-        first write)."""
+        first write). A supplied set that misses a day the batch
+        touches raises before anything commits — the merge would
+        otherwise leave that day's old rows beside the new ones."""
         path = self.tier_path(i)
         new = self._with_day(slots, i)
         # every write path sorts within tasks by (metric, ts) — a free
@@ -941,22 +789,17 @@ class ParquetTieredStore:
             stamped = new.withColumn(
                 "_seq", F.lit(self._next_seq())
             ).sortWithinPartitions("day", "metric", "ts")
-            if self._manifest_mode:
-                adds = self._adopt(stamped, path)
-                with self.commit.txn(op="upsert") as tx:
-                    for rel, size in adds:
-                        tx.add(rel, size)
-                return
-            stamped.write.mode("append").partitionBy("day").parquet(path)
+            adds = self._adopt(stamped, path)
+            with self.commit.txn(op="upsert") as tx:
+                for rel, size in adds:
+                    tx.add(rel, size)
             return
         if self._tier_empty(path):
-            shaped = new.sortWithinPartitions("day", "metric", "ts")
-            if self._manifest_mode:
-                adds = self._adopt(shaped, path)
-                with self.commit.txn(op="upsert") as tx:
-                    tx.replace(f"tier={i}", adds)
-                return
-            shaped.write.mode("overwrite").partitionBy("day").parquet(path)
+            adds = self._adopt(
+                new.sortWithinPartitions("day", "metric", "ts"), path
+            )
+            with self.commit.txn(op="upsert") as tx:
+                tx.replace(f"tier={i}", adds)
             return
         if days is None:
             days = [r["day"] for r in new.select("day").distinct().collect()]
@@ -965,7 +808,7 @@ class ParquetTieredStore:
         # the merge below is planned from THIS snapshot — pin it so a
         # concurrent writer's commit into a touched day conflicts
         # loudly instead of being silently replaced un-merged
-        read_seq = self.commit.epoch() if self._manifest_mode else 0
+        read_seq = self.commit.epoch()
         existing = (
             self._scan_tier(path)
             .where(F.col("day").isin(days))
@@ -980,26 +823,31 @@ class ParquetTieredStore:
             .agg(F.max(F.struct("_seq", "value")).alias("_w"))
             .select("metric", "ts", F.col("_w.value").alias("value"), "day")
         )
-        if self._manifest_mode:
-            # the merged frame carries exactly the touched days — adopt
-            # its files, then one transaction retires those days' old
-            # files and commits the rewrites; readers never see a
-            # half-merged partition and nothing is deleted in-commit
-            adds = self._adopt(
-                merged.sortWithinPartitions("day", "metric", "ts"), path
+        # adopt the merged frame's files, then one transaction retires
+        # the touched days' old files and commits the rewrites; readers
+        # never see a half-merged partition and nothing is deleted
+        # in-commit
+        adds = self._adopt(
+            merged.sortWithinPartitions("day", "metric", "ts"), path
+        )
+        # the drops below retire ONLY the supplied days: a rewrite file
+        # under any other day would land beside that day's old rows.
+        # The adopt result names every day written — no extra job
+        stray = sorted(
+            {rel.split("/")[1] for rel, _ in adds}
+            - {f"day={d}" for d in days}
+        )
+        if stray:
+            raise ValueError(
+                f"upsert(tier={i}, days={days}): the batch also touches "
+                f"{stray}; refusing to commit a merge that would keep "
+                "those partitions' old rows beside the new ones"
             )
-            with self.commit.txn(read_seq=read_seq, op="upsert") as tx:
-                for d in days:
-                    tx.drop(f"tier={i}/day={d}")
-                for rel, size in adds:
-                    tx.add(rel, size)
-            return
-        # cow rewrites the touched day partitions in-commit — destructive
-        # for the job's duration, hence mor is the serve-under-writes mode
-        with self._swap_guard():
-            merged.sortWithinPartitions("day", "metric", "ts").write.mode(
-                "overwrite"
-            ).partitionBy("day").parquet(path)
+        with self.commit.txn(read_seq=read_seq, op="upsert") as tx:
+            for d in days:
+                tx.drop(f"tier={i}/day={d}")
+            for rel, size in adds:
+                tx.add(rel, size)
 
     # -- retention (O4) ---------------------------------------------------
 
@@ -1015,42 +863,19 @@ class ParquetTieredStore:
     def expire(self, now: int) -> dict[int, list[int]]:
         """Drop day partitions wholly outside each tier's retention.
         Returns {tier: [dropped days]} (the partition-drop DDL at scale).
-        Under the manifest backend expiry is LOGICAL — one transaction
-        retires every doomed partition across all tiers atomically, and
-        ``vacuum`` reclaims the bytes after the grace window (so scans
-        planned before the expiry keep reading their snapshot)."""
+        Expiry is LOGICAL — one transaction retires every doomed
+        partition across all tiers atomically, and ``vacuum`` reclaims
+        the bytes after the grace window (so scans planned before the
+        expiry keep reading their snapshot)."""
         dropped: dict[int, list[int]] = {}
-        if self._manifest_mode:
-            with self.commit.txn(op="expire") as tx:
-                for i, arch in enumerate(self.schema.archives):
-                    cutoff_day = (now - arch.retention) // self.part_unit(i)
-                    gone = [
-                        d for d in self._live_days(i) if d < cutoff_day
-                    ]
-                    for d in gone:
-                        tx.drop(f"tier={i}/day={d}")
-                    if gone:
-                        dropped[i] = gone
-            self.prune_seq_claims()
-            return dropped
-        for i, arch in enumerate(self.schema.archives):
-            path = self.tier_path(i)
-            if not self.fs.exists(path):
-                continue
-            cutoff_day = (now - arch.retention) // self.part_unit(i)
-            doomed = [
-                d for d in self.fs.list_names(path)
-                if d.startswith("day=")
-                and int(d.split("=", 1)[1]) < cutoff_day
-            ]
-            gone = []
-            if doomed:
-                with self._swap_guard():  # seqlock vs serving reads
-                    for d in doomed:
-                        self.fs.delete(os.path.join(path, d))
-                        gone.append(int(d.split("=", 1)[1]))
-            if gone:
-                dropped[i] = sorted(gone)
+        with self.commit.txn(op="expire") as tx:
+            for i, arch in enumerate(self.schema.archives):
+                cutoff_day = (now - arch.retention) // self.part_unit(i)
+                gone = [d for d in self._live_days(i) if d < cutoff_day]
+                for d in gone:
+                    tx.drop(f"tier={i}/day={d}")
+                if gone:
+                    dropped[i] = gone
         self.prune_seq_claims()
         return dropped
 
@@ -1291,48 +1116,23 @@ class ParquetTieredStore:
         every micro-batch upsert adds ~one file per touched (day ×
         shuffle task), and scan cost degrades with file COUNT long
         before it degrades with bytes (per-file open + footer read ≈
-        ``openCostInBytes`` each). Driver cost is one listing per day
-        partition — bounded by retention/partition-unit, not data."""
-        path = self.tier_path(i)
-        if self._manifest_mode:
-            # the manifest already knows every live file and size — the
-            # audit is a dict walk, no listing at all (and retired files
-            # awaiting vacuum never pollute the shape)
-            by_day: dict[int, list[int]] = {}
-            for rel, size in self.commit.live_files(f"tier={i}"):
-                part = rel.split("/")[1]
-                if part.startswith("day="):
-                    by_day.setdefault(int(part[4:]), []).append(size)
-            return [
-                {
-                    "day": d,
-                    "n_files": len(sizes),
-                    "bytes": sum(sizes),
-                    "min_file_bytes": min(sizes),
-                }
-                for d, sizes in sorted(by_day.items())
-            ]
-        report = []
-        for name in sorted(self.fs.list_names(path)):
-            if not name.startswith("day="):
-                continue
-            files = [
-                (n, sz)
-                for n, sz in self.fs.list_files(os.path.join(path, name))
-                if n.endswith(".parquet")
-            ]
-            if not files:
-                continue
-            sizes = [sz for _, sz in files]
-            report.append(
-                {
-                    "day": int(name.split("=", 1)[1]),
-                    "n_files": len(files),
-                    "bytes": sum(sizes),
-                    "min_file_bytes": min(sizes),
-                }
-            )
-        return report
+        ``openCostInBytes`` each). The manifest already knows every
+        live file and size, so the audit is a dict walk — no listing,
+        and retired files awaiting vacuum never pollute the shape."""
+        by_day: dict[int, list[int]] = {}
+        for rel, size in self.commit.live_files(f"tier={i}"):
+            part = rel.split("/")[1]
+            if part.startswith("day="):
+                by_day.setdefault(int(part[4:]), []).append(size)
+        return [
+            {
+                "day": d,
+                "n_files": len(sizes),
+                "bytes": sum(sizes),
+                "min_file_bytes": min(sizes),
+            }
+            for d, sizes in sorted(by_day.items())
+        ]
 
     @staticmethod
     def day_degraded(
@@ -1380,13 +1180,19 @@ class ParquetTieredStore:
         from its preallocated format (README.md:63-66). Run it like the
         reference's maintenance scripts — off the hot path.
 
-        ``days`` bounds the rewrite to those day partitions, each
-        swapped independently under the ``.bak`` protocol — the
-        production shape: under steady streaming ingest only the
-        last hour/day fragments (``needs_compaction`` finds them), and
+        ``days`` bounds the rewrite to those day partitions — the
+        production shape: under steady streaming ingest only the last
+        hour/day fragments (``needs_compaction`` finds them), and
         compacting a 90-day tier to fix one hot day would rewrite 90×
         the necessary bytes. ``days=None`` keeps the full-tier rewrite
         (initial cleanup / schema maintenance).
+
+        Every rewrite is staged + adopted invisibly, then ONE
+        transaction retires the old files and commits the new; readers
+        mid-scan keep their snapshot (old files persist until
+        ``vacuum``). ONE fold job covers every requested day: the
+        day-partitioned rewrite gives each day its own task(s) (plus a
+        metric hash for target>1), so the per-day output shape is exact.
 
         Returns the days actually compacted when ``days`` is given
         (requested days absent from this tier are skipped, not
@@ -1394,207 +1200,54 @@ class ParquetTieredStore:
         path = self.tier_path(i)
         if self._tier_empty(path):
             return [] if days is not None else None
-        if self._manifest_mode:
-            return self._compact_manifest(i, target_files_per_day, days)
-        if days is not None:
-            # two-phase: stage every day's rewrite first (the expensive
-            # Spark jobs, non-destructive), then promote ALL of them
-            # under ONE guard. A maintenance pass compacting ~190
-            # fragmented days used to flip the epoch 380 times — with a
-            # transition every ~200 ms, any serving scan longer than
-            # that raced SOME swap on every attempt and went retry-bound
-            # (~20 s p95 in the 1M load capture). Batched, readers see
-            # at most one transition per maintenance pass, and the guard
-            # window is the renames only (ms per day), never the writes.
-            staged = []
-            for d in days:
-                prep = self._stage_day_compact(i, d, target_files_per_day)
-                if prep is not None:
-                    staged.append((d, prep))
-            if not staged:
-                return []
-            with self._swap_guard():
-                for _, prep in staged:
-                    self._promote_day_compact(*prep)
-            return [d for d, _ in staged]
-        raw = self.spark.read.parquet(path)
-        if "_seq" in raw.columns:
-            # fold the mor append log to one row per slot, stamp 0
-            df = (
-                raw.groupBy("metric", "ts", "day")
-                .agg(F.max(F.struct("_seq", "value")).alias("_w"))
-                .select(
-                    "metric", "ts", F.col("_w.value").alias("value"),
-                    "day", F.lit(0).alias("_seq"),
-                )
-            )
-        else:
-            df = raw.select("metric", "ts", "value", "day")
-        tmp = path + ".compact"
-        if target_files_per_day == 1:
-            shaped = df.repartition("day")  # each day → exactly one task
-        else:
-            shaped = df.repartition(
-                "day", F.pmod(F.xxhash64("metric"), F.lit(target_files_per_day))
-            )
-        (
-            # day first: the partitioned writer's required ordering is a
-            # day prefix — satisfying it keeps the writer from inserting
-            # its own (unstable) re-sort that would undo (metric, ts)
-            shaped.sortWithinPartitions("day", "metric", "ts")
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(tmp)
-        )
-        # .bak swap protocol (fs.py): a crash mid-swap is recoverable via
-        # recover(), never a half-deleted tier
-        with self._swap_guard():
-            self.fs.swap(path, tmp)
-
-    def _fold_log(self, raw: DataFrame, with_day: bool) -> DataFrame:
-        """Collapse a mor append log to one row per slot (stamp 0); pass
-        cow frames through. The shared kernel of every compaction path."""
-        keys = ["metric", "ts"] + (["day"] if with_day else [])
-        if "_seq" not in raw.columns:
-            cols = keys[:2] + ["value"] + (["day"] if with_day else [])
-            return raw.select(*cols)
-        return (
-            raw.groupBy(*keys)
-            .agg(F.max(F.struct("_seq", "value")).alias("_w"))
-            .select(
-                "metric", "ts", F.col("_w.value").alias("value"),
-                *(["day"] if with_day else []),
-                F.lit(0).alias("_seq"),
-            )
-        )
-
-    def _compact_manifest(
-        self, i: int, target_files_per_day: int, days: list[int] | None
-    ) -> list[int] | None:
-        """Manifest-mode compaction: every rewrite is staged + adopted
-        invisibly, then ONE transaction retires the old files and
-        commits the new — no ``.bak`` dance, no guard, and readers
-        mid-scan keep their snapshot (old files persist until
-        ``vacuum``). ``days=None`` rewrites the whole tier shaped like
-        the listing-mode full compact; ``days=[...]`` folds each day to
-        ``target_files_per_day`` files."""
-        path = self.tier_path(i)
-        # the folds below are planned from THIS snapshot: pin it so a
+        # the fold below is planned from THIS snapshot: pin it so a
         # concurrent writer's append to a folded partition raises
         # ManifestConflict instead of being silently retired un-folded
         read_seq = self.commit.epoch()
+        raw = self._scan_tier(path)
         if days is None:
-            raw = self._scan_tier(path)
-            df = self._fold_log(raw, with_day=True)
-            if target_files_per_day == 1:
-                shaped = df.repartition("day")
-            else:
-                shaped = df.repartition(
-                    "day",
-                    F.pmod(F.xxhash64("metric"), F.lit(target_files_per_day)),
-                )
-            adds = self._adopt(
-                shaped.sortWithinPartitions("day", "metric", "ts"), path
-            )
-            with self.commit.txn(read_seq=read_seq, op="compact") as tx:
-                tx.replace(f"tier={i}", adds)
-            return None
-        # ONE fold job over every requested day (was: one scan + fold +
-        # write job PER day — a maintenance pass over ~90 fragmented
-        # days paid ~90 sequential Spark jobs; the measured 1M-point
-        # bench maintenance spent >3 min here). The day-partitioned
-        # rewrite keeps the exact per-day output shape: repartition by
-        # day (plus a metric hash for target>1) gives each day its own
-        # task(s), and the transaction still retires/commits each day
-        # independently, so crash/conflict semantics are unchanged.
-        live = set(self._live_days(i))
-        wanted = sorted(d for d in days if d in live)
-        if not wanted:
-            return []
-        raw = self._scan_tier(path).where(F.col("day").isin(wanted))
-        df = self._fold_log(raw, with_day=True)
+            retired = [f"tier={i}"]
+        else:
+            live = set(self._live_days(i))
+            days = sorted(d for d in days if d in live)
+            if not days:
+                return []
+            raw = raw.where(F.col("day").isin(days))
+            retired = [f"tier={i}/day={d}" for d in days]
+        df = self._fold_log(raw)
         if target_files_per_day == 1:
-            shaped = df.repartition("day")
+            shaped = df.repartition("day")  # each day → exactly one task
         else:
             shaped = df.repartition(
                 "day",
                 F.pmod(F.xxhash64("metric"), F.lit(target_files_per_day)),
             )
+        # day first: the partitioned writer's required ordering is a day
+        # prefix — satisfying it keeps the writer from inserting its own
+        # (unstable) re-sort that would undo (metric, ts)
         adds = self._adopt(
             shaped.sortWithinPartitions("day", "metric", "ts"), path
         )
-        by_day: dict[int, list[tuple[str, int]]] = {}
-        for rel, size in adds:
-            day_part = rel.split("/")[1]
-            by_day.setdefault(int(day_part[4:]), []).append((rel, size))
         with self.commit.txn(read_seq=read_seq, op="compact") as tx:
-            for d in wanted:
-                tx.replace(f"tier={i}/day={d}", by_day.get(d, []))
-        return wanted
+            for prefix in retired:
+                tx.drop(prefix)
+            for rel, size in adds:
+                tx.add(rel, size)
+        return days
 
-    def _stage_day_compact(
-        self, i: int, day: int, target_files_per_day: int
-    ) -> tuple[str, str, str] | None:
-        """Phase 1 of a day compaction — the EXPENSIVE, non-destructive
-        part, run outside any guard: read just that ``day=`` directory
-        (files inside it don't carry the partition column), fold the mor
-        log if present, rewrite as ``target_files_per_day`` sorted files
-        into an underscore-staged tmp dir. Slots never span days, so
-        folding one day's log is exactly as correct as folding the
-        tier's. Returns ``(day_dir, tmp, bak)`` for phase 2, or None
-        when the partition doesn't exist."""
-        path = self.tier_path(i)
-        day_dir = os.path.join(path, f"day={day}")
-        if not self.fs.exists(day_dir):
-            return None
-        raw = self.spark.read.parquet(day_dir)
-        if "_seq" in raw.columns:
-            df = (
-                raw.groupBy("metric", "ts")
-                .agg(F.max(F.struct("_seq", "value")).alias("_w"))
-                .select(
-                    "metric", "ts", F.col("_w.value").alias("value"),
-                    F.lit(0).alias("_seq"),
-                )
+    def _fold_log(self, raw: DataFrame) -> DataFrame:
+        """Collapse a mor append log to one row per slot (stamp 0); pass
+        cow frames through."""
+        if "_seq" not in raw.columns:
+            return raw.select("metric", "ts", "value", "day")
+        return (
+            raw.groupBy("metric", "ts", "day")
+            .agg(F.max(F.struct("_seq", "value")).alias("_w"))
+            .select(
+                "metric", "ts", F.col("_w.value").alias("value"), "day",
+                F.lit(0).alias("_seq"),
             )
-        else:
-            df = raw.select("metric", "ts", "value")
-        # staging names are underscore-prefixed so Spark's partition
-        # discovery never sees them (a literal "day=5.bak" sibling
-        # would poison day's inferred type for the whole tier)
-        tmp = os.path.join(path, f"_day_{day}.compact")
-        bak = os.path.join(path, f"_day_{day}.bak")
-        (
-            df.repartition(target_files_per_day)
-            .sortWithinPartitions("metric", "ts")
-            .write.mode("overwrite")
-            .parquet(tmp)
         )
-        if self.fs.exists(bak):  # debris from a crash after promote
-            self.fs.delete(bak)
-        return day_dir, tmp, bak
-
-    def _promote_day_compact(self, day_dir: str, tmp: str, bak: str) -> None:
-        """Phase 2 — the destructive renames; caller holds the guard."""
-        if not self.fs.rename(day_dir, bak):
-            raise IOError(f"compact: could not stage {day_dir} -> {bak}")
-        if not self.fs.rename(tmp, day_dir):
-            self.fs.rename(bak, day_dir)  # roll back
-            raise IOError(f"compact: could not promote {tmp} -> {day_dir}")
-        self.fs.delete(bak)
-
-    def _compact_day(
-        self, i: int, day: int, target_files_per_day: int
-    ) -> bool:
-        """Compact ONE day partition in place (stage + promote under its
-        own guard). ``compact(days=[...])`` batches the promotes of many
-        days under a single guard instead — see there."""
-        prep = self._stage_day_compact(i, day, target_files_per_day)
-        if prep is None:
-            return False
-        with self._swap_guard():  # seqlock: renames only, not the write
-            self._promote_day_compact(*prep)
-        return True
 
     # -- delete (M5) ------------------------------------------------------
 
@@ -1602,80 +1255,44 @@ class ParquetTieredStore:
         """M5 — delete metrics' rows from every tier
         (bin/kenshin-delete.py:39-96 blanks header slots; with real tables
         we actually remove the rows). Plain-Parquet implementation rewrites
-        each tier without the deleted metrics; on Delta/Iceberg this is a
-        metadata-level ``DELETE WHERE metric IN (...)``."""
-        if self._manifest_mode:
-            # one transaction across every tier AND the catalog — the
-            # delete is all-or-nothing, which the per-directory swap
-            # protocol below can't promise
-            with self.commit.txn(op="delete") as tx:
-                for i in range(len(self.schema.archives)):
-                    path = self.tier_path(i)
-                    if self._tier_empty(path):
-                        continue
-                    kept = self._scan_tier(path).where(
-                        ~F.col("metric").isin(metrics)
-                    )
-                    tx.replace(f"tier={i}", self._adopt(kept, path))
-                if self.commit.live_files("_catalog"):
-                    kept_cat = self.catalog().where(
-                        ~F.col("metric").isin(metrics)
-                    )
-                    tx.replace(
-                        "_catalog",
-                        self._adopt(
-                            kept_cat, self.catalog_path, partitioned=False
-                        ),
-                    )
-            return
-        for i in range(len(self.schema.archives)):
-            path = self.tier_path(i)
-            if self._tier_empty(path):
-                continue
-            raw = self._scan_tier(path)
-            kept = raw.where(~F.col("metric").isin(metrics)).select(
-                *raw.columns
-            )
-            tmp = path + ".tmp"
-            kept.write.mode("overwrite").partitionBy("day").parquet(tmp)
-            with self._swap_guard():
-                self.fs.swap(path, tmp)
-        cat_path = self.catalog_path
-        if self.fs.exists(cat_path):
-            kept_cat = self.catalog().where(~F.col("metric").isin(metrics))
-            tmp = cat_path + ".tmp"
-            kept_cat.write.mode("overwrite").parquet(tmp)
-            with self._swap_guard():
-                self.fs.swap(cat_path, tmp)
+        each tier without the deleted metrics in ONE transaction across
+        every tier AND the catalog, so the delete is all-or-nothing; on
+        Delta/Iceberg this is a metadata-level
+        ``DELETE WHERE metric IN (...)``."""
+        with self.commit.txn(op="delete") as tx:
+            for i in range(len(self.schema.archives)):
+                path = self.tier_path(i)
+                if self._tier_empty(path):
+                    continue
+                kept = self._scan_tier(path).where(
+                    ~F.col("metric").isin(metrics)
+                )
+                tx.replace(f"tier={i}", self._adopt(kept, path))
+            if self._has_catalog():
+                kept_cat = self.catalog().where(
+                    ~F.col("metric").isin(metrics)
+                )
+                tx.replace(
+                    "_catalog",
+                    self._adopt(
+                        kept_cat, self.catalog_path, partitioned=False
+                    ),
+                )
 
     def recover(self) -> list[str]:
-        """Crash recovery for interrupted ``compact``/``delete_metrics``
-        swaps: restore any ``.bak`` whose live directory is missing
-        (reference analog: the change-schema .bak dance,
-        bin/kenshin-change-schema.py:103-112). Returns restored paths.
-        Call on store open after an unclean shutdown."""
+        """Crash recovery for an interrupted whole-directory ``.bak``
+        swap (``fs.swap``) of a tier or the catalog: restore any
+        ``.bak`` whose live directory is missing (reference analog: the
+        change-schema .bak dance, bin/kenshin-change-schema.py:103-112).
+        The manifest keys are root-relative, so the restored files are
+        the committed ones again. Returns restored paths. Call on store
+        open after an unclean shutdown."""
         restored = []
-        for i in range(len(self.schema.archives)):
-            p = self.tier_path(i)
+        for p in [
+            self.tier_path(i) for i in range(len(self.schema.archives))
+        ] + [self.catalog_path]:
             if self.fs.recover_swap(p):
                 restored.append(p)
-            # per-day compaction swaps: a crash between stage and
-            # promote leaves _day_<d>.bak with no day=<d> — without
-            # recovery the tier read silently drops that day
-            for name in self.fs.list_names(p):
-                if name.startswith("_day_") and name.endswith(".bak"):
-                    d = name[len("_day_"): -len(".bak")]
-                    live = os.path.join(p, f"day={d}")
-                    bak = os.path.join(p, name)
-                    if not self.fs.exists(live):
-                        if self.fs.rename(bak, live):
-                            restored.append(live)
-                    else:  # crash after promote, before bak delete
-                        self.fs.delete(bak)
-                elif name.startswith("_day_") and name.endswith(".compact"):
-                    self.fs.delete(os.path.join(p, name))  # stale tmp
-        if self.fs.recover_swap(self.catalog_path):
-            restored.append(self.catalog_path)
         return restored
 
     # -- catalog (M1, the index) ------------------------------------------
@@ -1685,25 +1302,15 @@ class ParquetTieredStore:
         return os.path.join(self.root, "_catalog")
 
     def _has_catalog(self) -> bool:
-        if self._manifest_mode:
-            return bool(self.commit.live_files("_catalog"))
-        return self.fs.exists(self.catalog_path)
+        return bool(self.commit.live_files("_catalog"))
 
     def catalog(self) -> DataFrame:
-        if self._manifest_mode:
-            files = self._plan_abs(self.catalog_path)
-            if not files:
-                return self.spark.createDataFrame([], CATALOG_SCHEMA)
-            with _explicit_list_planning(self.spark):
-                return self.spark.read.schema(CATALOG_SCHEMA).parquet(
-                    *files
-                )
-        if not self.fs.exists(self.catalog_path):
+        files = self._plan_abs(self.catalog_path)
+        if not files:
             return self.spark.createDataFrame([], CATALOG_SCHEMA)
         # explicit schema: no planning-time footer read (see _tier_schema)
-        return self.spark.read.schema(CATALOG_SCHEMA).parquet(
-            self.catalog_path
-        )
+        with _explicit_list_planning(self.spark):
+            return self.spark.read.schema(CATALOG_SCHEMA).parquet(*files)
 
     def catalog_add(self, rows: DataFrame) -> None:
         shaped = rows.select(
@@ -1711,10 +1318,7 @@ class ParquetTieredStore:
             F.col("schema_name").cast("string"),
             F.col("created_ts").cast("long"),
         )
-        if self._manifest_mode:
-            adds = self._adopt(shaped, self.catalog_path, partitioned=False)
-            with self.commit.txn(op="catalog") as tx:
-                for rel, size in adds:
-                    tx.add(rel, size)
-            return
-        shaped.write.mode("append").parquet(self.catalog_path)
+        adds = self._adopt(shaped, self.catalog_path, partitioned=False)
+        with self.commit.txn(op="catalog") as tx:
+            for rel, size in adds:
+                tx.add(rel, size)

@@ -95,15 +95,10 @@ class StreamingIngest:
         store_mode: str = "cow",
         skew_salts: int | None = None,
         quality_checks=None,
-        commit_protocol: str | None = None,
     ):
         self.spark = spark
         self.schemas = schemas
         self.root = root
-        #: commit backend for every store this ingest opens: None =
-        #: seqlock (default), "manifest" = the manifest-log backend
-        #: (snapshot-isolated reads; maintenance() then also vacuums)
-        self.commit_protocol = commit_protocol
         #: spread hot metrics' LWW align over N reducers (SURVEY §7.3);
         #: None = single-stage (map-side partials usually suffice)
         self.skew_salts = skew_salts
@@ -145,7 +140,6 @@ class StreamingIngest:
                 schema,
                 f"{self.root}/{schema.name}",
                 mode=self.store_mode,
-                commit_protocol=self.commit_protocol,
             )
         return self._stores[schema.name]
 
@@ -156,8 +150,7 @@ class StreamingIngest:
         any_schema = self.schemas.schemas[0]
         if "_root" not in self._stores:
             self._stores["_root"] = ParquetTieredStore(
-                self.spark, any_schema, self.root,
-                commit_protocol=self.commit_protocol,
+                self.spark, any_schema, self.root
             )
         return self._stores["_root"]
 
@@ -652,10 +645,10 @@ class StreamingIngest:
         """The periodic maintenance pass the reference runs as cron'd
         bin/ scripts: for every store this ingest has touched, expire
         day partitions past retention (O4), then audit and compact the
-        day partitions steady micro-batching fragmented. Returns
-        ``{schema_name: {"expired": {tier: [days]}, "compacted":
-        {tier: [days]}}}`` — what actually happened, for the operator
-        log. Run off the hot path (between batches / from a scheduler),
+        day partitions steady micro-batching fragmented, then vacuum
+        the files both retired. Returns ``{schema_name: {"expired":
+        {tier: [days]}, "compacted": {tier: [days]}, "vacuumed": n}}``
+        — what actually happened, for the operator log. Run off the hot path (between batches / from a scheduler),
         never concurrently with an active flush into the same store."""
         now = int(now if now is not None else self.clock())
         out: dict = {}
@@ -678,15 +671,15 @@ class StreamingIngest:
                     )
                     if done:
                         compacted[i] = done
-            out[name] = {"expired": expired, "compacted": compacted}
-            if store._manifest_mode:
-                # manifest backends retire files logically; maintenance
-                # is where the physical reclaim belongs. The grace is
-                # the VACUUM-retention contract: any scan planned more
-                # than vacuum_grace_s ago must have finished.
-                out[name]["vacuumed"] = len(
-                    store.vacuum(grace_s=vacuum_grace_s)
-                )
+            # expiry and compaction retire files logically; maintenance
+            # is where the physical reclaim belongs. The grace is the
+            # VACUUM-retention contract: any scan planned more than
+            # vacuum_grace_s ago must have finished.
+            out[name] = {
+                "expired": expired,
+                "compacted": compacted,
+                "vacuumed": len(store.vacuum(grace_s=vacuum_grace_s)),
+            }
         return out
 
     # -- instrumentation (S8) ---------------------------------------------

@@ -1,237 +1,146 @@
-"""The commit-surface seam (VERDICT r8 "What's missing" #1): the store's
-swap guard / epoch / consistent_read extracted behind CommitProtocol,
-with plain-parquet seqlock as the default backend and the
-SnapshotCommitProtocol adapter proving the interface is satisfiable by
-a transactional table format's native features (no jar in-sandbox — the
-snapshot provider is injected)."""
+"""Opening a store root under the one commit protocol, the manifest log:
+fresh and logged roots open on it, a tree written outside the log is
+refused until ``migrate`` adopts it, and a first write that crashed
+before its commit stays invisible. Also the write paths' commit-shape
+invariants: a multi-day compaction is one commit, and a cow upsert
+refuses a day set that misses a day its batch touches."""
+
+import os
 
 import pytest
 
-from kenshin_spark.commit import (
-    SeqlockCommitProtocol,
-    SnapshotCommitProtocol,
-)
+from kenshin_spark.commit import ManifestCommitProtocol
 from kenshin_spark.config import Schema
-from kenshin_spark.store import ParquetTieredStore
+from kenshin_spark.store import LegacyTreeError, ParquetTieredStore
+
+SCHEMA = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
+DAY = 86400
 
 
-SCHEMA = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
+def _rows(spark, pts):
+    return spark.createDataFrame(pts, "metric string, ts long, value double")
 
 
-class TestSeqlockBackend:
+def _points(store, i=0):
+    return sorted((r["metric"], r["ts"], r["value"])
+                  for r in store.read(i).collect())
+
+
+class TestRootOpening:
     def test_fresh_root_defaults_to_manifest(self, spark, tmp_path):
-        """VERDICT r10 #2: the scale-safe manifest log is the default
-        for NEW stores; the seqlock (+ ignoreMissingFiles + retries)
-        remains selectable and remains the auto choice for legacy
-        roots."""
-        from kenshin_spark.commit import ManifestCommitProtocol
-
         st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "st"))
         assert isinstance(st.commit, ManifestCommitProtocol)
-        assert st.commit.reader_conf() == {}
-
-    def test_legacy_root_defaults_to_seqlock(self, spark, tmp_path):
-        """A pre-existing root WITHOUT a manifest keeps the seqlock —
-        retrofitting a manifest from a listing could resurrect
-        retired-but-undeleted files."""
-        legacy = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "st"), commit_protocol="seqlock"
-        )
-        legacy.upsert(0, spark.createDataFrame(
-            [("m", 60, 1.0)], "metric string, ts long, value double"))
-        st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "st"))
-        assert isinstance(st.commit, SeqlockCommitProtocol)
-        assert st.read_retry_stats is st.commit.stats
-        assert st.commit.reader_conf() == {
-            "spark.sql.files.ignoreMissingFiles": "true"
-        }
-        assert st.read(0).count() == 1
+        assert st.commit.epoch() == 0
+        assert _points(st) == []
 
     def test_manifest_root_reopens_as_manifest(self, spark, tmp_path):
-        from kenshin_spark.commit import ManifestCommitProtocol
-
         first = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "st"))
-        first.upsert(0, spark.createDataFrame(
-            [("m", 60, 1.0)], "metric string, ts long, value double"))
+        first.upsert(0, _rows(spark, [("m", 60, 1.0)]))
         st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "st"))
-        assert isinstance(st.commit, ManifestCommitProtocol)
-        assert st.read(0).count() == 1
+        assert st.commit.epoch() == 1
+        assert _points(st) == [("m", 60, 1.0)]
 
-    def test_guard_flips_epoch_odd_even_via_store_api(self, spark, tmp_path):
-        """The store's public seqlock behavior is unchanged through the
-        delegation: even when quiescent, odd in flight, nesting safe."""
-        st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "st"),
-                                commit_protocol="seqlock")
-        assert st.swap_epoch() % 2 == 0
-        e0 = st.swap_epoch()
-        with st._swap_guard():
-            assert st.swap_epoch() == e0 + 1  # odd: in flight
-            with st._swap_guard():  # nested (compact -> _compact_day)
-                assert st.swap_epoch() == e0 + 1
-        assert st.swap_epoch() == e0 + 2  # even again
+    def test_legacy_tree_is_refused_until_migrate(self, spark, tmp_path):
+        """A tier written by a bare ``partitionBy("day")`` parquet write
+        has no manifest: opening it must fail loudly (reading it would
+        plan from an empty log), and ``migrate`` adopts it exactly."""
+        root = str(tmp_path / "st")
+        pts = [("m", 60, 1.0), ("m", DAY + 60, 2.0), ("n", 120, 3.0)]
+        spark.createDataFrame(
+            [(m, ts, v, ts // DAY) for m, ts, v in pts],
+            "metric string, ts long, value double, day long",
+        ).write.partitionBy("day").parquet(os.path.join(root, "tier=0"))
+        with pytest.raises(LegacyTreeError, match="migrate"):
+            ParquetTieredStore(spark, SCHEMA, root)
+        st = ParquetTieredStore.migrate(spark, SCHEMA, root)
+        assert st.history()[0]["op"] == "migrate"
+        assert _points(st) == sorted(pts)
+        # a logged root reopens normally; a second migrate is refused
+        assert _points(ParquetTieredStore(spark, SCHEMA, root)) == sorted(pts)
+        with pytest.raises(RuntimeError, match="already exists"):
+            ParquetTieredStore.migrate(spark, SCHEMA, root)
 
-    def test_consistent_read_returns_and_counts(self, spark, tmp_path):
-        st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "st"))
-        assert st.consistent_read(lambda: 41 + 1) == 42
-        assert st.read_retry_stats["epoch_races"] == 0
+    def test_cli_migrate_adopts_the_refused_tree(
+        self, spark, tmp_path, capsys
+    ):
+        import json
 
-    def test_crash_debris_odd_epoch_is_re_evened(self, spark, tmp_path):
-        st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "st"),
-                                commit_protocol="seqlock")
-        st.fs.write_text_atomic(st._epoch_sidecar, "7")  # guard died odd
-        with st._swap_guard():
-            assert st.swap_epoch() % 2 == 1
-        assert st.swap_epoch() % 2 == 0
+        from kenshin_spark import cli
 
+        root = str(tmp_path / "st")
+        spark.createDataFrame(
+            [("m", 60, 1.0, 0)],
+            "metric string, ts long, value double, day long",
+        ).write.partitionBy("day").parquet(os.path.join(root, "tier=0"))
+        base = ["--root", root, "--cpus", "2", "--retentions", "60s:30d"]
+        with pytest.raises(LegacyTreeError):
+            cli.main(base + ["info"])
+        cli.main(base + ["migrate"])
+        assert json.loads(capsys.readouterr().out) == {
+            "committed_seq": 1, "files": 1,
+        }
+        cli.main(base + ["info"])
+        assert '"metric": "m"' in capsys.readouterr().out
 
-class TestSnapshotBackend:
-    """The table-format adapter: every primitive degenerates to the
-    format's native feature (guard = no-op, epoch = snapshot version,
-    consistent_read = one plain call, reader needs no special conf)."""
+    def test_crashed_first_write_stays_invisible(self, spark, tmp_path):
+        """A fresh root whose first write died after ``_adopt`` moved
+        its files into the tier but before the commit record: the
+        adopted files carry the ``<tag>-`` prefix, so the reopen is NOT
+        taken for a legacy tree — it opens at epoch 0 and the
+        never-committed rows stay invisible."""
+        root = str(tmp_path / "st")
+        st = ParquetTieredStore(spark, SCHEMA, root, mode="mor")
 
-    def test_primitives_are_native(self):
-        version = {"v": 3}
-        proto = SnapshotCommitProtocol(lambda: version["v"])
-        assert proto.epoch() == 3
-        version["v"] = 4  # a commit advanced the table version
-        assert proto.epoch() == 4
-        with proto.guard_transition():
-            pass  # no sidecar, no file IO — atomic in the log
-        calls = []
-        out = proto.consistent_read(lambda: calls.append(1) or "ok")
-        assert out == "ok" and calls == [1]  # exactly one shot, no loop
-        assert proto.reader_conf() == {}
+        def crash(tx, now=None):
+            raise OSError("died before publishing the commit record")
 
-    def test_store_runs_through_snapshot_protocol(self, spark, tmp_path):
-        """A store constructed with the snapshot backend exercises every
-        write/read path without touching the epoch sidecar (the guard
-        writes nothing; reads never validate)."""
-        version = {"v": 0}
-        proto = SnapshotCommitProtocol(lambda: version["v"])
-        st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "st"), mode="mor",
-            commit_protocol=proto,
-        )
-        df = spark.createDataFrame(
-            [("m", 60, 1.0), ("m", 120, 2.0)],
-            "metric string, ts long, value double",
-        )
-        st.upsert(0, df)
-        st.compact(0)  # the guarded path — guard is a no-op here
-        got = {r["ts"]: r["value"] for r in st.consistent_read(
-            lambda: st.read(0).collect()
-        )}
-        assert got == {60: 1.0, 120: 2.0}
-        assert not st.fs.exists(st._epoch_sidecar)  # never written
-        assert st.read_retry_stats["epoch_races"] == 0
+        st.commit.commit_txn = crash
+        with pytest.raises(OSError):
+            st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
+        on_disk = [f for _, _, fs in os.walk(os.path.join(root, "tier=0"))
+                   for f in fs if f.endswith(".parquet")]
+        assert on_disk  # the adopted file sits in the live tree
+        reopened = ParquetTieredStore(spark, SCHEMA, root, mode="mor")
+        assert reopened.commit.epoch() == 0
+        assert _points(reopened) == []
 
 
 class TestBatchedCompactionGuard:
     def test_multi_day_compact_is_one_epoch_transition(self, spark, tmp_path):
-        """compact(days=[...]) promotes every staged day under ONE guard:
-        the epoch moves by exactly 2 regardless of day count (it used to
-        move 2 per day — the swap-storm that drove serving p95
-        retry-bound in the 1M load capture)."""
-        schema = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
+        """compact(days=[...]) folds every requested day in one job and
+        commits them in ONE transaction: the epoch moves by exactly one
+        regardless of day count."""
         st = ParquetTieredStore(
-            spark, schema, str(tmp_path / "st"), mode="mor",
-            commit_protocol="seqlock",
+            spark, SCHEMA, str(tmp_path / "st"), mode="mor"
         )
-        day = 86400
-        rows = [("m", d * day + 60 * k, 1.0) for d in range(6) for k in range(3)]
-        for k in range(3):  # fragment: 3 appends per day
-            st.upsert(0, spark.createDataFrame(
-                rows, "metric string, ts long, value double"))
-        e0 = st.swap_epoch()
+        rows = [("m", d * DAY + 60 * k, 1.0) for d in range(6) for k in range(3)]
+        for _ in range(3):  # fragment: 3 appends per day
+            st.upsert(0, _rows(spark, rows))
+        e0 = st.commit.epoch()
         done = st.compact(0, days=[0, 1, 2, 3, 4])
         assert done == [0, 1, 2, 3, 4]
-        assert st.swap_epoch() == e0 + 2  # one transition, not five
+        assert st.commit.epoch() == e0 + 1  # one commit, not five
         # and the fold is still correct
         assert st.read(0).count() == 18
 
 
-class TestDegradedReadFlags:
-    """ADVICE r8 follow-through: a degraded consistent_read must be
-    visible PER REQUEST, not only in process-wide counters — the
-    protocol fills a caller-passed flags dict, and the HTTP layer
-    surfaces it as `"degraded": true` in the response body."""
-
-    def _always_racing_protocol(self):
-        from kenshin_spark.commit import SeqlockCommitProtocol
-
-        class TickingFs:
-            """Epoch moves on every read: every validation races."""
-
-            def __init__(self):
-                self.n = 0
-
-            def read_text(self, path):
-                self.n += 2  # stays even: never an in-flight wait
-                return str(self.n)
-
-            def write_text_atomic(self, path, text):
-                pass
-
-        return SeqlockCommitProtocol(TickingFs(), "/nowhere/epoch")
-
-    def test_flags_filled_on_degraded_return(self):
-        proto = self._always_racing_protocol()
-        flags = {}
-        out = proto.consistent_read(
-            lambda: 42, retries=3, backoff_s=0.0, flags=flags
-        )
-        assert out == 42
-        assert flags["degraded"] is True
-        assert flags["epoch_races"] == 3
-        assert proto.stats["degraded_returns"] == 1
-
-    def test_flags_untouched_on_clean_read(self, spark, tmp_path):
-        from kenshin_spark.config import Schema
-        from kenshin_spark.store import ParquetTieredStore
-
+class TestCowDaySetInvariant:
+    def test_upsert_days_missing_a_touched_day_raises(self, spark, tmp_path):
+        """A cow merge drops only the supplied days before adding its
+        rewrites: a batch touching d1 and d2 upserted with
+        ``days=[d1]`` would leave d2's old row beside the new one. The
+        upsert must raise instead, committing nothing."""
         st = ParquetTieredStore(
-            spark,
-            Schema.from_strings("s", ".*", "60s:1d", xff=0.5,
-                                agg_method="average"),
-            str(tmp_path / "flg"),
+            spark, SCHEMA, str(tmp_path / "st"), mode="cow"
         )
-        flags = {}
-        assert st.consistent_read(lambda: 7, flags=flags) == 7
-        assert flags == {}
-
-    def test_snapshot_backend_never_degrades(self):
-        from kenshin_spark.commit import SnapshotCommitProtocol
-
-        proto = SnapshotCommitProtocol(lambda: 5)
-        flags = {}
-        assert proto.consistent_read(lambda: 1, flags=flags) == 1
-        assert flags == {}
-
-    def test_http_body_carries_degraded_marker(self):
-        import json
-        import urllib.request
-
-        from kenshin_spark.serving import HttpFetchServer
-
-        def fetch_fn(metrics, frm, until, now, flags=None):
-            if flags is not None:
-                flags["degraded"] = True
-            return [("m", 0, 1.0)]
-
-        def plain_fetch(metrics, frm, until, now):
-            return [("m", 0, 1.0)]
-
-        for fn, expect in ((fetch_fn, True), (plain_fetch, False)):
-            srv = HttpFetchServer(fn)
-            host, port = srv.start()
-            try:
-                body = json.loads(
-                    urllib.request.urlopen(
-                        f"http://{host}:{port}/fetch?metric=m&from=0"
-                        f"&until=1&now=1"
-                    ).read()
-                )
-                assert body["rows"] == [["m", 0, 1.0]]
-                assert body.get("degraded", False) is expect
-            finally:
-                srv.stop()
+        st.upsert(0, _rows(spark, [("m", 60, 1.0), ("m", DAY + 60, 2.0)]))
+        before = _points(st)
+        epoch = st.commit.epoch()
+        with pytest.raises(ValueError, match="day=1"):
+            st.upsert(
+                0,
+                _rows(spark, [("m", 60, 5.0), ("m", DAY + 60, 6.0)]),
+                days=[0],
+            )
+        assert st.commit.epoch() == epoch
+        assert _points(st) == before

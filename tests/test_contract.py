@@ -69,45 +69,27 @@ def test_driver_order_fronts_unverified():
     assert order[: len(unverified)] == unverified  # all fronted
 
 
-def test_promotion_dry_run_window_arithmetic():
-    """Simulate the remaining staged-bank promotions forward from the
-    CURRENT registry state (works both before and after each bank is
-    actually promoted): every not-yet-promoted bank must land as
-    exactly one <= 50-slot never-verified window, banks must be
-    all-in or all-out (never partially promoted), and bank names must
-    never collide with each other."""
-    from kenshin_spark.queries import DRIVER_VERIFIED, QUERIES
-    from kenshin_spark.queries_staged import STAGED
-    from kenshin_spark.queries_staged_r6 import STAGED_R6
-    from kenshin_spark.queries_staged_r7 import STAGED_R7
-    from kenshin_spark.queries_staged_r8 import STAGED_R8
-    from kenshin_spark.queries_staged_r9 import STAGED_R9
-    from kenshin_spark.queries_staged_r10 import STAGED_R10
-    from kenshin_spark.queries_staged_r11 import STAGED_R11
-    from kenshin_spark.queries_staged_r12 import STAGED_R12
-    from kenshin_spark.queries_staged_r13 import STAGED_R13
-    from kenshin_spark.queries_staged_r14 import STAGED_R14
-    from kenshin_spark.queries_staged_r15 import STAGED_R15
-    from kenshin_spark.queries_staged_r16 import STAGED_R16
+def test_every_staged_module_feeds_queries():
+    """Every ``queries_staged*`` module on disk is a live bank: it
+    defines at least one non-empty table of QuerySpec rows, and every
+    row it defines is registered in QUERIES — a bank the registry never
+    loads is dead code the oracle gate never runs."""
+    import importlib
+    import pathlib
 
-    banks = [set(STAGED), set(STAGED_R6), set(STAGED_R7), set(STAGED_R8),
-             set(STAGED_R9), set(STAGED_R10), set(STAGED_R11),
-             set(STAGED_R12), set(STAGED_R13), set(STAGED_R14),
-             set(STAGED_R15), set(STAGED_R16)]
-    for a in range(len(banks)):
-        for b in range(a + 1, len(banks)):
-            assert not banks[a] & banks[b], "bank name collision"
+    from kenshin_spark.queries import QuerySpec
 
-    reg = set(QUERIES)
-    ver = set(DRIVER_VERIFIED)
-    for bank in banks:
-        promoted = bank <= reg
-        assert promoted or not (bank & reg), "bank partially promoted"
-        if promoted:
-            continue
-        # next round: the driver verifies the current window, the bank joins
-        ver |= reg
-        reg |= bank
-        unverified = reg - ver
-        assert unverified == bank
-        assert len(unverified) <= DRIVER_WINDOW
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "kenshin_spark"
+    modules = sorted(p.stem for p in pkg.glob("queries_staged*.py"))
+    assert modules
+    for name in modules:
+        mod = importlib.import_module(f"kenshin_spark.{name}")
+        tables = [
+            v for v in vars(mod).values()
+            if isinstance(v, dict) and v
+            and all(isinstance(x, QuerySpec) for x in v.values())
+        ]
+        assert tables, f"{name} defines no QuerySpec table"
+        for table in tables:
+            missing = sorted(set(table) - set(QUERIES))
+            assert not missing, f"{name} rows not in QUERIES: {missing}"

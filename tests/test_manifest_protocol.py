@@ -1,8 +1,8 @@
-"""The manifest-log commit backend (VERDICT r9 "What's missing" #1):
+"""The manifest-log commit protocol (VERDICT r9 "What's missing" #1):
 snapshot isolation on plain parquet. Readers plan every scan from an
 atomically-committed file list instead of directory listings, so
-``consistent_read`` is one plain call (no retries, no degraded class,
-no ``ignoreMissingFiles``), maintenance retires files LOGICALLY, and
+``consistent_read`` is one plain call, maintenance retires files
+LOGICALLY, and
 ``vacuum`` reclaims bytes after a grace window — the local stand-in
 for a Delta/Iceberg commit log, built on the store's own atomic-rename
 sidecar machinery."""
@@ -23,8 +23,7 @@ DAY = 86400
 
 def _mk(spark, tmp_path, mode="mor", schema=SCHEMA, name="st"):
     return ParquetTieredStore(
-        spark, schema, str(tmp_path / name), mode=mode,
-        commit_protocol="manifest",
+        spark, schema, str(tmp_path / name), mode=mode
     )
 
 
@@ -45,32 +44,23 @@ def _disk_parquet(root, tier=0):
 
 
 class TestManifestProtocolSurface:
-    def test_store_accepts_the_string_selector(self, spark, tmp_path):
-        st = _mk(spark, tmp_path)
-        assert isinstance(st.commit, ManifestCommitProtocol)
-        assert st.commit.reader_conf() == {}  # no ignoreMissingFiles
-        assert not st.fs.exists(st._epoch_sidecar)  # seqlock never runs
-
     def test_consistent_read_is_one_plain_shot(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
         calls = []
-        flags = {}
-        assert st.consistent_read(
-            lambda: calls.append(1) or 42, flags=flags
-        ) == 42
-        assert calls == [1] and flags == {}  # no loop, never degraded
+        assert st.consistent_read(lambda: calls.append(1) or 42) == 42
+        assert calls == [1]  # no validation loop, no retry
 
     def test_epoch_is_the_commit_count(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
-        assert st.swap_epoch() == 0
+        assert st.commit.epoch() == 0
         st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
-        assert st.swap_epoch() == 1
+        assert st.commit.epoch() == 1
         st.upsert(0, _rows(spark, [("m", 120, 2.0)]))
-        assert st.swap_epoch() == 2
+        assert st.commit.epoch() == 2
         # a transaction with no changes must not move the epoch
         with st.commit.txn():
             pass
-        assert st.swap_epoch() == 2
+        assert st.commit.epoch() == 2
 
     def test_manifest_pointer_flip_is_the_commit(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
@@ -141,7 +131,7 @@ class TestSnapshotIsolation:
     def test_scan_planned_before_compact_survives_it(self, spark, tmp_path):
         """The headline guarantee: a DataFrame planned against snapshot N
         collects correctly even after maintenance committed N+1 — the
-        exact scenario that made seqlock reads retry/degrade."""
+        scenario a listing-planned read would fail mid-scan on."""
         st = _mk(spark, tmp_path)
         for k in range(3):
             st.upsert(0, _rows(spark, [("m", 60 * (k + 1), float(k))]))
@@ -219,8 +209,7 @@ class TestSnapshotIsolation:
         assert st.read(0).count() == 12
         # cold re-open reconstructs from checkpoint + deltas
         cold = ParquetTieredStore(
-            st.spark, SCHEMA, st.root, mode="mor",
-            commit_protocol="manifest",
+            st.spark, SCHEMA, st.root, mode="mor"
         )
         assert cold.commit.epoch() == 12
         assert cold.read(0).count() == 12
@@ -249,9 +238,9 @@ class TestManifestMaintenance:
             [("keep", "s", 0), ("doom", "s", 0)],
             "metric string, schema_name string, created_ts long",
         ))
-        e0 = st.swap_epoch()
+        e0 = st.commit.epoch()
         st.delete_metrics(["doom"])
-        assert st.swap_epoch() == e0 + 1  # tiers + catalog in ONE commit
+        assert st.commit.epoch() == e0 + 1  # tiers + catalog in ONE commit
         assert [r["metric"] for r in st.read(0).collect()] == ["keep"]
         assert [r["metric"] for r in st.catalog().collect()] == ["keep"]
 
@@ -280,7 +269,7 @@ class TestManifestMaintenance:
         dest = str(tmp_path / "bak")
         st.backup_to(dest)
         restored = ParquetTieredStore(
-            spark, SCHEMA, dest, mode="mor", commit_protocol="manifest"
+            spark, SCHEMA, dest, mode="mor"
         )
         got = {r["ts"]: r["value"] for r in restored.read(0).collect()}
         assert got == {60: 1.0}
@@ -295,13 +284,14 @@ class TestManifestServing:
         st = _mk(spark, tmp_path)
         st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
         reader = reader_clone(st)
-        assert reader.commit.plans_from_manifest
+        assert reader.spark is not st.spark  # isolated SQL conf
+        assert reader.commit.epoch() == st.commit.epoch()
         assert (
             reader.spark.conf.get(
                 "spark.sql.files.ignoreMissingFiles", "false"
             )
             == "false"
-        )  # the seqlock-only conf is retired under this backend
+        )  # planning from the log never needs missing-file tolerance
         got = {r["ts"]: r["value"] for r in reader.read(0).collect()}
         assert got == {60: 1.0}
 
@@ -311,11 +301,12 @@ class TestManifestServing:
         st = _mk(spark, tmp_path)
         st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
         lookup, fetch_fn = store_serving_fns(st)
-        flags = {}
-        assert lookup("m", flags=flags) == [(60, 1.0)]
-        assert flags == {}
-        assert st.read_retry_stats["stale_retries"] == 0
-        assert st.read_retry_stats["degraded_returns"] == 0
+        assert lookup("m") == [(60, 1.0)]
+        # a fold committed between lookups: the next answer is exact
+        st.upsert(0, _rows(spark, [("m", 60, 2.0)]))
+        st.compact(0, days=[0])
+        assert lookup("m") == [(60, 2.0)]
+        assert fetch_fn(["m"], 60, 120, 120) == [("m", 60, 2.0)]
 
 
 class TestTombstoneVacuum:
@@ -691,18 +682,6 @@ class TestTimeTravel:
         with pytest.raises(ValueError, match="committed range"):
             st.read(0, version=0)
 
-    def test_seqlock_store_refuses_versions_and_has_no_history(
-        self, spark, tmp_path
-    ):
-        st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "sl"), mode="mor",
-            commit_protocol="seqlock",
-        )
-        st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
-        assert st.history() == []
-        with pytest.raises(ValueError, match="manifest"):
-            st.read(0, version=1)
-
     def test_vacuum_ends_the_travel_window(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
         st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
@@ -743,8 +722,7 @@ class TestTimeTravel:
         v1 = st.commit.epoch()
         st.upsert(0, _rows(spark, [("m", 60, 3.0)]))
         cold = ParquetTieredStore(
-            spark, SCHEMA, st.root, mode="mor",
-            commit_protocol="manifest",
+            spark, SCHEMA, st.root, mode="mor"
         )
         assert cold.read(0, version=v1).collect()[0].value == 1.0
         assert [r["op"] for r in cold.history()] == ["upsert", "upsert"]
@@ -797,16 +775,6 @@ class TestRestore:
             st.restore(pre)
         assert st.commit.epoch() == before  # nothing committed
         assert st.read(0).collect()[0].value == 2.0
-
-    def test_restore_needs_the_manifest_backend(self, spark, tmp_path):
-        st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "sl"), mode="mor",
-            commit_protocol="seqlock",
-        )
-        st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
-        with pytest.raises(ValueError, match="manifest"):
-            st.restore(1)
-
 
 class TestCrossProcessConcurrency:
     """The OCC claim done for REAL: separate OS processes (their own

@@ -126,15 +126,12 @@ class TestSchemaChange:
     def test_rebuild_on_manifest_store_reinits_the_manifest(
         self, spark, tmp_path
     ):
-        """ADVICE r10: after a REBUILD, the swapped-in root was written
-        outside the manifest log — every handle that still plans from a
-        manifest (serving clones, a manifest-mode re-open) would read
-        epoch 0 and silently see EMPTY tiers unless change_schema
-        bootstraps a manifest for the rebuilt tree."""
+        """ADVICE r10: after a REBUILD, every handle that plans from the
+        manifest (serving clones, a cold re-open) must see the rebuilt
+        tiers — the rebuilt tree carries its own log, and the
+        whole-root swap moves it along with the data."""
         root = str(tmp_path / "store")
-        store = ParquetTieredStore(
-            spark, self.OLD, root, commit_protocol="manifest"
-        )
+        store = ParquetTieredStore(spark, self.OLD, root)
         now = 100_000
         pts = spark.createDataFrame(
             [("m", now - 40, 1.0), ("m", now - 30, 2.0)],
@@ -146,13 +143,10 @@ class TestSchemaChange:
         )
         res = change_schema(spark, store, new_schema, now)
         assert res.action == REBUILD
-        # the returned store keeps the backend and sees the data
-        assert res.store.commit.plans_from_manifest
+        # the returned store sees the data
         assert rows(res.store.read(0)) == [("m", 99960, 1.5)]
-        # and so does a FRESH manifest-mode re-open of the same root
-        reopened = ParquetTieredStore(
-            spark, new_schema, root, commit_protocol="manifest"
-        )
+        # and so does a cold re-open of the same root
+        reopened = ParquetTieredStore(spark, new_schema, root)
         assert reopened.commit.epoch() >= 1
         assert rows(reopened.read(0)) == [("m", 99960, 1.5)]
 
@@ -3865,19 +3859,15 @@ class TestRenderScalarExtras:
 
 class TestAdviceR8Hardening:
     """Regression tests for the round-8 ADVICE items: legacy-mor
-    snapshot reads, torn seq sidecars, and stale-read marker scope."""
+    snapshot reads and torn seq sidecars."""
+
+    SCHEMA = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
 
     def _mor(self, spark, tmp_path):
-        from kenshin_spark.config import Schema
         from kenshin_spark.store import ParquetTieredStore
 
-        schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
-        # these scenarios inject files straight into the tier layout
-        # (legacy/imported trees) — the listing-planned seqlock is the
-        # backend such roots auto-select in the wild
         return ParquetTieredStore(
-            spark, schema, str(tmp_path / "st"), mode="mor",
-            commit_protocol="seqlock",
+            spark, self.SCHEMA, str(tmp_path / "st"), mode="mor"
         )
 
     def test_read_at_keeps_legacy_rows_without_seq(self, spark, tmp_path):
@@ -3885,13 +3875,17 @@ class TestAdviceR8Hardening:
         imported) read back as NULL under the explicit tier schema; the
         as-of filter must keep them (they predate every stamp), and
         stamped rows must still win LWW over them (ADVICE r8 medium)."""
-        store = self._mor(spark, tmp_path)
-        # legacy rows: write WITHOUT _seq straight into the tier layout
+        from kenshin_spark.store import ParquetTieredStore
+
+        root = str(tmp_path / "st")
+        # legacy rows: written WITHOUT _seq straight into the tier
+        # layout, outside the manifest log — migrate adopts them
         legacy = spark.createDataFrame(
             [("m", 60, 1.0, 0), ("n", 60, 5.0, 0)],
             "metric string, ts long, value double, day long",
         )
-        legacy.write.partitionBy("day").parquet(store.tier_path(0))
+        legacy.write.partitionBy("day").parquet(f"{root}/tier=0")
+        store = ParquetTieredStore.migrate(spark, self.SCHEMA, root, mode="mor")
         df = spark.createDataFrame(
             [("m", 60, 2.0)], "metric string, ts long, value double"
         )
@@ -3925,22 +3919,3 @@ class TestAdviceR8Hardening:
         assert store.last_seq() == 0  # unreadable → hint gone
         n = store._next_seq()
         assert n == 4  # recovered from max(_seq) over the tier, not 1
-
-    def test_stale_read_markers_exclude_plain_does_not_exist(self):
-        """Permanent errors whose message merely contains 'does not
-        exist' (missing table/view/column) must NOT be retried; the
-        file-level classes a racing swap actually produces must
-        (ADVICE r8 low)."""
-        from kenshin_spark.store import _is_stale_read
-
-        assert not _is_stale_read(
-            Exception("[TABLE_OR_VIEW_NOT_FOUND] The table `x` does not exist")
-        )
-        assert not _is_stale_read(Exception("column `v` does not exist"))
-        assert _is_stale_read(
-            Exception("[FAILED_READ_FILE.FILE_NOT_EXIST] reading file x")
-        )
-        assert _is_stale_read(
-            Exception("java.io.FileNotFoundException: /x/part-0.parquet")
-        )
-        assert _is_stale_read(Exception("[PATH_NOT_FOUND] Path does not exist"))

@@ -102,41 +102,6 @@ class TestHttpFetchServer:
         finally:
             srv.stop()
 
-    def test_hot_surfaces_degraded_flag(self):
-        """ADVICE r9: /hot must carry the per-request degraded marker
-        exactly like /fetch and /render — a flag-aware hot_fn that
-        degrades past its validation budget may not leave the client
-        blind."""
-
-        def hot_fn(metric, flags: dict | None = None):
-            if flags is not None:
-                flags["degraded"] = True
-            return [(5, 1.5)]
-
-        srv = HttpFetchServer(lambda *a: [], hot_fn=hot_fn)
-        host, port = srv.start()
-        try:
-            with urllib.request.urlopen(
-                f"http://{host}:{port}/hot?metric=x"
-            ) as resp:
-                body = json.load(resp)
-            assert body["datapoints"] == [[5, 1.5]]
-            assert body["degraded"] is True
-
-            # a plain (flag-unaware) hot_fn keeps the old body shape
-            bare = HttpFetchServer(lambda *a: [], hot_fn=lambda m: [(5, 1.5)])
-            h2, p2 = bare.start()
-            try:
-                with urllib.request.urlopen(
-                    f"http://{h2}:{p2}/hot?metric=x"
-                ) as resp:
-                    b2 = json.load(resp)
-                assert "degraded" not in b2
-            finally:
-                bare.stop()
-        finally:
-            srv.stop()
-
     def test_engine_error_returns_500_not_dropped_connection(self, spark):
         """A non-client error raised by the wired fn (e.g. a Spark
         analysis failure during fetch/collect) must come back as an
@@ -358,20 +323,15 @@ class TestConcurrentServingDuringWrites:
             http.stop()
 
 
-class TestSwapSeqlock:
-    """The store's filesystem seqlock (store.swap_epoch /
-    consistent_read): plain parquet has no snapshot isolation, so a
-    serving read racing a compaction day-swap can fail FAILED_READ_FILE
-    mid-scan or silently read the between-renames gap. The seqlock makes
-    every destructive transition observable; consistent_read retries
-    around it. (On Delta/Iceberg this degenerates to a plain read —
-    fs.py's documented production swap.)"""
+class TestServingUnderCommits:
+    """Serving reads plan from the committed manifest, so compaction and
+    expiry commits landing mid-read never tear a response: superseded
+    files stay on disk until vacuum, and each scan reads exactly the
+    snapshot it planned from."""
 
     def _mk(self, spark, tmp_path, mode="mor"):
-        # seqlock semantics under test — pin the backend (fresh roots
-        # default to the manifest log since r11)
         st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "sl"),
-                                mode=mode, commit_protocol="seqlock")
+                                mode=mode)
         st.upsert(
             0,
             spark.createDataFrame(
@@ -381,93 +341,18 @@ class TestSwapSeqlock:
         )
         return st
 
-    def test_epoch_even_after_every_destructive_op(self, spark, tmp_path):
-        st = self._mk(spark, tmp_path)
-        assert st.swap_epoch() % 2 == 0
-        e0 = st.swap_epoch()
-        st.compact(0, days=[0])  # per-day double-rename swap
-        e1 = st.swap_epoch()
-        assert e1 % 2 == 0 and e1 > e0
-        st.compact(0)  # full-tier swap
-        e2 = st.swap_epoch()
-        assert e2 % 2 == 0 and e2 > e1
-        st.delete_metrics(["m.a"])
-        e3 = st.swap_epoch()
-        assert e3 % 2 == 0 and e3 > e2
-
     def test_expire_bumps_only_when_something_dropped(self, spark, tmp_path):
         st = self._mk(spark, tmp_path)
-        e0 = st.swap_epoch()
+        e0 = st.commit.epoch()
         st.expire(now=120)  # retention 1d → nothing old enough
-        assert st.swap_epoch() == e0
+        assert st.commit.epoch() == e0  # an empty transaction commits nothing
         st.expire(now=86_400 * 400)  # everything expired
-        assert st.swap_epoch() > e0 and st.swap_epoch() % 2 == 0
-
-    def test_consistent_read_retries_stale_then_returns(self, spark, tmp_path):
-        st = self._mk(spark, tmp_path)
-        calls = []
-
-        def flaky():
-            calls.append(1)
-            if len(calls) == 1:
-                raise RuntimeError(
-                    "[FAILED_READ_FILE.FILE_NOT_EXIST] gone mid-swap"
-                )
-            return 42
-
-        assert st.consistent_read(flaky) == 42
-        assert len(calls) == 2
-        assert st.read_retry_stats["stale_retries"] == 1  # observable
-
-        def broken():
-            raise ValueError("real engine bug — must propagate")
-
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            st.consistent_read(broken)
-
-    def test_consistent_read_rejects_epoch_race(self, spark, tmp_path):
-        st = self._mk(spark, tmp_path)
-        seen = []
-
-        def racy():
-            seen.append(1)
-            if len(seen) == 1:  # a swap committed mid-read → must retry
-                with st._swap_guard():
-                    pass
-            return len(seen)
-
-        assert st.consistent_read(racy) == 2
-        assert st.read_retry_stats["epoch_races"] == 1
-        assert st.read_retry_stats["degraded_returns"] == 0
-
-    def test_consistent_read_waits_out_inflight_swap(self, spark, tmp_path):
-        import threading
-        import time as _t
-
-        st = self._mk(spark, tmp_path)
-        release = threading.Event()
-
-        def long_swap():
-            with st._swap_guard():
-                release.set()
-                _t.sleep(0.4)
-
-        t = threading.Thread(target=long_swap)
-        t.start()
-        release.wait(5)
-        # store object is shared with the writer thread; read through a
-        # READER-side store handle so in-process nesting isn't consulted
-        reader = ParquetTieredStore(spark, SCHEMA, st.root, mode="mor")
-        assert reader.swap_epoch() % 2 == 1  # in flight right now
-        out = reader.consistent_read(lambda: reader.swap_epoch() % 2)
-        t.join()
-        assert out == 0  # the returned read ran at an even (settled) epoch
+        assert st.commit.epoch() == e0 + 1  # every tier in one commit
+        assert st.read(0).count() == 0
 
     def test_serving_fns_correct_under_compaction_fire(self, spark, tmp_path):
         """store_serving_fns answers correctly while per-day compactions
-        swap the very files being served, in a tight loop."""
+        retire the very files being served, in a tight loop."""
         import threading
 
         from kenshin_spark.serving import store_serving_fns
@@ -554,17 +439,14 @@ class TestServingPool:
             60: 1.0, 120: 2.0,
         }
 
-    def test_default_reader_is_isolated_missing_file_tolerant(
-        self, spark, tmp_path
-    ):
-        """The default serving reader is a clone on a CHILD SparkSession
-        with ignoreMissingFiles=true — scoped there so the writer's own
-        scans still fail loudly on vanished files."""
+    def test_default_reader_is_an_isolated_clone(self, spark, tmp_path):
+        """The default serving reader is a clone of the store on a CHILD
+        SparkSession over the same root and manifest — its planning
+        conf overrides never touch the writer's session."""
         from kenshin_spark.serving import store_serving_fns
 
         st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "iso"), mode="mor",
-            commit_protocol="seqlock",  # the conf under test is seqlock-only
+            spark, SCHEMA, str(tmp_path / "iso"), mode="mor"
         )
         st.upsert(
             0,
@@ -576,73 +458,5 @@ class TestServingPool:
         reader = lookup.reader_store
         assert reader is not st and reader.root == st.root
         assert reader.spark is not st.spark  # isolated SQL conf
-        assert (
-            reader.spark.conf.get("spark.sql.files.ignoreMissingFiles")
-            == "true"
-        )
-        # the writer session keeps the default (loud) behavior
-        assert (
-            st.spark.conf.get("spark.sql.files.ignoreMissingFiles")
-            == "false"
-        )
+        assert reader.commit.epoch() == st.commit.epoch()
         assert dict(lookup("m.i")) == {60: 1.0}
-
-
-class TestRetrySelfMetrics:
-    def test_retry_counters_roundtrip_through_ingest(self, spark, tmp_path):
-        """store.retry_metrics emits the seqlock pressure counters in the
-        S8 self-metrics shape, and they round-trip through the real
-        ingest path like the reference's rurouni.* counters
-        (rurouni/state/instrumentation.py:66-113)."""
-        from kenshin_spark.config import SchemaSet
-        from kenshin_spark.streaming import StreamingIngest
-
-        st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "rm"), mode="mor",
-            commit_protocol="seqlock",  # seqlock pressure counters under test
-        )
-        st.upsert(
-            0,
-            spark.createDataFrame(
-                [("m.r", 60, 1.0)], ["metric", "ts", "value"]
-            ),
-        )
-
-        def racy():
-            if not st.read_retry_stats["epoch_races"]:
-                with st._swap_guard():
-                    pass
-            return 1
-
-        st.consistent_read(racy)
-        now = 86_400 * 10
-        pts = st.retry_metrics(now)
-        names = {m for m, _, _ in pts}
-        assert f"rurouni.store.{SCHEMA.name}.read.epoch_races" in names
-        assert f"rurouni.store.{SCHEMA.name}.swap_epoch" in names
-        got = {m: v for m, _, v in pts}
-        assert got[f"rurouni.store.{SCHEMA.name}.read.epoch_races"] == 1.0
-        assert got[f"rurouni.store.{SCHEMA.name}.swap_epoch"] % 2 == 0
-
-        mon_schema = Schema.from_strings(
-            "selfmon", "^rurouni\\.", "60s:1d", xff=1.0, agg_method="last"
-        )
-        ing = StreamingIngest(
-            spark,
-            SchemaSet((mon_schema,)),
-            str(tmp_path / "mon"),
-            clock=lambda: now,
-            store_mode="mor",
-        )
-        ing.process_batch(
-            spark.createDataFrame(pts, ["metric", "ts", "value"])
-            .withColumn("arrival", F.lit(now)),
-            0,
-        )
-        mon = ing.store_for(mon_schema)
-        stored = {
-            r["metric"]: r["value"] for r in mon.read(0).collect()
-        }
-        assert (
-            stored[f"rurouni.store.{SCHEMA.name}.read.epoch_races"] == 1.0
-        )

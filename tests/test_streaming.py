@@ -760,31 +760,6 @@ class TestCompaction:
         # the fragmented hour's data survived compaction (60s LWW slots)
         assert ("web.req", hot_ts, 0.0) in rows(slow.read(0))
 
-    def test_day_compaction_crash_recovery(self, spark, tmp_path):
-        """A per-day compaction that dies between stage and promote
-        leaves _day_<d>.bak and no day=<d>; recover() must restore the
-        partition (and partition discovery must never have seen the
-        staging names — they are underscore-prefixed). Seqlock-path
-        machinery: manifest-mode maintenance never renames live dirs."""
-        schema = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
-        store = ParquetTieredStore(
-            spark, schema, str(tmp_path / "st"), mode="mor",
-            commit_protocol="seqlock",
-        )
-        day = 86400
-        for b in range(3):
-            store.upsert(0, spark.createDataFrame(
-                [("m", day + 60 * b, float(b))],
-                "metric string, ts long, value double"))
-        before = rows(store.read(0))
-        # simulate the crash: stage the live dir away by hand
-        tier = str(tmp_path / "st" / "tier=0")
-        assert store.fs.rename(f"{tier}/day=1", f"{tier}/_day_1.bak")
-        assert rows(store.read(0)) == []  # the day is gone
-        restored = store.recover()
-        assert f"{tier}/day=1" in restored
-        assert rows(store.read(0)) == before
-
 
 class TestStatefulRate:
     def test_rate_carries_state_across_batches(self, spark, tmp_path):
@@ -1063,21 +1038,22 @@ class TestObjectStoreSafety:
         assert rows(st.read(0)) == []
 
     def test_swap_crash_recovery(self, spark, tmp_path):
-        """A compact/delete that dies between 'stage live -> .bak' and
-        'promote tmp -> live' leaves no live tier; recover() restores
-        the .bak (the change-schema .bak dance, atomicity half).
-        Seqlock-path machinery: manifest commits never stage live dirs
-        away."""
+        """A whole-directory swap (``fs.swap``) that dies between 'stage
+        live -> .bak' and 'promote tmp -> live' leaves no live tier: the
+        committed files are missing, so a read fails loudly instead of
+        returning a silently empty tier, and recover() restores the .bak
+        (the change-schema .bak dance, atomicity half) — the manifest's
+        root-relative keys then resolve again."""
         schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
         root = str(tmp_path / "crash")
-        st = ParquetTieredStore(spark, schema, root,
-                                commit_protocol="seqlock")
+        st = ParquetTieredStore(spark, schema, root)
         st.upsert(0, spark.createDataFrame(
             [("m", 0, 4.0)], "metric string, ts long, value double"))
         before = rows(st.read(0))
         # simulate the crash window: live staged away, promote never ran
         st.fs.rename(st.tier_path(0), st.tier_path(0) + ".bak")
-        assert rows(st.read(0)) == []
+        with pytest.raises(Exception):
+            st.read(0).collect()
         assert st.recover() == [st.tier_path(0)]
         assert rows(st.read(0)) == before
         # idempotent once healthy

@@ -44,11 +44,6 @@ BANKS = [
     ("queries_staged_r9", "STAGED_R9"),
     ("queries_staged_r10", "STAGED_R10"),
     ("queries_staged_r11", "STAGED_R11"),
-    ("queries_staged_r12", "STAGED_R12"),
-    ("queries_staged_r13", "STAGED_R13"),
-    ("queries_staged_r14", "STAGED_R14"),
-    ("queries_staged_r15", "STAGED_R15"),
-    ("queries_staged_r16", "STAGED_R16"),
 ]
 
 

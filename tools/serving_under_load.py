@@ -132,7 +132,6 @@ class _ClientFleet:
         self.lat: dict[str, list[float]] = {"tcp": [], "http": [], "render": []}
         self.checked = 0
         self.served = 0
-        self.degraded = 0  # responses flagged "degraded": true (ADVICE r8)
         self._lock = threading.Lock()
         self._threads: list[threading.Thread] = []
 
@@ -185,7 +184,6 @@ class _ClientFleet:
             with self._lock:
                 self.lat["http"].append(dt)
                 self.served += 1
-                self.degraded += bool(body.get("degraded"))
                 for mm, ts, v in body["rows"]:
                     if v is not None:  # fetch grid NULL-pads
                         self._check(mm, ts, v)
@@ -211,7 +209,6 @@ class _ClientFleet:
             with self._lock:
                 self.lat["render"].append(dt)
                 self.served += 1
-                self.degraded += bool(body.get("degraded"))
                 for mm, ts, v in body["rows"]:
                     if v is not None:  # render grid NULL-pads like fetch
                         self._check(mm, ts, v / 2)  # scale(,2) inverse, exact
@@ -234,7 +231,6 @@ class _ClientFleet:
         out = {
             "clients": self.n_clients,
             "served": self.served,
-            "degraded_responses": self.degraded,
             "value_checks": self.checked,
             "errors": self.errors[:5],
             "n_errors": len(self.errors),
@@ -259,12 +255,10 @@ def _servers_for(store):
         store_serving_fns,
     )
 
-    # the engine's serving wiring: all three lookups run under the
-    # store's swap seqlock (consistent_read) THROUGH THE SHARED READER
-    # CLONE (ignoreMissingFiles session), so compaction/expiry swaps
-    # under fire surface as a few ms of retry, never a torn read, a
-    # starved scan, or a 500. /render shares the clone (VERDICT r8
-    # "What's wrong" #2).
+    # the engine's serving wiring: all three lookups plan from the
+    # committed manifest THROUGH THE SHARED READER CLONE, so compaction
+    # and expiry commits under fire are never a torn read, a starved
+    # scan, or a 500. /render shares the clone.
     lookup, fetch_fn = store_serving_fns(store)
     render_fn = store_render_fn(store, reader=fetch_fn.reader_store)
     tcp = CacheQueryServer(lookup)
@@ -273,8 +267,7 @@ def _servers_for(store):
 
 
 def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
-        n_batches: int = 10, n_probe: int = 6,
-        commit: str | None = None) -> dict:
+        n_batches: int = 10, n_probe: int = 6) -> dict:
     from pyspark.sql import functions as F
 
     from kenshin_spark.config import Schema, SchemaSet
@@ -293,14 +286,7 @@ def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
         "bench", ".*", "60s:90d,300s:180d,3600s:366d",
         xff=20.0, agg_method="average", cache_retention=600,
     )
-    report: dict = {
-        "rows": n_rows,
-        "probe_metrics": probe,
-        # None = the store's auto default (manifest for fresh roots
-        # since r11); the ACTUAL backend is recorded below once the
-        # phase-A store exists
-        "commit_protocol_requested": commit or "auto",
-    }
+    report: dict = {"rows": n_rows, "probe_metrics": probe}
 
     # ---------- phase A: direct batches + maintenance under fire
     admissible, final = _admissible_phase_a(spark, pts, probe, n_batches)
@@ -308,11 +294,10 @@ def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
     try:
         ing = StreamingIngest(
             spark, SchemaSet((schema,)), root, clock=lambda: now,
-            store_mode="mor", commit_protocol=commit,
+            store_mode="mor",
         )
         ing.process_batch(pts.where(F.col("arrival") % n_batches == 0), 0)
         store = ing.store_for(schema)
-        report["commit_protocol"] = type(store.commit).__name__
         tcp, http, fetch_fn = _servers_for(store)
         fleet = _ClientFleet(
             tcp.start(), http.start(), probe, admissible, window, n_clients
@@ -330,9 +315,6 @@ def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
             tcp.stop()
             http.stop()
         a["writer_wall_s"] = round(time.perf_counter() - t0, 1)
-        a["reader_retry_stats"] = dict(
-            fetch_fn.reader_store.read_retry_stats
-        )
         # post-write: the fetch grid agrees with full-history LWW on
         # every probed slot inside the window (grid slots are
         # [roundup(from), roundup(until)) per operators/fetch.grid_fill)
@@ -363,7 +345,7 @@ def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
     try:
         ing = StreamingIngest(
             spark, SchemaSet((schema,)), root, clock=lambda: now,
-            store_mode="mor", commit_protocol=commit,
+            store_mode="mor",
         )
         lo, hi = [int(v) for v in pts.agg(F.min("ts"), F.max("ts")).first()]
         span = max(1, hi - lo + 1)
@@ -407,9 +389,6 @@ def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
             tcp.stop()
             http.stop()
         b["stream_wall_s"] = round(time.perf_counter() - t0, 1)
-        b["reader_retry_stats"] = dict(
-            fetch_fn.reader_store.read_retry_stats
-        )
         final_rows = {
             (r["metric"], r["ts"]): r["value"]
             for r in store.read(0)
@@ -443,13 +422,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     rows = int(os.environ.get("SPARK_GRAFT_LOAD_ROWS", "1000000"))
     clients = int(os.environ.get("SPARK_GRAFT_LOAD_CLIENTS", "8"))
-    # SPARK_GRAFT_LOAD_COMMIT=manifest runs both phases on the
-    # manifest-log backend (snapshot-isolated reads — the capture's
-    # retry/degraded counters must then be exactly zero)
-    commit = os.environ.get("SPARK_GRAFT_LOAD_COMMIT") or None
     spark = get_spark("serving-under-load", cpus=None)
     spark.sparkContext.setLogLevel("ERROR")
-    report = run(spark, sf_dir, rows, n_clients=clients, commit=commit)
+    report = run(spark, sf_dir, rows, n_clients=clients)
     print(json.dumps(report, indent=1))
     spark.stop()
 
