@@ -156,13 +156,11 @@ class ManifestCommitProtocol:
     CHECKPOINT_EVERY = 10
 
     def __init__(
-        self, fs, root: str, label: str = "",
-        checkpoint_every: int | None = None,
+        self, fs, root: str, checkpoint_every: int | None = None,
     ):
         self.fs = fs
         self.root = root
         self.dir = posixpath.join(root, "_manifest")
-        self.label = label or root
         self.checkpoint_every = int(
             checkpoint_every or self.CHECKPOINT_EVERY
         )

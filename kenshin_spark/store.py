@@ -173,7 +173,7 @@ class ParquetTieredStore:
         #: the commit protocol (kenshin_spark.commit): readers plan from
         #: the committed file list, writers stage invisibly and publish
         #: one commit record per transaction
-        self.commit = ManifestCommitProtocol(self.fs, root, label=root)
+        self.commit = ManifestCommitProtocol(self.fs, root)
         n_tiers = len(schema.archives)
         if self.commit.epoch() == 0 and any(
             _unlogged_files(self.fs, root, n_tiers)
@@ -201,7 +201,7 @@ class ParquetTieredStore:
         listing would resurrect files awaiting vacuum. The CLI verb
         ``migrate`` runs this."""
         fs = HadoopFS(spark, root)
-        commit = ManifestCommitProtocol(fs, root, label=root)
+        commit = ManifestCommitProtocol(fs, root)
         if commit.epoch() != 0:
             raise RuntimeError(
                 f"migrate: manifest already exists at {root} (epoch "
