@@ -111,7 +111,7 @@ def cmd_expire(args) -> None:
 
 
 def cmd_backup(args) -> None:
-    """Copy the whole store (tiers + catalog + seq sidecar) to another
+    """Copy the whole store (tiers + catalog + manifest log) to another
     root — local, file:, hdfs: or s3a all take the same path."""
     store = _store(args)
     copied = store.backup_to(args.dest)

@@ -1,12 +1,12 @@
 """Filesystem abstraction for store metadata and maintenance operations.
 
 Every filesystem manipulation the store performs outside a Spark write —
-partition drops, directory swaps, the sequence sidecar — goes through the
-Hadoop FileSystem API (the same abstraction Spark's own committers use),
-resolved from the session's Hadoop configuration. A store rooted at a
-plain local path, a ``file:`` URI, ``hdfs://`` or ``s3a://`` all take the
-same code path; nothing touches ``os``/``shutil`` directly, which only
-ever worked on a single node.
+partition drops, directory swaps, the manifest log's records — goes
+through the Hadoop FileSystem API (the same abstraction Spark's own
+committers use), resolved from the session's Hadoop configuration. A
+store rooted at a plain local path, a ``file:`` URI, ``hdfs://`` or
+``s3a://`` all take the same code path; nothing touches ``os``/``shutil``
+directly, which only ever worked on a single node.
 
 Whole-directory swap (``swap``; the corpus pipeline's state tables use
 it, and ``recover_swap`` heals a store tier or catalog staged away by
@@ -52,7 +52,7 @@ class HadoopFS:
         self._fs.setWriteChecksum(False)
         self._fs.setVerifyChecksum(False)
         # local-scheme fast path for the TINY metadata files (manifest
-        # records and pointer, seq sidecar): each py4j call costs ~10
+        # records and pointer): each py4j call costs ~10
         # ms, so a tmp+rename through the JVM is ~50 ms — measured at
         # 18 s of a 50 s maintenance pass and 10 ms on every serving
         # read. Python os.replace has IDENTICAL
@@ -193,7 +193,7 @@ class HadoopFS:
     def publish_exclusive(self, src: str, dst: str) -> bool:
         """Atomically publish ``src``'s content at ``dst`` IFF ``dst``
         does not exist — the multi-writer commit claim (content + claim
-        in ONE atomic op, unlike ``create_exclusive``'s empty marker).
+        in ONE atomic op).
         Locally: hard-link + unlink (a single atomic syscall — no
         exists/rename window between two racing threads). On HDFS:
         plain ``FileSystem.rename``, whose contract refuses an existing
@@ -210,23 +210,6 @@ class HadoopFS:
             os.unlink(lsrc)
             return True
         return self._fs.rename(self._p(src), self._p(dst))
-
-    def create_exclusive(self, path: str) -> bool:
-        """Atomically create an empty file; False if it already exists —
-        the CAS primitive the seq allocator builds on (atomic on local
-        filesystems and HDFS; object stores should use a table format's
-        commit log instead, see module docstring)."""
-        if self._local_fast:
-            import os
-
-            lp = self._strip_scheme(path)
-            os.makedirs(os.path.dirname(lp), exist_ok=True)
-            try:
-                os.close(os.open(lp, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-                return True
-            except FileExistsError:
-                return False
-        return self._fs.createNewFile(self._p(path))
 
     # -- small-file IO (store metadata, not data) --------------------------
 
@@ -273,10 +256,11 @@ class HadoopFS:
                 fh.write(text)
                 fh.flush()
                 # fsync before the rename: without it a power loss can
-                # persist the sidecar as an empty/truncated file, which
-                # last_seq/_next_seq would choke on (ADVICE r8). These
-                # files are tiny and written rarely relative to reads,
-                # so the sync cost is negligible.
+                # persist a commit record or the ``_latest`` hint as an
+                # empty/truncated file that the log replay would choke
+                # on (ADVICE r8). These files are tiny and written
+                # rarely relative to reads, so the sync cost is
+                # negligible.
                 os.fsync(fh.fileno())
             os.replace(lt, lp)  # same atomic-rename contract as below
             return

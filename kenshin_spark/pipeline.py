@@ -1057,13 +1057,16 @@ class StreamingCorpusIngest:
                         incremental_component_deltas,
                     )
 
-                    pairs = pairs.localCheckpoint(eager=True)
+                    pairs = pin(pairs, eager=True)
                     assignments = self.clusters().persist()
                     try:
-                        cl_delta = incremental_component_deltas(
-                            assignments, pairs,
-                            a="corpus_id", b="new_id",
-                        ).localCheckpoint(eager=True)
+                        cl_delta = pin(
+                            incremental_component_deltas(
+                                assignments, pairs,
+                                a="corpus_id", b="new_id",
+                            ),
+                            eager=True,
+                        )
                     finally:
                         assignments.unpersist()
                 near_ids = pairs.select(
@@ -1080,7 +1083,7 @@ class StreamingCorpusIngest:
             # already hides the new (uncommitted) batch dirs from
             # re-evaluation, but truncate anyway so the plan doesn't
             # re-run the whole dedup chain per write.
-            fresh = fresh.localCheckpoint(eager=True)
+            fresh = pin(fresh, eager=True)
 
             # 4. write this batch's output — one batch dir per table,
             # dead rows included — then commit with the single marker

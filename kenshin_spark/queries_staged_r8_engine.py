@@ -578,8 +578,8 @@ def q_store_propagate_cascade(spark, sf_dir):
     """,
     "W7 catch-up — CDC-driven re-propagation: after the first batch "
     "cascades normally, a second batch lands in tier0 WITHOUT "
-    "propagating; propagate_from_seq diffs the mor log between the "
-    "pinned stamp and head (changed_between — resolved states, not raw "
+    "propagating; propagate_from_seq diffs tier0 between the pinned "
+    "manifest seq and head (changed_between — resolved states, not raw "
     "appends) and re-downsamples ONLY the changed slots; tier1 must "
     "converge to the same 300 s grid a full rebuild would produce",
 )
@@ -600,7 +600,7 @@ def q_store_propagate_from_seq_cdc(spark, sf_dir):
     st.propagate(
         a.select("metric", "ts"), bounds=(obs.get["lo"], obs.get["hi"])
     )
-    pinned = st.last_seq()
+    pinned = st.commit.epoch()
     st.upsert(0, b)
     st.propagate_from_seq(pinned)
     return st.read(1)
@@ -612,7 +612,7 @@ def q_store_propagate_from_seq_cdc(spark, sf_dir):
     WITH {_W}
     SELECT metric, ts, value + 1.0 AS value FROM t0 WHERE metric = 'click'
     """,
-    "CDC over the mor log: changed_between(seq1, seq2) must emit "
+    "CDC between manifest seqs: changed_between(seq1, seq2) must emit "
     "exactly the slots whose RESOLVED value differs between the two "
     "snapshots — here the second batch overwrites every 'click' slot "
     "with value+1, so the diff is precisely those slots at their new "
@@ -623,36 +623,36 @@ def q_store_changed_between_cdc(spark, sf_dir):
     st = _store(spark, sf_dir, "store_changed_between_cdc", mode="mor")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots)
-    seq1 = st.last_seq()
+    seq1 = st.commit.epoch()
     st.upsert(
         0,
         slots.where(F.col("metric") == "click").withColumn(
             "value", F.col("value") + F.lit(1.0)
         ),
     )
-    return st.changed_between(0, seq1, st.last_seq())
+    return st.changed_between(0, seq1, st.commit.epoch())
 
 
 @stage(
     "store_read_at_snapshot",
     f"WITH {_W} SELECT metric, ts, value FROM t0",
-    "MVCC snapshot read over the mor log: read_at(seq1) excludes every "
-    "row appended after the pinned stamp BEFORE resolving, so a "
-    "pipeline that pinned last_seq() sees the store exactly as it stood "
-    "— the later click-overwrite batch (seq2) must be invisible",
+    "snapshot read over the mor log: read(version=seq1) plans from the "
+    "file list committed at the pinned manifest seq, so a pipeline that "
+    "pinned commit.epoch() sees the store exactly as it stood — the "
+    "later click-overwrite batch (seq2) must be invisible",
 )
 def q_store_read_at_snapshot(spark, sf_dir):
     st = _store(spark, sf_dir, "store_read_at_snapshot", mode="mor")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots)
-    seq1 = st.last_seq()
+    seq1 = st.commit.epoch()
     st.upsert(
         0,
         slots.where(F.col("metric") == "click").withColumn(
             "value", F.col("value") + F.lit(1.0)
         ),
     )
-    return st.read_at(0, seq1)
+    return st.read(0, version=seq1)
 
 
 # ---------------------------------------------------------------------------
@@ -682,7 +682,7 @@ def q_store_delete_metrics(spark, sf_dir):
 @stage(
     "store_backup_restore",
     f"WITH {_W} SELECT metric, ts, value FROM t0",
-    "backup_to: recursive tier+catalog+sidecar copy through the Hadoop "
+    "backup_to: recursive tier+catalog+manifest copy through the Hadoop "
     "FS API (crash-consistent because tier data is immutable-once-"
     "written parquet); a store opened at the backup root must read the "
     "identical grid",
@@ -1131,10 +1131,11 @@ def q_store_catalog_routing(spark, sf_dir):
     SELECT CAST(3 AS BIGINT), CAST(count(*) AS BIGINT)
     FROM t0 WHERE metric = 'click'
     """,
-    "mor write stamps — the filesystem-CAS sequence allocator: three "
-    "upserts must carry stamps exactly 1, 2, 3 (each batch stamped "
-    "whole — snapshots are batch-atomic), with row counts matching each "
-    "batch; no stamp is ever reused or skipped on the happy path",
+    "mor write stamps — each write is stamped with the manifest seq "
+    "that commits it: three upserts on a fresh root must carry stamps "
+    "exactly 1, 2, 3 (each batch stamped whole — snapshots are "
+    "batch-atomic), with row counts matching each batch; no stamp is "
+    "ever reused or skipped on the happy path",
 )
 def q_store_mor_seq_stamps(spark, sf_dir):
     st = _store(spark, sf_dir, "store_mor_seq_stamps", mode="mor")

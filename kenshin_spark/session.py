@@ -180,6 +180,10 @@ def get_spark(
         # disabled. Shorter GC cadence + small retained windows bound
         # both; identical settings make sense on a cluster driver.
         .config("spark.cleaner.periodicGC.interval", "45s")
+        # reliable pin mode (``pin``) writes RDD checkpoints under the
+        # checkpoint dir; without this the ContextCleaner never deletes
+        # them, so a long-running driver leaks disk without bound
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.ui.retainedExecutions", "50")
         .config("spark.ui.retainedJobs", "100")
         .config("spark.ui.retainedStages", "200")

@@ -30,8 +30,6 @@ Spark-native equivalent, designed for 100 TB:
 
 from __future__ import annotations
 
-import json
-import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,11 +39,13 @@ from pyspark.sql import types as T
 import threading
 from contextlib import contextmanager
 
-from kenshin_spark.commit import ManifestCommitProtocol, ManifestTxn
+from kenshin_spark.commit import (
+    ManifestCommitProtocol,
+    ManifestConflict,
+    ManifestTxn,
+)
 from kenshin_spark.config import AGG_SQL, Schema
 from kenshin_spark.fs import HadoopFS
-
-_LOG = logging.getLogger(__name__)
 from kenshin_spark.operators.align import align_ts
 
 DAY = 86400
@@ -136,9 +136,15 @@ def _unlogged_files(fs: HadoopFS, root: str, n_tiers: int):
                 yield os.path.join(d, fname), size
 
 
+#: the retired row-stamp allocator's sidecar and CAS claim markers; rows
+#: it stamped can carry stamps above the manifest seq and outrank writes
+_ALLOCATOR_ARTEFACTS = ("_seq.json", "_seq.d")
+
+
 class LegacyTreeError(RuntimeError):
-    """The root holds data files written outside the manifest log —
-    run the ``migrate`` CLI verb (``ParquetTieredStore.migrate``) once."""
+    """The root holds data files written outside the manifest log, or
+    rows stamped by the retired row-stamp allocator — run the
+    ``migrate`` CLI verb (``ParquetTieredStore.migrate``) once."""
 
 
 class ParquetTieredStore:
@@ -149,7 +155,10 @@ class ParquetTieredStore:
     slot — writes cost O(batch) like the reference's ring write
     (kenshin/storage.py:499-503), reads pay a resolve aggregation until
     ``compact()`` folds the log back to one row per slot. Pick per tier
-    usage: mor for high-frequency hot ingest, cow for read-heavy tiers."""
+    usage: mor for high-frequency hot ingest, cow for read-heavy tiers.
+    The stamp is the manifest seq that commits the write, so LWW follows
+    commit order (as the reference's single writer's flush order does,
+    kenshin/storage.py:468-480) and time travel uses the same numbers."""
 
     def __init__(
         self,
@@ -158,6 +167,22 @@ class ParquetTieredStore:
         root: str,
         mode: str = "cow",
     ):
+        self._open(spark, schema, root, mode)
+        if self._allocator_artefacts() or (
+            self.commit.epoch() == 0
+            and any(_unlogged_files(self.fs, root, len(schema.archives)))
+        ):
+            raise LegacyTreeError(
+                f"{root} holds data files written outside the manifest "
+                "log, or rows stamped by the retired _seq.json/_seq.d "
+                "allocator; reading it would silently miss or misorder "
+                "rows. Bring it under the log once with: python -m "
+                f"kenshin_spark.cli --root {root} migrate"
+            )
+
+    def _open(
+        self, spark: SparkSession, schema: Schema, root: str, mode: str
+    ) -> None:
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown store mode {mode!r}")
         self.spark = spark
@@ -174,16 +199,10 @@ class ParquetTieredStore:
         #: the committed file list, writers stage invisibly and publish
         #: one commit record per transaction
         self.commit = ManifestCommitProtocol(self.fs, root)
-        n_tiers = len(schema.archives)
-        if self.commit.epoch() == 0 and any(
-            _unlogged_files(self.fs, root, n_tiers)
-        ):
-            raise LegacyTreeError(
-                f"{root} holds data files written outside the manifest "
-                "log; reading it would silently see an empty store. "
-                "Adopt them once with: python -m kenshin_spark.cli "
-                f"--root {root} migrate"
-            )
+
+    def _allocator_artefacts(self) -> list[str]:
+        paths = [os.path.join(self.root, n) for n in _ALLOCATOR_ARTEFACTS]
+        return [p for p in paths if self.fs.exists(p)]
 
     @classmethod
     def migrate(
@@ -193,71 +212,39 @@ class ParquetTieredStore:
         root: str,
         mode: str = "cow",
     ) -> "ParquetTieredStore":
-        """Adopt a tree written outside the manifest log — the root the
-        constructor refuses — by enumerating its plain ``part-*`` data
-        files into one ``op="migrate"`` commit, then open it. An interrupted
-        ``.bak`` swap is restored first so its files are counted.
-        Refuses when a manifest already exists: after retirements, a
-        listing would resurrect files awaiting vacuum. The CLI verb
-        ``migrate`` runs this."""
-        fs = HadoopFS(spark, root)
-        commit = ManifestCommitProtocol(fs, root)
-        if commit.epoch() != 0:
+        """Bring a root the constructor refuses under the manifest log,
+        then open it; the CLI verb ``migrate`` runs this. A tree written
+        outside the log has its plain ``part-*`` files enumerated into
+        one ``op="migrate"`` commit (an interrupted ``.bak`` swap is
+        restored first so its files count). A tree stamped by the
+        retired allocator (``_seq.json``/``_seq.d``) can hold stamps
+        above the manifest seq: every tier is folded with ``compact``
+        (stamp 0), and only then are both artefacts removed, so a crash
+        in between leaves them for a rerun. Refuses a logged root with
+        neither: after retirements, a listing would resurrect files
+        awaiting vacuum."""
+        st = cls.__new__(cls)
+        st._open(spark, schema, root, "mor")  # the fold must read _seq
+        artefacts = st._allocator_artefacts()
+        if st.commit.epoch() == 0:
+            st.recover()
+            with st.commit.txn(op="migrate") as tx:
+                for path, size in _unlogged_files(
+                    st.fs, root, len(schema.archives)
+                ):
+                    tx.add(st._rel(path), size)
+        elif not artefacts:
             raise RuntimeError(
                 f"migrate: manifest already exists at {root} (epoch "
-                f"{commit.epoch()}); a listing rebuild would resurrect "
+                f"{st.commit.epoch()}); a listing rebuild would resurrect "
                 "retired files"
             )
-        n_tiers = len(schema.archives)
-        for i in range(n_tiers):
-            fs.recover_swap(os.path.join(root, f"tier={i}"))
-        fs.recover_swap(os.path.join(root, "_catalog"))
-        with commit.txn(op="migrate") as tx:
-            for path, size in _unlogged_files(fs, root, n_tiers):
-                tx.add(os.path.relpath(path, root), size)
+        if artefacts:
+            for i in range(len(schema.archives)):
+                st.compact(i)
+            for path in artefacts:
+                st.fs.delete(path)
         return cls(spark, schema, root, mode=mode)
-
-    @property
-    def _seq_sidecar(self) -> str:
-        return os.path.join(self.root, "_seq.json")
-
-    @property
-    def _seq_claims(self) -> str:
-        return os.path.join(self.root, "_seq.d")
-
-    def _next_seq(self) -> int:
-        """Monotonic write stamp (mor mode: later stamps win at read).
-
-        Allocation is a filesystem CAS: stamp n is CLAIMED by exclusively
-        creating marker ``_seq.d/<n>`` — two concurrent writers can never
-        issue the same stamp (the loser's create fails and it probes the
-        next n). The sidecar ``_seq.json`` is a monotonic hint re-read on
-        every allocation, so a store open for hours doesn't trust a stale
-        in-memory counter; it is written AFTER the claim, so a crash
-        wastes a stamp instead of ever reusing one. No max(_seq) scan
-        over the tier — at 100 TB that would be a full-table aggregate
-        just to open the store. A missing or torn sidecar falls back to
-        the tier scan once."""
-        hint = self._last_seq_or_none()
-        n = hint or 0
-        if hint is None:
-            for i in range(len(self.schema.archives)):
-                path = self.tier_path(i)
-                if not self._tier_empty(path):
-                    df = self._scan_tier(path)
-                    if "_seq" in df.columns:
-                        row = df.agg(F.max("_seq")).collect()[0]
-                        n = max(n, int(row[0] or 0))
-        while True:
-            n += 1
-            if self.fs.create_exclusive(
-                os.path.join(self._seq_claims, str(n))
-            ):
-                break
-        self.fs.write_text_atomic(
-            self._seq_sidecar, json.dumps({"last_seq": n})
-        )
-        return n
 
     def consistent_read(self, fn):
         """Run driver-side read ``fn`` — the seam every serving lookup
@@ -267,26 +254,6 @@ class ParquetTieredStore:
         immutable committed snapshot, so one plain call is never a
         torn view of a concurrent commit."""
         return fn()
-
-    def prune_seq_claims(self) -> int:
-        """GC the CAS claim markers below the committed sidecar hint —
-        they are only load-bearing ABOVE it (a marker ≤ the persisted
-        last_seq can never be probed again). Without this, one empty
-        file accumulates per write forever: costly LIST growth on object
-        stores, and a stale sidecar would pay O(gap) failed create
-        probes. Runs with ``expire`` (off the hot path); returns the
-        number of markers removed."""
-        keep_above = self.last_seq()
-        removed = 0
-        for name in self.fs.list_names(self._seq_claims):
-            try:
-                stamp = int(name)
-            except ValueError:
-                continue
-            if stamp <= keep_above:
-                self.fs.delete(os.path.join(self._seq_claims, name))
-                removed += 1
-        return removed
 
     # -- paths ------------------------------------------------------------
 
@@ -307,27 +274,46 @@ class ParquetTieredStore:
         return os.path.relpath(path, self.root)
 
     def _plan_abs(
-        self, path: str, version: int | None = None
+        self,
+        path: str,
+        version: int | None = None,
+        days: list[int] | None = None,
     ) -> list[str]:
         """The committed live files under ``path`` as absolute paths.
-        ``version`` pins a historical manifest seq (time travel)."""
-        return [
-            os.path.join(self.root, rel)
-            for rel, _ in self.commit.live_files(
-                self._rel(path), seq=version
-            )
-        ]
+        ``version`` pins a historical manifest seq (time travel);
+        ``days`` keeps only those ``day=`` partitions."""
+        files = self.commit.live_files(self._rel(path), seq=version)
+        if days is not None:
+            keep = {f"day={d}" for d in days}
+            files = [(r, sz) for r, sz in files if r.split("/")[1] in keep]
+        return [os.path.join(self.root, rel) for rel, _ in files]
 
     def _check_version(self, version: int | None) -> None:
         """Validate a time-travel pin: the seq must be a committed one
         (0 = 'before anything' is not a readable snapshot; > epoch does
-        not exist yet)."""
+        not exist yet) whose files ``vacuum`` has not reclaimed — past
+        that horizon a pinned read raises instead of answering from a
+        partial file set (a trimmed log raises in ``commit.snapshot``)."""
         if version is None:
             return
         latest = self.commit.epoch()
         if not (1 <= version <= latest):
             raise ValueError(
                 f"version {version} not in committed range [1, {latest}]"
+            )
+        live = self.commit.snapshot(latest)
+        tombs = self.commit.tombstones(latest)
+        # neither live nor tombstoned now: reclaimed, unless it predates
+        # tombstones (then only the filesystem knows)
+        gone = [
+            rel for rel in self.commit.snapshot(version)
+            if rel not in live and rel not in tombs
+            and not self.fs.exists(os.path.join(self.root, rel))
+        ]
+        if gone:
+            raise ValueError(
+                f"version {version} is past the vacuum retention horizon "
+                f"({gone[0]} was reclaimed)"
             )
 
     def _adopt(
@@ -383,28 +369,18 @@ class ParquetTieredStore:
         preserved: the rollback is itself a commit, so a restore can be
         restored away. Raises when a required file was already
         reclaimed (restore past the vacuum horizon cannot be done
-        safely) — checked BEFORE committing, so a failed restore
-        changes nothing."""
+        safely, ``_check_version``) — checked BEFORE committing, so a
+        failed restore changes nothing."""
         self._check_version(version)
         target = dict(self.commit.live_files("", seq=version))
         current = dict(self.commit.live_files(""))
-        readds = {r: sz for r, sz in target.items() if r not in current}
-        missing = [
-            r for r in readds
-            if not self.fs.exists(os.path.join(self.root, r))
-        ]
-        if missing:
-            raise ValueError(
-                f"restore to seq {version}: {len(missing)} required "
-                f"file(s) already vacuumed (first: {missing[0]}) — "
-                "the snapshot is past the retention horizon"
-            )
         with self.commit.txn(op="restore") as tx:
             for rel in current:
                 if rel not in target:
                     tx.drop(rel)
-            for rel, sz in readds.items():
-                tx.add(rel, sz)
+            for rel, sz in target.items():
+                if rel not in current:
+                    tx.add(rel, sz)
         return self.commit.epoch()
 
     def vacuum(self, grace_s: float = 3600.0, now: float | None = None) -> list[str]:
@@ -539,33 +515,6 @@ class ParquetTieredStore:
             .select("metric", "ts", F.col("_w.value").alias("value"))
         )
 
-    def _last_seq_or_none(self) -> int | None:
-        """Sidecar stamp, or None when the sidecar is missing OR
-        unparsable (empty/truncated — e.g. power loss between create and
-        fsync on a filesystem that doesn't order them). Unparsable maps
-        to None, not 0, so ``_next_seq`` takes the same once-only
-        tier-scan fallback as a legacy store instead of bricking writes
-        or slow-probing the claims dir from 1 (ADVICE r8); the write
-        path fsyncs before rename, so this is defense in depth."""
-        if not self.fs.exists(self._seq_sidecar):
-            return None
-        try:
-            return int(
-                json.loads(self.fs.read_text(self._seq_sidecar))["last_seq"]
-            )
-        except (ValueError, KeyError, TypeError):
-            _LOG.warning(
-                "unparsable _seq sidecar at %s — falling back to the "
-                "tier max(_seq) scan (torn write from a crash?)",
-                self._seq_sidecar,
-            )
-            return None
-
-    def last_seq(self) -> int:
-        """The newest committed write stamp (0 if nothing written) — pass
-        to ``read_at`` for a stable snapshot."""
-        return self._last_seq_or_none() or 0
-
     def _tier_empty(self, path: str, version: int | None = None) -> bool:
         """True when the tier has no live data files — the committed
         file list is the truth (the directory may hold retired files
@@ -584,34 +533,48 @@ class ParquetTieredStore:
             )
         return STORED_SCHEMA
 
-    def _scan_tier(self, path: str, version: int | None = None) -> DataFrame:
+    def _scan_tier(
+        self,
+        path: str,
+        version: int | None = None,
+        days: list[int] | None = None,
+    ) -> DataFrame:
         reader = self.spark.read.schema(self._tier_schema())
-        files = self._plan_abs(path, version=version)
+        files = self._plan_abs(path, version=version, days=days)
         # plan from the committed file list — partition values (day=) are
         # still derived from the paths via basePath; a retired file that
         # physically remains on disk (awaiting vacuum) is never scanned
         with _explicit_list_planning(self.spark):
             return reader.option("basePath", path).parquet(*files)
 
+    def _empty(self) -> DataFrame:
+        return self.spark.createDataFrame([], STORED_SCHEMA).select(
+            "metric", "ts", "value"
+        )
+
     def read(self, i: int, version: int | None = None) -> DataFrame:
         """Tier i as ``(metric, ts, value)``; empty frame if never
         written. ``version`` pins a historical manifest seq (Delta's
-        ``versionAsOf``): the scan plans from the
-        file list as committed at that seq, so it sees the tier exactly
-        as it stood THEN — including through later compactions and
-        expiries, which ``read_at``'s row-stamp MVCC cannot reach back
-        across (compaction folds the log). The travel window is the
-        vacuum retention: a pinned read older than ``vacuum``'s grace
-        may hit physically reclaimed files (FileNotFound at execution)
-        or a trimmed log (ValueError at planning) — the same contract
-        as Delta's VACUUM."""
+        ``versionAsOf``): the scan plans from the file list as
+        committed at that seq, so it sees the tier exactly as it stood
+        THEN — including through later compactions and expiries. A
+        long pipeline job pins ``commit.epoch()`` once and every read it
+        does is consistent while ingest keeps committing. The travel
+        window is the vacuum retention: a pin whose files ``vacuum``
+        reclaimed or whose log it trimmed raises at planning
+        (``_check_version``) — the same contract as Delta's VACUUM."""
         self._check_version(version)
+        return self._read(i, version)
+
+    def _read(
+        self, i: int, version: int | None, days: list[int] | None = None
+    ) -> DataFrame:
+        """Tier i at ``version``, planned from the files of ``days``
+        (default: every day)."""
         path = self.tier_path(i)
-        if self._tier_empty(path, version=version):
-            return self.spark.createDataFrame([], STORED_SCHEMA).select(
-                "metric", "ts", "value"
-            )
-        return self._resolve(self._scan_tier(path, version=version))
+        if not self._plan_abs(path, version=version, days=days):
+            return self._empty()
+        return self._resolve(self._scan_tier(path, version=version, days=days))
 
     def history(self, limit: int | None = None) -> list[dict]:
         """The retained commit log, newest first — seq, unix ts, op
@@ -619,96 +582,41 @@ class ParquetTieredStore:
         vacuum trimmed the log, exactly like time travel."""
         return self.commit.history(limit=limit)
 
-    def touched_days(self, i: int, seq_a: int, seq_b: int) -> list[int]:
-        """Day partitions of tier i holding log rows stamped in
-        ``(seq_a, seq_b]`` — the partitions a between-snapshots diff
-        must resolve; everything else provably contributed no change
-        (a slot's rows all share its day, so a changed slot has a
-        stamped row in its own partition).
-
-        Cost: a single-column ``_seq`` scan (`ReadSchema:
-        struct<_seq:bigint>`; ``day`` comes free from directory names)
-        with the range predicate pushed to parquet row-group stats —
-        compacted files (all ``_seq = 0``) and old appends are skipped
-        at the footer, so the scan is metadata-bound, not data-bound.
-        No manifest sidecar: the mor log itself is the record, which
-        means no extra write-path work and no crash-consistency cases."""
-        path = self.tier_path(i)
-        if self._tier_empty(path):
-            return []
-        rows = (
-            self._scan_tier(path)
-            .where((F.col("_seq") > seq_a) & (F.col("_seq") <= seq_b))
-            .select("day")
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r["day"]) for r in rows)
-
-    def read_at(
-        self, i: int, as_of_seq: int, days: list[int] | None = None
-    ) -> DataFrame:
-        """Snapshot read (mor mode only): tier i as it stood after write
-        stamp ``as_of_seq`` — rows appended later are excluded BEFORE the
-        log is collapsed. Every upsert stamps its whole batch with one
-        seq, so snapshots are batch-atomic: a long pipeline job pins
-        ``last_seq()`` once and every read it does is consistent, while
-        ingest keeps appending. History only reaches back to the last
-        ``compact()`` (compaction folds the log and resets stamps) —
-        snapshot-pinning jobs and compaction must be scheduled apart,
-        like any MVCC vacuum. ``days`` restricts the read to those day
-        partitions (partition-pruned at planning) — the CDC diff passes
-        the touched set so both snapshot resolves scan only changed
-        partitions."""
-        if self.mode != "mor":
-            raise ValueError("read_at requires mode='mor' (cow keeps no history)")
-        path = self.tier_path(i)
-        if self._tier_empty(path):
-            return self.spark.createDataFrame([], STORED_SCHEMA).select(
-                "metric", "ts", "value"
-            )
-        raw = self._scan_tier(path)
-        if days is not None:
-            raw = raw.where(F.col("day").isin([int(d) for d in days]))
-        # NULL-tolerant as-of filter: with the explicit _tier_schema the
-        # _seq column always EXISTS, but rows from files that physically
-        # lack it (a tier written before this store ran in mor mode, or
-        # imported data) read back as NULL. Those rows predate every
-        # stamp, so they belong in every snapshot — a bare
-        # `_seq <= as_of` would silently drop them all (ADVICE r8).
-        # _resolve's max(struct(_seq, value)) already ranks NULL lowest,
-        # so stamped rows still win LWW over legacy ones.
-        raw = raw.where(
-            (F.col("_seq") <= as_of_seq) | F.col("_seq").isNull()
-        )
-        return self._resolve(raw)
+    def _days_added(self, i: int, seq_a: int, seq_b: int) -> list[int]:
+        """Day partitions of tier i holding a file live at ``seq_b`` but
+        not at ``seq_a`` — the only partitions whose resolved rows can
+        differ between the two snapshots: every append, merge, fold and
+        rewrite adds files to the days it touches, and a slot's rows all
+        share its day. Read off the manifest: no Spark job."""
+        before = {r for r, _ in self.commit.live_files(f"tier={i}", seq=seq_a)}
+        return sorted({
+            int(rel.split("/")[1][len("day="):])
+            for rel, _ in self.commit.live_files(f"tier={i}", seq=seq_b)
+            if rel not in before
+        })
 
     def changed_between(
         self, i: int, seq_a: int, seq_b: int
     ) -> DataFrame:
-        """CDC over the mor log: slots whose RESOLVED value differs
-        between snapshot ``seq_a`` and the later ``seq_b`` — new metrics,
-        overwritten slots, NULL-overwrites included (the store has no
-        deletes below metric granularity). Implemented as
-        ``read_at(b) EXCEPT ALL read_at(a)``: both sides collapse their
-        log prefix first, so the diff is over resolved states, not raw
-        appends. Feed downstream incremental jobs (re-downsample only
-        changed slots) instead of re-reading the tier.
-
-        Both resolves are pruned to ``touched_days(i, a, b)`` first
-        (VERDICT r8 "What's missing" #4): a slot can only differ between
-        the snapshots if a row stamped in ``(a, b]`` sits in its day
-        partition, so at 100 TB the diff costs two resolves of the days
-        actually written between the checkpoints — not two full-tier
-        scans — plus one stats-pruned single-column day-discovery pass."""
-        days = self.touched_days(i, seq_a, seq_b)
+        """CDC between two manifest seqs: slots whose RESOLVED value
+        differs between snapshot ``seq_a`` and the later ``seq_b`` — new
+        metrics, overwritten slots, NULL-overwrites included (the store
+        has no deletes below metric granularity). Implemented as
+        ``read(version=b) EXCEPT ALL read(version=a)``, so the diff is
+        over resolved states, not raw appends; feed downstream
+        incremental jobs instead of re-reading the tier. Works on cow
+        and mor stores and across compactions; ``seq_a = 0`` diffs
+        against the empty store; a seq past the vacuum horizon raises
+        (``_check_version``). Both sides read only the files of
+        ``_days_added`` (VERDICT r8 "What's missing" #4): two resolves
+        of the days written between the seqs, found without a job."""
+        if seq_a:
+            self._check_version(seq_a)
+        self._check_version(seq_b)
+        days = self._days_added(i, seq_a, seq_b)
         if not days:
-            return self.spark.createDataFrame([], STORED_SCHEMA).select(
-                "metric", "ts", "value"
-            )
-        return self.read_at(i, seq_b, days=days).exceptAll(
-            self.read_at(i, seq_a, days=days)
-        )
+            return self._empty()
+        return self._read(i, seq_b, days).exceptAll(self._read(i, seq_a, days))
 
     def read_range(
         self, i: int, from_ts: int, until_ts: int,
@@ -723,9 +631,7 @@ class ParquetTieredStore:
         self._check_version(version)
         path = self.tier_path(i)
         if self._tier_empty(path, version=version):
-            return self.spark.createDataFrame([], STORED_SCHEMA).select(
-                "metric", "ts", "value"
-            )
+            return self._empty()
         unit = self.part_unit(i)
         return self._resolve(
             self._scan_tier(path, version=version).where(
@@ -750,11 +656,43 @@ class ParquetTieredStore:
             (F.col("ts").cast("long") / unit).cast("long").alias("day"),
         )
 
+    def _commit_stamped(
+        self, i: int, out: DataFrame, op: str, replace: bool = False
+    ) -> None:
+        """mor write: stamp ``out`` with the manifest seq its commit will
+        get and commit at exactly that seq. If a concurrent commit took
+        it first, ``commit_txn`` raises ``ManifestConflict`` and the write
+        re-stamps (``commit_txn``'s 64-attempt bound); a lost attempt's
+        files stay invisible until ``vacuum``. Sorts within tasks like
+        every write path (see ``upsert``)."""
+        for _attempt in range(64):
+            seq = self.commit.epoch() + 1
+            stamped = out.withColumn("_seq", F.lit(seq))
+            adds = self._adopt(
+                stamped.sortWithinPartitions("day", "metric", "ts"),
+                self.tier_path(i),
+            )
+            try:
+                with self.commit.txn(op=op) as tx:
+                    tx.seq = seq
+                    if replace:
+                        tx.drop(f"tier={i}")
+                    for rel, size in adds:
+                        tx.add(rel, size)
+                return
+            except ManifestConflict:
+                continue
+        raise RuntimeError(
+            f"mor {op} of tier {i} under {self.root}: lost 64 "
+            "consecutive commit races"
+        )
+
     def overwrite(self, i: int, slots: DataFrame) -> None:
         """Full rewrite of a tier (initial load / schema-change rebuild)."""
         out = self._with_day(slots, i)
         if self.mode == "mor":
-            out = out.withColumn("_seq", F.lit(self._next_seq()))
+            self._commit_stamped(i, out, "overwrite", replace=True)
+            return
         # stage + adopt invisibly, then one atomic pointer flip that
         # retires the whole old tier — readers mid-scan keep their
         # snapshot's files (vacuum reclaims them after the grace)
@@ -786,13 +724,7 @@ class ParquetTieredStore:
         # BETWEEN compactions (compact() re-sorts anyway)
         if self.mode == "mor":
             # O(batch) append; the read path resolves last-write-wins
-            stamped = new.withColumn(
-                "_seq", F.lit(self._next_seq())
-            ).sortWithinPartitions("day", "metric", "ts")
-            adds = self._adopt(stamped, path)
-            with self.commit.txn(op="upsert") as tx:
-                for rel, size in adds:
-                    tx.add(rel, size)
+            self._commit_stamped(i, new, "upsert")
             return
         if self._tier_empty(path):
             adds = self._adopt(
@@ -876,7 +808,6 @@ class ParquetTieredStore:
                     tx.drop(f"tier={i}/day={d}")
                 if gone:
                     dropped[i] = gone
-        self.prune_seq_claims()
         return dropped
 
     # -- propagation (W7) -------------------------------------------------
@@ -988,13 +919,14 @@ class ParquetTieredStore:
             touched.unpersist()
 
     def backup_to(self, dest_root: str) -> list[str]:
-        """Copy every tier, the catalog, and the seq sidecar to
+        """Copy every tier, the catalog, and the manifest log to
         ``dest_root`` (same filesystem semantics as the store root —
         local, file:, hdfs:, s3a). A plain recursive copy is a CRASH-
         CONSISTENT backup here because tier data is immutable-once-
-        written parquet plus an append log; for a point-in-time snapshot
-        under concurrent writes, pin ``last_seq()`` first and restore
-        with ``read_at`` semantics. Returns the paths copied."""
+        written parquet and only the log says which files are live; to
+        get back a point in time under concurrent writes, pin
+        ``commit.epoch()`` first and ``restore`` the copy to it.
+        Returns the paths copied."""
         copied = []
         for i in range(len(self.schema.archives)):
             p = self.tier_path(i)
@@ -1006,11 +938,6 @@ class ParquetTieredStore:
                 self.catalog_path, os.path.join(dest_root, "_catalog")
             )
             copied.append(self.catalog_path)
-        if self.fs.exists(self._seq_sidecar):
-            self.fs.copy_tree(
-                self._seq_sidecar, os.path.join(dest_root, "_seq.json")
-            )
-            copied.append(self._seq_sidecar)
         manifest_dir = os.path.join(self.root, "_manifest")
         if self.fs.exists(manifest_dir):
             # the manifest keys are root-relative, so the copied log is
@@ -1023,28 +950,28 @@ class ParquetTieredStore:
         return copied
 
     def propagate_from_seq(self, since_seq: int, from_tier: int = 0) -> int:
-        """Catch-up propagation (mor): re-downsample ONLY the slots tier
-        ``from_tier`` changed since write stamp ``since_seq`` — the
+        """Catch-up propagation: re-downsample ONLY the slots tier
+        ``from_tier`` changed since manifest seq ``since_seq`` — the
         recovery path when writes bypassed the per-batch cascade
         (imports, restored ``.bak`` tiers, manual upserts, a crashed
         ingest that flushed tier0 but died before cascading). Cost is
-        ∝ changed slots, not tier size: the CDC diff collapses the log
-        prefix on both sides and ``propagate`` re-aggregates only the
-        touched coarse windows. Returns the stamp to pass as
+        ∝ changed slots, not tier size: ``changed_between`` diffs the
+        changed days only and ``propagate`` re-aggregates only the
+        touched coarse windows. Returns the seq to pass as
         ``since_seq`` next time (checkpoint it).
 
-        The cascade's scan bounds come from the touched-day probe the
-        diff already ran (day extents × the partition unit) instead of
-        a dedicated min/max job over the resolved diff — bounds only
-        prune the finer-tier scans (the slot join filters exactly), so
-        day-granular bounds change nothing but the job count."""
-        upto = self.last_seq()
-        days = self.touched_days(from_tier, since_seq, upto)
+        The cascade's scan bounds are the changed days' extents × the
+        partition unit instead of a dedicated min/max job over the
+        resolved diff — bounds only prune the finer-tier scans (the
+        slot join filters exactly), so day-granular bounds change
+        nothing but the job count."""
+        upto = self.commit.epoch()
+        if since_seq == upto:
+            return upto
+        changed = self.changed_between(from_tier, since_seq, upto)
+        days = self._days_added(from_tier, since_seq, upto)
         if not days:
             return upto
-        changed = self.read_at(from_tier, upto, days=days).exceptAll(
-            self.read_at(from_tier, since_seq, days=days)
-        )
         unit = self.part_unit(from_tier)
         self.propagate(
             changed.select("metric", "ts"),

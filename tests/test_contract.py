@@ -93,3 +93,26 @@ def test_every_staged_module_feeds_queries():
         for table in tables:
             missing = sorted(set(table) - set(QUERIES))
             assert not missing, f"{name} rows not in QUERIES: {missing}"
+
+
+def test_lineage_pins_go_through_the_session_seam():
+    """Every lineage truncation in the engine goes through
+    ``session.pin``, which picks local, reliable or replicated per
+    deployment — a direct ``localCheckpoint``/``checkpoint`` call keeps
+    the unreplicated local primitive on a cluster too. The registry's
+    ``queries*.py`` fixtures are exempt: they build test inputs."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "kenshin_spark"
+    exempt = {"session.py"} | {p.name for p in pkg.glob("queries*.py")}
+    offenders = [
+        f"{py.relative_to(pkg)}:{node.lineno}"
+        for py in sorted(pkg.rglob("*.py"))
+        if str(py.relative_to(pkg)) not in exempt
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("localCheckpoint", "checkpoint")
+    ]
+    assert not offenders, f"lineage pins bypassing session.pin: {offenders}"

@@ -103,10 +103,11 @@ class TestManifestStoreRoundtrip:
     def test_snapshot_reads_and_cdc(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
         st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
-        s1 = st.last_seq()
+        s1 = st.commit.epoch()
         st.upsert(0, _rows(spark, [("m", 60, 5.0), ("n", 120, 2.0)]))
-        s2 = st.last_seq()
-        at1 = {r["metric"]: r["value"] for r in st.read_at(0, s1).collect()}
+        s2 = st.commit.epoch()
+        at1 = {r["metric"]: r["value"]
+               for r in st.read(0, version=s1).collect()}
         assert at1 == {"m": 1.0}
         diff = {(r["metric"], r["ts"], r["value"])
                 for r in st.changed_between(0, s1, s2).collect()}
@@ -641,9 +642,9 @@ class TestTimeTravel:
     """Version-pinned reads + DESCRIBE HISTORY on the manifest log —
     Delta's ``versionAsOf`` semantics: a read planned at seq v sees
     the file list as committed THEN, reaching back across later
-    compactions/expiries (row-stamp ``read_at`` cannot — compaction
-    folds the log), valid until vacuum reclaims the snapshot's files
-    or trims the log below its anchor checkpoint."""
+    compactions/expiries (which fold the mor log to stamp 0), valid
+    until vacuum reclaims the snapshot's files or trims the log below
+    its anchor checkpoint."""
 
     def test_version_read_reaches_across_compaction(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
@@ -726,6 +727,103 @@ class TestTimeTravel:
         )
         assert cold.read(0, version=v1).collect()[0].value == 1.0
         assert [r["op"] for r in cold.history()] == ["upsert", "upsert"]
+
+
+class TestOneVersionCounter:
+    """The manifest commit seq is the store's only version number: a
+    mor write stamps its rows with the seq that commits it, and pinned
+    reads, CDC and catch-up all travel over those seqs — so they reach
+    across compactions, which fold every stamp to 0."""
+
+    def _pinned(self, spark, tmp_path, schema=SCHEMA):
+        st = _mk(spark, tmp_path, schema=schema)
+        st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
+        s1 = st.commit.epoch()
+        st.upsert(0, _rows(spark, [("m", 60, 5.0)]))
+        s2 = st.commit.epoch()
+        return st, s1, s2
+
+    def test_pinned_read_and_diff_survive_a_compaction(
+        self, spark, tmp_path
+    ):
+        st, s1, s2 = self._pinned(spark, tmp_path)
+        st.compact(0)
+        assert [tuple(r) for r in st.read(0, version=s1).collect()] == [
+            ("m", 60, 1.0)]
+        assert [tuple(r) for r in st.changed_between(0, s1, s2).collect()
+                ] == [("m", 60, 5.0)]
+
+    def test_catch_up_across_a_compaction_converges(self, spark, tmp_path):
+        schema = Schema.from_strings("s", ".*", "60s:30d,300s:90d", xff=1.0)
+        st = _mk(spark, tmp_path, schema=schema)
+        first = _rows(spark, [("m", 60, 1.0)])
+        st.upsert(0, first)
+        st.propagate(first)
+        pinned = st.commit.epoch()
+        # a tier-0 write that bypassed the cascade, then folded away
+        st.upsert(0, _rows(spark, [("m", 60, 9.0)]))
+        st.compact(0)
+        st.propagate_from_seq(pinned)
+        # a rebuild from tier 0 gives avg(9.0) for the 300 s slot
+        assert [tuple(r) for r in st.read(1).collect()] == [("m", 0, 9.0)]
+
+    def test_diff_frame_launches_no_spark_job(self, spark, tmp_path):
+        st, s1, s2 = self._pinned(spark, tmp_path)
+        sc = spark.sparkContext
+        group = "changed-between-plan"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            diff = st.changed_between(0, s1, s2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert [tuple(r) for r in diff.collect()] == [("m", 60, 5.0)]
+
+    def test_diff_works_on_cow_and_refuses_past_the_horizon(
+        self, spark, tmp_path
+    ):
+        st = _mk(spark, tmp_path, mode="cow")
+        st.upsert(0, _rows(spark, [("m", 60, 1.0), ("n", DAY + 60, 2.0)]))
+        s1 = st.commit.epoch()
+        st.upsert(0, _rows(spark, [("m", 60, 3.0)]))
+        s2 = st.commit.epoch()
+        assert [tuple(r) for r in st.changed_between(0, s1, s2).collect()
+                ] == [("m", 60, 3.0)]
+        st.vacuum(grace_s=0.0, now=time.time() + 60)
+        with pytest.raises(ValueError, match="retention horizon"):
+            st.changed_between(0, s1, s2)
+        with pytest.raises(ValueError, match="retention horizon"):
+            st.propagate_from_seq(s1)
+
+    def test_allocator_stamped_root_is_refused_until_migrate(
+        self, spark, tmp_path
+    ):
+        """A mor tree the retired allocator stamped up to 100, adopted
+        into the log at seq 1: its stamps outrank every new write, so
+        opening it must fail loudly until ``migrate`` folds it."""
+        from kenshin_spark.commit import ManifestCommitProtocol
+        from kenshin_spark.fs import HadoopFS
+        from kenshin_spark.store import LegacyTreeError
+
+        root = str(tmp_path / "old")
+        spark.createDataFrame(
+            [("m", 60, 1.0, 0, 100)],
+            "metric string, ts long, value double, day long, _seq long",
+        ).write.partitionBy("day").parquet(os.path.join(root, "tier=0"))
+        with ManifestCommitProtocol(HadoopFS(spark, root), root).txn(
+            op="migrate"
+        ) as tx:
+            for path in _disk_parquet(root):
+                tx.add(os.path.relpath(path, root), os.path.getsize(path))
+        with open(os.path.join(root, "_seq.json"), "w") as fh:
+            fh.write('{"last_seq": 100}')
+        with pytest.raises(LegacyTreeError, match="migrate"):
+            ParquetTieredStore(spark, SCHEMA, root, mode="mor")
+        st = ParquetTieredStore.migrate(spark, SCHEMA, root, mode="mor")
+        assert not os.path.exists(os.path.join(root, "_seq.json"))
+        assert st.history()[0]["op"] == "compact"
+        st.upsert(0, _rows(spark, [("m", 60, 2.0)]))
+        assert [tuple(r) for r in st.read(0).collect()] == [("m", 60, 2.0)]
 
 
 class TestRestore:

@@ -2402,31 +2402,6 @@ class TestRepetitionNullDocs:
         assert rows[1]["n_grams"] == 3
 
 
-class TestSeqClaimGc:
-    def test_expire_prunes_committed_claim_markers(self, spark, tmp_path):
-        """One CAS marker accumulates per write; expire() must GC every
-        marker at or below the committed sidecar hint, and allocation
-        stays monotonic afterward (ADVICE r3)."""
-        from kenshin_spark.config import Schema
-        from kenshin_spark.store import ParquetTieredStore
-
-        schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
-        store = ParquetTieredStore(
-            spark, schema, str(tmp_path / "st"), mode="mor"
-        )
-        df = spark.createDataFrame(
-            [("m", 60, 1.0)], "metric string, ts long, value double"
-        )
-        for _ in range(3):
-            store.upsert(0, df)
-        claims = store.fs.list_names(store._seq_claims)
-        assert len(claims) == 3
-        store.expire(now=60)
-        assert store.fs.list_names(store._seq_claims) == []
-        n = store._next_seq()
-        assert n == 4  # sidecar hint survives the prune
-
-
 class TestAtomicSidecarWrite:
     def test_overwrite_rename_never_unlinks(self, spark, tmp_path):
         """write_text_atomic must replace via a single overwrite-rename —
@@ -2437,10 +2412,10 @@ class TestAtomicSidecarWrite:
 
         base = str(tmp_path)
         fs = HadoopFS(spark, base)
-        p = base + "/_seq.json"
+        p = base + "/_latest"
         for i in range(5):
-            fs.write_text_atomic(p, f'{{"last_seq": {i}}}')
-            assert fs.read_text(p) == f'{{"last_seq": {i}}}'
+            fs.write_text_atomic(p, str(i))
+            assert fs.read_text(p) == str(i)
             assert not fs.exists(p + ".tmp")
 
     def test_rename_overwrite_replaces_existing(self, spark, tmp_path):
@@ -3858,23 +3833,19 @@ class TestRenderScalarExtras:
 
 
 class TestAdviceR8Hardening:
-    """Regression tests for the round-8 ADVICE items: legacy-mor
-    snapshot reads and torn seq sidecars."""
+    """Regression test for the round-8 ADVICE item on legacy-mor
+    snapshot reads."""
 
     SCHEMA = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
 
-    def _mor(self, spark, tmp_path):
-        from kenshin_spark.store import ParquetTieredStore
-
-        return ParquetTieredStore(
-            spark, self.SCHEMA, str(tmp_path / "st"), mode="mor"
-        )
-
-    def test_read_at_keeps_legacy_rows_without_seq(self, spark, tmp_path):
+    def test_version_read_keeps_legacy_rows_without_seq(
+        self, spark, tmp_path
+    ):
         """Files that physically lack _seq (a tier written before mor, or
-        imported) read back as NULL under the explicit tier schema; the
-        as-of filter must keep them (they predate every stamp), and
-        stamped rows must still win LWW over them (ADVICE r8 medium)."""
+        imported) read back as NULL under the explicit tier schema; a
+        version-pinned read must keep them (they predate every stamp),
+        and stamped rows must still win LWW over them (ADVICE r8
+        medium)."""
         from kenshin_spark.store import ParquetTieredStore
 
         root = str(tmp_path / "st")
@@ -3889,33 +3860,12 @@ class TestAdviceR8Hardening:
         df = spark.createDataFrame(
             [("m", 60, 2.0)], "metric string, ts long, value double"
         )
-        store.upsert(0, df)  # stamped seq=1, overwrites m@60
+        store.upsert(0, df)  # stamped seq=2, overwrites m@60
         snap = {
             (r["metric"], r["ts"]): r["value"]
-            for r in store.read_at(0, store.last_seq()).collect()
+            for r in store.read(0, version=store.commit.epoch()).collect()
         }
-        # n@60 is a legacy row — a bare `_seq <= as_of` would drop it
+        # n@60 is a legacy row with a NULL stamp — still in the snapshot
         assert snap[("n", 60)] == 5.0
         # the stamped write still wins LWW over the legacy value
         assert snap[("m", 60)] == 2.0
-
-    def test_torn_seq_sidecar_recovers_via_tier_scan(self, spark, tmp_path):
-        """An empty/truncated _seq.json (crash between create and fsync)
-        must not brick writes: last_seq treats it as missing and
-        _next_seq falls back to the once-only tier max(_seq) scan, so
-        stamps stay monotonic (ADVICE r8 low)."""
-        store = self._mor(spark, tmp_path)
-        df = spark.createDataFrame(
-            [("m", 60, 1.0)], "metric string, ts long, value double"
-        )
-        for _ in range(3):
-            store.upsert(0, df)
-        assert store.last_seq() == 3
-        # tear the sidecar (and drop the claim markers — the CAS dir may
-        # have been GC'd by expire(), so recovery can't lean on it)
-        store.fs.write_text_atomic(store._seq_sidecar, "")
-        for name in store.fs.list_names(store._seq_claims):
-            store.fs.delete(store._seq_claims + "/" + name)
-        assert store.last_seq() == 0  # unreadable → hint gone
-        n = store._next_seq()
-        assert n == 4  # recovered from max(_seq) over the tier, not 1

@@ -40,11 +40,21 @@ def test_pin_replicated_mode_persists_and_keeps_rows(spark):
     spark.conf.set(PIN_MODE_CONF, "replicated")
     try:
         df = pin(spark.range(10), eager=True)
+    finally:
+        spark.conf.unset(PIN_MODE_CONF)
+    try:
         assert df.storageLevel.replication == 2
         assert df.count() == 10
     finally:
         df.unpersist()
-        spark.conf.unset(PIN_MODE_CONF)
+
+
+def test_session_cleans_reliable_checkpoints(spark):
+    """Reliable pins write RDD checkpoints; the ContextCleaner deletes
+    them only when this conf is on, so a long-running driver would
+    otherwise leak checkpoint files without bound."""
+    key = "spark.cleaner.referenceTracking.cleanCheckpoints"
+    assert spark.sparkContext.getConf().get(key) == "true"
 
 
 def test_pin_unknown_mode_raises(spark):

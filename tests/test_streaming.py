@@ -929,27 +929,27 @@ class TestMergeOnRead:
         raw = spark.read.parquet(mor.tier_path(0))
         assert raw.count() == len(before)
 
-    def test_snapshot_read_at(self, spark, tmp_path):
-        """read_at(seq) pins the store state after that write stamp:
-        later appends are invisible, snapshots are batch-atomic, and cow
-        mode (no history) refuses."""
+    def test_snapshot_read_by_version(self, spark, tmp_path):
+        """read(version=seq) pins the store state after that manifest
+        commit: later appends are invisible and snapshots are
+        batch-atomic — in cow mode too, which keeps history in the log."""
         schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
-        mor = ParquetTieredStore(spark, schema, str(tmp_path / "m"), mode="mor")
-        mor.upsert(0, spark.createDataFrame(
-            [("m1", 0, 1.0), ("m2", 60, 2.0)],
-            "metric string, ts long, value double"))
-        s1 = mor.last_seq()
-        mor.upsert(0, spark.createDataFrame(
-            [("m1", 0, 9.0), ("m3", 0, 5.0)],
-            "metric string, ts long, value double"))
-        assert rows(mor.read_at(0, s1)) == [("m1", 0, 1.0), ("m2", 60, 2.0)]
-        assert rows(mor.read_at(0, mor.last_seq())) == rows(mor.read(0))
-        assert ("m1", 0, 9.0) in rows(mor.read(0))
-        cow = ParquetTieredStore(spark, schema, str(tmp_path / "c"))
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            cow.read_at(0, 1)
+        for mode in ("mor", "cow"):
+            st = ParquetTieredStore(
+                spark, schema, str(tmp_path / mode), mode=mode
+            )
+            st.upsert(0, spark.createDataFrame(
+                [("m1", 0, 1.0), ("m2", 60, 2.0)],
+                "metric string, ts long, value double"))
+            s1 = st.commit.epoch()
+            st.upsert(0, spark.createDataFrame(
+                [("m1", 0, 9.0), ("m3", 0, 5.0)],
+                "metric string, ts long, value double"))
+            assert rows(st.read(0, version=s1)) == [
+                ("m1", 0, 1.0), ("m2", 60, 2.0)]
+            assert rows(st.read(0, version=st.commit.epoch())) == rows(
+                st.read(0))
+            assert ("m1", 0, 9.0) in rows(st.read(0))
 
     def test_mor_append_is_o_batch(self, spark, tmp_path):
         """mor upsert appends exactly the batch's rows — no rewrite of
@@ -979,39 +979,6 @@ class TestMergeOnRead:
         # the winner is the later write
         got = {r["metric"]: r["value"] for r in mor.read(0).collect()}
         assert got["m1"] == 2.0
-
-    def test_mor_seq_survives_restart_via_sidecar(self, spark, tmp_path):
-        """A fresh store instance on an existing mor root continues the
-        write-stamp sequence from the sidecar (no tier scan): its writes
-        still win over the previous instance's."""
-        import json
-        import os
-
-        schema = Schema.from_strings("s", ".*", "60s:1d,300s:7d", xff=1.0)
-        root = str(tmp_path / "mor")
-        a = ParquetTieredStore(spark, schema, root, mode="mor")
-        a.upsert(0, spark.createDataFrame(
-            [("m", 0, 1.0)], "metric string, ts long, value double"))
-        a.upsert(0, spark.createDataFrame(
-            [("m", 0, 2.0)], "metric string, ts long, value double"))
-        side = json.load(open(os.path.join(root, "_seq.json")))
-        assert side["last_seq"] == 2
-
-        b = ParquetTieredStore(spark, schema, root, mode="mor")
-        b.upsert(0, spark.createDataFrame(
-            [("m", 0, 7.0)], "metric string, ts long, value double"))
-        assert rows(b.read(0)) == [("m", 0, 7.0)]  # newest stamp wins
-        assert json.load(
-            open(os.path.join(root, "_seq.json"))
-        )["last_seq"] == 3
-
-        # legacy store (no sidecar): falls back to the tier scan once
-        os.remove(os.path.join(root, "_seq.json"))
-        c = ParquetTieredStore(spark, schema, root, mode="mor")
-        c.upsert(0, spark.createDataFrame(
-            [("m", 0, 9.0)], "metric string, ts long, value double"))
-        assert rows(c.read(0)) == [("m", 0, 9.0)]
-
 
 class TestObjectStoreSafety:
     """Store ops route through the Hadoop FS abstraction (fs.py): they
@@ -1060,30 +1027,55 @@ class TestObjectStoreSafety:
         assert st.recover() == []
 
     def test_concurrent_handles_never_share_a_stamp(self, spark, tmp_path):
-        """Two store handles on one root interleave upserts: the CAS
-        claim (_seq.d markers) forces distinct, increasing stamps even
-        when a handle's in-memory view is stale."""
-        import json
+        """Several store handles upsert one slot at once: every write
+        commits at exactly the seq it stamped (a writer that lost the
+        seq re-stamps), so every live file's _seq is the seq that
+        committed it and the read returns the highest seq's value."""
         import os
+        import sys
+        import threading
 
         schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
         root = str(tmp_path / "cc")
-        a = ParquetTieredStore(spark, schema, root, mode="mor")
-        b = ParquetTieredStore(spark, schema, root, mode="mor")
-        df = lambda v: spark.createDataFrame(  # noqa: E731
-            [("m", 0, v)], "metric string, ts long, value double")
-        a.upsert(0, df(1.0))
-        b.upsert(0, df(2.0))
-        a.upsert(0, df(3.0))
-        assert rows(a.read(0)) == [("m", 0, 3.0)]  # last writer won
-        # force a stale sidecar: allocation must probe past the claimed
-        # markers instead of re-issuing stamp 1
-        with open(os.path.join(root, "_seq.json"), "w") as f:
-            json.dump({"last_seq": 0}, f)
-        b.upsert(0, df(9.0))
-        assert rows(b.read(0)) == [("m", 0, 9.0)]
-        claims = sorted(int(x) for x in os.listdir(os.path.join(root, "_seq.d")))
-        assert claims == [1, 2, 3, 4]  # one marker per issued stamp
+        n_writers = len(os.sched_getaffinity(0)) + 1  # more than cores
+        errors = []
+
+        def writer(w):
+            st = ParquetTieredStore(spark, schema, root, mode="mor")
+            try:
+                for k in range(2):
+                    st.upsert(0, spark.createDataFrame(
+                        [("m", 0, float(10 * w + k))],
+                        "metric string, ts long, value double"))
+            except Exception as exc:  # pragma: no cover
+                errors.append(exc)
+
+        threads = [
+            threading.Thread(target=writer, args=(w,))
+            for w in range(n_writers)
+        ]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors
+        st = ParquetTieredStore(spark, schema, root, mode="mor")
+        assert st.commit.epoch() == 2 * n_writers
+        for seq in range(1, 2 * n_writers + 1):
+            added = set(st.commit.snapshot(seq)) - set(
+                st.commit.snapshot(seq - 1)
+            )
+            got = spark.read.parquet(
+                *[os.path.join(root, rel) for rel in added]
+            ).collect()
+            assert [r["_seq"] for r in got] == [seq]
+        assert rows(st.read(0)) == [("m", 0, got[0]["value"])]
 
 
 class TestStreamingIncrementalDedup:
@@ -1132,8 +1124,9 @@ class TestStreamingIncrementalDedup:
 
 class TestChangeDataFeed:
     def test_changed_between_stamps(self, spark, tmp_path):
-        """changed_between(a, b) returns exactly the slots whose RESOLVED
-        value moved — overwrites and creates, not untouched rows."""
+        """changed_between(a, b) over manifest seqs returns exactly the
+        slots whose RESOLVED value moved — overwrites and creates, not
+        untouched rows."""
         schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
         mor = ParquetTieredStore(
             spark, schema, str(tmp_path / "cdc"), mode="mor"
@@ -1141,11 +1134,11 @@ class TestChangeDataFeed:
         mor.upsert(0, spark.createDataFrame(
             [("m1", 0, 1.0), ("m2", 60, 2.0)],
             "metric string, ts long, value double"))
-        s1 = mor.last_seq()
+        s1 = mor.commit.epoch()
         mor.upsert(0, spark.createDataFrame(
             [("m1", 0, 9.0), ("m3", 0, 5.0)],  # overwrite + create
             "metric string, ts long, value double"))
-        s2 = mor.last_seq()
+        s2 = mor.commit.epoch()
         changed = rows(mor.changed_between(0, s1, s2))
         assert changed == [("m1", 0, 9.0), ("m3", 0, 5.0)]
         # untouched m2 is absent; a no-op window diffs empty
@@ -1155,8 +1148,8 @@ class TestChangeDataFeed:
 class TestCatchUpPropagation:
     def test_propagate_from_seq_backfills_coarse_tiers(self, spark, tmp_path):
         """A tier0 write that bypassed the cascade (import/backfill) is
-        caught up by propagate_from_seq — only since the given stamp,
-        and a second catch-up from the returned stamp is a no-op."""
+        caught up by propagate_from_seq — only since the given manifest
+        seq, and a second catch-up from the returned seq is a no-op."""
         schema = Schema.from_strings(
             "s", ".*", "60s:1d,300s:7d", xff=1.0, agg_method="average"
         )
@@ -1169,7 +1162,7 @@ class TestCatchUpPropagation:
             "metric string, ts long, value double")
         mor.upsert(0, first)
         mor.propagate(first)
-        s1 = mor.last_seq()
+        s1 = mor.commit.epoch()
         assert rows(mor.read(1)) == [("m", 0, 3.0)]
         # backfill lands in tier0 WITHOUT cascading
         mor.upsert(0, spark.createDataFrame(
@@ -1194,15 +1187,15 @@ class TestBackup:
         src.catalog_add(spark.createDataFrame(
             [("m", "s", 0)], "metric string, schema_name string, created_ts long"))
         copied = src.backup_to(str(tmp_path / "bak"))
-        # tier0 + catalog + sidecar + the manifest log (tier1 empty)
-        assert len(copied) == 4
+        # tier0 + catalog + the manifest log (tier1 empty)
+        assert len(copied) == 3
         restored = ParquetTieredStore(
             spark, schema, str(tmp_path / "bak"), mode="mor"
         )
         assert rows(restored.read(0)) == rows(src.read(0))
-        assert restored.last_seq() == src.last_seq()
+        assert restored.commit.epoch() == src.commit.epoch()
         assert restored.catalog().count() == 1
-        # the restored handle continues the stamp sequence safely
+        # the restored handle continues the seq sequence safely
         restored.upsert(0, spark.createDataFrame(
             [("m", 0, 9.0)], "metric string, ts long, value double"))
         assert rows(restored.read(0)) == [("m", 0, 9.0), ("m", 60, 2.0)]
