@@ -22,9 +22,10 @@ numerator below ~1e13 even at sf100, so no twin rewrite is needed —
 except ``q_zero_discount_share`` which was switched to integer ``div``
 as the belt-and-braces anchor of the family.
 
-``tools/lint_oracles.py`` (also run as ``tests/test_oracle_types.py``)
-keeps the class dead: no registered or staged oracle may emit
-HUGEINT/UHUGEINT.
+``queries._common.register`` applies it to the oracles listed in
+``_BIGINT_CASTS``; ``tools/lint_oracles.py`` (also run as
+``tests/test_oracle_types.py``) keeps the class dead: no registered
+oracle may emit HUGEINT/UHUGEINT.
 """
 
 from __future__ import annotations
@@ -39,20 +40,3 @@ def cast_bigint_cols(sql: str, cols: Iterable[str]) -> str:
         f"SELECT * REPLACE ({replace})\n"
         f"FROM (\n{sql}\n) AS _bigint_norm"
     )
-
-
-def apply_bigint_casts(bank: dict, casts: dict[str, tuple[str, ...]]) -> None:
-    """Rewrite the oracles of *bank* in place per the *casts* map.
-
-    ``bank`` maps query name → QuerySpec (any dataclass with
-    ``fn``/``oracle``/``doc``); ``casts`` maps query name → columns to
-    normalize. Used at the bottom of each query bank module with the
-    columns flagged by tools/lint_oracles.py.
-    """
-    for name, cols in casts.items():
-        spec = bank[name]
-        bank[name] = type(spec)(
-            fn=spec.fn,
-            oracle=cast_bigint_cols(spec.oracle, cols),
-            doc=spec.doc,
-        )

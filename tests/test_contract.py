@@ -70,29 +70,65 @@ def test_driver_order_fronts_unverified():
 
 
 def test_every_staged_module_feeds_queries():
-    """Every ``queries_staged*`` module on disk is a live bank: it
-    defines at least one non-empty table of QuerySpec rows, and every
-    row it defines is registered in QUERIES — a bank the registry never
-    loads is dead code the oracle gate never runs."""
-    import importlib
+    """Every family module in ``kenshin_spark/queries/`` (all but the
+    ``_common`` core) defines at least one registered row — a module the
+    registry never loads is dead code the oracle gate never runs."""
     import pathlib
 
-    from kenshin_spark.queries import QuerySpec
-
     pkg = pathlib.Path(__file__).resolve().parents[1] / "kenshin_spark"
-    modules = sorted(p.stem for p in pkg.glob("queries_staged*.py"))
+    modules = sorted(
+        p.stem for p in (pkg / "queries").glob("*.py")
+        if p.stem not in ("__init__", "_common")
+    )
     assert modules
+    defining = {spec.fn.__module__ for spec in QUERIES.values()}
     for name in modules:
-        mod = importlib.import_module(f"kenshin_spark.{name}")
-        tables = [
-            v for v in vars(mod).values()
-            if isinstance(v, dict) and v
-            and all(isinstance(x, QuerySpec) for x in v.values())
-        ]
-        assert tables, f"{name} defines no QuerySpec table"
-        for table in tables:
-            missing = sorted(set(table) - set(QUERIES))
-            assert not missing, f"{name} rows not in QUERIES: {missing}"
+        assert f"kenshin_spark.queries.{name}" in defining, (
+            f"queries/{name}.py defines no registered row"
+        )
+
+
+def test_register_refuses_a_duplicate_name():
+    """One guard for the one registry: registering a name twice raises
+    instead of silently replacing the first row."""
+    import pytest
+
+    from kenshin_spark.queries import register
+
+    before = QUERIES["q1_pricing_summary"]
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        register("q1_pricing_summary", "SELECT 1 AS x", "dup")(
+            lambda spark, sf_dir: None
+        )
+    assert QUERIES["q1_pricing_summary"] is before
+
+
+def test_any_family_module_imported_first_loads_the_whole_registry():
+    """An executor unpickling a row's kernel imports that row's family
+    module first; in a fresh interpreter that must still yield the full
+    registry, with no import cycle, for every family."""
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    families = sorted(
+        p.stem for p in (root / "kenshin_spark" / "queries").glob("*.py")
+        if p.stem != "__init__"
+    )
+    assert families
+    script = (
+        "import importlib, sys\n"
+        "importlib.import_module('kenshin_spark.queries.' + sys.argv[1])\n"
+        "from kenshin_spark.queries import QUERIES\n"
+        "print(len(QUERIES))\n"
+    )
+    for fam in families:
+        out = subprocess.run(
+            [sys.executable, "-c", script, fam], cwd=root,
+            capture_output=True, text=True, check=True,
+        ).stdout
+        assert out.split() == [str(len(QUERIES))], (fam, out)
 
 
 def test_lineage_pins_go_through_the_session_seam():
@@ -100,16 +136,16 @@ def test_lineage_pins_go_through_the_session_seam():
     ``session.pin``, which picks local, reliable or replicated per
     deployment — a direct ``localCheckpoint``/``checkpoint`` call keeps
     the unreplicated local primitive on a cluster too. The registry's
-    ``queries*.py`` fixtures are exempt: they build test inputs."""
+    ``queries/`` fixtures are exempt: they build test inputs."""
     import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "kenshin_spark"
-    exempt = {"session.py"} | {p.name for p in pkg.glob("queries*.py")}
     offenders = [
         f"{py.relative_to(pkg)}:{node.lineno}"
         for py in sorted(pkg.rglob("*.py"))
-        if str(py.relative_to(pkg)) not in exempt
+        if str(py.relative_to(pkg)) != "session.py"
+        and py.relative_to(pkg).parts[0] != "queries"
         for node in ast.walk(ast.parse(py.read_text()))
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)

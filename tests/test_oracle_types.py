@@ -1,9 +1,9 @@
-"""Staging-gate lint: no registered or staged oracle may emit a DuckDB
+"""Registry lint: no registered oracle may emit a DuckDB
 HUGEINT/UHUGEINT column (VERDICT r8 "What's wrong" #1 — DuckDB's pandas
 conversion renders HUGEINT as float64 while the Spark twin hands int64,
 so the driver's value hash flags equal values as mismatched).
 
-Runs the same check as ``tools/lint_oracles.py`` over every bank, plus a
+Runs the same check as ``tools/lint_oracles.py`` over ``QUERIES``, plus a
 deliberately uncast fixture proving the lint actually bites.
 """
 
@@ -35,16 +35,16 @@ def duck():
 
 def test_no_oracle_emits_hugeint(duck):
     flagged = []
-    for module, name, spec in iter_specs():
+    for name, spec in iter_specs():
         if not spec.oracle:
             continue
         rel = duck.sql(spec.oracle)
         for col, typ in zip(rel.columns, rel.types):
             if str(typ).upper() in BAD_TYPES:
-                flagged.append((module, name, col, str(typ)))
+                flagged.append((name, col, str(typ)))
     assert not flagged, (
-        "HUGEINT oracles (CAST AS BIGINT or add to the bank's "
-        f"_BIGINT_CASTS): {flagged}"
+        "HUGEINT oracles (CAST AS BIGINT or add the columns to "
+        f"queries._common._BIGINT_CASTS): {flagged}"
     )
 
 

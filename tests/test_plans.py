@@ -672,3 +672,26 @@ class TestCdcDayPruning:
         assert got == want
         assert got[("m", 5 * day + 60)] is None
         assert got[("k", 9 * day + 60)] == 9.0
+
+
+def test_bucketed_join_plans_no_exchange(spark):
+    """The co-located join row's scale property: with broadcast off (the
+    big-dim cluster posture), the bucketed layout gives a sort-merge
+    join with NO shuffle exchange on either side. At sf-test size the
+    row itself may plan a dim broadcast instead — also shuffle-free —
+    so the pin forces the SMJ path explicitly."""
+    import re
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = QUERIES["store_bucketed_colocated_join"].fn(spark, SF)
+        p = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        assert "SortMergeJoin" in p
+        assert not re.search(r"^\(\d+\) Exchange", p, re.M), (
+            "bucketed join must not exchange either side"
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -19,6 +19,38 @@ pytestmark = pytest.mark.slow
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+#: rows whose result is legitimately empty at one testdata scale, so their
+#: oracle check passes vacuously there (ROADMAP item 3): no sf0.001 line
+#: ships between NATION_1 and NATION_2 in q7's 1996-97 window
+EMPTY_AT = {"q7_nation_volume": "sf0.001"}
+
+#: rank/threshold/mean outputs that pass through float aggregation — they
+#: must be identical under different shuffle partition counts (different
+#: summation orders) or the driver row would be flaky
+FLOAT_SENSITIVE = [
+    "ts_trend_slope",
+    "emb_centroid_outliers",
+    "render_most_deviant",
+    "render_average_above",
+    "render_summarize_avg",
+    "render_stddev_series",
+    "render_n_percentile",
+    "emb_norm_by_label",
+    "text_ari_readability",
+    "q_quantity_price_corr",
+    "q_abc_analysis",
+    "ts_autocorr_lag1",
+    "ts_mean_crossings",
+    "emb_dim_variance_topk",
+    "text_zipf_slope",
+    "render_average_below",
+    "q_event_session_depth",
+    "text_brevity_law",
+    "emb_distance_histogram",
+    "render_series_envelope",
+    "render_average_outside_percentile",
+]
+
 
 @pytest.fixture(scope="module")
 def duck():
@@ -65,6 +97,8 @@ def test_query_matches_oracle(spark, duck, name):
         f"{name}: column mismatch {sorted(got.columns)} vs {sorted(want.columns)}"
     )
     assert len(got) == len(want), f"{name}: rowcount {len(got)} vs {len(want)}"
+    if EMPTY_AT.get(name) != os.path.basename(SF_DIR.rstrip("/")):
+        assert len(got) > 0, f"{name} returns no rows at {SF_DIR}"
 
     # dtype-kind guard (VERDICT r8 item 1): the driver hashes serialized
     # values, so Spark int64 vs oracle float64 is a red row even when the
@@ -106,3 +140,111 @@ def test_rows_only_queries_run(spark, name):
     df = QUERIES[name].fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
+
+
+@pytest.mark.parametrize("name", FLOAT_SENSITIVE)
+def test_float_sensitive_queries_partition_stable(spark, name):
+    spec = QUERIES[name]
+    base = canon(spec.fn(spark, SF_DIR).toPandas())
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("3", "17"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            again = canon(spec.fn(spark, SF_DIR).toPandas())
+            assert base.equals(again), f"{name} unstable at {parts} parts"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_bloom_no_false_negatives(spark):
+    """Corpus members MUST bloom-hit — exact_dup implies bloom_hit."""
+    df = QUERIES["dedup_bloom_prefilter"].fn(spark, SF_DIR)
+    rows = df.collect()
+    assert any(r["exact_dup"] for r in rows)
+    for r in rows:
+        if r["exact_dup"]:
+            assert r["bloom_hit"], f"false negative for doc {r['doc_id']}"
+
+
+def test_triage_agrees_with_the_real_ingest_job(spark, tmp_path):
+    """The triage row must be a faithful projection of the REAL
+    composed job: run StreamingCorpusIngest on the same batch/corpus
+    split and compare its per-reason doc sets against the query's
+    verdicts (quality thresholds aligned via quality_checks)."""
+    from kenshin_spark.bpe import fit
+    from kenshin_spark.pipeline import StreamingCorpusIngest
+    from kenshin_spark.quality import predicate
+
+    docs = spark.createDataFrame(
+        [
+            (10, "alpha beta gamma delta epsilon zeta eta theta", "t"),
+            (20, "short doc", "t"),                      # quality
+            (30, "the corpus shares this exact sentence body here", "t"),
+            (40, "common boilerplate text repeated almost verbatim okay", "t"),
+            (1, "unrelated corpus material with plenty of words", "t"),
+            (3, "the corpus shares this exact sentence body here", "t"),
+            (7, "common boilerplate text repeated almost verbatim yes", "t"),
+        ],
+        "doc_id long, text string, source string",
+    )
+    # the registry row's split: batch = doc_id % 10 = 0
+    import pyspark.sql.functions as F  # noqa: N812
+
+    # load_table expects the testdata layout: one parquet FILE per table
+    tmp = str(tmp_path / "t")
+    os.makedirs(tmp)
+    docs.toPandas().to_parquet(f"{tmp}/documents.parquet", index=False)
+    verdicts = {
+        r["doc_id"]: r["reason"]
+        for r in QUERIES["pipeline_ingest_triage"]
+        .fn(spark, tmp)
+        .collect()
+    }
+
+    corpus = docs.where("doc_id % 10 <> 0").select(
+        "doc_id", "text", "source"
+    )
+    batch = docs.where("doc_id % 10 = 0").select(
+        "doc_id", "text", "source"
+    )
+    merges = fit(corpus, n_merges=10)
+    ing = StreamingCorpusIngest(
+        spark, str(tmp_path / "c"), merges,
+        quality_checks=[
+            predicate(
+                r"size(split(trim(text), '\\s+')) >= 5", name="min_tokens"
+            )
+        ],
+    )
+    ing.ingest(corpus, 0)   # build the persisted state
+    ing.ingest(batch, 1)    # triage the batch
+
+    dead = spark.read.parquet(f"{ing.root}/dead").where(
+        F.col("batch_id") == 1
+    ).withColumn(
+        "doc_id", F.get_json_object("row", "$.doc_id").cast("long")
+    )
+    by_reason = {
+        reason: {
+            r["doc_id"]
+            for r in dead.where(F.col("reason") == reason).collect()
+        }
+        for reason in ("quality_rejected", "exact_dups", "near_dups")
+    }
+    admitted = {
+        r["doc_id"]
+        for r in spark.read.parquet(f"{ing.root}/docs").collect()
+    } & {r["doc_id"] for r in batch.collect()}
+
+    assert by_reason["quality_rejected"] == {
+        d for d, v in verdicts.items() if v == "quality_rejected"
+    }
+    assert by_reason["exact_dups"] == {
+        d for d, v in verdicts.items() if v == "exact_dup"
+    }
+    assert by_reason["near_dups"] == {
+        d for d, v in verdicts.items() if v == "near_dup"
+    }
+    assert admitted == {
+        d for d, v in verdicts.items() if v == "admitted"
+    }

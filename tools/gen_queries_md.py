@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Regenerate QUERIES.md from the live registry and the staged banks.
+"""Regenerate QUERIES.md from the registry.
 
 Usage:  python tools/gen_queries_md.py > QUERIES.md
 """
@@ -12,16 +12,11 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from kenshin_spark.queries import DRIVER_VERIFIED, QUERIES, driver_order  # noqa: E402
-from kenshin_spark.queries_staged import STAGED  # noqa: E402
-from kenshin_spark.queries_staged_r6 import STAGED_R6  # noqa: E402
-from kenshin_spark.queries_staged_r7 import STAGED_R7  # noqa: E402
-from kenshin_spark.queries_staged_r8 import STAGED_R8  # noqa: E402
-from kenshin_spark.queries_staged_r9 import STAGED_R9  # noqa: E402
 
 HEADER = """\
 # Query registry — every `queries()` entry, in driver evaluation order
 
-Auto-generated from `kenshin_spark/queries.py` by
+Auto-generated from the `kenshin_spark/queries/` package by
 `tools/gen_queries_md.py`. 'window' = inside the driver's 50-slot
 evaluation prefix this round; 'verified' = has a green driver
 CORRECTNESS row from an earlier round and is regression-guarded by
@@ -29,49 +24,6 @@ CORRECTNESS row from an earlier round and is regression-guarded by
 'rows-only' = no SQL oracle (approximate/training-dependent operator),
 driver records the weaker check.
 """
-
-STAGED_HEADERS = {
-    "round 5": """\
-
-## Staged for round 5 (`kenshin_spark/queries_staged.py`)
-
-This round's 50-slot window is exactly full, so these entries are held
-out of the registry; they pass the same Spark-vs-DuckDB gate
-(`tests/test_queries_staged.py`, green at sf0.001 and sf0.01) and
-promote by moving their registration block into `queries.py`.
-""",
-    "round 6": """\
-
-## Staged for round 6 (`kenshin_spark/queries_staged_r6.py`)
-
-Second bank, held for the window that round 6 frees; same gate
-(`tests/test_queries_staged_r6.py`, green at sf0.001 and sf0.01) and
-the same two-line promotion mechanism (see HANDOFF.md).
-""",
-    "round 7": """\
-
-## Staged for round 7 (`kenshin_spark/queries_staged_r7.py`)
-
-Third bank, sized by idea quality rather than window arithmetic (the
-driver backfills unused slots with verified queries); same gate
-(`tests/test_queries_staged_r7.py`) and promotion mechanism.
-""",
-    "round 8": """\
-
-## Staged for round 8 (`kenshin_spark/queries_staged_r8.py`)
-
-Render-surface completion: after this bank promotes, every one of the
-63 RENDER_REGISTRY functions is exercised by a driver-oracled row.
-""",
-    "round 9": """\
-
-## Staged for round 9 (`kenshin_spark/queries_staged_r9.py`)
-
-The composed corpus-ingest job as a driver row (plus the max_bucket
-guard's semantics); gate `tests/test_queries_staged_r9.py`, which also
-cross-checks the triage row against the REAL StreamingCorpusIngest job.
-""",
-}
 
 
 def status(name: str, idx: int) -> str:
@@ -88,14 +40,6 @@ def main() -> None:
     for i, name in enumerate(driver_order()):
         out.append(f"{i + 1}. **{name}** ({status(name, i)}) — "
                    f"{QUERIES[name].doc}")
-    for title, bank in (("round 5", STAGED), ("round 6", STAGED_R6),
-                        ("round 7", STAGED_R7), ("round 8", STAGED_R8),
-                        ("round 9", STAGED_R9)):
-        if set(bank) <= set(QUERIES):
-            continue  # already promoted — listed in the registry above
-        out.append(STAGED_HEADERS[title])
-        for i, name in enumerate(sorted(bank)):
-            out.append(f"{i + 1}. **{name}** (staged) — {bank[name].doc}")
     print("\n".join(out))
 
 

@@ -1,7 +1,6 @@
 #!/usr/bin/env python
-"""Lint every oracle (live registry + every staged bank) for DuckDB
-result types that round-trip wrongly through pandas into the driver's
-value hash.
+"""Lint every registry oracle for DuckDB result types that round-trip
+wrongly through pandas into the driver's value hash.
 
 The class (VERDICT r8, "What's wrong" #1): DuckDB types an uncast
 ``sum(CASE ...)`` or integer ``//`` division as HUGEINT, and DuckDB's
@@ -14,7 +13,7 @@ This lint runs ``duckdb.sql(oracle)`` against the sf0.01 views and flags
 any HUGEINT/UHUGEINT output column. Fix = ``CAST(... AS BIGINT)`` in the
 oracle (every flagged column is a count/ppm far below 2^63).
 
-Exit status 1 if anything is flagged — wired into the staging gate via
+Exit status 1 if anything is flagged — wired into the tier-1 tests via
 tests/test_oracle_types.py so the class stays dead.
 
 Usage:  python tools/lint_oracles.py [sf_dir]
@@ -34,36 +33,11 @@ from kenshin_spark.io import TABLES  # noqa: E402
 
 BAD_TYPES = {"HUGEINT", "UHUGEINT"}
 
-BANKS = [
-    ("queries", "QUERIES"),
-    ("queries_staged", "STAGED"),
-    ("queries_staged_r6", "STAGED_R6"),
-    ("queries_staged_r7", "STAGED_R7"),
-    ("queries_staged_r8", "STAGED_R8"),
-    ("queries_staged_r8_engine", "STAGED_R8_ENGINE"),
-    ("queries_staged_r9", "STAGED_R9"),
-    ("queries_staged_r10", "STAGED_R10"),
-    ("queries_staged_r11", "STAGED_R11"),
-]
-
 
 def iter_specs():
-    import importlib
+    from kenshin_spark.queries import QUERIES
 
-    seen: set[str] = set()
-    for module, dname in BANKS:
-        try:
-            mod = importlib.import_module(f"kenshin_spark.{module}")
-        except (ImportError, AttributeError):
-            continue
-        bank = getattr(mod, dname, None)
-        if bank is None:
-            continue
-        for name, spec in bank.items():
-            if name in seen:
-                continue
-            seen.add(name)
-            yield module, name, spec
+    return QUERIES.items()
 
 
 def main(argv: list[str]) -> int:
@@ -74,10 +48,10 @@ def main(argv: list[str]) -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    flagged: list[tuple[str, str, str, str]] = []
-    errors: list[tuple[str, str, str]] = []
+    flagged: list[tuple[str, str, str]] = []
+    errors: list[tuple[str, str]] = []
     total = 0
-    for module, name, spec in iter_specs():
+    for name, spec in iter_specs():
         if not spec.oracle:
             continue
         total += 1
@@ -85,15 +59,15 @@ def main(argv: list[str]) -> int:
             rel = con.sql(spec.oracle)
             for col, typ in zip(rel.columns, rel.types):
                 if str(typ).upper() in BAD_TYPES:
-                    flagged.append((module, name, col, str(typ)))
+                    flagged.append((name, col, str(typ)))
         except Exception as exc:  # pragma: no cover - lint report path
-            errors.append((module, name, str(exc).splitlines()[0]))
+            errors.append((name, str(exc).splitlines()[0]))
     con.close()
 
-    for module, name, col, typ in flagged:
-        print(f"HUGEINT  {module:24s} {name:40s} col={col} type={typ}")
-    for module, name, err in errors:
-        print(f"ERROR    {module:24s} {name:40s} {err}")
+    for name, col, typ in flagged:
+        print(f"HUGEINT  {name:40s} col={col} type={typ}")
+    for name, err in errors:
+        print(f"ERROR    {name:40s} {err}")
     print(
         f"-- linted {total} oracles: {len(flagged)} flagged columns, "
         f"{len(errors)} errors"

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Regenerate the DRIVER_VERIFIED frozenset in kenshin_spark/queries.py
-from the driver's CORRECTNESS artifacts.
+"""Regenerate the DRIVER_VERIFIED frozenset in
+kenshin_spark/queries/__init__.py from the driver's CORRECTNESS artifacts.
 
 Run at the START of a round, after the driver writes CORRECTNESS_r{N}:
 
@@ -21,7 +21,7 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
-QUERIES_PY = REPO / "kenshin_spark" / "queries.py"
+QUERIES_PY = REPO / "kenshin_spark" / "queries" / "__init__.py"
 
 
 def green_names(path: str) -> set[str]:
