@@ -345,32 +345,27 @@ def _corpus(args):
     spark = get_spark("kenshin-cli", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     # merges are only consulted by ingest(); the maintenance surface
-    # (file_report / compact / prune_markers / recover) never tokenizes
+    # (file_report / compact / vacuum) never tokenizes
     return StreamingCorpusIngest(spark, args.root, merges=[])
 
 
 def cmd_corpus_audit(args) -> None:
-    """Corpus-ingest counterpart of `audit`: per-state-table parquet
-    file counts plus the commit-marker backlog (markers are 1 file per
-    micro-batch until maintenance prunes the folded ones)."""
+    """Corpus-ingest counterpart of `audit`: live parquet files per
+    state table and the manifest epoch (commits so far), both read off
+    the committed manifest."""
     ing = _corpus(args)
-    markers = sum(
-        1 for n in ing._fs.list_names(f"{ing.root}/_batches")
-        if not n.endswith(".tmp")
-    )
-    print(json.dumps({"files": ing.file_report(), "markers": markers}))
+    print(json.dumps({
+        "files": ing.file_report(), "epoch": ing.commit.epoch(),
+    }))
 
 
 def cmd_corpus_maintain(args) -> None:
     """Corpus-ingest counterpart of `compact`: one-call maintenance
-    pass (recover crashed swaps -> fold fragmented state tables ->
-    GC folded commit markers). Run off the hot path, never
-    concurrently with an active ingest."""
+    pass (fold fragmented state tables -> vacuum retired files). Run
+    off the hot path, never concurrently with an active ingest."""
     ing = _corpus(args)
     print(json.dumps(ing.maintenance(
-        target_files=args.target_files,
-        keep_last_markers=args.keep_markers,
-        min_frag=args.min_frag,
+        target_files=args.target_files, min_frag=args.min_frag,
     )))
 
 
@@ -458,7 +453,6 @@ def main(argv: list[str] | None = None) -> int:
     cm = sub.add_parser("corpus-maintain",
                         help="--root is a StreamingCorpusIngest root")
     cm.add_argument("--target-files", type=int, default=1)
-    cm.add_argument("--keep-markers", type=int, default=64)
     cm.add_argument("--min-frag", type=int, default=16,
                     help="only rewrite a table once it has more than "
                          "this many files (amortizes full rewrites)")

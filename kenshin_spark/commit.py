@@ -1,10 +1,11 @@
-"""The store's commit protocol: a manifest log on plain parquet.
+"""The engine's one commit protocol: a manifest log on plain parquet.
 
-``ParquetTieredStore`` makes its file layout transactional with one
-mechanism, :class:`ManifestCommitProtocol`. Every write stages its
-files invisibly, then one atomic publication of a commit record makes
-them live; readers plan every scan from the committed file list, never
-from a directory listing. A read is therefore one plain call against an
+``ParquetTieredStore`` and ``StreamingCorpusIngest`` make their file
+layouts transactional with one mechanism,
+:class:`ManifestCommitProtocol`. Every write stages its files invisibly
+(``adopt``), then one atomic publication of a commit record makes them
+live; readers plan every scan from the committed file list, never from
+a directory listing. A read is therefore one plain call against an
 immutable snapshot: no validation loop, no retry budget, no
 missing-file tolerance, and no destructive window for a reader to race.
 
@@ -31,6 +32,9 @@ mor log + ``compact()``      Delta: MERGE + OPTIMIZE (deletion vectors);
 ``changed_between`` CDC      Delta: Change Data Feed ``table_changes``;
                              Iceberg: incremental snapshot reads (here
                              ``version=b`` EXCEPT ALL ``version=a``)
+``tx.batch_id`` /            Delta: ``SetTransaction`` (app id -> last
+``committed_batch()``        batch version) — the idempotent streaming
+                             sink: a replayed batch id is skipped
 ===========================  ========================================
 
 Reference analog for the contract itself: the atomic whole-file update
@@ -86,7 +90,10 @@ class ManifestTxn:
     names are tag-unique; transactions with drops conflict iff a
     concurrent commit added a file under a dropped prefix). ``seq``,
     when set, is the exact seq the transaction must commit at: a mor
-    write stamped its rows with it, so it cannot rebase."""
+    write stamped its rows with it, so it cannot rebase. ``batch_id``,
+    when set, is the stream batch this commit makes durable: it must
+    exceed the committed one, and it commits even with no file
+    changes (an empty batch still advances the replay guard)."""
 
     def __init__(
         self, read_seq: int | None = None, op: str | None = None
@@ -96,6 +103,7 @@ class ManifestTxn:
         self.clears: list[str] = []
         self.read_seq = read_seq
         self.seq: int | None = None
+        self.batch_id: int | None = None
         #: what the transaction IS (``upsert``/``compact``/``expire``/
         #: ``delete``/``vacuum``/...) — recorded in the commit record so
         #: ``history()`` reads like Delta's DESCRIBE HISTORY
@@ -161,6 +169,10 @@ class ManifestCommitProtocol:
     #: per-commit metadata write no longer grows with store file count
     CHECKPOINT_EVERY = 10
 
+    #: how long ``vacuum`` keeps a retired file (and superseded log
+    #: records) after its tombstone — a scan must finish within it
+    GRACE_S = 3600.0
+
     def __init__(
         self, fs, root: str, checkpoint_every: int | None = None,
     ):
@@ -171,7 +183,8 @@ class ManifestCommitProtocol:
             checkpoint_every or self.CHECKPOINT_EVERY
         )
         self._cache: (
-            tuple[int, dict[str, int], dict[str, float]] | None
+            tuple[int, dict[str, int], dict[str, float], int | None]
+            | None
         ) = None
 
     # -- the log ------------------------------------------------------
@@ -230,21 +243,29 @@ class ManifestCommitProtocol:
         scan planned from the pre-retirement snapshot can finish."""
         return self._load(seq)[1]
 
+    def committed_batch(self, seq: int | None = None) -> int | None:
+        """The last stream batch id committed at or before ``seq``
+        (default: latest), ``None`` if no commit carried one — Delta's
+        ``txnVersion`` for the writer. Checkpoints carry it forward, so
+        vacuum's log trim never loses it."""
+        return self._load(seq)[2]
+
     def _load(
         self, seq: int | None = None
-    ) -> tuple[dict[str, int], dict[str, float]]:
+    ) -> tuple[dict[str, int], dict[str, float], int | None]:
         if seq is None:
             seq = self.epoch()
         if seq == 0:
-            return {}, {}
+            return {}, {}, None
         if self._cache is not None and self._cache[0] == seq:
-            return self._cache[1], self._cache[2]
+            return self._cache[1:]
         # walk back to the nearest checkpoint (full snapshot), then
         # replay the delta chain forward — at most checkpoint_every
         # tiny JSON reads, independent of store file count
         deltas: list[dict] = []
         base_files: dict[str, int] = {}
         base_tombs: dict[str, float] = {}
+        batch = None
         at = seq
         while at > 0:
             try:
@@ -256,6 +277,7 @@ class ManifestCommitProtocol:
                 # to {}: their already-retired files take vacuum's
                 # untracked-debris (mtime-gated) path
                 base_tombs = body.get("tombstones", {})
+                batch = body.get("batch_id")
                 break
             except Exception as exc:
                 if not _is_not_found(exc):
@@ -282,8 +304,9 @@ class ManifestCommitProtocol:
             tombs.update(d.get("tomb_adds", {}))
             for rel in d.get("tomb_clears", []):
                 tombs.pop(rel, None)
-        self._cache = (seq, files, tombs)
-        return files, tombs
+            batch = d.get("batch_id", batch)
+        self._cache = (seq, files, tombs, batch)
+        return files, tombs, batch
 
     def live_files(
         self, prefix: str = "", seq: int | None = None
@@ -349,12 +372,12 @@ class ManifestCommitProtocol:
     def txn(self, read_seq: int | None = None, op: str | None = None):
         """Stage a :class:`ManifestTxn`; commit it atomically on clean
         exit (no-op when the transaction carries no changes — the epoch
-        only moves when the file list does). ``read_seq`` pins the
-        snapshot the operation planned from for conflict detection;
-        defaults to the epoch at entry (callers that plan BEFORE
-        opening the transaction — compaction stages its folds first —
-        pass the epoch they planned at). ``op`` labels the commit
-        record for :meth:`history`."""
+        only moves when the file list or the committed batch id does).
+        ``read_seq`` pins the snapshot the operation planned from for
+        conflict detection; defaults to the epoch at entry (callers
+        that plan BEFORE opening the transaction — compaction stages
+        its folds first — pass the epoch they planned at). ``op``
+        labels the commit record for :meth:`history`."""
         tx = ManifestTxn(
             read_seq if read_seq is not None else self.epoch(), op=op
         )
@@ -370,10 +393,12 @@ class ManifestCommitProtocol:
         transaction with drops whose dropped prefixes gained files
         since ``tx.read_seq`` raises :class:`ManifestConflict` — the
         operation must re-plan, or it would retire data it never
-        folded; so does one pinned to a ``tx.seq`` another commit took.
+        folded; so does one pinned to a ``tx.seq`` another commit took,
+        and one whose ``tx.batch_id`` is not above the committed one (a
+        concurrent replay of the same stream batch).
         Concurrent writers (an ingest job + a maintenance job)
         are therefore safe at the metadata layer."""
-        if not tx.drops and not tx.adds and not tx.clears:
+        if not (tx.drops or tx.adds or tx.clears) and tx.batch_id is None:
             return self.epoch()
         if now is None:
             now = time.time()
@@ -386,12 +411,23 @@ class ManifestCommitProtocol:
                     f"transaction stamped for seq {tx.seq}, but the log "
                     f"is at {base} — re-stamp the write"
                 )
-            files, tombs = self._load(base)
+            files, tombs, batch = self._load(base)
+            if (
+                tx.batch_id is not None
+                and batch is not None
+                and tx.batch_id <= batch
+            ):
+                raise ManifestConflict(
+                    f"batch {tx.batch_id} is not above the committed "
+                    f"batch {batch} — a replay already committed it"
+                )
+            if tx.batch_id is not None:
+                batch = tx.batch_id
             files = dict(files)
             tombs = dict(tombs)
             if tx.drops and tx.read_seq is not None and base > tx.read_seq:
                 try:
-                    read_files, _ = self._load(tx.read_seq)
+                    read_files = self._load(tx.read_seq)[0]
                 except ValueError as exc:  # chain trimmed under us
                     raise ManifestConflict(
                         f"cannot prove drop-safety: snapshot "
@@ -431,38 +467,37 @@ class ManifestCommitProtocol:
             if seq % self.checkpoint_every == 0 or seq == 1:
                 # checkpoint: the full snapshot readers re-anchor on
                 target = self._manifest_path(seq)
-                body = json.dumps(
-                    {
-                        "seq": seq,
-                        "ts": now,
-                        "op": tx.op or "txn",
-                        "files": files,
-                        "tombstones": tombs,
-                        # keep the per-commit change visible even in
-                        # checkpoint records so history() needs no
-                        # snapshot diffing
-                        "adds": tx.adds,
-                        "drops": dropped,
-                    },
-                    sort_keys=True,
-                )
+                record = {
+                    "seq": seq,
+                    "ts": now,
+                    "op": tx.op or "txn",
+                    "files": files,
+                    "tombstones": tombs,
+                    # keep the per-commit change visible even in
+                    # checkpoint records so history() needs no
+                    # snapshot diffing
+                    "adds": tx.adds,
+                    "drops": dropped,
+                }
+                if batch is not None:  # carried: the trim keeps it
+                    record["batch_id"] = batch
             else:
                 # delta: O(changed files), not O(store files) — prefix
                 # drops are resolved to explicit rels at commit time so
                 # replay needs no prefix semantics
                 target = self._delta_path(seq)
-                body = json.dumps(
-                    {
-                        "seq": seq,
-                        "ts": now,
-                        "op": tx.op or "txn",
-                        "adds": tx.adds,
-                        "drops": dropped,
-                        "tomb_adds": {r: now for r in dropped},
-                        "tomb_clears": tomb_clears,
-                    },
-                    sort_keys=True,
-                )
+                record = {
+                    "seq": seq,
+                    "ts": now,
+                    "op": tx.op or "txn",
+                    "adds": tx.adds,
+                    "drops": dropped,
+                    "tomb_adds": {r: now for r in dropped},
+                    "tomb_clears": tomb_clears,
+                }
+                if tx.batch_id is not None:
+                    record["batch_id"] = tx.batch_id
+            body = json.dumps(record, sort_keys=True)
             # THE commit point: exclusive publication of the complete
             # record — two racing writers can never claim the same seq
             stage = target + f".w{uuid.uuid4().hex[:8]}.tmp"
@@ -471,7 +506,7 @@ class ManifestCommitProtocol:
                 # monotonic hint for readers; a crash before this flip
                 # is still committed (epoch() probes past the hint)
                 self.fs.write_text_atomic(self._latest_path, str(seq))
-                self._cache = (seq, files, tombs)
+                self._cache = (seq, files, tombs, batch)
                 return seq
             # lost the CAS race — drop our stage file and rebase
             self.fs.delete(stage)
@@ -480,3 +515,172 @@ class ManifestCommitProtocol:
             f"manifest commit under {self.dir}: lost 64 consecutive "
             "CAS races — writer storm or clock livelock"
         )
+
+    # -- the write primitive and the reclaim ----------------------------
+
+    def rel(self, path: str) -> str:
+        """``path`` relative to the root — the manifest's key space (so a
+        backed-up/restored root's manifest stays valid)."""
+        return posixpath.relpath(path, self.root)
+
+    def adopt(
+        self, df, dest_path: str, partitioned: bool = True
+    ) -> list[tuple[str, int]]:
+        """The write primitive: write ``df`` to a private
+        ``_stage/<tag>`` directory (underscore-prefixed — invisible to
+        partition discovery), then MOVE the data files into the live
+        tree under tag-unique names (``partitioned`` keeps the ``day=``
+        partition directories). Readers plan from the committed
+        manifest, so adopted files stay invisible until the caller's
+        transaction commits them; a crash at any point strands only
+        invisible files for ``vacuum`` to reclaim. Returns
+        ``(rel_path, size)`` pairs for the transaction."""
+        import uuid
+
+        tag = uuid.uuid4().hex[:12]
+        stage = posixpath.join(self.root, "_stage", tag)
+        writer = df.write.mode("overwrite")
+        if partitioned:
+            writer = writer.partitionBy("day")
+        writer.parquet(stage)
+        adopted: list[tuple[str, int]] = []
+
+        def _move(src_dir: str, dst_dir: str) -> None:
+            self.fs.mkdirs(dst_dir)
+            for fname, size in self.fs.list_files(src_dir):
+                if not fname.endswith(".parquet"):
+                    continue
+                dst = posixpath.join(dst_dir, f"{tag}-{fname}")
+                if not self.fs.rename(posixpath.join(src_dir, fname), dst):
+                    raise IOError(f"adopt: could not move {fname} -> {dst}")
+                adopted.append((self.rel(dst), size))
+
+        if partitioned:
+            for dname in self.fs.list_names(stage):
+                if dname.startswith("day="):
+                    _move(
+                        posixpath.join(stage, dname),
+                        posixpath.join(dest_path, dname),
+                    )
+        else:
+            _move(stage, dest_path)
+        self.fs.delete(stage)
+        return adopted
+
+    def vacuum(
+        self,
+        dirs: list[str],
+        grace_s: float = GRACE_S,
+        now: float | None = None,
+    ) -> list[str]:
+        """Physically reclaim files no committed manifest references —
+        superseded rewrites, logically-expired partitions, crash-stranded
+        stage debris — that are older than ``grace_s`` (the VACUUM
+        retention contract: a scan must finish within the grace window
+        of the snapshot it planned, exactly like Delta's
+        ``VACUUM ... RETAIN`` / Iceberg's ``expire_snapshots``). ``dirs``
+        are the data directories to sweep for untracked files, with
+        their ``day=`` partition children. Also trims superseded
+        log records past the grace window. Returns the root-relative
+        paths removed."""
+        cutoff = (now if now is not None else time.time()) - grace_s
+        live = set(self.snapshot())
+        tombs = self.tombstones()
+        removed: list[str] = []
+
+        # 1) tombstoned files age by their RETIREMENT stamp recorded in
+        # the manifest (Delta's RemoveFile.deletionTimestamp), never by
+        # file mtime: compact/expire/delete retire files that may have
+        # been written long before, and a reader that planned from the
+        # pre-retirement snapshot gets the full grace window to finish
+        # (ADVICE r10). Reclaimed tombstones are then dropped from the
+        # manifest in one transaction so the log doesn't grow forever.
+        reclaimed: list[str] = []
+        for rel, retired_at in sorted(tombs.items()):
+            if retired_at >= cutoff:
+                continue
+            path = posixpath.join(self.root, rel)
+            if self.fs.exists(path):
+                self.fs.delete(path)
+            removed.append(rel)
+            reclaimed.append(rel)
+        if reclaimed:
+            tx_ = ManifestTxn(op="vacuum")
+            for rel in reclaimed:
+                tx_.clear_tombstone(rel)
+            self.commit_txn(tx_)
+
+        # 2) untracked debris — files neither live nor tombstoned
+        # (crash-stranded adopts that never committed, or retirements
+        # from a pre-tombstone manifest) — has no recorded retirement
+        # time, so the file mtime gate is the only signal available
+        def _sweep_dir(d: str) -> None:
+            for fname, _sz, mtime in self.fs.list_file_status(d):
+                rel = self.rel(posixpath.join(d, fname))
+                if rel not in live and rel not in tombs and mtime < cutoff:
+                    self.fs.delete(posixpath.join(d, fname))
+                    removed.append(rel)
+
+        for r in dirs:
+            for dname in self.fs.list_names(r):
+                sub = posixpath.join(r, dname)
+                if dname.startswith("day="):
+                    _sweep_dir(sub)
+                    if not self.fs.list_names(sub):  # now-empty partition
+                        self.fs.delete(sub)
+            _sweep_dir(r)
+        stage_root = posixpath.join(self.root, "_stage")
+        for dname in self.fs.list_names(stage_root):
+            sub = posixpath.join(stage_root, dname)
+            # a crashed staged write may be partitioned (day= children)
+            statuses = list(self.fs.list_file_status(sub))
+            for child in self.fs.list_names(sub):
+                statuses += self.fs.list_file_status(
+                    posixpath.join(sub, child)
+                )
+            if statuses and all(m < cutoff for _, _, m in statuses):
+                self.fs.delete(sub)
+                removed.append(self.rel(sub))
+        # log trim: the reconstruction chain for the LATEST commit is
+        # (anchor checkpoint <= latest) + the deltas between —
+        # everything strictly older than the anchor is reclaimable
+        # (same retention contract as the data files; time travel
+        # below the anchor ends where Delta's VACUUM ends it)
+        latest = self.epoch()
+        statuses = list(self.fs.list_file_status(self.dir))
+
+        def _seq_of(fname: str) -> tuple[int, bool] | None:
+            if fname.endswith(".d.json"):
+                try:
+                    return int(fname[: -len(".d.json")]), False
+                except ValueError:
+                    return None
+            if fname.endswith(".json"):
+                try:
+                    return int(fname[: -len(".json")]), True
+                except ValueError:
+                    return None
+            return None
+
+        anchor = 0
+        for fname, _sz, _m in statuses:
+            parsed = _seq_of(fname)
+            if parsed and parsed[1] and anchor < parsed[0] <= latest:
+                anchor = parsed[0]
+        if anchor == 0:
+            anchor = latest  # no checkpoint found: trim nothing extra
+        for fname, _sz, mtime in statuses:
+            if fname.endswith(".tmp"):
+                # a writer's staged commit record that lost its CAS
+                # race mid-crash — reclaim once safely old
+                if mtime < cutoff:
+                    self.fs.delete(posixpath.join(self.dir, fname))
+                    removed.append(posixpath.join("_manifest", fname))
+                continue
+            parsed = _seq_of(fname)
+            if parsed is None:
+                continue
+            if parsed[0] < anchor and mtime < cutoff:
+                self.fs.delete(posixpath.join(self.dir, fname))
+                removed.append(posixpath.join("_manifest", fname))
+        return removed

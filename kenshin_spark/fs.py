@@ -1,29 +1,25 @@
 """Filesystem abstraction for store metadata and maintenance operations.
 
-Every filesystem manipulation the store performs outside a Spark write —
-partition drops, directory swaps, the manifest log's records — goes
-through the Hadoop FileSystem API (the same abstraction Spark's own
-committers use), resolved from the session's Hadoop configuration. A
-store rooted at a plain local path, a ``file:`` URI, ``hdfs://`` or
-``s3a://`` all take the same code path; nothing touches ``os``/``shutil``
-directly, which only ever worked on a single node.
+Every filesystem manipulation the engine performs outside a Spark write —
+moving adopted files into place, the manifest log's records, vacuum's
+reclaim — goes through the Hadoop FileSystem API (the same abstraction
+Spark's own committers use), resolved from the session's Hadoop
+configuration. A root at a plain local path, a ``file:`` URI,
+``hdfs://`` or ``s3a://`` all take the same code path; nothing touches
+``os``/``shutil`` directly, which only ever worked on a single node
+(the ``file:`` fast paths below keep the same semantics).
 
-Whole-directory swap (``swap``; the corpus pipeline's state tables use
-it, and ``recover_swap`` heals a store tier or catalog staged away by
-one):
-
-    1. write the replacement to ``<live>.tmp``  (a normal Spark write)
-    2. rename ``<live>``  → ``<live>.bak``
-    3. rename ``<live>.tmp`` → ``<live>``
-    4. delete ``<live>.bak``
-
-A crash between 2 and 3 leaves no live directory but an intact ``.bak``;
-``recover_swap`` restores it (the reference's analog is the ``.bak``
-rename dance in bin/kenshin-change-schema.py:103-112). On HDFS each
-rename is atomic. On S3-style object stores a rename is a copy, so the
-swap is not transactional — there the store layout maps 1:1 onto a table
-format (Delta/Iceberg) whose commit log provides the same protocol with
-real atomicity; this class is the least-common-denominator fallback.
+Transactions are not built here: the one commit protocol is the
+manifest log (``kenshin_spark.commit``), whose commit point is a record
+written with ``write_text_atomic`` and published with
+``publish_exclusive``; no other module calls either. The
+one directory-level repair left is ``recover_swap``: it restores a
+``<live>.bak`` that an older whole-directory swap (write ``<live>.tmp``,
+rename ``<live>`` to ``<live>.bak``, promote the tmp) left without its
+live directory (the reference's analog is the ``.bak`` rename dance in
+bin/kenshin-change-schema.py:103-112). On S3-style object stores a
+rename is a copy, so moves there are not atomic; the manifest commit
+record is what makes a write visible.
 """
 
 from __future__ import annotations
@@ -270,25 +266,6 @@ class HadoopFS:
         finally:
             out.close()
         self.rename_overwrite(tmp, path)
-
-    # -- the swap commit protocol -----------------------------------------
-
-    def swap(self, live: str, tmp: str) -> None:
-        """Replace ``live`` with ``tmp`` under the ``.bak`` protocol
-        (module docstring). ``tmp`` must exist; ``live`` may not (first
-        write)."""
-        bak = live + ".bak"
-        if self.exists(bak):  # debris from a prior crash after step 3
-            self.delete(bak)
-        had_live = self.exists(live)
-        if had_live and not self.rename(live, bak):
-            raise IOError(f"swap: could not stage {live} -> {bak}")
-        if not self.rename(tmp, live):
-            if had_live:
-                self.rename(bak, live)  # roll back
-            raise IOError(f"swap: could not promote {tmp} -> {live}")
-        if had_live:
-            self.delete(bak)
 
     def copy_tree(self, src: str, dst: str) -> bool:
         """Recursive copy (no delete of source) — the backup primitive.

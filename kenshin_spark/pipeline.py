@@ -664,10 +664,22 @@ class StreamingCorpusIngest:
     - ``index/``   MinHash band rows (doc_id, band, band_key)
     - ``md5/``     exact-dup fingerprints (doc_id, text_md5)
     - ``dead/``    rejected rows with a ``reason`` column
+    - ``clusters/`` near-dup cluster deltas (``track_clusters=True``)
+
+    The tables commit through the engine's one commit protocol, a
+    manifest log rooted at ``root`` (``kenshin_spark.commit``, the
+    same code ``ParquetTieredStore`` runs): each batch's files
+    for every table land in ONE commit that also records the batch id,
+    so the tables become visible together and a replayed batch id is a
+    no-op (Structured Streaming's idempotent-sink contract). Readers
+    plan from the committed file list only.
 
     Pass the ``ingest`` method to ``foreachBatch`` for streaming, or
     call it directly with a batch DataFrame (same code path, like
     ``StreamingIngest.process_batch``)."""
+
+    #: the per-batch-appended state tables, smallest-file-prone first
+    STATE_PARTS = ("md5", "index", "docs", "tokens", "dead", "clusters")
 
     def __init__(
         self,
@@ -680,6 +692,8 @@ class StreamingCorpusIngest:
         maintenance_every: int | None = None,
         maintenance_min_frag: int = 16,
     ):
+        from kenshin_spark.commit import ManifestCommitProtocol
+        from kenshin_spark.fs import HadoopFS
         from kenshin_spark.quality import not_null, predicate
 
         self.spark = spark
@@ -702,83 +716,46 @@ class StreamingCorpusIngest:
         self.maintenance_every = maintenance_every
         self.maintenance_min_frag = maintenance_min_frag
         self._pending_dead: list[DataFrame] = []
-        self._fs_cache = None
+        self.commit = ManifestCommitProtocol(
+            HadoopFS(spark, self.root), self.root
+        )
+        if self.commit.epoch() == 0:
+            self._refuse_marker_layout()
 
-    @property
-    def _fs(self):
-        from kenshin_spark.fs import HadoopFS
-
-        if getattr(self, "_fs_cache", None) is None:
-            self._fs_cache = HadoopFS(self.spark, self.root)
-        return self._fs_cache
-
-    def _uncommitted(self, part: str) -> list[int]:
-        """Batch ids with a ``batch=`` directory under ``part`` but no
-        commit marker — at most one in practice (batches are serial, so
-        only the crashed-mid-write attempt can be dangling)."""
-        out = []
-        for name in self._fs.list_names(f"{self.root}/{part}"):
-            if not name.startswith("batch="):
-                continue
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if b >= 0 and not self._fs.exists(
-                f"{self.root}/_batches/{b}"
-            ):
-                out.append(b)
-        return out
-
-    def _read(
-        self, part: str, schema: str, keep_batch: bool = False
-    ) -> DataFrame:
-        """Committed rows of a state table. Tables are laid out as one
-        ``batch=<id>`` directory per ingest batch; a batch is visible
-        iff its commit marker exists, so readers can NEVER observe the
-        partial output of a crashed attempt — the marker is a real
-        multi-table transaction commit (all the tables' batch dirs
-        become visible atomically when the one marker appears).
-        ``batch=-1`` holds compacted data and is always committed."""
-        path = f"{self.root}/{part}"
-        names = self._fs.list_names(path)
-        if any(n.endswith(".parquet") for n in names):
-            raise ValueError(
-                f"{path} holds flat pre-batch-layout parquet files; "
-                "run migrate_flat_layout() once before reading"
+    def _refuse_marker_layout(self) -> None:
+        """A root written by the retired batch-marker protocol has
+        ``_batches/`` markers or ``batch=<id>`` table directories but
+        no manifest. Read as a manifest root it would look empty: the
+        next batch would re-admit its documents as new. Refuse it."""
+        fs = self.commit.fs
+        found = [
+            f"{part}/{name}"
+            for part in self.STATE_PARTS
+            for name in fs.list_names(f"{self.root}/{part}")
+            if name.startswith("batch=")
+        ]
+        if fs.exists(f"{self.root}/_batches") or found:
+            raise RuntimeError(
+                f"{self.root} holds a batch-marker corpus layout "
+                f"(_batches/ markers or batch= directories: "
+                f"{found[:3]}) but no _manifest; it cannot be read as "
+                "a manifest root without re-admitting its documents"
             )
-        if not any(n.startswith("batch=") for n in names):
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.parquet(path)
-        orphans = self._uncommitted(part)
-        if orphans:
-            df = df.where(~F.col("batch").isin(orphans))
-        return df if keep_batch else df.drop("batch")
 
-    def migrate_flat_layout(self) -> list[str]:
-        """One-time migration for a root written by the pre-commit-log
-        layout (plain appended parquet files directly under each state
-        table): move the files into an always-committed ``batch=-1``
-        dir. Old per-batch markers stay behind — harmless, and
-        ``prune_markers`` GCs them once past the tail guard. Returns
-        the tables migrated."""
-        done = []
-        for part in self.STATE_PARTS:
-            path = f"{self.root}/{part}"
-            flat = [
-                n for n in self._fs.list_names(path)
-                if n.endswith(".parquet")
-            ]
-            if not flat:
-                continue
-            self._fs.mkdirs(f"{path}/batch=-1")
-            for n in flat:
-                if not self._fs.rename(
-                    f"{path}/{n}", f"{path}/batch=-1/{n}"
-                ):
-                    raise IOError(f"migrate: could not move {path}/{n}")
-            done.append(part)
-        return done
+    def _read(self, part: str, schema: str | None = None) -> DataFrame:
+        """Committed rows of a state table, planned from the manifest's
+        live files — a crashed attempt's staged files and compaction's
+        retired ones are never scanned. ``schema`` shapes the empty
+        frame of a table with no committed files."""
+        from kenshin_spark.store import _explicit_list_planning
+
+        files = [
+            f"{self.root}/{rel}" for rel, _ in self.commit.live_files(part)
+        ]
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        with _explicit_list_planning(self.spark):
+            return self.spark.read.parquet(*files)
 
     def _dead(self, df: DataFrame, reason: str, batch_id: int) -> None:
         n = df.count()
@@ -792,15 +769,10 @@ class StreamingCorpusIngest:
                 )
             )
 
-    #: the per-batch-appended state tables, smallest-file-prone first
-    STATE_PARTS = ("md5", "index", "docs", "tokens", "dead", "clusters")
-
     def _lww_clusters(self, df: DataFrame) -> DataFrame:
-        """Resolve the clusters delta log: the HIGHEST committed batch
-        id holds a node's current assignment (``batch=-1``, the
-        compacted fold, is by construction the oldest)."""
-        from pyspark.sql import Window
-
+        """Resolve the clusters delta log: the HIGHEST batch id holds a
+        node's current assignment (``-1``, the compacted fold, is by
+        construction the oldest)."""
         w = Window.partitionBy("node").orderBy(F.col("batch").desc())
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -813,159 +785,87 @@ class StreamingCorpusIngest:
         (``track_clusters=True``): every doc that ever collided —
         admitted corpus docs AND the rejected near-dups they absorbed —
         labelled by component minimum. The table is an append-only
-        delta log (one ``incremental_component_deltas`` batch dir per
-        ingest batch, same commit markers as the other state tables)
-        resolved last-writer-wins here; per batch only
+        delta log (one ``incremental_component_deltas`` write per ingest
+        batch, stamped with its batch id, in the same commit as the
+        other tables) resolved last-writer-wins here; per batch only
         O(batch + merged clusters' members) rows are written, never the
         full table."""
         return self._lww_clusters(
-            self._read(
-                "clusters", "node long, cluster_id long, batch int",
-                keep_batch=True,
-            )
+            self._read("clusters", "node long, cluster_id long, batch long")
         )
 
     def file_report(self) -> dict[str, int]:
-        """Parquet file count per state table — the ingest-side
-        small-file audit. Every micro-batch appends ~one file per
-        (table × task); after thousands of batches the md5/index scans
-        each ingest performs degrade with file COUNT (per-file open +
-        footer), the same IO-shape problem ``ParquetTieredStore``
-        audits per day partition. Listing goes through the Hadoop FS
-        API, so hdfs:/s3a: roots report like local ones."""
-        out = {}
-        for part in self.STATE_PARTS:
-            path = f"{self.root}/{part}"
-            n = 0
-            for sub in self._fs.list_names(path):
-                if sub.startswith("batch="):
-                    n += sum(
-                        1
-                        for f, _ in self._fs.list_files(f"{path}/{sub}")
-                        if f.endswith(".parquet")
-                    )
-            if n:
-                out[part] = n
-        return out
+        """Live parquet file count per state table, read off the
+        manifest — the ingest-side small-file audit. Every micro-batch
+        adds ~one file per (table × task); after thousands of batches
+        the md5/index scans each ingest performs degrade with file
+        COUNT (per-file open + footer), the same IO-shape problem
+        ``ParquetTieredStore`` audits per day partition."""
+        from collections import Counter
+
+        n = Counter(
+            rel.split("/", 1)[0] for rel, _ in self.commit.live_files()
+        )
+        return {p: n[p] for p in self.STATE_PARTS if n[p]}
 
     def compact(
         self, target_files: int = 1, min_frag: int = 16
     ) -> dict[str, int]:
         """Fold each fragmented state table back to ``target_files``
-        files under the same ``.bak`` swap protocol the tiered store
-        uses (crash between stage and promote → ``recover()``).
-        Contents are unchanged — appends are insert-only, so compaction
-        is a pure rewrite, no log to resolve. A table is only REWRITTEN
-        once genuinely fragmented: ``n_files > max(target_files,
-        min_frag)``. The floor matters because every micro-batch adds at
-        least one file per table, so a bare ``n_files > target_files``
-        re-folds the ENTIRE docs/tokens tables after every single batch
-        — O(corpus) IO per maintenance pass, quadratic over the stream's
-        lifetime. With the floor, each full rewrite amortizes over
-        ``min_frag`` batches of appends. Only COMMITTED rows are folded
-        (an orphan batch dir
-        from a crashed attempt is dropped — its replay rewrites it);
-        the folded output lands in the always-committed ``batch=-1``
-        dir and the per-batch commit markers stay behind as the
-        redelivery guard. Run off the hot path between batches (never
-        concurrently with ``ingest``). Returns the pre-compaction file
-        counts of the tables it rewrote."""
+        files: stage the rewrite invisibly, then ONE manifest commit
+        per table drops its old files and adds the fold, so a crash
+        before that commit leaves the previous snapshot intact and a
+        reader never sees both. Contents are unchanged — appends are
+        insert-only, so compaction is a pure rewrite. A table is only
+        REWRITTEN once genuinely fragmented: ``n_files >
+        max(target_files, min_frag)``. The floor matters because every
+        micro-batch adds at least one file per table, so a bare
+        ``n_files > target_files`` re-folds the ENTIRE docs/tokens
+        tables after every single batch — O(corpus) IO per maintenance
+        pass, quadratic over the stream's lifetime. With the floor, each
+        full rewrite amortizes over ``min_frag`` batches of appends.
+        Retired files stay on disk until ``vacuum``. Run off the hot
+        path between batches (never concurrently with ``ingest``).
+        Returns the pre-compaction file counts of the tables it
+        rewrote."""
         done = {}
         threshold = max(target_files, min_frag)
         for part, n_files in self.file_report().items():
             if n_files <= threshold:
                 continue
-            path = f"{self.root}/{part}"
-            df = self.spark.read.parquet(path)
-            orphans = self._uncommitted(part)
-            if orphans:
-                df = df.where(~F.col("batch").isin(orphans))
-            tmp = path + ".tmp"
+            planned = self.commit.epoch()
+            df = self._read(part)
             if part == "clusters":
                 # fold = LWW-resolve FIRST: collapsing delta batches
-                # into batch=-1 erases the version order the log
-                # depends on, so only the resolved row may survive
-                df = self._lww_clusters(df)
-            else:
-                df = df.drop("batch")
-            df.repartition(target_files).write.mode(
-                "overwrite"
-            ).parquet(f"{tmp}/batch=-1")
-            self._fs.swap(path, tmp)
+                # into one erases the version order the log depends
+                # on, so only the resolved row may survive
+                df = self._lww_clusters(df).withColumn(
+                    "batch", F.lit(-1).cast("long")
+                )
+            adds = self.commit.adopt(
+                df.repartition(target_files),
+                f"{self.root}/{part}",
+                partitioned=False,
+            )
+            with self.commit.txn(read_seq=planned, op="compact") as tx:
+                tx.replace(part, adds)
             done[part] = n_files
         return done
 
-    def recover(self) -> list[str]:
-        """Restore any state table whose compaction swap died between
-        stage and promote (live dir missing, ``.bak`` present)."""
-        restored = []
-        for part in self.STATE_PARTS:
-            path = f"{self.root}/{part}"
-            if self._fs.recover_swap(path):
-                restored.append(path)
-        return restored
-
-    def prune_markers(self, keep_last: int = 64) -> int:
-        """GC commit markers whose batch dirs ``compact()`` already
-        folded away. Markers are one file per batch — at one micro-batch
-        per second that's 86k files/day in ``_batches/``, the same
-        unbounded-small-file shape the state tables themselves are
-        compacted for. A marker is ONLY prunable when (a) no state table
-        still has its ``batch=<id>`` dir (the marker is that dir's
-        visibility bit — deleting it early would orphan committed data)
-        and (b) it is older than the newest ``keep_last`` markers (a
-        foreachBatch redelivery can only replay the latest unfinished
-        batch, so a deep tail guard is ample; a redelivery of a pruned
-        batch would merely re-dedup it against folded state — no
-        corruption, just dead-letter noise). Returns markers deleted."""
-        live: set[int] = set()
-        for part in self.STATE_PARTS:
-            # a crashed compaction swap stages the live dir as .bak —
-            # its batch dirs are still committed data (recover() will
-            # restore them), so their markers must survive the GC
-            for d in (f"{self.root}/{part}", f"{self.root}/{part}.bak"):
-                for name in self._fs.list_names(d):
-                    if name.startswith("batch="):
-                        try:
-                            live.add(int(name.split("=", 1)[1]))
-                        except ValueError:
-                            pass
-        ids = []
-        for name in self._fs.list_names(f"{self.root}/_batches"):
-            try:
-                ids.append(int(name))
-            except ValueError:
-                continue  # .tmp debris from write_text_atomic
-        ids.sort()
-        keep_floor = ids[-keep_last] if len(ids) > keep_last else None
-        pruned = 0
-        for b in ids:
-            if keep_floor is None or b >= keep_floor or b in live:
-                continue
-            if self._fs.delete(f"{self.root}/_batches/{b}"):
-                pruned += 1
-        return pruned
-
     def maintenance(
-        self,
-        target_files: int = 1,
-        keep_last_markers: int = 64,
-        min_frag: int = 16,
+        self, target_files: int = 1, min_frag: int = 16
     ) -> dict:
         """The off-hot-path maintenance pass as one call, mirroring
-        ``StreamingIngest.maintenance``: heal any crashed compaction
-        swap, fold fragmented state tables, then GC folded commit
-        markers. Run between batches (from a scheduler / foreachBatch
-        ``batch_id % k == 0`` hook), never concurrently with
-        ``ingest``."""
-        restored = self.recover()
+        ``StreamingIngest.maintenance``: fold fragmented state tables,
+        then ``vacuum`` the files retired longer than the store's
+        default grace ago and any crash-stranded staged files. Run
+        between batches (from a scheduler / foreachBatch ``batch_id % k
+        == 0`` hook), never concurrently with ``ingest``."""
         compacted = self.compact(target_files, min_frag=min_frag)
-        pruned = self.prune_markers(keep_last_markers)
-        return {
-            "recovered": restored,
-            "compacted": compacted,
-            "markers_pruned": pruned,
-        }
+        removed = self.commit.vacuum(
+            [f"{self.root}/{part}" for part in self.STATE_PARTS]
+        )
+        return {"compacted": compacted, "vacuumed": len(removed)}
 
     def ingest(self, batch: DataFrame, batch_id: int) -> None:
         from kenshin_spark.bpe import tokenize
@@ -975,23 +875,13 @@ class StreamingCorpusIngest:
         )
 
         # foreachBatch replays a batch after failures with the SAME id.
-        # Each table writes its batch output into its own
-        # ``batch=<id>`` directory (mode=overwrite — a replay rewrites
-        # the crashed attempt's partial dir instead of double-
-        # appending), and the single commit marker written LAST is the
-        # transaction: readers (_read) only see batch dirs whose marker
-        # exists, so the five tables become visible atomically and a
-        # crash between writes leaves orphan dirs that are invisible,
-        # overwritten on replay, and at most one deep (batches are
-        # serial). This is a plain-parquet commit log — the same
-        # contract a table format provides, minus compaction history.
-        # Markers and listings go through the Hadoop FS API so the
-        # protocol holds on hdfs:/s3a: roots (object-store rename
-        # caveats in fs.py apply to compact(), not this append path).
-        marker_dir = f"{self.root}/_batches"
-        self._fs.mkdirs(marker_dir)
-        marker = f"{marker_dir}/{batch_id}"
-        if self._fs.exists(marker):
+        # The commit below records the batch id with the batch's files
+        # (Delta's SetTransaction), so a batch id at or below the
+        # committed one has already landed: skip it. A crashed attempt
+        # left only staged files no manifest references — invisible to
+        # every reader, reclaimed by vacuum.
+        last = self.commit.committed_batch()
+        if last is not None and batch_id <= last:
             return
         self._pending_dead = []
         # keep the persisted handles: `batch`/`fresh` are rebound by the
@@ -1049,7 +939,7 @@ class StreamingCorpusIngest:
                     # O(batch + merged clusters), never the full table).
                     # Checkpoint both: pairs is read twice (here + the
                     # reject filter), and the delta's lineage reads the
-                    # clusters/ dir this batch is about to extend.
+                    # clusters/ table this batch is about to extend.
                     # The resolved assignment is referenced three times
                     # by the fold — persist so the LWW window over the
                     # log runs once, not per reference.
@@ -1079,55 +969,50 @@ class StreamingCorpusIngest:
                 )
                 fresh = fresh.join(near_ids, "doc_id", "left_anti")
             # the admitted set's lineage READS docs/ and index/ — the
-            # same paths the writes below extend. The commit protocol
-            # already hides the new (uncommitted) batch dirs from
-            # re-evaluation, but truncate anyway so the plan doesn't
-            # re-run the whole dedup chain per write.
+            # tables the writes below extend. The manifest already pins
+            # those reads to the committed files, but truncate anyway
+            # so the plan doesn't re-run the whole dedup chain per write.
             fresh = pin(fresh, eager=True)
 
-            # 4. write this batch's output — one batch dir per table,
-            # dead rows included — then commit with the single marker
-            def bdir(part: str) -> str:
-                return f"{self.root}/{part}/batch={batch_id}"
+            # 4. stage this batch's output for every table, dead rows
+            # included, then commit them all with the batch id at once
+            adds: list[tuple[str, int]] = []
 
-            written = set()
+            def stage(part: str, df: DataFrame) -> None:
+                adds.extend(self.commit.adopt(
+                    df, f"{self.root}/{part}", partitioned=False
+                ))
+
             if self._pending_dead:
                 dead = self._pending_dead[0]
                 for extra in self._pending_dead[1:]:
                     dead = dead.unionByName(extra)
-                dead.write.mode("overwrite").parquet(bdir("dead"))
-                written.add("dead")
+                stage("dead", dead)
             if cl_delta is not None and not cl_delta.isEmpty():
-                cl_delta.write.mode("overwrite").parquet(bdir("clusters"))
-                written.add("clusters")
+                stage("clusters", cl_delta.withColumn(
+                    "batch", F.lit(batch_id).cast("long")
+                ))
 
             n_admit = fresh.count()
             if n_admit > 0:
                 self.stats["admitted"] += n_admit
-                fresh.write.mode("overwrite").parquet(bdir("docs"))
-                tokenize(fresh, self.merges).write.mode(
-                    "overwrite"
-                ).parquet(bdir("tokens"))
-                fresh.select(
+                stage("docs", fresh)
+                stage("tokens", tokenize(fresh, self.merges))
+                stage("md5", fresh.select(
                     "doc_id", F.md5("text").alias("text_md5")
-                ).write.mode("overwrite").parquet(bdir("md5"))
-                minhash_band_index(fresh).write.mode(
-                    "overwrite"
-                ).parquet(bdir("index"))
-                written |= {"docs", "tokens", "md5", "index"}
-            # the marker commits EVERY batch=<id> dir — including any a
-            # crashed attempt left in a table this attempt produced no
-            # rows for (a config change between attempts can shrink the
-            # output). Scrub the unwritten tables' dirs so the marker
-            # can't adopt stale state.
-            for part in self.STATE_PARTS:
-                if part not in written:
-                    self._fs.delete(bdir(part))
-            self._fs.write_text_atomic(marker, "committed")
+                ))
+                stage("index", minhash_band_index(fresh))
+            # one commit for every table; a batch with no output still
+            # commits its id, so its replay is a no-op too
+            with self.commit.txn(op="ingest") as tx:
+                tx.batch_id = batch_id
+                for rel, size in adds:
+                    tx.add(rel, size)
             # auto-maintenance: foreachBatch is serial, so right after
             # the commit IS "between batches" — the cadence the
             # docstrings tell operators to cron. Crash-safe: the batch
-            # is already committed, and maintenance itself recovers.
+            # is already committed, and a crashed compaction commits
+            # nothing.
             if (
                 self.maintenance_every
                 and batch_id >= 0

@@ -224,7 +224,7 @@ def store_serving_fns(store, reader=None) -> tuple[
     Callable[[list[str], int, int, int], list[tuple]],
 ]:
     """``(lookup, fetch_fn)`` over a ``ParquetTieredStore`` for the two
-    servers, each run through ``consistent_read`` — a scan planned from
+    servers, each one plain call — a scan planned from
     the committed manifest, so a response is never a torn read against
     a concurrent compaction/expiry commit (reference analog: cache
     queries answered mid-writeForever flush,
@@ -254,7 +254,7 @@ def store_serving_fns(store, reader=None) -> tuple[
     def _pooled(fn):
         sc.setLocalProperty("spark.scheduler.pool", SERVING_POOL)
         try:
-            return reader.consistent_read(fn)
+            return fn()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
 
@@ -315,7 +315,7 @@ def store_render_fn(
 
         sc.setLocalProperty("spark.scheduler.pool", SERVING_POOL)
         try:
-            return reader.consistent_read(_go)
+            return _go()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
 

@@ -17,7 +17,7 @@ Spark-native equivalent, designed for 100 TB:
   identical, only the writer call changes.
 - **Upsert** (the ring overwrite, kenshin/storage.py:468-480): merge the
   batch with the *touched day partitions only* under last-write-wins,
-  then dynamic-partition-overwrite exactly those days. Untouched
+  then replace exactly those days' files in one manifest commit. Untouched
   partitions are never read or rewritten — the 100 TB analog of the
   reference's "one sequential write per file" (README.md:63-66).
 - **Retention expiry** (the ring's self-overwrite, SURVEY O4): drop whole
@@ -39,11 +39,7 @@ from pyspark.sql import types as T
 import threading
 from contextlib import contextmanager
 
-from kenshin_spark.commit import (
-    ManifestCommitProtocol,
-    ManifestConflict,
-    ManifestTxn,
-)
+from kenshin_spark.commit import ManifestCommitProtocol, ManifestConflict
 from kenshin_spark.config import AGG_SQL, Schema
 from kenshin_spark.fs import HadoopFS
 from kenshin_spark.operators.align import align_ts
@@ -119,9 +115,10 @@ def _unlogged_files(fs: HadoopFS, root: str, n_tiers: int):
     """``(path, size)`` of every plain ``part-*`` parquet file in the
     catalog and the tiers' ``day=`` partitions — what a listing-planned
     writer (or a bare ``df.write.parquet``) leaves behind. Files
-    ``_adopt`` moved into the tree carry its ``<tag>-`` prefix instead,
-    so a root whose first write crashed before committing never counts:
-    its adopted files stay invisible until ``vacuum`` reclaims them."""
+    ``commit.adopt`` moved into the tree carry its ``<tag>-`` prefix
+    instead, so a root whose first write crashed before committing
+    never counts: its adopted files stay invisible until ``vacuum``
+    reclaims them."""
     dirs = [os.path.join(root, "_catalog")]
     for i in range(n_tiers):
         tier = os.path.join(root, f"tier={i}")
@@ -192,9 +189,6 @@ class ParquetTieredStore:
         #: all non-Spark filesystem ops go through the Hadoop FS API so
         #: the store behaves identically on file:/hdfs:/object stores
         self.fs = HadoopFS(spark, root)
-        # dynamic mode: .partitionBy().mode("overwrite") rewrites only the
-        # partitions present in the written frame — the MERGE primitive here
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         #: the commit protocol (kenshin_spark.commit): readers plan from
         #: the committed file list, writers stage invisibly and publish
         #: one commit record per transaction
@@ -232,7 +226,7 @@ class ParquetTieredStore:
                 for path, size in _unlogged_files(
                     st.fs, root, len(schema.archives)
                 ):
-                    tx.add(st._rel(path), size)
+                    tx.add(st.commit.rel(path), size)
         elif not artefacts:
             raise RuntimeError(
                 f"migrate: manifest already exists at {root} (epoch "
@@ -245,15 +239,6 @@ class ParquetTieredStore:
             for path in artefacts:
                 st.fs.delete(path)
         return cls(spark, schema, root, mode=mode)
-
-    def consistent_read(self, fn):
-        """Run driver-side read ``fn`` — the seam every serving lookup
-        goes through (serving.store_serving_fns), the analog of the
-        reference daemon answering cache queries while writeForever
-        flushes (rurouni/protocols.py:65-84). Scans plan from an
-        immutable committed snapshot, so one plain call is never a
-        torn view of a concurrent commit."""
-        return fn()
 
     # -- paths ------------------------------------------------------------
 
@@ -268,11 +253,6 @@ class ParquetTieredStore:
 
     # -- manifest plumbing -------------------------------------------------
 
-    def _rel(self, path: str) -> str:
-        """``path`` relative to the store root — the manifest's key
-        space (so a backed-up/restored store's manifest stays valid)."""
-        return os.path.relpath(path, self.root)
-
     def _plan_abs(
         self,
         path: str,
@@ -282,7 +262,7 @@ class ParquetTieredStore:
         """The committed live files under ``path`` as absolute paths.
         ``version`` pins a historical manifest seq (time travel);
         ``days`` keeps only those ``day=`` partitions."""
-        files = self.commit.live_files(self._rel(path), seq=version)
+        files = self.commit.live_files(self.commit.rel(path), seq=version)
         if days is not None:
             keep = {f"day={d}" for d in days}
             files = [(r, sz) for r, sz in files if r.split("/")[1] in keep]
@@ -316,49 +296,6 @@ class ParquetTieredStore:
                 f"({gone[0]} was reclaimed)"
             )
 
-    def _adopt(
-        self, df: DataFrame, dest_path: str, partitioned: bool = True
-    ) -> list[tuple[str, int]]:
-        """The write primitive: write ``df`` to a private
-        ``_stage/<tag>`` directory (underscore-prefixed — invisible to
-        partition discovery), then MOVE the data files into the live
-        tree under tag-unique names. Readers plan from the committed
-        manifest, so adopted files stay invisible until the caller's
-        transaction flips the pointer; a crash at any point strands only
-        invisible files for ``vacuum`` to reclaim. Returns
-        ``(rel_path, size)`` pairs for the transaction."""
-        import uuid
-
-        tag = uuid.uuid4().hex[:12]
-        stage = os.path.join(self.root, "_stage", tag)
-        writer = df.write.mode("overwrite")
-        if partitioned:
-            writer = writer.partitionBy("day")
-        writer.parquet(stage)
-        adopted: list[tuple[str, int]] = []
-
-        def _move(src_dir: str, dst_dir: str) -> None:
-            self.fs.mkdirs(dst_dir)
-            for fname, size in self.fs.list_files(src_dir):
-                if not fname.endswith(".parquet"):
-                    continue
-                dst = os.path.join(dst_dir, f"{tag}-{fname}")
-                if not self.fs.rename(os.path.join(src_dir, fname), dst):
-                    raise IOError(f"adopt: could not move {fname} -> {dst}")
-                adopted.append((self._rel(dst), size))
-
-        if partitioned:
-            for dname in self.fs.list_names(stage):
-                if dname.startswith("day="):
-                    _move(
-                        os.path.join(stage, dname),
-                        os.path.join(dest_path, dname),
-                    )
-        else:
-            _move(stage, dest_path)
-        self.fs.delete(stage)
-        return adopted
-
     def restore(self, version: int) -> int:
         """Roll the live file set back to manifest seq ``version`` —
         Delta's RESTORE TABLE: ONE forward commit (op=``restore``) that
@@ -383,125 +320,21 @@ class ParquetTieredStore:
                     tx.add(rel, sz)
         return self.commit.epoch()
 
-    def vacuum(self, grace_s: float = 3600.0, now: float | None = None) -> list[str]:
-        """Physically reclaim files no committed manifest references —
-        superseded rewrites, logically-expired partitions, crash-stranded
-        stage debris — that are older than ``grace_s`` (the VACUUM
-        retention contract: a scan must finish within the grace window
-        of the snapshot it planned, exactly like Delta's
-        ``VACUUM ... RETAIN`` / Iceberg's ``expire_snapshots``). Also
-        trims superseded manifest generations past the grace window.
-        Returns the paths removed."""
-        import time as _time
-
-        cutoff = (now if now is not None else _time.time()) - grace_s
-        live = {rel for rel, _ in self.commit.live_files("")}
-        tombs = self.commit.tombstones()
-        removed: list[str] = []
-
-        # 1) tombstoned files age by their RETIREMENT stamp recorded in
-        # the manifest (Delta's RemoveFile.deletionTimestamp), never by
-        # file mtime: compact/expire/delete retire files that may have
-        # been written long before, and a reader that planned from the
-        # pre-retirement snapshot gets the full grace window to finish
-        # (ADVICE r10). Reclaimed tombstones are then dropped from the
-        # manifest in one transaction so the log doesn't grow forever.
-        reclaimed: list[str] = []
-        for rel, retired_at in sorted(tombs.items()):
-            if retired_at >= cutoff:
-                continue
-            path = os.path.join(self.root, rel)
-            if self.fs.exists(path):
-                self.fs.delete(path)
-            removed.append(rel)
-            reclaimed.append(rel)
-        if reclaimed:
-            tx_ = ManifestTxn(op="vacuum")
-            for rel in reclaimed:
-                tx_.clear_tombstone(rel)
-            self.commit.commit_txn(tx_)
-
-        # 2) untracked debris — files neither live nor tombstoned
-        # (crash-stranded adopts that never committed, or retirements
-        # from a pre-tombstone manifest) — has no recorded retirement
-        # time, so the file mtime gate is the only signal available
-        def _sweep_dir(d: str) -> None:
-            for fname, _sz, mtime in self.fs.list_file_status(d):
-                rel = self._rel(os.path.join(d, fname))
-                if rel not in live and rel not in tombs and mtime < cutoff:
-                    self.fs.delete(os.path.join(d, fname))
-                    removed.append(rel)
-
-        roots = [self.tier_path(i) for i in range(len(self.schema.archives))]
-        roots.append(self.catalog_path)
-        for r in roots:
-            for dname in self.fs.list_names(r):
-                sub = os.path.join(r, dname)
-                if dname.startswith("day="):
-                    _sweep_dir(sub)
-                    if not self.fs.list_names(sub):  # now-empty partition
-                        self.fs.delete(sub)
-            _sweep_dir(r)
-        stage_root = os.path.join(self.root, "_stage")
-        for dname in self.fs.list_names(stage_root):
-            sub = os.path.join(stage_root, dname)
-            # a crashed staged write may be partitioned (day= children)
-            statuses = list(self.fs.list_file_status(sub))
-            for child in self.fs.list_names(sub):
-                statuses += self.fs.list_file_status(os.path.join(sub, child))
-            if statuses and all(m < cutoff for _, _, m in statuses):
-                self.fs.delete(sub)
-                removed.append(self._rel(sub))
-        # manifest-log trim: the reconstruction chain for the LATEST
-        # commit is (anchor checkpoint ≤ latest) + the deltas between —
-        # everything strictly older than the anchor is reclaimable
-        # (same retention contract as the data files; time travel
-        # below the anchor ends where Delta's VACUUM ends it)
-        latest = self.commit.epoch()
-        statuses = list(
-            self.fs.list_file_status(os.path.join(self.root, "_manifest"))
+    def vacuum(
+        self,
+        grace_s: float = ManifestCommitProtocol.GRACE_S,
+        now: float | None = None,
+    ) -> list[str]:
+        """Physically reclaim the files no committed manifest references
+        once ``grace_s`` past their retirement, plus stranded stage
+        debris and superseded log records — ``commit.vacuum`` over the
+        tiers and the catalog. Returns the paths removed."""
+        return self.commit.vacuum(
+            [self.tier_path(i) for i in range(len(self.schema.archives))]
+            + [self.catalog_path],
+            grace_s,
+            now,
         )
-
-        def _seq_of(fname: str) -> tuple[int, bool] | None:
-            if fname.endswith(".d.json"):
-                try:
-                    return int(fname[: -len(".d.json")]), False
-                except ValueError:
-                    return None
-            if fname.endswith(".json"):
-                try:
-                    return int(fname[: -len(".json")]), True
-                except ValueError:
-                    return None
-            return None
-
-        anchor = 0
-        for fname, _sz, _m in statuses:
-            parsed = _seq_of(fname)
-            if parsed and parsed[1] and anchor < parsed[0] <= latest:
-                anchor = parsed[0]
-        if anchor == 0:
-            anchor = latest  # no checkpoint found: trim nothing extra
-        for fname, _sz, mtime in statuses:
-            if fname.endswith(".tmp"):
-                # a writer's staged commit record that lost its CAS
-                # race mid-crash — reclaim once safely old
-                if mtime < cutoff:
-                    self.fs.delete(
-                        os.path.join(self.root, "_manifest", fname)
-                    )
-                    removed.append(
-                        self._rel(os.path.join("_manifest", fname))
-                    )
-                continue
-            parsed = _seq_of(fname)
-            if parsed is None:
-                continue
-            seq, _full = parsed
-            if seq < anchor and mtime < cutoff:
-                self.fs.delete(os.path.join(self.root, "_manifest", fname))
-                removed.append(self._rel(os.path.join("_manifest", fname)))
-        return removed
 
     # -- read -------------------------------------------------------------
 
@@ -519,7 +352,7 @@ class ParquetTieredStore:
         """True when the tier has no live data files — the committed
         file list is the truth (the directory may hold retired files
         awaiting vacuum)."""
-        return not self.commit.live_files(self._rel(path), seq=version)
+        return not self.commit.live_files(self.commit.rel(path), seq=version)
 
     def _tier_schema(self) -> T.StructType:
         """The physical schema of every tier, known a priori from the
@@ -668,7 +501,7 @@ class ParquetTieredStore:
         for _attempt in range(64):
             seq = self.commit.epoch() + 1
             stamped = out.withColumn("_seq", F.lit(seq))
-            adds = self._adopt(
+            adds = self.commit.adopt(
                 stamped.sortWithinPartitions("day", "metric", "ts"),
                 self.tier_path(i),
             )
@@ -696,7 +529,7 @@ class ParquetTieredStore:
         # stage + adopt invisibly, then one atomic pointer flip that
         # retires the whole old tier — readers mid-scan keep their
         # snapshot's files (vacuum reclaims them after the grace)
-        adds = self._adopt(out, self.tier_path(i))
+        adds = self.commit.adopt(out, self.tier_path(i))
         with self.commit.txn(op="overwrite") as tx:
             tx.replace(f"tier={i}", adds)
 
@@ -727,7 +560,7 @@ class ParquetTieredStore:
             self._commit_stamped(i, new, "upsert")
             return
         if self._tier_empty(path):
-            adds = self._adopt(
+            adds = self.commit.adopt(
                 new.sortWithinPartitions("day", "metric", "ts"), path
             )
             with self.commit.txn(op="upsert") as tx:
@@ -759,7 +592,7 @@ class ParquetTieredStore:
         # the touched days' old files and commits the rewrites; readers
         # never see a half-merged partition and nothing is deleted
         # in-commit
-        adds = self._adopt(
+        adds = self.commit.adopt(
             merged.sortWithinPartitions("day", "metric", "ts"), path
         )
         # the drops below retire ONLY the supplied days: a rewrite file
@@ -1152,7 +985,7 @@ class ParquetTieredStore:
         # day first: the partitioned writer's required ordering is a day
         # prefix — satisfying it keeps the writer from inserting its own
         # (unstable) re-sort that would undo (metric, ts)
-        adds = self._adopt(
+        adds = self.commit.adopt(
             shaped.sortWithinPartitions("day", "metric", "ts"), path
         )
         with self.commit.txn(read_seq=read_seq, op="compact") as tx:
@@ -1194,21 +1027,21 @@ class ParquetTieredStore:
                 kept = self._scan_tier(path).where(
                     ~F.col("metric").isin(metrics)
                 )
-                tx.replace(f"tier={i}", self._adopt(kept, path))
+                tx.replace(f"tier={i}", self.commit.adopt(kept, path))
             if self._has_catalog():
                 kept_cat = self.catalog().where(
                     ~F.col("metric").isin(metrics)
                 )
                 tx.replace(
                     "_catalog",
-                    self._adopt(
+                    self.commit.adopt(
                         kept_cat, self.catalog_path, partitioned=False
                     ),
                 )
 
     def recover(self) -> list[str]:
         """Crash recovery for an interrupted whole-directory ``.bak``
-        swap (``fs.swap``) of a tier or the catalog: restore any
+        swap of a tier or the catalog: restore any
         ``.bak`` whose live directory is missing (reference analog: the
         change-schema .bak dance, bin/kenshin-change-schema.py:103-112).
         The manifest keys are root-relative, so the restored files are
@@ -1245,7 +1078,7 @@ class ParquetTieredStore:
             F.col("schema_name").cast("string"),
             F.col("created_ts").cast("long"),
         )
-        adds = self._adopt(shaped, self.catalog_path, partitioned=False)
+        adds = self.commit.adopt(shaped, self.catalog_path, partitioned=False)
         with self.commit.txn(op="catalog") as tx:
             for rel, size in adds:
                 tx.add(rel, size)

@@ -152,3 +152,24 @@ def test_lineage_pins_go_through_the_session_seam():
         and node.func.attr in ("localCheckpoint", "checkpoint")
     ]
     assert not offenders, f"lineage pins bypassing session.pin: {offenders}"
+
+
+def test_one_commit_protocol():
+    """Every visibility flip in the engine is a manifest commit: outside
+    ``commit.py`` no module publishes a record with the atomic-rename
+    primitives — a second commit protocol (such as per-batch marker
+    files) would have to."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "kenshin_spark"
+    offenders = [
+        f"{py.relative_to(pkg)}:{node.lineno}"
+        for py in sorted(pkg.rglob("*.py"))
+        if str(py.relative_to(pkg)) != "commit.py"
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("write_text_atomic", "publish_exclusive")
+    ]
+    assert not offenders, f"commits bypassing the manifest log: {offenders}"

@@ -1,20 +1,39 @@
 """StreamingCorpusIngest — the LLM-pipeline components composed into one
 incremental job: quality gate → exact dedup → near-dup vs persisted
 index → BPE tokenize → append state. Driven through the real
-Structured Streaming machinery and directly as batches."""
+Structured Streaming machinery and directly as batches. Every read goes
+through the committed manifest view (``_read``), never a directory."""
 
 import json
 import os
+import time
 
 import pytest
 
 from kenshin_spark.bpe import fit
+from kenshin_spark.commit import ManifestCommitProtocol
 from kenshin_spark.pipeline import StreamingCorpusIngest
 
 # heavyweight tier: excluded from the driver's fast default run
 pytestmark = pytest.mark.slow
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
+DOCS = "doc_id long, text string, source string"
+
+
+def _ids(ing, part="docs"):
+    return {r["doc_id"] for r in ing._read(part).collect()}
+
+
+def _last_commit_parts(ing):
+    """State tables the newest commit added files to."""
+    seq = ing.commit.epoch()
+    before = set(ing.commit.snapshot(seq - 1)) if seq > 1 else set()
+    return {
+        rel.split("/", 1)[0]
+        for rel in ing.commit.snapshot(seq)
+        if rel not in before
+    }
 
 
 @pytest.fixture()
@@ -50,13 +69,12 @@ class TestBatchPath:
             "received": 4, "quality_rejected": 1, "exact_dups": 1,
             "near_dups": 0, "admitted": 2,
         }
-        docs = spark.read.parquet(f"{ing.root}/docs")
-        assert {r["doc_id"] for r in docs.collect()} == {1, 2}
-        toks = spark.read.parquet(f"{ing.root}/tokens")
+        assert _ids(ing) == {1, 2}
+        toks = ing._read("tokens")
         assert toks.count() == 2
         assert toks.where("n_tokens <= 0").count() == 0
-        assert spark.read.parquet(f"{ing.root}/index").count() > 0
-        dead = spark.read.parquet(f"{ing.root}/dead")
+        assert ing._read("index").count() > 0
+        dead = ing._read("dead")
         assert {r["reason"] for r in dead.collect()} == {
             "quality_rejected", "exact_dups",
         }
@@ -83,15 +101,9 @@ class TestBatchPath:
         ing.ingest(b2, 1)
         assert ing.stats["exact_dups"] == 1
         assert ing.stats["near_dups"] == 1
-        docs = {r["doc_id"]
-                for r in spark.read.parquet(f"{ing.root}/docs").collect()}
-        assert docs == {1, 12}
+        assert _ids(ing) == {1, 12}
         # the index grew to cover the new admission
-        ix_docs = {
-            r["doc_id"]
-            for r in spark.read.parquet(f"{ing.root}/index").collect()
-        }
-        assert ix_docs == {1, 12}
+        assert _ids(ing, "index") == {1, 12}
 
 
 class TestStreamPath:
@@ -121,38 +133,43 @@ class TestStreamPath:
         q.awaitTermination(120)
         assert ing.stats["admitted"] == 2
         assert ing.stats["exact_dups"] == 1
-        assert spark.read.parquet(f"{ing.root}/tokens").count() == 2
+        assert ing._read("tokens").count() == 2
 
 
 class TestIdempotentReplay:
     def test_same_batch_id_is_a_noop(self, spark, tmp_path, train_docs):
         """foreachBatch re-delivers a batch with the SAME id after a
-        failure — the commit marker must make the replay a no-op
-        instead of appending duplicates."""
+        failure — the batch id committed with its files must make the
+        replay a no-op instead of appending duplicates."""
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(
             spark, str(tmp_path / "corpus"), merges
         )
         b = spark.createDataFrame(
             [(1, BASE, "web"), (2, "other words entirely", "web")],
-            "doc_id long, text string, source string",
+            DOCS,
         )
         ing.ingest(b, 7)
-        n_docs = spark.read.parquet(f"{ing.root}/docs").count()
-        n_ix = spark.read.parquet(f"{ing.root}/index").count()
+        assert ing.commit.committed_batch() == 7
+        epoch = ing.commit.epoch()
+        n_docs = ing._read("docs").count()
+        n_ix = ing._read("index").count()
         ing.ingest(b, 7)  # replay
-        assert spark.read.parquet(f"{ing.root}/docs").count() == n_docs
-        assert spark.read.parquet(f"{ing.root}/index").count() == n_ix
+        ing.ingest(b, 3)  # an older id is already covered too
+        assert ing.commit.epoch() == epoch  # nothing committed
+        assert ing._read("docs").count() == n_docs
+        assert ing._read("index").count() == n_ix
         # a NEW batch id still processes (and dedups against state)
         ing.ingest(b, 8)
-        assert spark.read.parquet(f"{ing.root}/docs").count() == n_docs
+        assert ing.commit.committed_batch() == 8
+        assert ing._read("docs").count() == n_docs
 
-    def test_zero_admit_batch_still_commits_marker(
+    def test_zero_admit_batch_still_commits(
         self, spark, tmp_path, train_docs
     ):
-        """A batch whose every doc is rejected must still write its
-        commit marker — otherwise a foreachBatch redelivery re-appends
-        the dead-letter rows and double-counts stats."""
+        """A batch whose every doc is rejected must still commit its
+        batch id — otherwise a foreachBatch redelivery re-appends the
+        dead-letter rows and double-counts stats."""
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(
             spark, str(tmp_path / "corpus"), merges
@@ -169,12 +186,29 @@ class TestIdempotentReplay:
             "doc_id long, text string, source string",
         )
         ing.ingest(all_dups, 1)  # everything rejected → zero admitted
-        assert os.path.exists(f"{ing.root}/_batches/1")
+        assert ing.commit.committed_batch() == 1
+        assert _last_commit_parts(ing) == {"dead"}
         stats_before = dict(ing.stats)
-        n_dead = spark.read.parquet(f"{ing.root}/dead").count()
+        n_dead = ing._read("dead").count()
         ing.ingest(all_dups, 1)  # redelivery must be a no-op
         assert ing.stats == stats_before
-        assert spark.read.parquet(f"{ing.root}/dead").count() == n_dead
+        assert ing._read("dead").count() == n_dead
+
+    def test_empty_batch_commits_only_its_id(
+        self, spark, tmp_path, train_docs
+    ):
+        """A batch with no rows at all has no files to add; the commit
+        still records its id, so the epoch moves and a redelivery is a
+        no-op."""
+        ing = StreamingCorpusIngest(
+            spark, str(tmp_path / "corpus"), fit(train_docs, n_merges=10)
+        )
+        ing.ingest(spark.createDataFrame([], DOCS), 0)
+        assert ing.commit.epoch() == 1
+        assert ing.commit.committed_batch() == 0
+        assert ing.commit.live_files() == []
+        ing.ingest(spark.createDataFrame([], DOCS), 0)
+        assert ing.commit.epoch() == 1
 
 
 class TestAtomicBatchCommit:
@@ -182,68 +216,86 @@ class TestAtomicBatchCommit:
         self, spark, tmp_path, train_docs
     ):
         """The commit protocol's whole point: a crash between the
-        per-table writes leaves orphan batch dirs that (a) no reader
-        sees — a doc 'written' by the crashed attempt must NOT count
-        as a duplicate — and (b) the foreachBatch replay overwrites
-        in place, ending with exactly-once state."""
-        from kenshin_spark.bpe import fit
-        from pyspark.sql import functions as F
-
+        per-table writes leaves staged files that (a) no reader sees —
+        a doc 'written' by the crashed attempt must NOT count as a
+        duplicate — and (b) the foreachBatch replay commits every table
+        at once, ending with exactly-once state."""
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(
             spark, str(tmp_path / "corpus"), merges
         )
-        ing.ingest(
-            spark.createDataFrame(
-                [(1, BASE, "a")],
-                "doc_id long, text string, source string",
-            ),
-            0,
-        )
-        # simulate batch 1 crashing after the docs write: its batch
-        # dir exists (with rows), but md5/index/marker never landed
+        ing.ingest(spark.createDataFrame([(1, BASE, "a")], DOCS), 0)
+        # simulate batch 1 crashing after the docs write: its file sits
+        # in docs/, but md5/index and the commit never landed
         crashed = spark.createDataFrame(
-            [(10, "totally novel crashed-batch content here", "a")],
-            "doc_id long, text string, source string",
+            [(10, "totally novel crashed-batch content here", "a")], DOCS
         )
-        crashed.write.mode("overwrite").parquet(
-            f"{ing.root}/docs/batch=1"
-        )
-        assert not os.path.exists(f"{ing.root}/_batches/1")
-        # (a) readers don't see the orphan: the committed corpus is
-        # still just doc 1
-        corpus = ing._read(
-            "docs", "doc_id long, text string, source string"
-        )
-        assert {r["doc_id"] for r in corpus.collect()} == {1}
+        ing.commit.adopt(crashed, f"{ing.root}/docs", partitioned=False)
+        assert ing.commit.committed_batch() == 0
+        # (a) readers don't see the staged file: the committed corpus
+        # is still just doc 1
+        assert _ids(ing) == {1}
 
-        # (b) the replay of batch 1 (same id, the real content)
-        # overwrites the orphan dir and commits all tables at once
+        # (b) the replay of batch 1 (same id, the real content) commits
+        # all tables at once; the crashed attempt's file stays invisible
         replay = spark.createDataFrame(
             [
                 (10, "totally novel crashed-batch content here", "a"),
                 (11, BASE, "a"),  # exact dup of committed doc 1
             ],
-            "doc_id long, text string, source string",
+            DOCS,
         )
         ing.ingest(replay, 1)
         assert ing.stats["exact_dups"] == 1   # 11 vs committed state
-        docs = spark.read.parquet(f"{ing.root}/docs")
-        got = sorted(r["doc_id"] for r in docs.collect())
-        assert got == [1, 10]  # exactly once, no orphan duplicates
-        # every table committed the batch atomically
-        for part in ("docs", "tokens", "md5", "index"):
-            assert os.path.isdir(f"{ing.root}/{part}/batch=1"), part
-        assert os.path.exists(f"{ing.root}/_batches/1")
+        got = sorted(r["doc_id"] for r in ing._read("docs").collect())
+        assert got == [1, 10]  # exactly once, no crashed-attempt copy
+        # every table landed in the batch's one commit
+        assert _last_commit_parts(ing) == {
+            "dead", "docs", "tokens", "md5", "index",
+        }
+        assert ing.commit.committed_batch() == 1
 
-    def test_compacted_state_lands_in_batch_minus_one(
+    def test_replay_never_adopts_a_crashed_attempts_files(
         self, spark, tmp_path, train_docs
     ):
-        """compact() folds only committed rows into the always-visible
-        batch=-1 dir; an orphan batch dir is dropped by the fold (its
-        replay will rewrite it)."""
-        from kenshin_spark.bpe import fit
+        """A crashed attempt's file in a table the REPLAY produces no
+        rows for (e.g. the doc is quality-rejected after a config
+        change) must never become visible: the replay's commit names
+        only the files it wrote."""
+        from kenshin_spark.quality import predicate
 
+        merges = fit(train_docs, n_merges=10)
+        ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
+        ing.ingest(spark.createDataFrame([(1000, BASE, "a")], DOCS), 0)
+        # crashed attempt for batch 5 wrote docs rows, then died
+        ing.commit.adopt(
+            spark.createDataFrame(
+                [(66, "stale crashed attempt content", "a")], DOCS
+            ),
+            f"{ing.root}/docs",
+            partitioned=False,
+        )
+        # replay of batch 5 under a stricter gate: rejects everything
+        strict = StreamingCorpusIngest(
+            spark, ing.root, merges,
+            quality_checks=[predicate("false", name="reject_all")],
+        )
+        strict.ingest(
+            spark.createDataFrame(
+                [(66, "stale crashed attempt content", "a")], DOCS
+            ),
+            5,
+        )
+        assert strict.commit.committed_batch() == 5
+        assert _last_commit_parts(strict) == {"dead"}
+        assert _ids(strict) == {1000}  # the stale doc never became visible
+
+    def test_compact_folds_only_committed_rows(
+        self, spark, tmp_path, train_docs
+    ):
+        """compact() folds only committed rows into one file; a crashed
+        attempt's staged file is left out of the fold, and vacuum
+        reclaims it with the retired files once past the grace."""
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
         for i, text in enumerate(
@@ -252,26 +304,48 @@ class TestAtomicBatchCommit:
             ing.ingest(
                 spark.createDataFrame(
                     [(i + 1, text + " padding tokens for quality", "a")],
-                    "doc_id long, text string, source string",
+                    DOCS,
                 ),
                 i,
             )
-        # orphan: crashed attempt for batch 7
-        spark.createDataFrame(
-            [(99, "orphan text", "a")],
-            "doc_id long, text string, source string",
-        ).write.mode("overwrite").parquet(f"{ing.root}/docs/batch=7")
+        # stranded: crashed attempt for batch 7
+        stranded = ing.commit.adopt(
+            spark.createDataFrame([(99, "orphan text", "a")], DOCS),
+            f"{ing.root}/docs",
+            partitioned=False,
+        )
         ing.compact(min_frag=0)
-        docs_dirs = [
-            n for n in os.listdir(f"{ing.root}/docs")
-            if n.startswith("batch=")
-        ]
-        assert docs_dirs == ["batch=-1"]
-        got = {
-            r["doc_id"]
-            for r in spark.read.parquet(f"{ing.root}/docs").collect()
-        }
-        assert got == {1, 2}  # orphan 99 dropped by the fold
+        assert len(ing.commit.live_files("docs")) == 1
+        assert _ids(ing) == {1, 2}  # orphan 99 left out of the fold
+        # retired and stranded files stay on disk until vacuum
+        assert os.path.exists(f"{ing.root}/{stranded[0][0]}")
+        removed = ing.commit.vacuum(
+            [f"{ing.root}/docs"], grace_s=0.0, now=time.time() + 10
+        )
+        assert stranded[0][0] in removed
+        assert not os.path.exists(f"{ing.root}/{stranded[0][0]}")
+        assert _ids(ing) == {1, 2}
+
+
+class TestLegacyMarkerRoot:
+    @pytest.mark.parametrize("layout", ["markers", "batch_dirs"])
+    def test_marker_layout_root_is_refused(
+        self, spark, tmp_path, train_docs, layout
+    ):
+        """A root written by the retired marker protocol has no
+        manifest: read as one it would look empty, and the next batch
+        would re-admit every document. Opening it must raise, naming
+        the condition."""
+        root = tmp_path / "legacy"
+        if layout == "markers":
+            (root / "_batches").mkdir(parents=True)
+            (root / "_batches" / "0").write_text("committed")
+        else:
+            spark.createDataFrame([(1, BASE, "a")], DOCS).write.parquet(
+                str(root / "docs" / "batch=0")
+            )
+        with pytest.raises(RuntimeError, match="batch-marker corpus layout"):
+            StreamingCorpusIngest(spark, str(root), merges=[])
 
 
 class TestClusterState:
@@ -320,8 +394,12 @@ class TestClusterState:
         got = {(r["node"], r["cluster_id"])
                for r in ing.clusters().collect()}
         assert got == {(1, 1), (11, 1), (12, 1)}
-        # the delta log is append-only: batch 2 wrote only its delta
-        assert os.path.isdir(f"{ing.root}/clusters/batch=2")
+        # the delta log is append-only: batch 2 appended its delta
+        # in the batch's one commit, stamped with its batch id
+        assert "clusters" in _last_commit_parts(ing)
+        assert {
+            r["batch"] for r in ing._read("clusters").collect()
+        } == {1, 2}
 
     def test_cluster_log_survives_compaction(
         self, spark, tmp_path, train_docs
@@ -352,10 +430,10 @@ class TestClusterState:
                   for r in ing.clusters().collect()}
         assert before == {(5, 5), (7, 5), (9, 5)}
         ing.maintenance(min_frag=0)  # ≥2 delta files -> the log gets folded
-        assert sorted(
-            n for n in os.listdir(f"{ing.root}/clusters")
-            if n.startswith("batch=")
-        ) == ["batch=-1"]
+        assert len(ing.commit.live_files("clusters")) == 1
+        assert {
+            r["batch"] for r in ing._read("clusters").collect()
+        } == {-1}
         after = {(r["node"], r["cluster_id"])
                  for r in ing.clusters().collect()}
         assert after == before
@@ -392,10 +470,11 @@ class TestClusterState:
             1,
         )
         assert ing.stats["near_dups"] == 1
+        assert ing.commit.live_files("clusters") == []
         assert not os.path.exists(f"{ing.root}/clusters")
 
 
-class TestMarkerPrune:
+class TestMaintenance:
     #: one per batch — mutually dissimilar so near-dup never fires
     BODIES = [
         "alpha beta gamma delta epsilon zeta eta theta iota kappa",
@@ -409,135 +488,10 @@ class TestMarkerPrune:
             ing.ingest(
                 spark.createDataFrame(
                     [(1000 + start + i, self.BODIES[start + i], "a")],
-                    "doc_id long, text string, source string",
+                    DOCS,
                 ),
                 start + i,
             )
-
-    def test_markers_survive_until_their_dirs_are_folded(
-        self, spark, tmp_path, train_docs
-    ):
-        """A marker is a batch dir's visibility bit: prune_markers must
-        never touch one whose batch= dir still exists in any table, no
-        matter how old — only compaction makes markers prunable, and
-        keep_last holds back the newest tail as the redelivery guard."""
-        merges = fit(train_docs, n_merges=10)
-        ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
-        self._ingest_n(spark, ing, 4)
-        # dirs all live -> nothing prunable even with a tiny tail
-        assert ing.prune_markers(keep_last=1) == 0
-        assert sorted(os.listdir(f"{ing.root}/_batches")) == [
-            "0", "1", "2", "3"
-        ]
-        ing.compact(min_frag=0)  # folds every batch dir into batch=-1
-        assert ing.prune_markers(keep_last=2) == 2  # 0 and 1 go
-        assert sorted(os.listdir(f"{ing.root}/_batches")) == ["2", "3"]
-        # state is intact and dedup still sees the folded corpus
-        ing.ingest(
-            spark.createDataFrame(
-                [(9, self.BODIES[0], "a")],
-                "doc_id long, text string, source string",
-            ),
-            10,
-        )
-        assert ing.stats["exact_dups"] == 1
-
-    def test_bak_staged_dirs_keep_their_markers(
-        self, spark, tmp_path, train_docs
-    ):
-        """A compaction swap that crashed between stage and promote
-        leaves the committed batch dirs under <part>.bak; their markers
-        are still the visibility bits recover() depends on, so a
-        direct prune_markers call must not GC them."""
-        merges = fit(train_docs, n_merges=10)
-        ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
-        self._ingest_n(spark, ing, 3)
-        # simulate the crash: live dir staged away, not yet replaced
-        os.rename(f"{ing.root}/docs", f"{ing.root}/docs.bak")
-        assert ing.prune_markers(keep_last=1) == 0
-        assert ing.recover() == [f"{ing.root}/docs"]
-        got = {
-            r["doc_id"] for r in ing._read(
-                "docs", "doc_id long, text string, source string"
-            ).collect()
-        }
-        assert got == {1000, 1001, 1002}
-
-    def test_marker_does_not_adopt_stale_orphan_dirs(
-        self, spark, tmp_path, train_docs
-    ):
-        """A crashed attempt's batch dir in a table the REPLAY produces
-        no rows for (e.g. the doc is quality-rejected after a config
-        change) must be scrubbed before the marker lands — otherwise
-        the marker would commit the stale rows."""
-        from kenshin_spark.quality import predicate
-
-        merges = fit(train_docs, n_merges=10)
-        ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
-        self._ingest_n(spark, ing, 1)
-        # crashed attempt for batch 5 wrote docs rows, then died
-        spark.createDataFrame(
-            [(66, "stale crashed attempt content", "a")],
-            "doc_id long, text string, source string",
-        ).write.mode("overwrite").parquet(f"{ing.root}/docs/batch=5")
-        # replay of batch 5 under a stricter gate: rejects everything
-        strict = StreamingCorpusIngest(
-            spark, ing.root, merges,
-            quality_checks=[predicate("false", name="reject_all")],
-        )
-        strict.ingest(
-            spark.createDataFrame(
-                [(66, "stale crashed attempt content", "a")],
-                "doc_id long, text string, source string",
-            ),
-            5,
-        )
-        assert os.path.exists(f"{ing.root}/_batches/5")
-        assert not os.path.exists(f"{ing.root}/docs/batch=5")
-        got = {
-            r["doc_id"] for r in strict._read(
-                "docs", "doc_id long, text string, source string"
-            ).collect()
-        }
-        assert got == {1000}  # the stale doc never became visible
-
-    def test_flat_layout_migration(self, spark, tmp_path, train_docs):
-        """A pre-commit-log root (flat appended parquet under each
-        table) must fail loudly on read and migrate losslessly into
-        batch=-1."""
-        import hashlib
-
-        merges = fit(train_docs, n_merges=10)
-        ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
-        os.makedirs(f"{ing.root}/docs")
-        os.makedirs(f"{ing.root}/md5")
-        spark.createDataFrame(
-            [(1, BASE, "a")], "doc_id long, text string, source string"
-        ).toPandas().to_parquet(
-            f"{ing.root}/docs/part-0000.parquet", index=False
-        )
-        spark.createDataFrame(
-            [(1, hashlib.md5(BASE.encode()).hexdigest())],
-            "doc_id long, text_md5 string",
-        ).toPandas().to_parquet(
-            f"{ing.root}/md5/part-0000.parquet", index=False
-        )
-        with pytest.raises(ValueError, match="flat pre-batch-layout"):
-            ing._read("docs", "doc_id long, text string, source string")
-        assert ing.migrate_flat_layout() == ["md5", "docs"]
-        got = ing._read(
-            "docs", "doc_id long, text string, source string"
-        )
-        assert {r["doc_id"] for r in got.collect()} == {1}
-        # migrated state dedups: an exact dup of the legacy doc dies
-        ing.ingest(
-            spark.createDataFrame(
-                [(2, BASE, "a")],
-                "doc_id long, text string, source string",
-            ),
-            0,
-        )
-        assert ing.stats["exact_dups"] == 1
 
     def test_auto_maintenance_cadence(self, spark, tmp_path, train_docs):
         """maintenance_every=2 runs the pass after batches 1 and 3 —
@@ -548,18 +502,10 @@ class TestMarkerPrune:
             maintenance_min_frag=0,
         )
         self._ingest_n(spark, ing, 4)
-        docs_dirs = sorted(
-            n for n in os.listdir(f"{ing.root}/docs")
-            if n.startswith("batch=")
-        )
         # batches 0-3 folded after batch 3's commit (and 0-1 after 1's)
-        assert docs_dirs == ["batch=-1"]
-        got = {
-            r["doc_id"] for r in ing._read(
-                "docs", "doc_id long, text string, source string"
-            ).collect()
-        }
-        assert got == {1000, 1001, 1002, 1003}
+        assert len(ing.commit.live_files("docs")) == 1
+        assert [h["op"] for h in ing.commit.history()].count("compact") == 8
+        assert _ids(ing) == {1000, 1001, 1002, 1003}
 
     def test_maintenance_is_the_one_call(
         self, spark, tmp_path, train_docs
@@ -567,13 +513,19 @@ class TestMarkerPrune:
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
         self._ingest_n(spark, ing, 3)
-        out = ing.maintenance(target_files=1, keep_last_markers=1, min_frag=0)
-        assert out["recovered"] == []
+        out = ing.maintenance(target_files=1, min_frag=0)
         assert set(out["compacted"]) >= {"docs", "md5", "index"}
-        assert out["markers_pruned"] == 2
-        assert sorted(os.listdir(f"{ing.root}/_batches")) == ["2"]
-        docs = spark.read.parquet(f"{ing.root}/docs")
-        assert docs.count() == 3
+        # the files it retired are within the default grace
+        assert out["vacuumed"] == 0
+        assert ing.commit.tombstones()
+        assert ing._read("docs").count() == 3
+        # past the grace the same reclaim removes them
+        removed = ing.commit.vacuum(
+            [f"{ing.root}/{p}" for p in ing.STATE_PARTS],
+            now=time.time() + 2 * ManifestCommitProtocol.GRACE_S,
+        )
+        assert removed and ing.commit.tombstones() == {}
+        assert ing._read("docs").count() == 3
 
     def test_compact_floor_skips_lightly_fragmented(
         self, spark, tmp_path, train_docs
@@ -586,13 +538,13 @@ class TestMarkerPrune:
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
         self._ingest_n(spark, ing, 3)
+        epoch, files = ing.commit.epoch(), ing.file_report()
+        assert files["docs"] >= 3
         assert ing.compact() == {}  # default floor (16) not crossed
         assert ing.maintenance()["compacted"] == {}
-        # batch dirs untouched — nothing was rewritten
-        assert sorted(
-            n for n in os.listdir(f"{ing.root}/docs")
-            if n.startswith("batch=")
-        ) == ["batch=0", "batch=1", "batch=2"]
+        # nothing was rewritten or committed
+        assert ing.commit.epoch() == epoch
+        assert ing.file_report() == files
         # an explicit low floor folds as before
         assert "docs" in ing.compact(min_frag=2)
 
@@ -603,34 +555,30 @@ class TestCorpusCliVerbs:
 
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
-        for i, body in enumerate(TestMarkerPrune.BODIES[:3]):
+        for i, body in enumerate(TestMaintenance.BODIES[:3]):
             ing.ingest(
-                spark.createDataFrame(
-                    [(100 + i, body, "a")],
-                    "doc_id long, text string, source string",
-                ),
-                i,
+                spark.createDataFrame([(100 + i, body, "a")], DOCS), i
             )
         cli.main(["--root", ing.root, "--cpus", "2", "corpus-audit"])
         out = json.loads(capsys.readouterr().out)
-        assert out["markers"] == 3
-        assert out["files"]["docs"] >= 3  # one file per batch dir
+        assert out["epoch"] == 3  # one commit per batch
+        assert out["files"]["docs"] >= 3  # at least one file per batch
         cli.main([
             "--root", ing.root, "--cpus", "2",
-            "corpus-maintain", "--keep-markers", "1", "--min-frag", "0",
+            "corpus-maintain", "--min-frag", "0",
         ])
         out = json.loads(capsys.readouterr().out)
-        assert out["markers_pruned"] == 2
         assert "docs" in out["compacted"]
+        assert out["vacuumed"] == 0  # retired files are within the grace
+        compacted = len(out["compacted"])
         cli.main(["--root", ing.root, "--cpus", "2", "corpus-audit"])
         out = json.loads(capsys.readouterr().out)
-        assert out["markers"] == 1
+        assert out["epoch"] == 3 + compacted  # one commit per table
         assert out["files"]["docs"] == 1
         # the folded state still dedups
         ing.ingest(
             spark.createDataFrame(
-                [(9, TestMarkerPrune.BODIES[0], "a")],
-                "doc_id long, text string, source string",
+                [(9, TestMaintenance.BODIES[0], "a")], DOCS
             ),
             10,
         )
@@ -639,11 +587,11 @@ class TestCorpusCliVerbs:
 
 class TestCrashMatrix:
     """Kill the ingest at EVERY write boundary of the multi-table
-    transaction (after the dead write, after docs, tokens, md5, index,
-    and before the marker itself) and assert the replay converges to
-    byte-identical committed state — the exactly-once claim proven at
-    each point the protocol can die, not just the one crash the other
-    tests simulate."""
+    transaction (before the dead write, docs, tokens, md5, index, and
+    before the manifest commit itself) and assert the replay converges
+    to byte-identical committed state — the exactly-once claim proven
+    at each point the protocol can die, not just the one crash the
+    other tests simulate."""
 
     #: pre-seeded corpus doc + a batch with one dup and two admissions
     CORPUS = "the quick brown fox jumps over the lazy dog again today"
@@ -655,19 +603,13 @@ class TestCrashMatrix:
 
     def _seed(self, spark, root, merges):
         ing = StreamingCorpusIngest(spark, root, merges)
-        ing.ingest(
-            spark.createDataFrame(
-                [(1, self.CORPUS, "w")],
-                "doc_id long, text string, source string",
-            ),
-            0,
-        )
+        ing.ingest(spark.createDataFrame([(1, self.CORPUS, "w")], DOCS), 0)
         return ing
 
     def _state(self, spark, ing):
         out = {}
         for part, schema in [
-            ("docs", "doc_id long, text string, source string"),
+            ("docs", DOCS),
             ("md5", "doc_id long, text_md5 string"),
             ("index", "doc_id long, band int, band_key string"),
             ("dead", "row string, reason string, batch_id long"),
@@ -683,68 +625,66 @@ class TestCrashMatrix:
         }
         return out
 
-    @pytest.mark.parametrize("fail_after", [0, 1, 2, 3, 4, "marker"])
+    @pytest.mark.parametrize("fail_before", [0, 1, 2, 3, 4, "commit"])
     def test_crash_then_replay_is_exactly_once(
-        self, spark, tmp_path, train_docs, monkeypatch, fail_after
+        self, spark, tmp_path, train_docs, monkeypatch, fail_before
     ):
         from pyspark.sql.readwriter import DataFrameWriter
 
         merges = fit(train_docs, n_merges=10)
         # reference: the same batch with no crash, on its own root
         ref = self._seed(spark, str(tmp_path / "ref"), merges)
-        batch_df = spark.createDataFrame(
-            self.BATCH, "doc_id long, text string, source string"
-        )
+        batch_df = spark.createDataFrame(self.BATCH, DOCS)
         ref.ingest(batch_df, 1)
         want = self._state(spark, ref)
 
         crash_root = str(tmp_path / "crash")
         ing = self._seed(spark, crash_root, merges)
+        base = self._state(spark, ing)
+        epoch = ing.commit.epoch()
 
         class Boom(RuntimeError):
             pass
 
         real_parquet = DataFrameWriter.parquet
-        count = {"n": 0}
+        real_commit = ManifestCommitProtocol.commit_txn
+        writes = []
 
         def failing_parquet(self_w, path, **kw):
-            if f"{crash_root}/" in path and "/batch=1" in path:
-                if fail_after != "marker" and count["n"] == fail_after:
+            # every table write of batch 1 stages under the crash root
+            if path.startswith(f"{crash_root}/"):
+                if len(writes) == fail_before:
                     raise Boom(f"injected crash before write {path}")
-                count["n"] += 1
+                writes.append(path)
             return real_parquet(self_w, path, **kw)
 
+        def failing_commit(proto, tx, now=None):
+            if tx.op == "ingest" and fail_before == "commit":
+                raise Boom("injected crash before the manifest commit")
+            return real_commit(proto, tx, now)
+
         monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
-        if fail_after == "marker":
-            real_marker = type(ing._fs).write_text_atomic
-
-            def failing_marker(fs, path, text):
-                if path.endswith("/_batches/1"):
-                    raise Boom("injected crash before marker")
-                return real_marker(fs, path, text)
-
-            monkeypatch.setattr(
-                type(ing._fs), "write_text_atomic", failing_marker
-            )
+        monkeypatch.setattr(
+            ManifestCommitProtocol, "commit_txn", failing_commit
+        )
         with pytest.raises(Boom):
             ing.ingest(batch_df, 1)
         monkeypatch.undo()
+        if fail_before == "commit":
+            assert len(writes) == 5  # dead, docs, tokens, md5, index
 
         # mid-transaction state is invisible to every reader
-        partial = self._state(spark, ing)
-        assert partial == self._state(spark, self._seed_ref_only(
-            spark, str(tmp_path / "base"), merges
-        )), f"crash at {fail_after} leaked uncommitted state"
+        assert ing.commit.epoch() == epoch
+        assert ing.commit.committed_batch() == 0
+        assert self._state(spark, ing) == base, (
+            f"crash before {fail_before} leaked uncommitted state"
+        )
 
         # restart (fresh instance, as foreachBatch redelivery would)
         ing2 = StreamingCorpusIngest(spark, crash_root, merges)
         ing2.ingest(batch_df, 1)
-        assert self._state(spark, ing2) == want, fail_after
-
-    def _seed_ref_only(self, spark, root, merges):
-        if not os.path.exists(root):
-            return self._seed(spark, root, merges)
-        return StreamingCorpusIngest(spark, root, merges)
+        assert self._state(spark, ing2) == want, fail_before
+        assert ing2.commit.committed_batch() == 1
 
 
 class TestStateCompaction:
@@ -764,57 +704,56 @@ class TestStateCompaction:
             (3, "third novel body of words entirely", "a"),
         ]
         for i, row in enumerate(texts):
-            ing.ingest(
-                spark.createDataFrame(
-                    [row], "doc_id long, text string, source string"
-                ),
-                i,
-            )
+            ing.ingest(spark.createDataFrame([row], DOCS), i)
         rep = ing.file_report()
         assert rep["docs"] >= 3 and rep["md5"] >= 3
-        before_docs = sorted(
-            r["doc_id"]
-            for r in spark.read.parquet(f"{ing.root}/docs").collect()
-        )
+        before_docs = sorted(_ids(ing))
         ing.compact(min_frag=0)
         rep2 = ing.file_report()
         assert all(v == 1 for k, v in rep2.items() if k != "dead")
-        assert sorted(
-            r["doc_id"]
-            for r in spark.read.parquet(f"{ing.root}/docs").collect()
-        ) == before_docs
+        assert sorted(_ids(ing)) == before_docs
         # dedup against the COMPACTED state still works
         ing.ingest(
             spark.createDataFrame(
-                [(10, BASE, "b"), (11, BASE + " tail", "b")],
-                "doc_id long, text string, source string",
+                [(10, BASE, "b"), (11, BASE + " tail", "b")], DOCS
             ),
             3,
         )
         assert ing.stats["exact_dups"] == 1
         assert ing.stats["near_dups"] == 1
 
-    def test_crash_mid_compaction_recovers(self, spark, tmp_path, train_docs):
+    def test_crash_before_the_compaction_commit_changes_nothing(
+        self, spark, tmp_path, train_docs, monkeypatch
+    ):
+        """A compaction that dies between staging its fold and the
+        commit leaves the previous snapshot readable: same files, same
+        rows, and a rerun folds normally."""
         merges = fit(train_docs, n_merges=10)
         ing = StreamingCorpusIngest(spark, str(tmp_path / "c"), merges)
-        ing.ingest(
-            spark.createDataFrame(
-                [(1, BASE, "a")],
-                "doc_id long, text string, source string",
-            ),
-            0,
+        for i, body in enumerate(TestMaintenance.BODIES[:3]):
+            ing.ingest(spark.createDataFrame([(i, body, "a")], DOCS), i)
+        snap, before = ing.commit.snapshot(), sorted(_ids(ing, "md5"))
+
+        class Boom(RuntimeError):
+            pass
+
+        real_commit = ManifestCommitProtocol.commit_txn
+
+        def failing_commit(proto, tx, now=None):
+            if tx.op == "compact":
+                raise Boom("injected crash before the compaction commit")
+            return real_commit(proto, tx, now)
+
+        monkeypatch.setattr(
+            ManifestCommitProtocol, "commit_txn", failing_commit
         )
-        before = sorted(
-            r["doc_id"]
-            for r in spark.read.parquet(f"{ing.root}/md5").collect()
-        )
-        # simulate the crash window: stage the live table away by hand
-        os.rename(f"{ing.root}/md5", f"{ing.root}/md5.bak")
-        assert f"{ing.root}/md5" in ing.recover()
-        assert sorted(
-            r["doc_id"]
-            for r in spark.read.parquet(f"{ing.root}/md5").collect()
-        ) == before
+        with pytest.raises(Boom):
+            ing.compact(min_frag=0)
+        monkeypatch.undo()
+        assert ing.commit.snapshot() == snap
+        assert sorted(_ids(ing, "md5")) == before
+        assert ing.compact(min_frag=0)
+        assert sorted(_ids(ing, "md5")) == before
 
 
 class TestEmptyQualityChecks:

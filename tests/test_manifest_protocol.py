@@ -1,11 +1,10 @@
 """The manifest-log commit protocol (VERDICT r9 "What's missing" #1):
 snapshot isolation on plain parquet. Readers plan every scan from an
-atomically-committed file list instead of directory listings, so
-``consistent_read`` is one plain call, maintenance retires files
-LOGICALLY, and
-``vacuum`` reclaims bytes after a grace window — the local stand-in
-for a Delta/Iceberg commit log, built on the store's own atomic-rename
-sidecar machinery."""
+atomically-committed file list instead of directory listings, so a
+read is one plain call against an immutable snapshot, maintenance
+retires files LOGICALLY, and ``vacuum`` reclaims bytes after a grace
+window — the local stand-in for a Delta/Iceberg commit log, built on
+atomic-rename publication of small commit records."""
 
 import os
 import time
@@ -44,12 +43,6 @@ def _disk_parquet(root, tier=0):
 
 
 class TestManifestProtocolSurface:
-    def test_consistent_read_is_one_plain_shot(self, spark, tmp_path):
-        st = _mk(spark, tmp_path)
-        calls = []
-        assert st.consistent_read(lambda: calls.append(1) or 42) == 42
-        assert calls == [1]  # no validation loop, no retry
-
     def test_epoch_is_the_commit_count(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
         assert st.commit.epoch() == 0
@@ -428,6 +421,83 @@ class TestScopedPlanningConf:
         st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
         assert st.read(0).count() == 1
         assert spark.conf.get(key) == before  # read: set + restored
+
+    def test_open_leaves_partition_overwrite_mode_unset(
+        self, spark, tmp_path
+    ):
+        """Every store write stages into a fresh directory, so the store
+        has no use for dynamic partition overwrite — and setting it for
+        the session would change every other partitioned overwrite the
+        caller runs."""
+        key = "spark.sql.sources.partitionOverwriteMode"
+        spark.conf.unset(key)
+        st = _mk(spark, tmp_path)
+        st.upsert(0, _rows(spark, [("m", 60, 1.0)]))
+        assert st.read(0).count() == 1
+        assert spark.conf.get(key, None) is None
+
+
+class TestReplayGuard:
+    """The committed stream batch id (Delta's ``SetTransaction``) rides
+    the manifest log: it commits on its own, survives checkpoints and
+    vacuum's log trim, and an empty transaction still commits nothing."""
+
+    def _proto(self, spark, tmp_path):
+        root = str(tmp_path / "guard")
+        return ManifestCommitProtocol(_mk(spark, tmp_path).fs, root), root
+
+    def _commit(self, proto, k, batch_id=None):
+        from kenshin_spark.commit import ManifestTxn
+
+        tx = ManifestTxn(op="ingest")
+        tx.add(f"docs/f{k}.parquet", 10)
+        tx.batch_id = batch_id
+        return proto.commit_txn(tx)
+
+    def test_batch_id_survives_checkpoint_and_log_trim(
+        self, spark, tmp_path
+    ):
+        proto, root = self._proto(spark, tmp_path)
+        self._commit(proto, 0, batch_id=4)
+        assert proto.committed_batch() == 4
+        # ride past the next checkpoint on commits that carry no id
+        k = 1
+        while proto.epoch() % proto.checkpoint_every != 0:
+            self._commit(proto, k)
+            k += 1
+        self._commit(proto, k)  # a delta above the checkpoint
+        assert proto.epoch() == proto.checkpoint_every + 1
+        assert proto.committed_batch() == 4
+        # the trim drops every record below the checkpoint — including
+        # the one that committed the id
+        removed = proto.vacuum([], grace_s=0.0, now=time.time() + 10)
+        assert "_manifest/0000000001.json" in removed
+        cold = ManifestCommitProtocol(proto.fs, root)
+        assert cold.committed_batch() == 4
+        assert cold.committed_batch(seq=proto.checkpoint_every) == 4
+
+    def test_a_batch_id_alone_commits_an_empty_txn_does_not(
+        self, spark, tmp_path
+    ):
+        from kenshin_spark.commit import ManifestConflict, ManifestTxn
+
+        proto, _ = self._proto(spark, tmp_path)
+        self._commit(proto, 0, batch_id=0)
+        assert proto.epoch() == 1
+        tx = ManifestTxn(op="ingest")
+        tx.batch_id = 1  # an empty batch: no files, only its id
+        assert proto.commit_txn(tx) == 2
+        assert proto.committed_batch() == 1
+        assert proto.snapshot() == {"docs/f0.parquet": 10}
+        with proto.txn():  # no files, no id
+            pass
+        assert proto.epoch() == 2
+        # a replayed id never commits twice
+        tx = ManifestTxn(op="ingest")
+        tx.batch_id = 1
+        with pytest.raises(ManifestConflict, match="batch 1"):
+            proto.commit_txn(tx)
+        assert proto.epoch() == 2
 
 
 class TestDeltaLog:

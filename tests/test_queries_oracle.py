@@ -219,7 +219,7 @@ def test_triage_agrees_with_the_real_ingest_job(spark, tmp_path):
     ing.ingest(corpus, 0)   # build the persisted state
     ing.ingest(batch, 1)    # triage the batch
 
-    dead = spark.read.parquet(f"{ing.root}/dead").where(
+    dead = ing._read("dead").where(
         F.col("batch_id") == 1
     ).withColumn(
         "doc_id", F.get_json_object("row", "$.doc_id").cast("long")
@@ -233,7 +233,7 @@ def test_triage_agrees_with_the_real_ingest_job(spark, tmp_path):
     }
     admitted = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{ing.root}/docs").collect()
+        for r in ing._read("docs").collect()
     } & {r["doc_id"] for r in batch.collect()}
 
     assert by_reason["quality_rejected"] == {
