@@ -1,9 +1,12 @@
 """Embedding-cosine near-duplicate pairs.
 
-Brute-force blocked pairwise cosine with a threshold. The join is a
-self-join on nothing (n²/2 pairs) — correct baseline at small n; at scale
-use the LSH-bucketed variant in kenshin_spark.similarity (random
-hyperplanes) to bound candidates, same verify step.
+``embedding_neardup_pairs`` scores all n²/2 pairs exactly, on the numpy
+fold kernel (``functions.vectors.cosine_pairs``): the corpus is
+broadcast once and the streamed copy is scored tile by tile in
+``mapInArrow``, the upper triangle only. It is the correct baseline and
+the ground truth the LSH-bucketed variant below is measured against;
+that variant bounds candidates with random hyperplanes at scale and
+verifies them with the same cosine.
 """
 
 from __future__ import annotations
@@ -13,9 +16,17 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kenshin_spark.functions.vectors import dot_product, l2_norm
+from kenshin_spark.functions.vectors import cosine_pairs, dot_product, l2_norm
 
 _LOG = logging.getLogger(__name__)
+
+
+def _rounded(pairs: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """The kernel's raw cosines rounded to 6 dp in the JVM and filtered
+    — the oracle's ``round(…, 6) >= threshold``."""
+    return pairs.select(a, b, F.round("cosine", 6).alias("cosine")).where(
+        F.col("cosine") >= threshold
+    )
 
 
 def embedding_neardup_pairs(
@@ -24,45 +35,22 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``(vec_a, vec_b, cosine)`` for pairs with cosine ≥ threshold;
-    cosine rounded to 6dp for cross-engine comparison.
+    """``(vec_a, vec_b, cosine)`` for pairs ``vec_a < vec_b`` with cosine
+    ≥ threshold; cosine rounded to 6dp for cross-engine comparison.
 
-    Scale notes: norms are computed ONCE per vector before the pair join
-    (not per pair), the streamed side is repartitioned so the
-    nested-loop join fans out across all cores (the small parquet
-    arrives as 1 partition → 1 task otherwise), and the build side is
-    explicitly broadcast. cosine = dot/(|a|·|b|) keeps the exact
-    expression shape of the DuckDB oracle, so results stay bit-aligned.
+    The corpus is read to the driver once and broadcast with its fold
+    norms; the streamed copy is repartitioned so the scoring fans out
+    across all cores (the small parquet arrives as 1 partition → 1 task
+    otherwise), and each task skips the tiles of the lower triangle. The
+    kernel's left-fold dot products and cosine = dot/(|a|·|b|) keep the
+    exact arithmetic of the DuckDB oracle, so results stay bit-aligned.
+    Raises ``ValueError`` when the non-NULL vectors differ in length.
     """
-    spark = embeddings.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    with_norm = embeddings.select(
-        F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_n")
+    pairs = cosine_pairs(
+        embeddings, embeddings, ("vec_a", "vec_b"), keep="lt",
+        threshold=threshold, id_col=id_col, vec_col=vec_col,
     )
-    a = with_norm.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("_va"),
-        F.col("_n").alias("_na"),
-    ).repartition(par)
-    b = with_norm.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    denom = F.col("_na") * F.col("_nb")
-    cosine = F.when(denom != 0, dot_product(F.col("_va"), F.col("_vb")) / denom)
-    # prefilter INSIDE the join condition: non-survivors are dropped after
-    # one dot product instead of surviving to a post-join filter that
-    # recomputes it. round(c, 6) >= t ⟺ c >= t - 5e-7 (then the exact
-    # rounded filter re-checks the boundary cases).
-    prefilter = dot_product(F.col("_va"), F.col("_vb")) >= (
-        F.lit(threshold - 5e-7) * denom
-    )
-    return (
-        a.join(F.broadcast(b), (F.col("vec_a") < F.col("vec_b")) & prefilter)
-        .select("vec_a", "vec_b", F.round(cosine, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    return _rounded(pairs, "vec_a", "vec_b", threshold)
 
 
 def density_scaled_banding(
@@ -192,7 +180,6 @@ def embedding_neardup_pairs_lsh(
     or a float for a different calibration point.
     """
     from kenshin_spark.dedup.fanout import fan_out
-    from kenshin_spark.functions.vectors import l2_norm
     from kenshin_spark.similarity import (
         N_BANDS,
         PLANES_PER_BAND,
@@ -283,7 +270,7 @@ def embedding_neardup_pairs_lsh(
     )
     denom = F.col("_na") * F.col("_nb")
     cosine = F.when(denom != 0, dot_product(F.col("_va"), F.col("_vb")) / denom)
-    # prefilter in the join condition (as the brute-force variant does):
+    # prefilter in the join condition (the test cosine_pairs applies):
     # sub-threshold candidates die after one dot product
     prefilter = dot_product(F.col("_va"), F.col("_vb")) >= (
         F.lit(threshold - 5e-7) * denom
@@ -306,32 +293,15 @@ def cross_neardup_pairs(
     ACROSS two sets with cosine ≥ threshold — the semantic-
     decontamination primitive (drop training docs whose embedding sits
     too close to an eval-set embedding; catches paraphrases the n-gram
-    overlap check misses). Same plan shape as the self-join variant:
-    norms once per vector, the small side (the benchmark) broadcast,
-    the threshold prefilter inside the join condition, the big side
-    repartitioned so the join fans out."""
-    spark = left.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    a = left.select(
-        F.col(id_col).alias("left_id"),
-        F.col(vec_col).alias("_va"),
-        l2_norm(F.col(vec_col)).alias("_na"),
-    ).repartition(par)
-    b = right.select(
-        F.col(id_col).alias("right_id"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(F.col(vec_col)).alias("_nb"),
+    overlap check misses). Same kernel as the self-join variant: the
+    small side (the benchmark) broadcast with its norms, the big side
+    repartitioned and scored tile by tile, only pairs that may pass the
+    threshold emitted."""
+    pairs = cosine_pairs(
+        left, right, ("left_id", "right_id"), threshold=threshold,
+        id_col=id_col, vec_col=vec_col,
     )
-    denom = F.col("_na") * F.col("_nb")
-    cosine = F.when(denom != 0, dot_product(F.col("_va"), F.col("_vb")) / denom)
-    prefilter = dot_product(F.col("_va"), F.col("_vb")) >= (
-        F.lit(threshold - 5e-7) * denom
-    )
-    return (
-        a.join(F.broadcast(b), prefilter)
-        .select("left_id", "right_id", F.round(cosine, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    return _rounded(pairs, "left_id", "right_id", threshold)
 
 
 def hyperplane_band_index(

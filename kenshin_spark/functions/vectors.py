@@ -1,19 +1,41 @@
-"""Vector math over ``array<float|double>`` columns — all JVM built-ins.
+"""Vector math over ``array<float|double>`` columns: one arithmetic,
+two engines.
 
-No Python crosses the wire, but note: ``F.zip_with``/``F.aggregate`` are
-higher-order functions, which Catalyst evaluates as CodegenFallback
-(interpreted) — NOT whole-stage codegen. They are kept for the VERIFY
-path only, where the sequential left-fold summation order must stay
-bit-aligned with the DuckDB oracle's ``list_dot_product`` (numpy BLAS
-reorders the sum; a 6-dp rounded cosine could flip at a boundary). Bulk
-signature/assignment math belongs in Arrow ``pandas_udf`` batch matmuls —
-see ``similarity/__init__.py``.
+Every dot product here is the sequential left-fold
+``((0 + x0*y0) + x1*y1) + ...`` in float64, in dimension order — the
+summation DuckDB's ``list_dot_product`` uses too, so a 6-dp rounded
+cosine is bit-aligned with the SQL oracles. It runs in two places:
+
+- ``_fold_dots``/``_fold_self``: numpy, one elementwise multiply and one
+  add per dimension over a whole (rows × cols) tile. Each step rounds
+  like the fold (no BLAS reordering, no FMA fusion), so the result equals
+  the JVM functions below bit for bit. ``cosine_pairs`` runs exact
+  cosine joins on it in ``mapInArrow``: the all-pairs and cross near-dup
+  and brute-force top-k (``dedup/embedding.py``,
+  ``similarity.brute_force_topk``).
+- ``dot_product``/``l2_norm``/``cosine_similarity``: ``F.zip_with`` +
+  ``F.aggregate``. No Python crosses the wire, but Catalyst evaluates
+  higher-order functions as CodegenFallback (interpreted), pair by pair.
+  They remain where the cosine sits inside an equi-join condition (the
+  LSH, SemDeDup and index verifies), in ``classify`` and in the IVF/PQ
+  rerank — paths the kernel does not cover yet.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+#: dot products one kernel tile computes at most: bounds the fold's two
+#: (rows × cols) float64 buffers to 16 MB each, whatever the Arrow batch
+TILE = 1 << 21
+#: row-tile cap for the self-join: a narrower id range per tile skips
+#: more of the lower triangle
+SELF_ROWS = 64
 
 
 def _c(col: Column | str) -> Column:
@@ -38,6 +60,177 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a, b) = a·b / (|a||b|); NULL if either norm is zero."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom != 0, dot_product(a, b) / denom)
+
+
+def _fold_dots(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, dim) × (k, dim) → (n, k) dot products, each value produced by
+    the sequential left-fold ``acc = (acc + x_j * c_j)`` in dim order —
+    bit-identical to ``dot_product`` and DuckDB ``list_dot_product`` (no
+    BLAS reordering, no FMA fusion; numpy elementwise ops round every
+    step like the fold)."""
+    out = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+    step = np.empty_like(out)
+    for j in range(X.shape[1]):
+        np.multiply(X[:, j : j + 1], C[None, :, j], out=step)
+        out += step
+    return out
+
+
+def _fold_self(C: np.ndarray) -> np.ndarray:
+    """(k, dim) → (k,) self-dots via the same left-fold."""
+    out = np.zeros(C.shape[0], dtype=np.float64)
+    for j in range(C.shape[1]):
+        out += C[:, j] * C[:, j]
+    return out
+
+
+def _matrix(vecs, dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """``(X, ok)`` for an Arrow ``list<float|double>`` column: the vectors
+    as float64 rows, and the mask of rows that are whole (not NULL, no
+    NULL element). A row that is not whole scores NULL, as in the JVM
+    fold. Raises ``ValueError`` when the non-NULL vectors differ in
+    length, or from ``dim`` when given."""
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(vecs), -1).to_numpy()
+    present = lens >= 0
+    dims = np.unique(lens[present])
+    if dim is not None and dims.size:
+        dims = np.union1d(dims, [dim])
+    if dims.size > 1:
+        raise ValueError(f"vectors differ in length: {dims.tolist()}")
+    width = int(dims[0]) if dims.size else (dim or 0)
+    flat = pc.list_flatten(vecs)
+    ok = present.copy()
+    if flat.null_count:
+        parent = pc.list_parent_indices(vecs).to_numpy()
+        ok[parent[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    X = np.zeros((len(vecs), width), dtype=np.float64)
+    X[present] = flat.to_numpy(zero_copy_only=False).reshape(
+        int(present.sum()), width
+    )
+    X[~ok] = 0.0
+    return X, ok
+
+
+def _score_tile(a, X, na, oka, b, C, nb, okb, keep, low):
+    """``(i, j, cosine, good)`` for one (rows × cols) tile; ``good`` is
+    False where the cosine is NULL."""
+    if keep == "lt":
+        pair = a[:, None] < b[None, :]
+    elif keep == "ne":
+        pair = a[:, None] != b[None, :]
+    else:
+        pair = np.ones((len(a), len(b)), dtype=bool)
+    denom = na[:, None] * nb[None, :]
+    good = oka[:, None] & okb[None, :] & (denom != 0)
+    dots = _fold_dots(X, C) if good.any() else np.zeros(denom.shape)
+    if low is not None:
+        # round(c, 6) >= t ⟺ c >= t - 5e-7; the rounded filter re-checks
+        # the boundary in the JVM
+        pair &= good & (dots >= low * denom)
+    i, j = np.nonzero(pair)
+    good = good[i, j]
+    cos = np.zeros(len(i))
+    cos[good] = dots[i, j][good] / denom[i, j][good]
+    return i, j, cos, good
+
+
+def cosine_pairs(
+    streamed: DataFrame,
+    small: DataFrame,
+    names: tuple[str, str],
+    keep: str = "all",
+    threshold: float | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    fan_out: bool = True,
+) -> DataFrame:
+    """``(names[0], names[1], "cosine")``: the exact cosine of
+    ``streamed`` × ``small`` pairs on the numpy fold, unrounded and equal
+    bit for bit to ``cosine_similarity`` — NULL where a norm is zero or a
+    vector is NULL or holds a NULL.
+
+    ``keep`` picks pairs by id: ``"lt"`` streamed id < small id (the
+    self-join's upper triangle), ``"ne"`` no self pairs, ``"all"``. With
+    a ``threshold`` only pairs whose cosine may round to ≥ it at 6 dp
+    are emitted, never a NULL one; without one every pair is.
+
+    ``small`` is read to the driver once (``toArrow``) — the round-trip a
+    broadcast join makes — and its vectors and fold norms ship in one
+    broadcast. ``streamed`` is scored tile by tile in ``mapInArrow``; a
+    tile holds at most ``TILE`` dot products. With ``fan_out`` it is
+    first repartitioned to the default parallelism, so a corpus read as
+    one partition does not score in one task; without, it keeps its
+    partitioning (for a caller whose next step shuffles anyway). For
+    ``"lt"`` the small side is sorted by id and every tile skips the
+    columns at or below its smallest id.
+    Raises ``ValueError`` when the small side's non-NULL vectors differ
+    in length; a streamed vector of another length fails the task."""
+    spark = streamed.sparkSession
+    if keep != "all":  # a NULL id passes no id comparison
+        streamed = streamed.where(F.col(id_col).isNotNull())
+        small = small.where(F.col(id_col).isNotNull())
+    tab = small.select(id_col, vec_col).toArrow()
+    if keep == "lt":
+        tab = tab.take(pc.sort_indices(tab.column(0)))
+    ids = tab.column(0).combine_chunks()
+    C, okb = _matrix(tab.column(1))
+    # no non-NULL vector on the small side: no pair can score, and no
+    # length to hold the streamed side to
+    dim = C.shape[1] if tab.column(1).null_count < len(tab) else None
+    shipped = spark.sparkContext.broadcast(
+        (ids, C, np.sqrt(_fold_self(C)), okb, dim)
+    )
+    low = None if threshold is None else threshold - 5e-7
+    cols = max(1, min(len(tab), TILE))
+    rows = max(1, TILE // cols)
+    if keep == "lt":
+        rows = min(rows, SELF_ROWS)
+
+    def score(batches):
+        ids_b, C, nb, okb, dim = shipped.value
+        b = ids_b.to_numpy(zero_copy_only=False)
+        for batch in batches:
+            ids_a = batch.column(0)
+            a = ids_a.to_numpy(zero_copy_only=False)
+            X, oka = _matrix(batch.column(1), dim)
+            at = np.arange(len(a))
+            if keep == "lt":
+                at = np.argsort(a, kind="stable")
+                a, X, oka = a[at], X[at], oka[at]
+            na = np.sqrt(_fold_self(X))
+            for r in range(0, len(a), rows):
+                rs = slice(r, r + rows)
+                start = (
+                    int(np.searchsorted(b, a[r], side="right"))
+                    if keep == "lt" else 0
+                )
+                for c in range(start, len(b), cols):
+                    cs = slice(c, c + cols)
+                    i, j, cos, good = _score_tile(
+                        a[rs], X[rs], na[rs], oka[rs],
+                        b[cs], C[cs], nb[cs], okb[cs], keep, low,
+                    )
+                    if len(i):
+                        yield pa.RecordBatch.from_arrays(
+                            [
+                                ids_a.take(at[rs][i]),
+                                ids_b.take(c + j),
+                                pa.array(cos, pa.float64(), mask=~good),
+                            ],
+                            names=[*names, "cosine"],
+                        )
+
+    schema = StructType([
+        StructField(names[0], streamed.schema[id_col].dataType),
+        StructField(names[1], small.schema[id_col].dataType),
+        StructField("cosine", DoubleType()),
+    ])
+    streamed = streamed.select(id_col, vec_col)
+    if fan_out:
+        streamed = streamed.repartition(spark.sparkContext.defaultParallelism)
+    return streamed.mapInArrow(score, schema)
 
 
 def centroid_rows(df, group_col="label", vec_col="embedding", ndigits=6):

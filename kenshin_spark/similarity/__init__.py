@@ -16,10 +16,11 @@ Vectorization: signature and cell-assignment math is one Arrow
 ``pandas_udf`` (numpy matmul per batch) — Spark's higher-order functions
 (``aggregate``/``zip_with``) are CodegenFallback (interpreted), and at
 64 planes x 64 dims the interpreted per-row cost would dominate the job
-at scale. The *verify* cosine stays a JVM ``zip_with``/``aggregate``
-fold so its 6-dp rounded value is bit-aligned with the DuckDB oracle
-(numpy BLAS changes summation order; sign tests tolerate that, rounded
-cosines might not).
+at scale. Exact cosines are a sequential left-fold, bit-aligned with
+the DuckDB oracle (a BLAS matmul changes summation order; sign tests
+tolerate that, 6-dp rounded cosines might not): ``brute_force_topk``
+runs it in numpy (``functions.vectors.cosine_pairs``), the LSH and IVF
+verifies as a JVM ``zip_with``/``aggregate`` fold.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from kenshin_spark.functions.vectors import cosine_similarity
+from kenshin_spark.functions.vectors import cosine_pairs, cosine_similarity
 
 # Band geometry for hyperplane LSH. At near-dup thresholds (cosine >= 0.8)
 # a band is selective AND recalls well; the synthetic corpus' 0.4
@@ -49,27 +50,19 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query vector: ``(query_id, neighbor_id,
-    rank, cosine)``. Ties broken by neighbor id (deterministic).
+    rank, cosine)``. Ties broken by neighbor id (deterministic); a NULL
+    cosine (zero or NULL vector) ranks last.
 
-    The corpus side stays partitioned; each query is broadcast against it,
-    and the per-query top-k is a window rank — at scale swap the window for
+    The queries are broadcast and the corpus stays partitioned as it is
+    (the window shuffles next), scored on the numpy fold kernel
+    (``functions.vectors.cosine_pairs``); the 6-dp rounding and the
+    per-query top-k window run in the JVM — at scale swap the window for
     a ``groupBy(query).agg(max_heap)`` pattern, semantics identical.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
-        )
-    )
+    scored = cosine_pairs(
+        embeddings, queries, ("neighbor_id", "query_id"), keep="ne",
+        id_col=id_col, vec_col=vec_col, fan_out=False,
+    ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )

@@ -12,7 +12,7 @@ embeddings of the ``n`` corpus rows with the smallest
 identically — and every distance/score is computed as a sequential
 left-fold (``((0 + x0*c0) + x1*c1) + ...``) so it is bit-identical to the
 JVM ``aggregate(zip_with(...))`` fold and DuckDB's ``list_dot_product``
-(see ``functions/vectors.py`` for the fold-alignment discipline).
+(the numpy fold lives in ``functions/vectors.py``).
 
 Result: cell assignment, probe selection, PQ codes, ADC scores, and the
 final ranking are bit-equal between the Spark plan and a pure-SQL replay —
@@ -34,26 +34,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from kenshin_spark.functions.vectors import cosine_similarity
-
-
-def _fold_dots(X: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """(n, dim) × (k, dim) → (n, k) dot products, each value produced by
-    the sequential left-fold ``acc = (acc + x_j * c_j)`` in dim order —
-    bit-identical to DuckDB ``list_dot_product`` (no BLAS reordering, no
-    FMA fusion; numpy elementwise ops round every step like the fold)."""
-    out = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-    for j in range(X.shape[1]):
-        out += X[:, j : j + 1] * C[None, :, j]
-    return out
-
-
-def _fold_self(C: np.ndarray) -> np.ndarray:
-    """(k, dim) → (k,) self-dots via the same left-fold."""
-    out = np.zeros(C.shape[0], dtype=np.float64)
-    for j in range(C.shape[1]):
-        out += C[:, j] * C[:, j]
-    return out
+from kenshin_spark.functions.vectors import (
+    _fold_dots,
+    _fold_self,
+    cosine_similarity,
+)
 
 
 def md5_sample(

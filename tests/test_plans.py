@@ -153,7 +153,8 @@ class TestExtensionOpShapes:
 
 class TestPythonBoundary:
     # row-at-a-time Python UDFs would appear as BatchEvalPython; Arrow
-    # paths appear as ArrowEvalPython / MapInPandas — the only allowed ones
+    # paths appear as ArrowEvalPython / MapInPandas / MapInArrow — the
+    # only allowed ones
     @pytest.mark.parametrize("name", sorted(QUERIES))
     def test_no_row_python_udf(self, spark, name):
         df = QUERIES[name].fn(spark, SF)
@@ -165,16 +166,23 @@ class TestPythonBoundary:
 
 
 class TestParallelism:
+    # the exact-cosine kernel scores the streamed side in mapInArrow
+    # against a broadcast copy of the small side; the streamed side is
+    # repartitioned so scoring doesn't serialize on the single parquet
+    # input partition, and no pair join is left to interpret the
+    # zip_with/aggregate dot products pair by pair
+    @staticmethod
+    def assert_kernel_fans_out(df):
+        p = plan_of(df)
+        assert "MapInArrow" in p
+        assert "RoundRobinPartitioning" in p
+        assert "BroadcastNestedLoopJoin" not in p
+
     def test_embedding_pair_join_fans_out(self, spark):
         from kenshin_spark.dedup import embedding_neardup_pairs
 
         emb = load_table(spark, SF, "embeddings")
-        df = embedding_neardup_pairs(emb, threshold=0.4)
-        p = plan_of(df)
-        # the streamed side is repartitioned so the nested-loop join
-        # doesn't serialize on the single parquet input partition
-        assert "RoundRobinPartitioning" in p
-        assert "BroadcastNestedLoopJoin" in p
+        self.assert_kernel_fans_out(embedding_neardup_pairs(emb, threshold=0.4))
 
 
 class TestStoreFetchPruning:
@@ -518,11 +526,13 @@ class TestRound4bPlans:
         assert "CartesianProduct" not in p
 
     def test_cross_neardup_broadcasts_benchmark(self, spark):
-        """Bipartite decontam: the benchmark side broadcasts (BNLJ with
-        the threshold prefilter IS the design — the corpus never
-        shuffles); no shuffle-based join may appear."""
-        p = plan_of(QUERIES["dedup_cross_neardup"].fn(spark, SF))
-        assert "BroadcastNestedLoopJoin" in p
+        """Bipartite decontam: the benchmark side broadcasts into the
+        exact-cosine kernel (threshold prefilter inside it) and the
+        corpus is only spread round-robin across cores; no
+        shuffle-based join may appear."""
+        df = QUERIES["dedup_cross_neardup"].fn(spark, SF)
+        TestParallelism.assert_kernel_fans_out(df)
+        p = plan_of(df)
         assert "SortMergeJoin" not in p
         assert "CartesianProduct" not in p
 

@@ -1,0 +1,210 @@
+"""The exact-cosine kernel against the JVM fold it replaces.
+
+``functions.vectors.cosine_pairs`` scores pairs with the numpy left-fold
+(``_fold_dots``/``_fold_self``); ``dot_product``/``l2_norm``/
+``cosine_similarity`` are the same fold as JVM higher-order functions,
+the arithmetic the DuckDB oracles replay. These tests pin that the two
+agree bit for bit, at the threshold boundary too, and the edge cases:
+zero and NULL vectors, and vectors of different lengths."""
+
+import numpy as np
+import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from kenshin_spark.dedup.embedding import (
+    cross_neardup_pairs,
+    embedding_neardup_pairs,
+)
+from kenshin_spark.functions import vectors
+from kenshin_spark.functions.vectors import (
+    _fold_dots,
+    _fold_self,
+    cosine_pairs,
+    cosine_similarity,
+    dot_product,
+    l2_norm,
+)
+from kenshin_spark.similarity import brute_force_topk
+
+T = 0.4
+DIM = 64
+
+
+def corpus(n=300, seed=7):
+    """Clustered vectors, so pairs land on both sides of ``T``."""
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((12, DIM))
+    X = centers[rng.integers(0, 12, n)] + 1.3 * rng.standard_normal((n, DIM))
+    return X / np.linalg.norm(X, axis=1, keepdims=True)
+
+
+def boundary_pairs(n=40, seed=11):
+    """Vectors in pairs ``(u, w)`` whose cosine is ``T + d``, ``d``
+    spread over ±1e-6 — the prefilter's and the 6-dp rounding's edge."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for d in np.linspace(-1e-6, 1e-6, n):
+        u, v = np.linalg.qr(rng.standard_normal((DIM, 2)))[0].T
+        c = T + d
+        out += [u, c * u + np.sqrt(1 - c * c) * v]
+    return np.array(out)
+
+
+def frame(spark, X, elem="double"):
+    return spark.createDataFrame(
+        [(i, None if v is None else [float(x) for x in v])
+         for i, v in enumerate(X)],
+        f"vec_id long, embedding array<{elem}>",
+    )
+
+
+def jvm_neardup(df, threshold=T):
+    """The JVM expression the kernel replaced, as a plain cross join."""
+    a = df.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("_va"))
+    b = a.toDF("vec_b", "_vb")
+    cos = F.round(cosine_similarity("_va", "_vb"), 6)
+    return {
+        (r[0], r[1]): r[2]
+        for r in a.crossJoin(b)
+        .where(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b", cos.alias("c"))
+        .where(F.col("c") >= threshold)
+        .collect()
+    }
+
+
+def jvm_topk(emb, queries, k):
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
+    )
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return sorted(
+        tuple(r)
+        for r in c.crossJoin(q)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id",
+                F.round(cosine_similarity("_qv", "_cv"), 6).alias("cosine"))
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+        .collect()
+    )
+
+
+def pairs(df):
+    return {(r[0], r[1]): r[2] for r in df.collect()}
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_fold_equals_jvm_bit_for_bit_on_all_pairs(spark, elem):
+    df = frame(spark, corpus(), elem)
+    a = df.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    jvm = a.crossJoin(b).select(
+        "a", "b",
+        dot_product("va", "vb").alias("dot"),
+        l2_norm("va").alias("na"),
+        cosine_similarity("va", "vb").alias("cos"),
+    ).toPandas()
+    X = np.array(
+        [r.embedding for r in df.orderBy("vec_id").collect()], dtype=np.float64
+    )
+    ia, ib = jvm["a"].to_numpy(), jvm["b"].to_numpy()
+    assert np.array_equal(jvm["dot"].to_numpy(), _fold_dots(X, X)[ia, ib])
+    assert np.array_equal(jvm["na"].to_numpy(), np.sqrt(_fold_self(X))[ia])
+    # the kernel itself, unrounded, on every ordered pair
+    got = pairs(cosine_pairs(df, df, ("a", "b")))
+    assert len(got) == len(jvm) == 300 * 300
+    want = dict(zip(zip(ia.tolist(), ib.tolist()), jvm["cos"].tolist()))
+    assert got == want
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_threshold_boundary_matches_jvm(spark, elem):
+    X = np.vstack([boundary_pairs(), corpus(60)])
+    df = frame(spark, X, elem)
+    raw = cosine_pairs(df, df, ("a", "b"), keep="lt").where(
+        F.abs(F.col("cosine") - T) <= 1e-6
+    )
+    assert raw.count() >= 20  # the fixture does sit on the boundary
+    want = jvm_neardup(df)
+    got = pairs(embedding_neardup_pairs(df, threshold=T))
+    assert got == want
+    assert any(c == T for c in got.values())
+
+
+def test_tiling_and_triangle_skip_do_not_change_the_result(spark, monkeypatch):
+    df = frame(spark, corpus())
+
+    def run():
+        topk = brute_force_topk(df, df.where("vec_id < 7"), k=5).collect()
+        return pairs(embedding_neardup_pairs(df, threshold=T)), sorted(topk)
+
+    default = run()
+    monkeypatch.setattr(vectors, "TILE", 97)
+    monkeypatch.setattr(vectors, "SELF_ROWS", 5)
+    assert run() == default
+
+
+def degenerate(spark):
+    """Corpus with a zero vector (id 3), a NULL embedding (id 5), a
+    vector holding a NULL (id 6) and a duplicate of id 0 (id 4)."""
+    X = corpus(8).tolist()
+    X[3] = [0.0] * DIM
+    X[5] = None
+    X[4] = list(X[0])
+    X[6] = [None] + X[6][1:]
+    return spark.createDataFrame(
+        list(enumerate(X)), "vec_id long, embedding array<double>"
+    )
+
+
+def test_zero_and_null_vectors_make_no_pair(spark):
+    df = degenerate(spark)
+    got = pairs(embedding_neardup_pairs(df, threshold=T))
+    assert (0, 4) in got
+    assert not {i for p in got for i in p} & {3, 5, 6}
+    assert got == jvm_neardup(df)
+    cross = pairs(cross_neardup_pairs(df, df, threshold=T))
+    assert not {i for p in cross for i in p} & {3, 5, 6}
+
+
+def test_zero_and_null_vectors_rank_last_in_topk(spark):
+    df = degenerate(spark)
+    queries = df.where("vec_id in (0, 3, 5)")
+    got = sorted(map(tuple, brute_force_topk(df, queries, k=10).collect()))
+    assert got == jvm_topk(df, queries, 10)
+    by_q = {}
+    for q, n, rank, cos in got:
+        by_q.setdefault(q, []).append((rank, n, cos))
+    # query 0: the three NULL cosines come last, by neighbor id
+    assert [(n, c) for _, n, c in sorted(by_q[0])][-3:] == [
+        (3, None), (5, None), (6, None)
+    ]
+    # a zero or NULL query scores nothing: every neighbor NULL, id order
+    for q in (3, 5):
+        assert [(n, c) for _, n, c in sorted(by_q[q])] == [
+            (n, None) for n in range(8) if n != q
+        ]
+
+
+def test_vectors_of_different_lengths_raise(spark):
+    X = corpus(6).tolist()
+    X[2] = X[2][:-1]
+    df = spark.createDataFrame(
+        list(enumerate(X)), "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="differ in length"):
+        embedding_neardup_pairs(df, threshold=T)
+    # a streamed vector of another length fails the task
+    ok = df.where("vec_id <> 2")
+    with pytest.raises(Exception, match="differ in length"):
+        cross_neardup_pairs(df, ok, threshold=T).collect()
+    with pytest.raises(Exception, match="differ in length"):
+        brute_force_topk(df, ok.where("vec_id < 2"), k=3).collect()
