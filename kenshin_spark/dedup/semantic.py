@@ -7,9 +7,12 @@ in embedding space. Cells here are the deterministic per-label mean
 centroids from ``similarity.classify`` (not an RNG k-means), so the whole
 pipeline — assignment included — replays exactly in a SQL oracle. For
 corpora without labels (or when |labels| is too small to bound the pair
-space) pass ``subcells`` to split every cell with the seeded k-means
-coarse quantizer from ``similarity.ivf_topk`` — k then scales with n
-(FAISS guidance: k ≈ √n) independent of label cardinality.
+space) pass ``subcells`` to split every cell with the IVF coarse
+quantizer (md5-sample cells, fold-exact assignment — see
+``similarity``) — k then scales with n (FAISS guidance: k ≈ √n)
+independent of label cardinality. The sub-cells are as SQL-replayable
+as the label cells: the sample and the ``ORDER BY d2, cell`` argmin are
+the ones the ``emb_ivf_cell_stats`` oracle replays.
 
 Trade-off (inherent to SemDeDup): a near-dup pair straddling two cells is
 missed; recall is governed by cell granularity. Pairs found are always a
@@ -28,13 +31,15 @@ after one dot product — the same three moves measured on
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from kenshin_spark.functions.vectors import dot_product, l2_norm
+from kenshin_spark.functions.vectors import (
+    cells_udf,
+    dot_product,
+    l2_norm,
+    md5_sample,
+)
 from kenshin_spark.similarity.classify import nearest_centroid
 
 
@@ -46,17 +51,17 @@ def semantic_neardup_pairs(
     group_col: str = "label",
     ndigits: int = 6,
     subcells: int | None = None,
-    seed: int = 42,
 ) -> DataFrame:
     """``(cluster, vec_a, vec_b, cosine)`` for within-cell pairs with
     cosine ≥ threshold. The pair join is keyed by cell — at scale each
     cell maps to a partition, so the verify never crosses partitions.
 
-    ``subcells=m`` splits every label cell into ≤m k-means sub-cells
-    (seeded, deterministic) before pairing — the 100 TB path where
-    Σ|cell|² must shrink with k, not with |labels|. The sub-cell split is
-    driver-trained on a bounded sample (like ``ivf_topk``), so it is NOT
-    SQL-replayable; the oracle query uses the label-cell form.
+    ``subcells=m`` splits every label cell into ≤m sub-cells before
+    pairing — the 100 TB path where Σ|cell|² must shrink with k, not with
+    |labels|. A vector's sub-cell is its nearest of the ``m`` md5-sample
+    corpus rows, ``ivf_topk``'s quantizer and assignment, scoped within
+    its label cell (``_cell`` becomes ``"<label>#<sub>"``); the split
+    adds no shuffle.
     """
     spark = embeddings.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -69,7 +74,11 @@ def semantic_neardup_pairs(
         F.col(vec_col).alias("_v"),
     )
     if subcells is not None and subcells > 1:
-        e = _subsplit(e, subcells, seed)
+        sub = cells_udf(md5_sample(embeddings, subcells, id_col, vec_col))
+        e = e.withColumn(
+            "_cell",
+            F.concat_ws("#", F.col("_cell").cast("string"), sub(F.col("_v"))),
+        )
     e = e.withColumn("_n", l2_norm(F.col("_v")))
     a = e.select(
         F.col("_id").alias("vec_a"),
@@ -104,46 +113,4 @@ def semantic_neardup_pairs(
             F.round(cosine, ndigits).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
-    )
-
-
-def _subsplit(e: DataFrame, subcells: int, seed: int) -> DataFrame:
-    """Refine ``(_id, _cell, _v)`` with a k-means sub-cell id per label
-    cell: ``_cell`` becomes ``concat(_cell, '#', sub)``. One global seeded
-    quantizer (trained on a bounded hash-ordered sample, exactly like
-    ``ivf_topk``) — sub-cell = nearest of k global centroids, scoped
-    within the label cell. Assignment is one Arrow pandas_udf batch
-    matmul; the corpus is never shuffled by the split itself."""
-    sample = (
-        e.select("_id", F.col("_v").cast("array<double>").alias("_vd"))
-        .orderBy(F.xxhash64(F.col("_id").cast("string"), F.lit(seed)), "_id")
-        .limit(4096)
-        .collect()
-    )
-    X = np.array([r._vd for r in sample], dtype=np.float64)
-    k = min(subcells, len(X))
-    rng = np.random.RandomState(seed)
-    cent = X[rng.choice(len(X), size=k, replace=False)].copy()
-    xx = (X * X).sum(axis=1)
-    for _ in range(10):
-        d2 = xx[:, None] - 2.0 * (X @ cent.T) + (cent * cent).sum(axis=1)[None, :]
-        lab = d2.argmin(axis=1)
-        for c in range(k):
-            m = X[lab == c]
-            if len(m):
-                cent[c] = m.mean(axis=0)
-    C = cent.copy()
-    cc = (C * C).sum(axis=1)
-
-    @pandas_udf("int")
-    def _sub(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        d = -2.0 * (X @ C.T) + cc[None, :]
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    return e.withColumn(
-        "_cell",
-        F.concat_ws("#", F.col("_cell").cast("string"), _sub(F.col("_v"))),
     )

@@ -19,15 +19,24 @@ cosine is bit-aligned with the SQL oracles. It runs in two places:
   They remain where the cosine sits inside an equi-join condition (the
   LSH, SemDeDup and index verifies), in ``classify`` and in the IVF/PQ
   rerank — paths the kernel does not cover yet.
+
+The one vector quantizer of the similarity family lives here too, on
+the same fold: ``md5_sample`` picks the cells (IVF centroids, PQ
+codewords, SemDeDup sub-cells) and ``nearest_cells``/``cells_udf``
+assign vectors to them. Sample, assignment and probe order are all
+expressions DuckDB evaluates identically, so every quantized result
+replays bit for bit in SQL.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 #: dot products one kernel tile computes at most: bounds the fold's two
@@ -82,6 +91,57 @@ def _fold_self(C: np.ndarray) -> np.ndarray:
     for j in range(C.shape[1]):
         out += C[:, j] * C[:, j]
     return out
+
+
+def md5_sample(
+    df: DataFrame, n: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> np.ndarray:
+    """``(n, dim)``: the vectors of the ``n`` rows with the smallest
+    ``md5(cast(id as string))``, ties by id — a deterministic,
+    layout-independent sample that SQL replays with the same ``ORDER BY``.
+    It is the quantizer's whole state: row ``c`` is cell (or codeword)
+    ``c``. Collects n × dim doubles."""
+    rows = (
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        )
+        .orderBy(F.md5(F.col("_id").cast("string").cast("binary")), "_id")
+        .limit(n)
+        .collect()
+    )
+    return np.array([r._v for r in rows], dtype=np.float64)
+
+
+def nearest_cells(
+    X: np.ndarray, C: np.ndarray, n_probe: int | None = None
+) -> np.ndarray:
+    """Rows of ``C`` nearest to each row of ``X`` by squared L2, ranked on
+    ``cc − 2·fold(x, c)`` (``||x||²`` is constant per row, so dropped).
+    Without ``n_probe``: the ``(n,)`` nearest cell, ties to the smallest
+    cell (argmin takes the first minimum — the oracle's ``ORDER BY d2,
+    c``). With it: the ``(n, n_probe)`` nearest-first prefix of a stable
+    argsort, same tie order."""
+    d2 = _fold_self(C)[None, :] - 2.0 * _fold_dots(X, C)
+    if n_probe is None:
+        return d2.argmin(axis=1).astype(np.int32)
+    return np.argsort(d2, axis=1, kind="stable")[:, :n_probe].astype(np.int32)
+
+
+def cells_udf(C: np.ndarray, n_probe: int | None = None):
+    """Arrow ``pandas_udf`` applying ``nearest_cells`` to a vector
+    column, one batch at a time: the ``int`` cell, or with ``n_probe``
+    the ``array<int>`` probe list."""
+
+    @pandas_udf("int" if n_probe is None else "array<int>")
+    def _cells(v: pd.Series) -> pd.Series:
+        if len(v) == 0:
+            return pd.Series([], dtype="int32" if n_probe is None else object)
+        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
+        out = nearest_cells(X, C, n_probe)
+        return pd.Series(out if n_probe is None else list(out))
+
+    return _cells
 
 
 def _matrix(vecs, dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:

@@ -116,7 +116,8 @@ def q_sim_topk_quantized(spark, sf_dir):
     ) t WHERE rnk <= 10
     """,
     "similarity search baseline: exact cosine top-10 for 5 query vectors "
-    "(zip_with/aggregate dot products, broadcast queries, window top-k)",
+    "(numpy left-fold cosine kernel in mapInArrow, bit-equal to the JVM "
+    "fold; broadcast queries, window top-k)",
 )
 def q_sim_topk_bruteforce(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
@@ -203,7 +204,8 @@ def q_sim_topk_lsh(spark, sf_dir):
 
 def _pinned_sample_cte(n: int) -> str:
     """The n corpus vectors with smallest md5(cast(vec_id as string)) —
-    DuckDB twin of ``similarity.pinned.md5_sample``: ``(c, cv)``."""
+    DuckDB twin of ``functions.vectors.md5_sample``, the one quantizer's
+    cells: ``(c, cv)``."""
     return f"""
       SELECT c, cv FROM (
         SELECT row_number() OVER (
@@ -215,9 +217,10 @@ def _pinned_sample_cte(n: int) -> str:
 
 
 def _ivf_pinned_oracle(n_cells: int, n_probe: int, k: int) -> str:
-    """Replays ``ivf_topk_pinned`` bit-for-bit: same md5-sample centroids,
-    same ``cc - 2·(x·c)`` fold-exact distance, same ``(d2, cell)``
-    tie-break for assignment and probe selection."""
+    """Replays ``similarity.ivf_topk`` bit-for-bit: same md5-sample
+    centroids, same ``cc - 2·(x·c)`` fold-exact distance
+    (``functions.vectors.nearest_cells``), same ``(d2, cell)`` tie-break
+    for assignment and probe selection."""
     return f"""
     WITH cent AS (
       SELECT c, cv, list_dot_product(cv, cv) AS cc
@@ -266,7 +269,7 @@ def _ivf_pinned_oracle(n_cells: int, n_probe: int, k: int) -> str:
 
 
 def _pq_pinned_ctes(m: int, ksub: int, dim: int = 64) -> str:
-    """Shared CTE chain replaying ``pinned._pq_scored_pinned``: codebook j
+    """Shared CTE chain replaying ``similarity.pq._pq_scored``: codebook j
     = j-th subvector slice of the ksub md5-sample rows; codes by fold-exact
     subspace argmin (ties → smallest code); score = list_dot_product of the
     query against the flattened reconstruction (the exact fold the Spark
@@ -358,18 +361,17 @@ def _pq_rerank_pinned_oracle(m: int, ksub: int, candidates: int, k: int) -> str:
     _pq_pinned_oracle(16, 16, 10),
     "product-quantization ANN (Jégou 2011): m=16 subspace codebooks, "
     "asymmetric-distance scoring over 1-byte codes — the 16×-smaller-scan "
-    "memory path. Registered with the PINNED quantizer (codebooks = the "
-    "md5-sample k-means init state, distances as sequential left-folds) "
-    "so the oracle replays encode + ADC bit-for-bit in SQL; the "
-    "Lloyd-trained production path (similarity/pq.py) is pytest "
-    "recall-asserted",
+    "memory path. Codebooks are the family's one quantizer (md5-sample "
+    "corpus rows, sliced per subspace; distances as sequential "
+    "left-folds), so the oracle replays encode + ADC bit-for-bit in SQL; "
+    "pytest asserts recall against brute force",
 )
 def q_sim_topk_pq(spark, sf_dir):
-    from kenshin_spark.similarity.pinned import pq_topk_pinned
+    from kenshin_spark.similarity.pq import pq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    return pq_topk_pinned(emb, queries, k=10)
+    return pq_topk(emb, queries, k=10)
 
 
 @register(
@@ -381,11 +383,11 @@ def q_sim_topk_pq(spark, sf_dir):
     "both stages SQL-replayable — the oracle reproduces pool AND re-rank",
 )
 def q_sim_topk_pq_rerank(spark, sf_dir):
-    from kenshin_spark.similarity.pinned import pq_rerank_topk_pinned
+    from kenshin_spark.similarity.pq import pq_rerank_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    return pq_rerank_topk_pinned(emb, queries, k=10, candidates=50)
+    return pq_rerank_topk(emb, queries, k=10, candidates=50)
 
 
 @register(
@@ -393,17 +395,16 @@ def q_sim_topk_pq_rerank(spark, sf_dir):
     _ivf_pinned_oracle(8, 3, 10),
     "IVF ANN: coarse-quantizer cells, n_probe=3 cells scanned per query; "
     "at scale cells are Parquet partitions (partition-pruned probes). "
-    "Registered with the PINNED quantizer (centroids = md5-sample rows, "
+    "Centroids are the family's one quantizer (md5-sample rows, "
     "fold-exact distances, (d2, cell) tie-breaks) so assignment AND probe "
-    "selection replay in SQL; the Lloyd-trained path (ivf_topk) keeps the "
-    "pytest recall assertion",
+    "selection replay in SQL; pytest asserts recall against brute force",
 )
 def q_sim_topk_ivf(spark, sf_dir):
-    from kenshin_spark.similarity.pinned import ivf_topk_pinned
+    from kenshin_spark.similarity import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    return ivf_topk_pinned(emb, queries, k=10, n_cells=8, n_probe=3)
+    return ivf_topk(emb, queries, k=10, n_cells=8, n_probe=3)
 
 
 @register(
@@ -471,10 +472,10 @@ def q_sim_topk_ivf_fullprobe(spark, sf_dir):
     "bit-exactly by the oracle",
 )
 def q_emb_ivf_cell_stats(spark, sf_dir):
-    from kenshin_spark.similarity.pinned import ivf_cell_stats_pinned
+    from kenshin_spark.similarity import ivf_cell_stats
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_cell_stats_pinned(emb, n_cells=8)
+    return ivf_cell_stats(emb, n_cells=8)
 
 
 @register(

@@ -7,13 +7,26 @@
   multi-probe (Hamming-1 bit flips of the query's band signatures).
   Hyperplanes are derived deterministically from md5(seed, plane, dim),
   so both engines (and reruns) agree without an RNG.
-- ``ivf_topk``: IVF (inverted-file) ANN — a k-means coarse quantizer
-  partitions the corpus into cells; a query scans only its ``n_probe``
-  nearest cells. The classic 100 TB layout: cells map to Parquet
-  partitions, so a probe is a partition-pruned scan.
+- ``ivf_topk``: IVF (inverted-file) ANN — a coarse quantizer partitions
+  the corpus into cells; a query scans only its ``n_probe`` nearest
+  cells. The classic 100 TB layout: cells map to Parquet partitions, so
+  a probe is a partition-pruned scan. ``ivf_cell_stats`` is its
+  index-health view; ``similarity.pq`` holds the product quantizer.
+
+One quantizer serves IVF, PQ and SemDeDup sub-cells: the cells are the
+``md5(cast(id as string))``-smallest corpus rows
+(``functions.vectors.md5_sample``) and assignment is the fold-exact
+``cc − 2·fold(x, c)`` argmin, ties to the smallest cell
+(``functions.vectors.nearest_cells``). Both are expressions DuckDB
+evaluates identically, so assignment, probe selection and the final
+ranking replay bit for bit in SQL. The state is the k-means
+initialisation: there is no training loop, knob or seed. Lloyd
+iterations would recall more (on the sf0.001 corpus, 8 cells and 3
+probes find 23 of the 50 exact top-10 results; ten iterations find 33),
+but a mean's summation order does not replay across engines.
 
 Vectorization: signature and cell-assignment math is one Arrow
-``pandas_udf`` (numpy matmul per batch) — Spark's higher-order functions
+``pandas_udf`` (numpy per batch) — Spark's higher-order functions
 (``aggregate``/``zip_with``) are CodegenFallback (interpreted), and at
 64 planes x 64 dims the interpreted per-row cost would dominate the job
 at scale. Exact cosines are a sequential left-fold, bit-aligned with
@@ -31,7 +44,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from kenshin_spark.functions.vectors import cosine_pairs, cosine_similarity
+from kenshin_spark.functions.vectors import (
+    cells_udf,
+    cosine_pairs,
+    cosine_similarity,
+    md5_sample,
+)
 
 # Band geometry for hyperplane LSH. At near-dup thresholds (cosine >= 0.8)
 # a band is selective AND recalls well; the synthetic corpus' 0.4
@@ -40,6 +58,19 @@ from kenshin_spark.functions.vectors import cosine_pairs, cosine_similarity
 # per-plane agreement p is 1 - (1 - p^rows_per_band)^bands.
 N_BANDS = 16
 PLANES_PER_BAND = 4
+
+
+def _topk(scored: DataFrame, k: int, score_col: str) -> DataFrame:
+    """``(query_id, neighbor_id, rank, score_col)``: the ``k`` best
+    ``score_col`` per query, ties by neighbor id, NULL scores last."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("long"), score_col)
+    )
 
 
 def brute_force_topk(
@@ -63,14 +94,7 @@ def brute_force_topk(
         embeddings, queries, ("neighbor_id", "query_id"), keep="ne",
         id_col=id_col, vec_col=vec_col, fan_out=False,
     ).select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cosine")
-    )
+    return _topk(scored, k, "cosine")
 
 
 def _hyperplane(dim: int, n_planes: int, seed: str = "ksp") -> list[list[float]]:
@@ -186,102 +210,43 @@ def lsh_topk(
             F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cosine")
-    )
+    return _topk(scored, k, "cosine")
 
 
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
+    n_cells: int = 8,
     n_probe: int = 3,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF ANN top-k: k-means coarse quantizer cells + multi-probe.
+    """IVF ANN top-k over ``n_cells`` md5-sample cells, probing each
+    query's ``n_probe`` nearest.
 
-    Train a seeded k-means over the corpus, assign every corpus vector to
-    its cell, and compare each query only against its ``n_probe`` closest
-    cells' members. At scale: write the corpus partitioned by ``cell`` and
-    the probe becomes partition pruning; the centroid table
-    (n_cells x dim) broadcasts everywhere.
+    Every corpus vector is assigned to its nearest cell once (cells =
+    Parquet partitions at scale, so a probe is partition pruning); the
+    tiny probe side — one row per (query, probed cell) — broadcasts, and
+    the exact cosine verify runs over probed cells only. The quantizer is
+    one small driver collect (``n_cells`` rows); assignment and probe
+    selection are one Arrow ``pandas_udf`` each on the fold kernel, so
+    the SQL oracle replays them bit for bit.
 
-    The quantizer trains driver-side on a bounded, hash-ordered sample
-    (the FAISS approach — IVF quantizers train on a subset regardless of
-    corpus size), so training is one small collect + local Lloyd
-    iterations instead of a multi-job distributed KMeans. Cell assignment
-    is one Arrow ``pandas_udf`` (numpy ``X @ C.T`` per batch) — the
-    former per-row ``aggregate(zip_with(...))`` expressions were
-    CodegenFallback (interpreted) and dominated the whole bench.
-
-    Approximate (recall grows with n_probe); same output schema as
-    ``brute_force_topk``.
+    Approximate (recall grows with n_probe; ``n_probe = n_cells`` equals
+    ``brute_force_topk``); same output schema as ``brute_force_topk``.
     """
-    sample = (
-        embeddings.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        # hash-ordered → uniform, deterministic sample independent of layout
-        .orderBy(F.xxhash64(F.col("_id").cast("string"), F.lit(seed)), F.col("_id"))
-        .limit(4096)
-        .collect()
-    )
-    X = np.array([r._v for r in sample], dtype=np.float64)
-    n_cells = min(n_cells, len(X))
-    rng = np.random.RandomState(seed)
-    cent = X[rng.choice(len(X), size=n_cells, replace=False)].copy()
-    xx = (X * X).sum(axis=1)
-    for _ in range(10):
-        # ||x-c||² = ||x||² - 2x·c + ||c||² (matmul form, BLAS-fast)
-        d2 = xx[:, None] - 2.0 * (X @ cent.T) + (cent * cent).sum(axis=1)[None, :]
-        assign = d2.argmin(axis=1)
-        for c in range(n_cells):
-            members = X[assign == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-    C = cent.copy()  # (n_cells, dim), closure-captured by the udfs
-    cc = (C * C).sum(axis=1)
-
-    def _dists(v: pd.Series) -> np.ndarray:
-        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        # argmin/argsort of squared L2; ||x||² is row-constant, drop it
-        return -2.0 * (X @ C.T) + cc[None, :]
-
-    @pandas_udf("int")
-    def _assign_cell(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        # np.argmin takes the FIRST minimum — deterministic ties
-        return pd.Series(_dists(v).argmin(axis=1).astype("int32"))
-
-    @pandas_udf("array<int>")
-    def _probe_cells(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        order = np.argsort(_dists(v), axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(order.astype("int32")))
-
+    C = md5_sample(embeddings, n_cells, id_col, vec_col)
     assigned = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
-        _assign_cell(F.col(vec_col)).alias("cell"),
+        cells_udf(C)(F.col(vec_col)).alias("cell"),
     )
-
     probe = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        F.explode(_probe_cells(F.col(vec_col))).alias("cell"),
+        F.explode(cells_udf(C, n_probe)(F.col(vec_col))).alias("cell"),
     )
-
     scored = (
         assigned.join(F.broadcast(probe), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -293,13 +258,38 @@ def ivf_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
+    return _topk(scored, k, "cosine")
+
+
+def ivf_cell_stats(
+    embeddings: DataFrame,
+    n_cells: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Index-health view of the IVF coarse quantizer: per-cell
+    population and balance factor — ``(cell, n_vectors, balance)`` where
+    balance = n_vectors · n_cells / N (1.0 = perfectly even; a hot cell
+    >> 1 means probes over-scan and, at 100 TB, a skewed Parquet
+    partition).
+
+    This is the monitoring query run after (re)building an IVF index;
+    assignment is ``ivf_topk``'s, so the SQL oracle replays it bit for
+    bit. One partial-agg shuffle keyed by cell id; output is n_cells
+    rows."""
+    C = md5_sample(embeddings, n_cells, id_col, vec_col)
+    total = embeddings.count()  # scalar agg (oracle's count(*))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cosine")
+        embeddings.select(cells_udf(C)(F.col(vec_col)).alias("cell"))
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n_vectors"))
+        .select(
+            F.col("cell").cast("long").alias("cell"),
+            F.col("n_vectors").cast("long").alias("n_vectors"),
+            F.round(F.col("n_vectors") * float(n_cells) / total, 6).alias(
+                "balance"
+            ),
+        )
     )
 
 

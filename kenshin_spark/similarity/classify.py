@@ -1,9 +1,9 @@
 """Nearest-centroid classification over an embedding column.
 
 The supervised twin of IVF cell assignment: class centroids are exact
-per-label means (deterministic — unlike the RNG-trained IVF quantizer,
-so the whole query oracles in SQL), and every vector is assigned to the
-centroid with the highest cosine.
+per-label means (deterministic, so the whole query oracles in SQL),
+where the IVF quantizer's cells are sampled corpus rows; every vector
+is assigned to the centroid with the highest cosine.
 
 Two-phase scoring, applying the round-1 lesson that per-row
 ``aggregate(zip_with(...))`` higher-order expressions are interpreted

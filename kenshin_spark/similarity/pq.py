@@ -2,76 +2,105 @@
 Quantization for Nearest Neighbor Search").
 
 The vector is split into ``m`` subspaces; each subspace gets its own
-``ksub``-centroid k-means codebook (trained driver-side on a bounded
-hash-ordered sample, exactly like ``ivf_topk``'s coarse quantizer); a
-corpus vector is stored as ``m`` small codes. A query builds an
-``m × ksub`` asymmetric-distance table (one dot product per centroid)
-and scores any corpus vector with ``m`` TABLE LOOKUPS instead of a
-``dim``-length dot product.
+``ksub``-codeword codebook; a corpus vector is stored as ``m`` small
+codes. A query scores any corpus vector against its reconstruction from
+those codes instead of against the raw vector.
 
 Why this is the 100 TB memory path: 64-dim float32 vectors are 256
-bytes; m=16 one-byte codes are 16 — a 16× smaller corpus scan, and the
-scoring cost per candidate drops from 64 multiplies to 16 loads. Encode
+bytes; m=16 one-byte codes are 16 — a 16× smaller corpus scan. Encode
 and score are Arrow ``pandas_udf`` batch ops (numpy); the corpus is
 never shuffled — queries broadcast.
 
-Approximate by construction (codebook quantization error), so there is
-no SQL oracle: the driver records the rows-only check and pytest
-asserts recall overlap against ``brute_force_topk`` plus exactness of
-the table-lookup arithmetic (score ≡ dot(query, reconstructed corpus)).
+The codebooks are the family's one quantizer (``similarity`` module
+docstring): codebook j is the j-th subvector slice of the ``ksub``
+md5-sample rows, encode is the fold-exact ``nearest_cells`` per
+subspace, and the score is a full-dimension left-fold against the
+reconstruction — mathematically the ADC table sum, and bit-equal to
+``list_dot_product(q, flatten(codewords))``. So codes, scores and the
+ranking replay bit for bit in SQL (``sim_topk_pq``,
+``sim_topk_pq_rerank``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-
-def _lloyd(X: np.ndarray, k: int, seed: int, iters: int = 10) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    cent = X[rng.choice(len(X), size=min(k, len(X)), replace=False)].copy()
-    xx = (X * X).sum(axis=1)
-    for _ in range(iters):
-        d2 = xx[:, None] - 2.0 * (X @ cent.T) + (cent * cent).sum(axis=1)[None, :]
-        lab = d2.argmin(axis=1)
-        for c in range(len(cent)):
-            members = X[lab == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-    return cent
+from kenshin_spark.functions.vectors import (
+    cosine_similarity,
+    md5_sample,
+    nearest_cells,
+)
+from kenshin_spark.similarity import _topk
 
 
-def train_codebooks(
+def _pq_scored(
     embeddings: DataFrame,
-    m: int = 16,
-    ksub: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """``(m, ksub, dim//m)`` codebooks from a deterministic sample."""
-    sample = (
-        embeddings.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        .orderBy(F.xxhash64(F.col("_id").cast("string"), F.lit(seed)), "_id")
-        .limit(4096)
-        .collect()
-    )
-    X = np.array([r._v for r in sample], dtype=np.float64)
-    dim = X.shape[1]
+    queries: DataFrame,
+    m: int,
+    ksub: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """All (query, corpus) PQ ADC scores — ``(query_id, neighbor_id,
+    score)`` with score = fold-dot(query, PQ-reconstruction), 6 dp."""
+    S = md5_sample(embeddings, ksub, id_col, vec_col)  # (ksub, dim)
+    dim = S.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    return np.stack(
-        [
-            _lloyd(X[:, j * dsub : (j + 1) * dsub], ksub, seed + j)
-            for j in range(m)
-        ]
+    C = [S[:, j * dsub : (j + 1) * dsub].copy() for j in range(m)]
+
+    @pandas_udf("array<int>")
+    def _encode(v: pd.Series) -> pd.Series:
+        if len(v) == 0:
+            return pd.Series([], dtype=object)
+        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
+        codes = np.stack(
+            [nearest_cells(X[:, j * dsub : (j + 1) * dsub], C[j])
+             for j in range(m)],
+            axis=1,
+        )
+        return pd.Series(list(codes))
+
+    # the query side is tiny by contract: collect it, close over it
+    qrows = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("_qv"),
+    ).collect()
+    qidx = {r.query_id: i for i, r in enumerate(qrows)}
+    Q = np.array([r._qv for r in qrows], dtype=np.float64)
+
+    @pandas_udf("double")
+    def _adc(codes: pd.Series, qid: pd.Series) -> pd.Series:
+        if len(codes) == 0:
+            return pd.Series([], dtype="float64")
+        CO = np.array(list(codes), dtype=np.int64)  # (n, m)
+        # reconstruct, then fold the FULL dim sequentially so the score is
+        # bit-equal to list_dot_product(q, flatten(list(cw ORDER BY j)))
+        R = np.concatenate([C[j][CO[:, j]] for j in range(m)], axis=1)
+        Qv = Q[np.array([qidx[q] for q in qid], dtype=np.int64)]
+        acc = np.zeros(len(CO), dtype=np.float64)
+        for d in range(dim):
+            acc += Qv[:, d] * R[:, d]
+        return pd.Series(acc)
+
+    coded = embeddings.select(
+        F.col(id_col).alias("neighbor_id"),
+        _encode(F.col(vec_col)).alias("_codes"),
+    )
+    q = queries.select(F.col(id_col).alias("query_id"))
+    return (
+        coded.crossJoin(F.broadcast(q))
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(_adc(F.col("_codes"), F.col("query_id")), 6).alias("score"),
+        )
     )
 
 
@@ -81,76 +110,14 @@ def pq_topk(
     k: int = 10,
     m: int = 16,
     ksub: int = 16,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k by inner product: ``(query_id, neighbor_id, rank,
     score)`` where score = dot(query, PQ-reconstructed corpus vector),
-    rounded to 6dp. Ties broken by neighbor id."""
-    C = train_codebooks(embeddings, m, ksub, seed, id_col, vec_col)
-    mm, kk, dsub = C.shape
-    cc = (C * C).sum(axis=2)  # (m, ksub)
-
-    @pandas_udf("array<int>")
-    def _encode(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        codes = np.empty((len(X), mm), dtype=np.int32)
-        for j in range(mm):
-            sub = X[:, j * dsub : (j + 1) * dsub]
-            d2 = -2.0 * (sub @ C[j].T) + cc[j][None, :]
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    # query side is tiny by contract — collect it and close over the
-    # per-query ADC tables (nq, m, ksub)
-    qrows = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    ).collect()
-    qidx = {r.query_id: i for i, r in enumerate(qrows)}
-    Q = np.array([r._qv for r in qrows], dtype=np.float64)
-    # tables[q, j, c] = q_sub_j · centroid_{j,c}
-    tables = np.stack(
-        [Q[:, j * dsub : (j + 1) * dsub] @ C[j].T for j in range(mm)], axis=1
-    )
-
-    @pandas_udf("double")
-    def _adc(codes: pd.Series, qid: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype="float64")
-        CO = np.array(list(codes), dtype=np.int64)  # (n, m)
-        qi = np.array([qidx[q] for q in qid], dtype=np.int64)
-        # gather: score_i = Σ_j tables[qi_i, j, CO_i_j]
-        T = tables[qi]  # (n, m, ksub)
-        g = np.take_along_axis(T, CO[:, :, None], axis=2)[:, :, 0]
-        return pd.Series(g.sum(axis=1))
-
-    coded = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        _encode(F.col(vec_col)).alias("_codes"),
-    )
-    q = queries.select(F.col(id_col).alias("query_id"))
-    scored = (
-        coded.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_adc(F.col("_codes"), F.col("query_id")), 6).alias(
-                "score"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "score")
+    rounded to 6 dp. Ties broken by neighbor id."""
+    return _topk(
+        _pq_scored(embeddings, queries, m, ksub, id_col, vec_col), k, "score"
     )
 
 
@@ -158,26 +125,22 @@ def pq_rerank_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    candidates: int = 100,
+    candidates: int = 50,
     m: int = 16,
     ksub: int = 16,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-stage retrieval (the standard ANN serving stack): PQ ADC
     recalls a ``candidates``-sized pool per query from the compressed
-    codes, then the EXACT cosine re-ranks just that pool against the raw
-    vectors. Output schema matches ``brute_force_topk`` —
-    ``(query_id, neighbor_id, rank, cosine)`` — so it's a drop-in,
-    with the full-corpus exact scan replaced by |candidates| exact dots
-    per query. Recall approaches exact as ``candidates`` grows; the
-    compressed first pass is the only corpus-wide read."""
-    from kenshin_spark.functions.vectors import cosine_similarity
-
+    codes (the only corpus-wide read), then the EXACT cosine re-ranks
+    just that pool against the raw vectors. Output schema matches
+    ``brute_force_topk`` — ``(query_id, neighbor_id, rank, cosine)`` —
+    so it's a drop-in, with the full-corpus exact scan replaced by
+    |candidates| exact dots per query. Recall approaches exact as
+    ``candidates`` grows."""
     pool = pq_topk(
-        embeddings, queries, k=candidates, m=m, ksub=ksub, seed=seed,
-        id_col=id_col, vec_col=vec_col,
+        embeddings, queries, candidates, m, ksub, id_col, vec_col
     ).select("query_id", "neighbor_id")
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
@@ -185,21 +148,13 @@ def pq_rerank_topk(
     c = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
-    scored = (
-        c.join(F.broadcast(pool.join(F.broadcast(q), "query_id")), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("_qv"), F.col("_cv")), 6
-            ).alias("cosine"),
-        )
+    scored = c.join(
+        F.broadcast(pool.join(F.broadcast(q), "query_id")), "neighbor_id"
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias(
+            "cosine"
+        ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "cosine")
-    )
+    return _topk(scored, k, "cosine")

@@ -19,9 +19,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from kenshin_spark.similarity import _topk
 
 
 def _quantize_np(X: np.ndarray) -> np.ndarray:
@@ -91,11 +93,4 @@ def quantized_topk(
         )
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long"), "dot")
-    )
+    return _topk(scored, k, "dot")

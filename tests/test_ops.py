@@ -1827,9 +1827,9 @@ class TestSemanticDedup:
             assert full[(r["vec_a"], r["vec_b"])] == r["cosine"]
 
     def test_subcells_subset_of_label_cells(self, spark):
-        """The k-means sub-cell refinement (the 100 TB path where cell
-        count scales with n, not |labels|) may only shrink the pair set
-        further — and must keep cosines identical."""
+        """The md5-sample sub-cell refinement (the 100 TB path where
+        cell count scales with n, not |labels|) may only shrink the pair
+        set further — and must keep cosines identical."""
         from kenshin_spark.dedup.semantic import semantic_neardup_pairs
         from kenshin_spark.io import load_table
 
@@ -1847,14 +1847,15 @@ class TestSemanticDedup:
 class TestPqTopk:
     def test_pq_recall_and_adc_exactness(self, spark):
         """PQ top-5 should mostly land in the exact top-10 (recall), and
-        the ADC table-lookup score must EQUAL dot(query, reconstructed
-        corpus vector) — the lookup is an exact evaluation of an
-        approximate representation."""
+        the ADC score must EQUAL dot(query, reconstructed corpus vector)
+        — the lookup is an exact evaluation of an approximate
+        representation."""
         import numpy as np
 
         from kenshin_spark.io import load_table
         from kenshin_spark.similarity import brute_force_topk
-        from kenshin_spark.similarity.pq import pq_topk, train_codebooks
+        from kenshin_spark.functions.vectors import md5_sample
+        from kenshin_spark.similarity.pq import pq_topk
 
         emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
         q = emb.where("vec_id < 5")
@@ -1869,9 +1870,11 @@ class TestPqTopk:
         )
         assert hits >= 13  # >= ~52% of PQ top-5 in exact top-10
 
-        # ADC exactness: recompute one score from the codebooks
-        C = train_codebooks(emb, 16, 16)
-        m, ksub, dsub = C.shape
+        # ADC exactness: recompute one score from the codebooks, the
+        # 4-dim slices of the 16 md5-sample rows
+        S = md5_sample(emb, 16)
+        m, dsub = 16, S.shape[1] // 16
+        C = [S[:, j * dsub:(j + 1) * dsub] for j in range(m)]
         rows = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
                 for r in emb.where("vec_id < 200").collect()}
         r0 = next(r for r in got if r["neighbor_id"] in rows)
@@ -1997,34 +2000,6 @@ class TestLeakageSafeSplit:
         again = {r["doc_id"]: r["split"]
                  for r in leakage_safe_split(docs, pairs, 0.2).collect()}
         assert again == side
-
-
-class TestPcaProjection:
-    def test_variance_ordering_orthonormality_determinism(self, spark):
-        import numpy as np
-
-        from kenshin_spark.io import load_table
-        from kenshin_spark.similarity.pca import pca_project, train_pca
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        mean, comps, ev = train_pca(emb, k=8)
-        # components orthonormal, eigenvalues descending
-        assert np.allclose(comps @ comps.T, np.eye(8), atol=1e-9)
-        assert all(ev[i] >= ev[i + 1] for i in range(7))
-        # deterministic retrain (sign convention included)
-        m2, c2, e2 = train_pca(emb, k=8)
-        assert np.array_equal(comps, c2) and np.array_equal(mean, m2)
-
-        out = pca_project(emb, k=8).collect()
-        P = np.array([r["projection"] for r in out])
-        assert P.shape[1] == 8
-        # projected variance per axis tracks the eigenvalues' ORDER
-        var = P.var(axis=0, ddof=1)
-        assert all(var[i] >= var[i + 1] * 0.5 for i in range(7))
-        # projection really is (x - mean) @ comps.T for a sample row
-        r0 = out[0]
-        x = np.array(r0["embedding"], dtype=np.float64)
-        assert np.allclose((x - mean) @ comps.T, r0["projection"], atol=1e-9)
 
 
 class TestTokenDrift:
@@ -2344,10 +2319,10 @@ class TestRenderChain:
             assert set(out.columns) >= {"metric", "ts"}
 
 
-class TestPinnedAnn:
-    """The driver-oracled pinned-quantizer ANN variants: sane recall (the
-    quantizer is the k-means INIT state, so below the Lloyd-trained paths
-    but far above random), and the two-stage re-rank recovers most of it.
+class TestAnnRecall:
+    """The registry's IVF and PQ shapes at top-10: sane recall (the
+    quantizer is the k-means INIT state, so below a Lloyd-trained one but
+    far above random), and the two-stage re-rank recovers most of it.
     Cross-engine bit-equality is covered by test_queries_oracle."""
 
     def _exact_sets(self, spark):
@@ -2364,23 +2339,20 @@ class TestPinnedAnn:
     def _hits(self, rows, eby):
         return sum(1 for r in rows if r["neighbor_id"] in eby[r["query_id"]])
 
-    def test_pinned_ivf_recall(self, spark):
-        from kenshin_spark.similarity.pinned import ivf_topk_pinned
+    def test_ivf_recall(self, spark):
+        from kenshin_spark.similarity import ivf_topk
 
         emb, q, eby = self._exact_sets(spark)
-        rows = ivf_topk_pinned(emb, q, k=10, n_cells=8, n_probe=3).collect()
+        rows = ivf_topk(emb, q, k=10, n_cells=8, n_probe=3).collect()
         assert len(rows) == 50
         assert self._hits(rows, eby) >= 20  # measured 23/50 (3 of 8 cells)
 
-    def test_pinned_pq_and_rerank_recall(self, spark):
-        from kenshin_spark.similarity.pinned import (
-            pq_rerank_topk_pinned,
-            pq_topk_pinned,
-        )
+    def test_pq_and_rerank_recall(self, spark):
+        from kenshin_spark.similarity.pq import pq_rerank_topk, pq_topk
 
         emb, q, eby = self._exact_sets(spark)
-        raw = pq_topk_pinned(emb, q, k=10).collect()
-        rer = pq_rerank_topk_pinned(emb, q, k=10, candidates=50).collect()
+        raw = pq_topk(emb, q, k=10).collect()
+        rer = pq_rerank_topk(emb, q, k=10, candidates=50).collect()
         assert len(raw) == 50 and len(rer) == 50
         assert self._hits(raw, eby) >= 16          # measured 20/50
         assert self._hits(rer, eby) >= 35          # measured 39/50

@@ -1,11 +1,17 @@
-"""The exact-cosine kernel against the JVM fold it replaces.
+"""The exact-cosine kernel against the JVM fold it replaces, and the
+quantizer built on the same fold.
 
 ``functions.vectors.cosine_pairs`` scores pairs with the numpy left-fold
 (``_fold_dots``/``_fold_self``); ``dot_product``/``l2_norm``/
 ``cosine_similarity`` are the same fold as JVM higher-order functions,
 the arithmetic the DuckDB oracles replay. These tests pin that the two
 agree bit for bit, at the threshold boundary too, and the edge cases:
-zero and NULL vectors, and vectors of different lengths."""
+zero and NULL vectors, and vectors of different lengths. The quantizer
+tests pin ``md5_sample``'s order, ``nearest_cells``' tie rule and probe
+order, and that IVF and SemDeDup sub-cells only ever prune exact
+results."""
+
+import hashlib
 
 import numpy as np
 import pytest
@@ -17,26 +23,33 @@ from kenshin_spark.dedup.embedding import (
     embedding_neardup_pairs,
 )
 from kenshin_spark.functions import vectors
+from kenshin_spark.dedup.semantic import semantic_neardup_pairs
 from kenshin_spark.functions.vectors import (
     _fold_dots,
     _fold_self,
+    cells_udf,
     cosine_pairs,
     cosine_similarity,
     dot_product,
     l2_norm,
+    md5_sample,
+    nearest_cells,
 )
-from kenshin_spark.similarity import brute_force_topk
+from kenshin_spark.similarity import brute_force_topk, ivf_topk
 
 T = 0.4
 DIM = 64
 
 
-def corpus(n=300, seed=7):
-    """Clustered vectors, so pairs land on both sides of ``T``."""
+def corpus(n=300, seed=7, labels=False):
+    """Clustered vectors, so pairs land on both sides of ``T``; with
+    ``labels`` also each vector's cluster."""
     rng = np.random.default_rng(seed)
     centers = rng.standard_normal((12, DIM))
-    X = centers[rng.integers(0, 12, n)] + 1.3 * rng.standard_normal((n, DIM))
-    return X / np.linalg.norm(X, axis=1, keepdims=True)
+    y = rng.integers(0, 12, n)
+    X = centers[y] + 1.3 * rng.standard_normal((n, DIM))
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    return (X, y) if labels else X
 
 
 def boundary_pairs(n=40, seed=11):
@@ -208,3 +221,83 @@ def test_vectors_of_different_lengths_raise(spark):
         cross_neardup_pairs(df, ok, threshold=T).collect()
     with pytest.raises(Exception, match="differ in length"):
         brute_force_topk(df, ok.where("vec_id < 2"), k=3).collect()
+
+
+def md5_order(ids):
+    """Positions of ``ids`` in ``ORDER BY md5(cast(id as string)), id``."""
+    key = [(hashlib.md5(str(i).encode()).hexdigest(), i) for i in ids]
+    return sorted(range(len(ids)), key=key.__getitem__)
+
+
+def test_md5_sample_order_and_ties(spark):
+    X = corpus(40)
+    ids = list(range(40)) + [7]  # id 7 twice: its md5 ties, then its id
+    X = np.vstack([X, X[7]])
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in zip(ids, X)],
+        "vec_id long, embedding array<float>",
+    )
+    order = md5_order(ids)
+    want = X.astype(np.float32).astype(np.float64)[order]
+    for n in (1, 8, 41):
+        assert np.array_equal(md5_sample(df, n), want[:n])
+    # layout-independent
+    assert np.array_equal(md5_sample(df.repartition(3), 41), want)
+    dup = [p for p, i in enumerate(order) if ids[i] == 7]
+    assert dup[1] == dup[0] + 1  # the tied rows sit together
+
+
+def test_nearest_cells_is_the_fold_argmin_ties_to_smallest_cell(spark):
+    X = corpus(200)
+    C = X[[3, 50, 3, 120, 50]]  # cells 0/2 and 1/4 are identical
+    d2 = _fold_self(C)[None, :] - 2.0 * _fold_dots(X, C)
+    want = [sorted(range(len(C)), key=lambda c: (d2[i, c], c))
+            for i in range(len(X))]
+    assert nearest_cells(X, C).tolist() == [w[0] for w in want]
+    assert nearest_cells(X, C, 3).tolist() == [w[:3] for w in want]
+    assert nearest_cells(X, C, len(C)).tolist() == want
+    got = nearest_cells(X, C)
+    assert not {2, 4} & set(got.tolist())  # a tie never picks the copy
+    assert {0, 1} <= set(got.tolist())
+    # the Arrow UDF runs the same helper on the executors
+    df = frame(spark, X)
+    rows = df.select(
+        "vec_id",
+        cells_udf(C)("embedding").alias("cell"),
+        cells_udf(C, 3)("embedding").alias("probe"),
+    ).orderBy("vec_id").collect()
+    assert [r.cell for r in rows] == [w[0] for w in want]
+    assert [r.probe for r in rows] == [w[:3] for w in want]
+
+
+def test_ivf_full_probe_equals_brute_force(spark):
+    df = frame(spark, corpus())
+    queries = df.where("vec_id < 7")
+    exact = sorted(map(tuple, brute_force_topk(df, queries, k=10).collect()))
+    full = ivf_topk(df, queries, k=10, n_cells=8, n_probe=8).collect()
+    assert sorted(map(tuple, full)) == exact
+    pruned = ivf_topk(df, queries, k=10, n_cells=8, n_probe=2).collect()
+    assert len(pruned) == 70
+    assert {(r[0], r[1]) for r in pruned} != {(r[0], r[1]) for r in exact}
+
+
+def test_semantic_subcells_are_a_subset_of_label_cells(spark):
+    X, y = corpus(300, labels=True)
+    df = spark.createDataFrame(
+        [(i, int(c), [float(x) for x in v]) for i, (c, v) in enumerate(zip(y, X))],
+        "vec_id long, label int, embedding array<double>",
+    )
+
+    def pairs_of(**kw):
+        out = semantic_neardup_pairs(df, threshold=T, **kw).collect()
+        return {(r.vec_a, r.vec_b): (r.cluster, r.cosine) for r in out}
+
+    label = pairs_of()
+    sub = pairs_of(subcells=4)
+    assert 0 < len(sub) < len(label)
+    C = md5_sample(df, 4)
+    cell = nearest_cells(X, C)
+    for (a, b), (cluster, cos) in sub.items():
+        assert label[(a, b)][1] == cos
+        assert cell[a] == cell[b]
+        assert cluster == f"{label[(a, b)][0]}#{cell[a]}"
