@@ -1,12 +1,14 @@
-"""Embedding-cosine near-duplicate pairs.
+"""Embedding-cosine near-duplicate pairs, every cosine on the one numpy
+fold (``functions.vectors``).
 
-``embedding_neardup_pairs`` scores all n²/2 pairs exactly, on the numpy
-fold kernel (``functions.vectors.cosine_pairs``): the corpus is
-broadcast once and the streamed copy is scored tile by tile in
-``mapInArrow``, the upper triangle only. It is the correct baseline and
-the ground truth the LSH-bucketed variant below is measured against;
-that variant bounds candidates with random hyperplanes at scale and
-verifies them with the same cosine.
+``embedding_neardup_pairs`` scores all n²/2 pairs exactly
+(``cosine_pairs``): the corpus is broadcast once and the streamed copy
+is scored tile by tile in ``mapInArrow``, the upper triangle only. It is
+the correct baseline and the ground truth the LSH-bucketed variant below
+is measured against. That variant bounds candidates with random
+hyperplanes and streams the narrow candidate pairs through
+``score_pairs`` against one broadcast of the corpus vectors; the index
+variant does the same with the new batch as the broadcast side.
 """
 
 from __future__ import annotations
@@ -16,17 +18,9 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kenshin_spark.functions.vectors import cosine_pairs, dot_product, l2_norm
+from kenshin_spark.functions.vectors import _rounded, cosine_pairs, score_pairs
 
 _LOG = logging.getLogger(__name__)
-
-
-def _rounded(pairs: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
-    """The kernel's raw cosines rounded to 6 dp in the JVM and filtered
-    — the oracle's ``round(…, 6) >= threshold``."""
-    return pairs.select(a, b, F.round("cosine", 6).alias("cosine")).where(
-        F.col("cosine") >= threshold
-    )
 
 
 def embedding_neardup_pairs(
@@ -50,7 +44,7 @@ def embedding_neardup_pairs(
         embeddings, embeddings, ("vec_a", "vec_b"), keep="lt",
         threshold=threshold, id_col=id_col, vec_col=vec_col,
     )
-    return _rounded(pairs, "vec_a", "vec_b", threshold)
+    return _rounded(pairs, ["vec_a", "vec_b"], threshold)
 
 
 def density_scaled_banding(
@@ -165,9 +159,10 @@ def embedding_neardup_pairs_lsh(
 
     Plan shape mirrors dedup/minhash.py: the corpus explodes to narrow
     ``(id, band, sig)`` rows (map-local), the self-join is per-(band,sig)
-    bucket, only distinct candidate id-pairs are shuffled, and the verify
-    step broadcasts the candidate set into two corpus scans. The corpus
-    vectors themselves are shuffled only keyed by the candidate pairs.
+    bucket, and only distinct candidate id-pairs are shuffled. The verify
+    streams those narrow pairs through the fold kernel
+    (``functions.vectors.score_pairs``) against one broadcast of the
+    corpus vectors and their norms, so the vectors are never shuffled.
 
     ``auto_density`` (ON by default since r11 — the sf1 soak showed the
     fixed floor goes silently superlinear on dense corpora) picks
@@ -248,38 +243,11 @@ def embedding_neardup_pairs_lsh(
         .select(F.col("a._id").alias("vec_a"), F.col("b._id").alias("vec_b"))
         .distinct()
     )
-    # verify: enrich the narrow candidate pairs with each side's vector in
-    # a two-join CHAIN, leaving build-side choice to AQE — locally the
-    # corpus side broadcasts (512 KB), at 100 TB AQE falls back to
-    # shuffle joins co-partitioned on the id. (The alternative — forcing
-    # broadcast of the candidate set into two corpus scans and re-joining
-    # the two halves per pair — shuffles the wide vector rows twice and
-    # measured 2.4x slower at sf0.1.)
-    tagged = emb.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
+    pairs = score_pairs(
+        cand, embeddings, ("vec_a", "vec_b"), threshold,
+        id_col=id_col, vec_col=vec_col,
     )
-    enriched_a = cand.join(tagged, F.col("vec_a") == F.col("_id")).select(
-        "vec_a", "vec_b", F.col("_v").alias("_va"), F.col("_n").alias("_na")
-    )
-    side_b = tagged.select(
-        F.col("_id").alias("_idb"),
-        F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    denom = F.col("_na") * F.col("_nb")
-    cosine = F.when(denom != 0, dot_product(F.col("_va"), F.col("_vb")) / denom)
-    # prefilter in the join condition (the test cosine_pairs applies):
-    # sub-threshold candidates die after one dot product
-    prefilter = dot_product(F.col("_va"), F.col("_vb")) >= (
-        F.lit(threshold - 5e-7) * denom
-    )
-    return (
-        enriched_a.join(side_b, (F.col("vec_b") == F.col("_idb")) & prefilter)
-        .select("vec_a", "vec_b", F.round(cosine, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    return _rounded(pairs, ["vec_a", "vec_b"], threshold)
 
 
 def cross_neardup_pairs(
@@ -301,7 +269,7 @@ def cross_neardup_pairs(
         left, right, ("left_id", "right_id"), threshold=threshold,
         id_col=id_col, vec_col=vec_col,
     )
-    return _rounded(pairs, "left_id", "right_id", threshold)
+    return _rounded(pairs, ["left_id", "right_id"], threshold)
 
 
 def hyperplane_band_index(
@@ -357,8 +325,10 @@ def cross_neardup_against_index(
     persisted band index to the bucket join, and corpus VECTORS are read
     only for docs that actually collide (semi-join bounded). Per-batch
     cost: O(|new| + |collisions|), independent of corpus size outside
-    the index join. The exact-cosine verify keeps the same expression
-    shape as every other embedding query, so thresholds agree."""
+    the index join. The colliding corpus rows stream with their vectors
+    through the fold kernel against the broadcast new batch
+    (``functions.vectors.score_pairs``), the exact cosine of every other
+    embedding query, so thresholds agree."""
     from kenshin_spark.similarity import (
         N_BANDS,
         PLANES_PER_BAND,
@@ -390,26 +360,14 @@ def cross_neardup_against_index(
         .select(F.col(id_col).alias("corpus_id"), F.col("_nid").alias("new_id"))
         .distinct()
     )
-    ctag = corpus.select(
-        F.col(id_col).alias("_cid"),
-        F.col(vec_col).alias("_va"),
-        l2_norm(F.col(vec_col)).alias("_na"),
+    rows = cand.join(
+        corpus.select(
+            F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("_va")
+        ),
+        "corpus_id",
     )
-    ntag = new.select(
-        F.col(id_col).alias("_nid2"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(F.col(vec_col)).alias("_nb"),
+    pairs = score_pairs(
+        rows, new, ("corpus_id", "new_id"), threshold, vec="_va",
+        id_col=id_col, vec_col=vec_col,
     )
-    enriched = cand.join(ctag, F.col("corpus_id") == F.col("_cid"))
-    denom = F.col("_na") * F.col("_nb")
-    cosine = F.when(denom != 0, dot_product(F.col("_va"), F.col("_vb")) / denom)
-    prefilter = dot_product(F.col("_va"), F.col("_vb")) >= (
-        F.lit(threshold - 5e-7) * denom
-    )
-    return (
-        enriched.join(ntag, (F.col("new_id") == F.col("_nid2")) & prefilter)
-        .select(
-            "corpus_id", "new_id", F.round(cosine, 6).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    return _rounded(pairs, ["corpus_id", "new_id"], threshold)

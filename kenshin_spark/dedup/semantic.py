@@ -20,13 +20,13 @@ subset of the exhaustive ``embedding_neardup_pairs`` set at the same
 threshold (asserted in tests), and the ``subcells`` refinement is a
 further subset of the label-cell set.
 
-Plan shape (the part that scales): norms are computed ONCE per vector
-before the pair join, the streamed side is repartitioned so the
-broadcast-hash join fans out across all cores (a join keyed only on
-~10 cell ids would otherwise collapse to ~10 tasks), and the threshold
-prefilter sits INSIDE the join condition so a non-survivor pair dies
-after one dot product — the same three moves measured on
-``dedup/embedding.py``.
+Plan shape (the part that scales): the pair join carries only narrow
+``(id, cell)`` rows — the build side broadcasts, and the streamed side
+is repartitioned so the join fans out across all cores (a join keyed
+only on ~10 cell ids would otherwise collapse to ~10 tasks). The
+within-cell pairs then stream through the one fold kernel
+(``functions.vectors.score_pairs``) against a single broadcast of the
+vectors and their norms, so no vector crosses the join.
 """
 
 from __future__ import annotations
@@ -35,10 +35,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kenshin_spark.functions.vectors import (
+    _rounded,
     cells_udf,
-    dot_product,
-    l2_norm,
     md5_sample,
+    score_pairs,
 )
 from kenshin_spark.similarity.classify import nearest_centroid
 
@@ -49,68 +49,46 @@ def semantic_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     group_col: str = "label",
-    ndigits: int = 6,
     subcells: int | None = None,
 ) -> DataFrame:
     """``(cluster, vec_a, vec_b, cosine)`` for within-cell pairs with
-    cosine ≥ threshold. The pair join is keyed by cell — at scale each
-    cell maps to a partition, so the verify never crosses partitions.
+    cosine ≥ threshold, rounded to 6 dp. The pair join is keyed by cell
+    — at scale each cell maps to a partition, so the verify never
+    crosses partitions.
 
     ``subcells=m`` splits every label cell into ≤m sub-cells before
     pairing — the 100 TB path where Σ|cell|² must shrink with k, not with
     |labels|. A vector's sub-cell is its nearest of the ``m`` md5-sample
     corpus rows, ``ivf_topk``'s quantizer and assignment, scoped within
-    its label cell (``_cell`` becomes ``"<label>#<sub>"``); the split
-    adds no shuffle.
+    its label cell (``cluster`` becomes ``"<label>#<sub>"``).
     """
-    spark = embeddings.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    assign = nearest_centroid(embeddings, group_col, vec_col, id_col).select(
-        id_col, "pred_label"
-    )
-    e = embeddings.join(assign, id_col).select(
-        F.col(id_col).alias("_id"),
-        F.col("pred_label").alias("_cell"),
-        F.col(vec_col).alias("_v"),
+    par = embeddings.sparkSession.sparkContext.defaultParallelism
+    cells = nearest_centroid(embeddings, group_col, vec_col, id_col).select(
+        F.col(id_col).alias("_id"), F.col("pred_label").alias("_cell")
     )
     if subcells is not None and subcells > 1:
         sub = cells_udf(md5_sample(embeddings, subcells, id_col, vec_col))
-        e = e.withColumn(
-            "_cell",
-            F.concat_ws("#", F.col("_cell").cast("string"), sub(F.col("_v"))),
+        cells = cells.join(
+            embeddings.select(
+                F.col(id_col).alias("_id"), sub(F.col(vec_col)).alias("_sub")
+            ),
+            "_id",
+        ).select(
+            "_id",
+            F.concat_ws("#", F.col("_cell").cast("string"), "_sub").alias(
+                "_cell"
+            ),
         )
-    e = e.withColumn("_n", l2_norm(F.col("_v")))
-    a = e.select(
-        F.col("_id").alias("vec_a"),
-        F.col("_cell").alias("_cella"),
-        F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"),
+    a = cells.select(
+        F.col("_id").alias("vec_a"), F.col("_cell").alias("cluster")
     ).repartition(par)
-    b = e.select(
-        F.col("_id").alias("vec_b"),
-        F.col("_cell").alias("_cellb"),
-        F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
+    b = cells.select(F.col("_id").alias("vec_b"), F.col("_cell").alias("_cellb"))
+    pairs = a.join(
+        F.broadcast(b),
+        (F.col("cluster") == F.col("_cellb")) & (F.col("vec_a") < F.col("vec_b")),
+    ).select("cluster", "vec_a", "vec_b")
+    scored = score_pairs(
+        pairs, embeddings, ("vec_a", "vec_b"), threshold,
+        id_col=id_col, vec_col=vec_col,
     )
-    denom = F.col("_na") * F.col("_nb")
-    cosine = F.when(denom != 0, dot_product(F.col("_va"), F.col("_vb")) / denom)
-    # prefilter INSIDE the join condition: round(c, 6) >= t ⟺
-    # c >= t - 5e-7; boundary cases re-checked by the exact rounded filter
-    prefilter = dot_product(F.col("_va"), F.col("_vb")) >= (
-        F.lit(threshold - 5 * 10.0 ** -(ndigits + 1)) * denom
-    )
-    return (
-        a.join(
-            F.broadcast(b),
-            (F.col("_cella") == F.col("_cellb"))
-            & (F.col("vec_a") < F.col("vec_b"))
-            & prefilter,
-        )
-        .select(
-            F.col("_cella").alias("cluster"),
-            "vec_a",
-            "vec_b",
-            F.round(cosine, ndigits).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    return _rounded(scored, ["cluster", "vec_a", "vec_b"], threshold)

@@ -1,10 +1,7 @@
 from kenshin_spark.functions.hashing import fnv1a_32, fnv1a_udf, shard_of
-from kenshin_spark.functions.vectors import cosine_similarity, dot_product
 
 __all__ = [
     "fnv1a_32",
     "fnv1a_udf",
     "shard_of",
-    "cosine_similarity",
-    "dot_product",
 ]

@@ -1,31 +1,30 @@
-"""Vector math over ``array<float|double>`` columns: one arithmetic,
-two engines.
+"""Vector math over ``array<float|double>`` columns: the package's one
+dot-product arithmetic.
 
-Every dot product here is the sequential left-fold
+Every dot product is the sequential left-fold
 ``((0 + x0*y0) + x1*y1) + ...`` in float64, in dimension order — the
 summation DuckDB's ``list_dot_product`` uses too, so a 6-dp rounded
-cosine is bit-aligned with the SQL oracles. It runs in two places:
+cosine is bit-aligned with the SQL oracles. numpy runs it as one
+elementwise multiply and one add per dimension over a whole tile
+(``_fold_dots`` for a rows × cols tile, ``_fold_rows`` row by row). Each
+step rounds like the fold: no BLAS reordering, no FMA fusion. Three
+entry points carry it into Spark:
 
-- ``_fold_dots``/``_fold_self``: numpy, one elementwise multiply and one
-  add per dimension over a whole (rows × cols) tile. Each step rounds
-  like the fold (no BLAS reordering, no FMA fusion), so the result equals
-  the JVM functions below bit for bit. ``cosine_pairs`` runs exact
-  cosine joins on it in ``mapInArrow``: the all-pairs and cross near-dup
-  and brute-force top-k (``dedup/embedding.py``,
-  ``similarity.brute_force_topk``).
-- ``dot_product``/``l2_norm``/``cosine_similarity``: ``F.zip_with`` +
-  ``F.aggregate``. No Python crosses the wire, but Catalyst evaluates
-  higher-order functions as CodegenFallback (interpreted), pair by pair.
-  They remain where the cosine sits inside an equi-join condition (the
-  LSH, SemDeDup and index verifies), in ``classify`` and in the IVF/PQ
-  rerank — paths the kernel does not cover yet.
+- ``cosine_pairs``: every pair of a streamed × a broadcast side, in
+  ``mapInArrow`` — the exact all-pairs and cross near-dup, brute-force
+  top-k and range search;
+- ``score_pairs``: given pairs against a broadcast side, in
+  ``mapInArrow`` — the LSH, SemDeDup and index verifies and the LSH,
+  IVF and PQ re-rank top-k;
+- ``fold_norm``: a vector column's norm, as an Arrow UDF.
 
-The one vector quantizer of the similarity family lives here too, on
-the same fold: ``md5_sample`` picks the cells (IVF centroids, PQ
-codewords, SemDeDup sub-cells) and ``nearest_cells``/``cells_udf``
-assign vectors to them. Sample, assignment and probe order are all
-expressions DuckDB evaluates identically, so every quantized result
-replays bit for bit in SQL.
+``similarity.classify`` takes its argmax over ``_fold_dots`` against the
+label centroids. The one vector quantizer of the similarity family
+lives here too, on the same fold: ``md5_sample`` picks the cells (IVF
+centroids, PQ codewords, SemDeDup sub-cells) and
+``nearest_cells``/``cells_udf`` assign vectors to them. Sample,
+assignment and probe order are all expressions DuckDB evaluates
+identically, so every quantized result replays bit for bit in SQL.
 """
 
 from __future__ import annotations
@@ -34,9 +33,9 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 #: dot products one kernel tile computes at most: bounds the fold's two
@@ -47,36 +46,11 @@ TILE = 1 << 21
 SELF_ROWS = 64
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def dot_product(a: Column | str, b: Column | str) -> Column:
-    """Σ aᵢ·bᵢ via zip_with + aggregate (no UDF)."""
-    prods = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            _c(a), F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """cos(a, b) = a·b / (|a||b|); NULL if either norm is zero."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0, dot_product(a, b) / denom)
-
-
 def _fold_dots(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, dim) × (k, dim) → (n, k) dot products, each value produced by
     the sequential left-fold ``acc = (acc + x_j * c_j)`` in dim order —
-    bit-identical to ``dot_product`` and DuckDB ``list_dot_product`` (no
-    BLAS reordering, no FMA fusion; numpy elementwise ops round every
-    step like the fold)."""
+    bit-identical to DuckDB ``list_dot_product`` (no BLAS reordering, no
+    FMA fusion; numpy elementwise ops round every step like the fold)."""
     out = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
     step = np.empty_like(out)
     for j in range(X.shape[1]):
@@ -85,12 +59,17 @@ def _fold_dots(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     return out
 
 
+def _fold_rows(X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """(n, dim) · (n, dim) → (n,) row-wise dots via the same left-fold."""
+    out = np.zeros(X.shape[0], dtype=np.float64)
+    for j in range(X.shape[1]):
+        out += X[:, j] * Y[:, j]
+    return out
+
+
 def _fold_self(C: np.ndarray) -> np.ndarray:
     """(k, dim) → (k,) self-dots via the same left-fold."""
-    out = np.zeros(C.shape[0], dtype=np.float64)
-    for j in range(C.shape[1]):
-        out += C[:, j] * C[:, j]
-    return out
+    return _fold_rows(C, C)
 
 
 def md5_sample(
@@ -196,6 +175,21 @@ def _score_tile(a, X, na, oka, b, C, nb, okb, keep, low):
     return i, j, cos, good
 
 
+def _ship(small: DataFrame, id_col: str, vec_col: str):
+    """``small`` read to the driver once (``toArrow``, the round-trip a
+    broadcast join makes) and broadcast as ``(ids, C, norms, ok, dim)``:
+    its ids sorted, its vectors with their fold norms and whole-row mask,
+    and their length (None when no vector is non-NULL). Raises
+    ``ValueError`` when the non-NULL vectors differ in length."""
+    tab = small.select(id_col, vec_col).toArrow()
+    tab = tab.take(pc.sort_indices(tab.column(0)))
+    C, ok = _matrix(tab.column(1))
+    dim = C.shape[1] if tab.column(1).null_count < len(tab) else None
+    return small.sparkSession.sparkContext.broadcast(
+        (tab.column(0).combine_chunks(), C, np.sqrt(_fold_self(C)), ok, dim)
+    )
+
+
 def cosine_pairs(
     streamed: DataFrame,
     small: DataFrame,
@@ -208,42 +202,30 @@ def cosine_pairs(
 ) -> DataFrame:
     """``(names[0], names[1], "cosine")``: the exact cosine of
     ``streamed`` × ``small`` pairs on the numpy fold, unrounded and equal
-    bit for bit to ``cosine_similarity`` — NULL where a norm is zero or a
-    vector is NULL or holds a NULL.
+    bit for bit to DuckDB's ``list_dot_product`` cosine — NULL where a
+    norm is zero or a vector is NULL or holds a NULL.
 
     ``keep`` picks pairs by id: ``"lt"`` streamed id < small id (the
     self-join's upper triangle), ``"ne"`` no self pairs, ``"all"``. With
     a ``threshold`` only pairs whose cosine may round to ≥ it at 6 dp
     are emitted, never a NULL one; without one every pair is.
 
-    ``small`` is read to the driver once (``toArrow``) — the round-trip a
-    broadcast join makes — and its vectors and fold norms ship in one
-    broadcast. ``streamed`` is scored tile by tile in ``mapInArrow``; a
-    tile holds at most ``TILE`` dot products. With ``fan_out`` it is
-    first repartitioned to the default parallelism, so a corpus read as
-    one partition does not score in one task; without, it keeps its
-    partitioning (for a caller whose next step shuffles anyway). For
-    ``"lt"`` the small side is sorted by id and every tile skips the
-    columns at or below its smallest id.
+    ``small`` is broadcast with its fold norms (``_ship``). ``streamed``
+    is scored tile by tile in ``mapInArrow``; a tile holds at most
+    ``TILE`` dot products. With ``fan_out`` it is first repartitioned to
+    the default parallelism, so a corpus read as one partition does not
+    score in one task; without, it keeps its partitioning (for a caller
+    whose next step shuffles anyway). For ``"lt"`` every tile skips the
+    small side's columns at or below its smallest id.
     Raises ``ValueError`` when the small side's non-NULL vectors differ
     in length; a streamed vector of another length fails the task."""
     spark = streamed.sparkSession
     if keep != "all":  # a NULL id passes no id comparison
         streamed = streamed.where(F.col(id_col).isNotNull())
         small = small.where(F.col(id_col).isNotNull())
-    tab = small.select(id_col, vec_col).toArrow()
-    if keep == "lt":
-        tab = tab.take(pc.sort_indices(tab.column(0)))
-    ids = tab.column(0).combine_chunks()
-    C, okb = _matrix(tab.column(1))
-    # no non-NULL vector on the small side: no pair can score, and no
-    # length to hold the streamed side to
-    dim = C.shape[1] if tab.column(1).null_count < len(tab) else None
-    shipped = spark.sparkContext.broadcast(
-        (ids, C, np.sqrt(_fold_self(C)), okb, dim)
-    )
+    shipped = _ship(small, id_col, vec_col)
     low = None if threshold is None else threshold - 5e-7
-    cols = max(1, min(len(tab), TILE))
+    cols = max(1, min(len(shipped.value[0]), TILE))
     rows = max(1, TILE // cols)
     if keep == "lt":
         rows = min(rows, SELF_ROWS)
@@ -291,6 +273,97 @@ def cosine_pairs(
     if fan_out:
         streamed = streamed.repartition(spark.sparkContext.defaultParallelism)
     return streamed.mapInArrow(score, schema)
+
+
+def _find(keys: np.ndarray, ids) -> tuple[np.ndarray, np.ndarray]:
+    """``(at, hit)``: where each of the Arrow ``ids`` (no NULLs) sits in
+    the sorted, non-empty ``keys``, and whether it is there."""
+    v = ids.to_numpy(zero_copy_only=False)
+    at = np.searchsorted(keys, v).clip(max=len(keys) - 1)
+    return at, keys[at] == v
+
+
+def score_pairs(
+    pairs: DataFrame,
+    small: DataFrame,
+    names: tuple[str, str],
+    threshold: float | None = None,
+    vec: str | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """``pairs`` plus a ``"cosine"`` column: the exact cosine of each
+    row's pair on the numpy fold, unrounded and equal bit for bit to
+    ``cosine_pairs``' — NULL where a norm is zero or a vector is NULL or
+    holds a NULL.
+
+    ``names[1]`` holds ids of ``small``, and so does ``names[0]`` unless
+    ``vec`` names the column of ``pairs`` that carries that side's
+    vector (a streamed large side; the column is dropped). Every other
+    column passes through. A row whose id is not in ``small`` (or is
+    NULL) is dropped, as in an inner join; ``small``'s ids are unique.
+    With a ``threshold`` only rows whose cosine may round to ≥ it at 6 dp
+    are kept, never a NULL one; without one every row is.
+
+    ``small`` is broadcast with its fold norms (``_ship``); ``pairs`` is
+    scored batch by batch in ``mapInArrow`` and keeps its partitioning.
+    Raises ``ValueError`` when the small side's non-NULL vectors differ
+    in length; a streamed vector of another length fails the task."""
+    a, b = names
+    pairs = pairs.where(F.col(a).isNotNull() & F.col(b).isNotNull())
+    shipped = _ship(small.where(F.col(id_col).isNotNull()), id_col, vec_col)
+    low = None if threshold is None else threshold - 5e-7
+    out = [f for f in pairs.schema.fields if f.name != vec]
+
+    def score(batches):
+        ids, C, nc, okc, dim = shipped.value
+        keys = ids.to_numpy(zero_copy_only=False)
+        for batch in batches:
+            if not len(keys):  # no row finds its pair
+                continue
+            jb, hit = _find(keys, batch.column(b))
+            if vec is None:
+                ja, hit_a = _find(keys, batch.column(a))
+                hit &= hit_a
+                X, oka, na = C[ja], okc[ja], nc[ja]
+            else:
+                X, oka = _matrix(batch.column(vec), dim)
+                na = np.sqrt(_fold_self(X))
+            denom = na * nc[jb]
+            good = hit & oka & okc[jb] & (denom != 0)
+            dots = _fold_rows(X, C[jb]) if good.any() else np.zeros(len(denom))
+            kept = hit if low is None else good & (dots >= low * denom)
+            if not kept.any():
+                continue
+            cos = np.zeros(len(dots))
+            cos[good] = dots[good] / denom[good]
+            mask = pa.array(kept)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(f.name).filter(mask) for f in out]
+                + [pa.array(cos[kept], pa.float64(), mask=~good[kept])],
+                names=[f.name for f in out] + ["cosine"],
+            )
+
+    return pairs.mapInArrow(
+        score, StructType([*out, StructField("cosine", DoubleType())])
+    )
+
+
+def _rounded(pairs: DataFrame, cols: list[str], threshold: float) -> DataFrame:
+    """``cols`` and the kernel's raw cosine rounded to 6 dp in the JVM,
+    kept where ≥ ``threshold`` — the oracle's ``round(…, 6) >=
+    threshold``."""
+    return pairs.select(*cols, F.round("cosine", 6).alias("cosine")).where(
+        F.col("cosine") >= threshold
+    )
+
+
+@arrow_udf(DoubleType())
+def fold_norm(vecs: pa.Array) -> pa.Array:
+    """A vector column's L2 norm: ``sqrt`` of its fold self-dot, as an
+    Arrow UDF. NULL for a NULL vector or one holding a NULL."""
+    X, ok = _matrix(vecs)
+    return pa.array(np.sqrt(_fold_self(X)), pa.float64(), mask=~ok)
 
 
 def centroid_rows(df, group_col="label", vec_col="embedding", ndigits=6):

@@ -86,34 +86,6 @@ def _coerce_codec_errors(fn):
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
 
-def decode_image_bulk(payload: bytes) -> "np.ndarray":
-    """:func:`decode_image` for BULK paths (resize/phash kernels over
-    whole corpora): identical pixels, but lossy-VP8 WebP prefers a
-    libwebp-backed decoder (PIL) when one is importable — the native
-    RFC 6386 Python decoder is bit-exact (tests/test_vp8.py pins it
-    against WebPDecodeRGBA, which is exactly what PIL calls) but runs
-    at ~2 images/s/core, a 100 TB-scale trap (VERDICT r11 item 9). The
-    native decoder stays the oracle and the fallback; golden rows keep
-    calling :func:`decode_image` directly."""
-    if sniff(payload) == "webp":
-        from kenshin_spark.multimodal import webp as _webp
-
-        if _webp.is_lossy_vp8(payload):
-            try:
-                from io import BytesIO
-
-                from PIL import Image  # noqa: F401 — optional, bulk only
-
-                return np.asarray(
-                    Image.open(BytesIO(payload)).convert("RGBA")
-                )
-            except ImportError:
-                pass  # no PIL in this environment — native fallback
-            except Exception:
-                pass  # undecodable by PIL — let the native path decide
-    return decode_image(payload)
-
-
 def sniff(payload: bytes) -> str | None:
     """Container sniff by magic bytes: 'png' | 'bmp' | 'wav' | 'webp' |
     'jpeg' | None."""

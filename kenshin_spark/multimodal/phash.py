@@ -76,7 +76,7 @@ def grid_from_payload(payload: bytes) -> tuple[list[int], bool]:
     from kenshin_spark.multimodal import codecs
 
     try:
-        arr = codecs.decode_image_bulk(payload)
+        arr = codecs.decode_image(payload)
     except Exception:
         digest = hashlib.md5(payload).hexdigest()
         return [

@@ -83,7 +83,7 @@ def _resize_with_flag(
 
     if codecs.sniff(payload) in ("png", "bmp", "jpeg", "webp"):
         try:
-            arr = codecs.decode_image_bulk(payload)
+            arr = codecs.decode_image(payload)
             return _encode_resized(
                 codecs.resize_nearest(arr, width, height), out_format
             ), False

@@ -770,24 +770,6 @@ def _riff_chunks(payload: bytes):
         pos += 8 + size + (size & 1)  # chunks are even-padded
 
 
-def is_lossy_vp8(payload: bytes) -> bool:
-    """True iff the still image's pixel chunk is lossy VP8 (no VP8L) —
-    the ONE profile whose native pure-Python decode is slow enough
-    (~0.5 s per 256x256 image, single-core; BENCH_NOTES r11) that bulk
-    paths should prefer a libwebp-backed decoder when one is importable.
-    Container probe only, no pixel decode; False for non-WebP bytes."""
-    try:
-        saw_vp8 = False
-        for tag, _ in _riff_chunks(payload):
-            if tag == b"VP8L":
-                return False
-            if tag == b"VP8 ":
-                saw_vp8 = True
-        return saw_vp8
-    except Exception:
-        return False
-
-
 @_coerce_codec_errors
 def decode_webp(payload: bytes) -> np.ndarray:
     """HxWx4 uint8 RGBA from a still WebP — lossless (VP8L) or lossy

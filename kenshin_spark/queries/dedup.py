@@ -322,7 +322,8 @@ def q_dedup_embedding_lsh(spark, sf_dir):
     from kenshin_spark.dedup.embedding import embedding_neardup_pairs_lsh
 
     return embedding_neardup_pairs_lsh(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.4
+        load_table(spark, sf_dir, "embeddings"), threshold=0.4,
+        bands=16, rows_per_band=4,
     )
 
 
@@ -661,9 +662,9 @@ def q_dedup_substring_scrub(spark, sf_dir):
     "bipartite embedding decontamination: corpus x benchmark cosine "
     "pairs >= 0.4 — the semantic twin of shingle decontamination "
     "(catches paraphrases n-gram overlap misses). The benchmark side "
-    "broadcasts, the threshold prefilters inside the join condition, "
-    "and the corpus never shuffles — at 100 TB the only moving part is "
-    "the small eval set",
+    "broadcasts, the numpy fold kernel emits only pairs that may pass "
+    "the threshold, and the corpus never shuffles — at 100 TB the only "
+    "moving part is the small eval set",
 )
 def q_dedup_cross_neardup(spark, sf_dir):
     from kenshin_spark.dedup.embedding import cross_neardup_pairs

@@ -45,9 +45,10 @@ def q_emb_centroids(spark, sf_dir):
     FROM best WHERE rn = 1
     """,
     "nearest-centroid classification: exact per-label mean centroids "
-    "(rounded, so both engines score identical inputs), Arrow-matmul "
-    "argmax emitting only the tie-safe label, then ONE sequential "
-    "zip_with dot against the chosen centroid for the reported cosine",
+    "(rounded, so both engines score identical inputs), then one numpy "
+    "left-fold pass scoring every vector against every centroid; the "
+    "argmax over those cosines (ties to the smallest label) and the "
+    "reported cosine come from the same fold",
 )
 def q_emb_nearest_centroid(spark, sf_dir):
     from kenshin_spark.similarity.classify import nearest_centroid
@@ -502,12 +503,10 @@ def q_emb_ivf_cell_stats(spark, sf_dir):
     "the mean is order-exact; one partial-agg shuffle keyed by label",
 )
 def q_emb_norm_profile(spark, sf_dir):
-    from kenshin_spark.functions.vectors import dot_product
+    from kenshin_spark.functions.vectors import fold_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    nrm = F.round(
-        F.sqrt(dot_product(F.col("embedding"), F.col("embedding"))), 6
-    )
+    nrm = F.round(fold_norm("embedding"), 6)
     return (
         emb.select("label", nrm.alias("_nrm"))
         .groupBy("label")

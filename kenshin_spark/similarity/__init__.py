@@ -29,11 +29,12 @@ Vectorization: signature and cell-assignment math is one Arrow
 ``pandas_udf`` (numpy per batch) — Spark's higher-order functions
 (``aggregate``/``zip_with``) are CodegenFallback (interpreted), and at
 64 planes x 64 dims the interpreted per-row cost would dominate the job
-at scale. Exact cosines are a sequential left-fold, bit-aligned with
-the DuckDB oracle (a BLAS matmul changes summation order; sign tests
-tolerate that, 6-dp rounded cosines might not): ``brute_force_topk``
-runs it in numpy (``functions.vectors.cosine_pairs``), the LSH and IVF
-verifies as a JVM ``zip_with``/``aggregate`` fold.
+at scale. Every exact cosine is the one numpy left-fold of
+``functions.vectors``, bit-aligned with the DuckDB oracle (a BLAS matmul
+changes summation order; sign tests tolerate that, 6-dp rounded cosines
+might not): ``brute_force_topk`` and ``range_search`` score every pair
+(``cosine_pairs``); the LSH, IVF and PQ re-rank verifies stream their
+candidate corpus rows against the broadcast queries (``score_pairs``).
 """
 
 from __future__ import annotations
@@ -45,10 +46,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from kenshin_spark.functions.vectors import (
+    _rounded,
     cells_udf,
     cosine_pairs,
-    cosine_similarity,
     md5_sample,
+    score_pairs,
 )
 
 # Band geometry for hyperplane LSH. At near-dup thresholds (cosine >= 0.8)
@@ -70,6 +72,25 @@ def _topk(scored: DataFrame, k: int, score_col: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.col("rank").cast("long"), score_col)
+    )
+
+
+def _verified_topk(
+    rows: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """``_topk`` of candidate corpus rows ``(neighbor_id, _cv,
+    query_id)`` by their exact cosine, rounded to 6 dp: the rows stream
+    through the fold kernel against the broadcast queries."""
+    scored = score_pairs(
+        rows.select("neighbor_id", "_cv", "query_id"), queries,
+        ("neighbor_id", "query_id"), vec="_cv", id_col=id_col, vec_col=vec_col,
+    )
+    return _topk(
+        scored.select(
+            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
+        ),
+        k,
+        "cosine",
     )
 
 
@@ -170,14 +191,11 @@ def lsh_topk(
     Plan shape (scale path): corpus explodes to ``bands`` narrow
     ``(id, band, sig)`` rows joined against the BROADCAST probe rows —
     the corpus is never shuffled; only the candidate id-pairs pass
-    through a distinct. Verify joins the candidate set (broadcast) back
-    against the corpus scan for the exact cosine. Same output schema as
-    ``brute_force_topk``.
+    through a distinct. Verify joins the candidate set (broadcast) into
+    the corpus scan and scores those rows on the fold kernel against the
+    broadcast queries. Same output schema as ``brute_force_topk``.
     """
     planes = _hyperplane(dim, bands * rows_per_band)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
     c_bands = _band_rows(
         embeddings, planes, bands, rows_per_band, "neighbor_id", id_col, vec_col
     )
@@ -198,19 +216,10 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    candv = cand.join(F.broadcast(q), "query_id")
-    scored = (
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-        )
-        .join(F.broadcast(candv), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
-        )
-    )
-    return _topk(scored, k, "cosine")
+    rows = embeddings.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+    ).join(F.broadcast(cand), "neighbor_id")
+    return _verified_topk(rows, queries, k, id_col, vec_col)
 
 
 def ivf_topk(
@@ -244,21 +253,12 @@ def ivf_topk(
     )
     probe = queries.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
         F.explode(cells_udf(C, n_probe)(F.col(vec_col))).alias("cell"),
     )
-    scored = (
-        assigned.join(F.broadcast(probe), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("_qv"), F.col("_cv")), 6
-            ).alias("cosine"),
-        )
+    rows = assigned.join(F.broadcast(probe), "cell").where(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    return _topk(scored, k, "cosine")
+    return _verified_topk(rows, queries, k, id_col, vec_col)
 
 
 def ivf_cell_stats(
@@ -305,26 +305,14 @@ def range_search(
     companion to top-k (dedup/recall audits want "everything this
     close", not a fixed k).
 
-    Same scale shape as brute_force_topk: the corpus stays partitioned,
-    queries broadcast, and the threshold filter replaces the window —
+    Same scale shape as brute_force_topk, on the same fold kernel: the
+    corpus stays partitioned, queries broadcast, and the threshold
+    filter replaces the window —
     so there is NO per-query sort at all, just a scan-and-filter
     (cheaper than top-k at scale). The LSH/IVF banded variants bound
     the scan the same way they bound top-k probes."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+    pairs = cosine_pairs(
+        embeddings, queries, ("neighbor_id", "query_id"), keep="ne",
+        threshold=threshold, id_col=id_col, vec_col=vec_col, fan_out=False,
     )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("_qv"), F.col("_cv")), 6
-            ).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    return _rounded(pairs, ["query_id", "neighbor_id"], threshold)

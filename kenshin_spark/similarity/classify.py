@@ -5,35 +5,30 @@ per-label means (deterministic, so the whole query oracles in SQL),
 where the IVF quantizer's cells are sampled corpus rows; every vector
 is assigned to the centroid with the highest cosine.
 
-Two-phase scoring, applying the round-1 lesson that per-row
-``aggregate(zip_with(...))`` higher-order expressions are interpreted
-(CodegenFallback) and dominate the bench when evaluated per candidate:
-
-1. argmax over all centroids: ONE Arrow ``pandas_udf`` doing a numpy
-   ``X @ C.T`` per batch — BLAS throughput, |labels|× fewer interpreted
-   expressions. BLAS reorders the summation, which is why the argmax
-   phase emits only the LABEL (tie-safe integer), never a float that
-   would need to hash-match the oracle.
-2. the reported cosine: a single sequential ``zip_with``/``aggregate``
-   dot product against the chosen centroid only — left-fold order,
-   bit-matching DuckDB's ``list_dot_product``.
-
-Centroids are rounded before use (both engines), so phase-2 inputs are
-bit-identical cross-engine. The centroid table (|labels| × dim) is a
-bounded driver collect + broadcast join, exactly like the IVF probe set.
+One pass on the fold (``functions.vectors``): the |labels| × dim
+centroids, rounded before use in both engines, ship in the closure, and
+``mapInArrow`` folds each batch against all of them at once. The
+cosines it ranks are the ones it reports, each bit-equal to DuckDB's
+``list_dot_product`` cosine, so the argmax, its tie rule (the smallest
+label, the oracle's ``ORDER BY cos DESC, pred_label``) and the reported
+cosine all replay in SQL. There is no join: the centroid table is one
+bounded driver read.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from kenshin_spark.functions.vectors import (
+    _fold_dots,
+    _fold_self,
+    _matrix,
     centroids,
-    cosine_similarity,
 )
 
 
@@ -45,39 +40,51 @@ def nearest_centroid(
     ndigits: int = 6,
 ) -> DataFrame:
     """``(vec_id, label, pred_label, cosine, correct)`` — each vector
-    assigned to its nearest class centroid by cosine."""
+    assigned to its nearest class centroid by cosine, ties to the
+    smallest label. A zero or NULL vector, whose every cosine is NULL,
+    gets the smallest label and a NULL cosine, as in the oracle."""
     cents = centroids(
         embeddings.select(group_col, vec_col), group_col, vec_col, ndigits
-    ).select(F.col(group_col).alias("pred_label"), "centroid")
-    rows = sorted(cents.collect(), key=lambda r: r["pred_label"])
-    labels = np.array([r["pred_label"] for r in rows])
-    C = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    ).select(group_col, "centroid").toArrow()
+    cents = cents.take(pc.sort_indices(cents.column(0)))
+    labels = cents.column(0).combine_chunks()
+    C, okc = _matrix(cents.column(1))
+    nc = np.sqrt(_fold_self(C))
 
-    @pandas_udf("int")
-    def _pred(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-        # argmax takes the FIRST maximum over label-sorted rows — ties
-        # resolve to the smallest label, same as the oracle's arg_max
-        # tie-break discipline
-        return pd.Series(labels[(Xn @ Cn.T).argmax(axis=1)].astype("int32"))
+    def score(batches):
+        for batch in batches:
+            X, ok = _matrix(batch.column(2), C.shape[1])
+            denom = np.sqrt(_fold_self(X))[:, None] * nc[None, :]
+            good = ok[:, None] & okc[None, :] & (denom != 0)
+            cos = np.full(denom.shape, -np.inf)
+            np.divide(_fold_dots(X, C), denom, out=cos, where=good)
+            # the first maximum: label-sorted, so ties go to the smallest
+            best = cos.argmax(axis=1)
+            rows = np.arange(len(best))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0),
+                    batch.column(1),
+                    labels.take(best),
+                    pa.array(cos[rows, best], mask=~good[rows, best]),
+                ],
+                names=[id_col, group_col, "pred_label", "_cos"],
+            )
 
-    scored = embeddings.select(
-        F.col(id_col),
-        F.col(group_col),
-        F.col(vec_col).alias("_v"),
-        _pred(F.col(vec_col)).alias("pred_label"),
-    )
+    schema = StructType([
+        embeddings.schema[id_col],
+        embeddings.schema[group_col],
+        StructField("pred_label", embeddings.schema[group_col].dataType),
+        StructField("_cos", DoubleType()),
+    ])
     return (
-        scored.join(F.broadcast(cents), "pred_label")
+        embeddings.select(id_col, group_col, vec_col)
+        .mapInArrow(score, schema)
         .select(
             id_col,
             group_col,
             "pred_label",
-            F.round(cosine_similarity("_v", "centroid"), ndigits).alias("cosine"),
+            F.round("_cos", ndigits).alias("cosine"),
             (F.col(group_col) == F.col("pred_label")).alias("correct"),
         )
     )

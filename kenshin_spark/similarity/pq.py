@@ -29,12 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from kenshin_spark.functions.vectors import (
-    cosine_similarity,
-    md5_sample,
-    nearest_cells,
-)
-from kenshin_spark.similarity import _topk
+from kenshin_spark.functions.vectors import _fold_rows, md5_sample, nearest_cells
+from kenshin_spark.similarity import _topk, _verified_topk
 
 
 def _pq_scored(
@@ -83,10 +79,7 @@ def _pq_scored(
         # bit-equal to list_dot_product(q, flatten(list(cw ORDER BY j)))
         R = np.concatenate([C[j][CO[:, j]] for j in range(m)], axis=1)
         Qv = Q[np.array([qidx[q] for q in qid], dtype=np.int64)]
-        acc = np.zeros(len(CO), dtype=np.float64)
-        for d in range(dim):
-            acc += Qv[:, d] * R[:, d]
-        return pd.Series(acc)
+        return pd.Series(_fold_rows(Qv, R))
 
     coded = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
@@ -142,19 +135,7 @@ def pq_rerank_topk(
     pool = pq_topk(
         embeddings, queries, candidates, m, ksub, id_col, vec_col
     ).select("query_id", "neighbor_id")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c = embeddings.select(
+    rows = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    scored = c.join(
-        F.broadcast(pool.join(F.broadcast(q), "query_id")), "neighbor_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias(
-            "cosine"
-        ),
-    )
-    return _topk(scored, k, "cosine")
+    ).join(F.broadcast(pool), "neighbor_id")
+    return _verified_topk(rows, queries, k, id_col, vec_col)

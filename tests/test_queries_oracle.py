@@ -53,8 +53,9 @@ FLOAT_SENSITIVE = [
 
 
 #: the bench scale (n=2,000 embeddings): the rows the exact-cosine
-#: kernel reaches are also gated here, where its tiling and the
-#: self-join's tile skip cover more than one tile per task
+#: kernels reach are also gated here, where the all-pairs tiling and the
+#: self-join's tile skip cover more than one tile per task, and the LSH
+#: and SemDeDup verifies stream more than one batch of pairs
 SF01_DIR = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.1")
 KERNEL_ROWS = [
     "dedup_embedding_neardup",
@@ -62,6 +63,17 @@ KERNEL_ROWS = [
     "sim_topk_bruteforce",
     "sim_knn_graph",
     "sim_lsh_recall_audit",
+    "dedup_embedding_lsh",
+    "dedup_semantic",
+    "dedup_embedding_incremental",
+    "emb_nearest_centroid",
+    "emb_label_confusion",
+    "sim_topk_lsh",
+    "sim_topk_ivf",
+    "sim_topk_ivf_fullprobe",
+    "sim_topk_pq_rerank",
+    "sim_range_search",
+    "dedup_semantic_cosine_agreement",
 ]
 
 

@@ -1,19 +1,23 @@
-"""The exact-cosine kernel against the JVM fold it replaces, and the
-quantizer built on the same fold.
+"""The exact-cosine kernels against the JVM fold they replaced, and the
+quantizer and the classifier built on the same fold.
 
-``functions.vectors.cosine_pairs`` scores pairs with the numpy left-fold
-(``_fold_dots``/``_fold_self``); ``dot_product``/``l2_norm``/
-``cosine_similarity`` are the same fold as JVM higher-order functions,
-the arithmetic the DuckDB oracles replay. These tests pin that the two
-agree bit for bit, at the threshold boundary too, and the edge cases:
-zero and NULL vectors, and vectors of different lengths. The quantizer
-tests pin ``md5_sample``'s order, ``nearest_cells``' tie rule and probe
-order, and that IVF and SemDeDup sub-cells only ever prune exact
-results."""
+``functions.vectors`` scores cosines with the numpy left-fold
+(``_fold_dots``/``_fold_rows``): ``cosine_pairs`` every pair of two
+sides, ``score_pairs`` given pairs. ``dot_product``/``l2_norm``/
+``cosine_similarity`` below are the same fold as JVM higher-order
+functions, kept here only as the reference: the arithmetic the DuckDB
+oracles replay. These tests pin that the kernels agree with it bit for
+bit, at the threshold boundary too, and the edge cases: zero and NULL
+vectors, and vectors of different lengths. The quantizer tests pin
+``md5_sample``'s order, ``nearest_cells``' tie rule and probe order, and
+that IVF and SemDeDup sub-cells only ever prune exact results; the
+classifier test pins ``nearest_centroid`` to the oracle's argmax."""
 
 import hashlib
 
+import duckdb
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -21,24 +25,54 @@ from pyspark.sql import functions as F
 from kenshin_spark.dedup.embedding import (
     cross_neardup_pairs,
     embedding_neardup_pairs,
+    embedding_neardup_pairs_lsh,
 )
 from kenshin_spark.functions import vectors
 from kenshin_spark.dedup.semantic import semantic_neardup_pairs
 from kenshin_spark.functions.vectors import (
     _fold_dots,
     _fold_self,
+    _rounded,
     cells_udf,
+    centroids,
     cosine_pairs,
-    cosine_similarity,
-    dot_product,
-    l2_norm,
+    fold_norm,
     md5_sample,
     nearest_cells,
+    score_pairs,
 )
+from kenshin_spark.queries._common import _NN_CTES
 from kenshin_spark.similarity import brute_force_topk, ivf_topk
+from kenshin_spark.similarity.classify import nearest_centroid
 
 T = 0.4
 DIM = 64
+
+
+def _c(col):
+    return F.col(col) if isinstance(col, str) else col
+
+
+def dot_product(a, b):
+    """The reference fold as JVM higher-order functions (interpreted)."""
+    prods = F.zip_with(
+        _c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")
+    )
+    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def l2_norm(a):
+    return F.sqrt(
+        F.aggregate(
+            _c(a), F.lit(0.0),
+            lambda acc, v: acc + v.cast("double") * v.cast("double"),
+        )
+    )
+
+
+def cosine_similarity(a, b):
+    denom = l2_norm(a) * l2_norm(b)
+    return F.when(denom != 0, dot_product(a, b) / denom)
 
 
 def corpus(n=300, seed=7, labels=False):
@@ -131,11 +165,21 @@ def test_fold_equals_jvm_bit_for_bit_on_all_pairs(spark, elem):
     ia, ib = jvm["a"].to_numpy(), jvm["b"].to_numpy()
     assert np.array_equal(jvm["dot"].to_numpy(), _fold_dots(X, X)[ia, ib])
     assert np.array_equal(jvm["na"].to_numpy(), np.sqrt(_fold_self(X))[ia])
-    # the kernel itself, unrounded, on every ordered pair
+    # the kernels themselves, unrounded, on every ordered pair
     got = pairs(cosine_pairs(df, df, ("a", "b")))
     assert len(got) == len(jvm) == 300 * 300
     want = dict(zip(zip(ia.tolist(), ib.tolist()), jvm["cos"].tolist()))
     assert got == want
+    # given pairs: both sides looked up, or side a's vector streamed
+    given = a.crossJoin(b.select("b"))
+    assert pairs(score_pairs(given.drop("va"), df, ("a", "b"),
+                             id_col="vec_id")) == want
+    assert pairs(score_pairs(given.select("a", "b", "va"), df, ("a", "b"),
+                             vec="va")) == want
+    norms = df.select("vec_id", fold_norm("embedding").alias("n")).toPandas()
+    assert np.array_equal(
+        norms.sort_values("vec_id")["n"].to_numpy(), np.sqrt(_fold_self(X))
+    )
 
 
 @pytest.mark.parametrize("elem", ["float", "double"])
@@ -150,6 +194,12 @@ def test_threshold_boundary_matches_jvm(spark, elem):
     got = pairs(embedding_neardup_pairs(df, threshold=T))
     assert got == want
     assert any(c == T for c in got.values())
+    ids = df.select(F.col("vec_id").alias("a"))
+    lt = ids.crossJoin(ids.toDF("b")).where("a < b")
+    given = _rounded(score_pairs(lt, df, ("a", "b"), T), ["a", "b"], T)
+    assert pairs(given) == want
+    lsh = pairs(embedding_neardup_pairs_lsh(df, threshold=T))
+    assert lsh.items() <= want.items()
 
 
 def test_tiling_and_triangle_skip_do_not_change_the_result(spark, monkeypatch):
@@ -301,3 +351,42 @@ def test_semantic_subcells_are_a_subset_of_label_cells(spark):
         assert label[(a, b)][1] == cos
         assert cell[a] == cell[b]
         assert cluster == f"{label[(a, b)][0]}#{cell[a]}"
+
+
+def test_nearest_centroid_ties_to_smallest_label_and_nulls(spark):
+    """The argmax takes the first maximum over the label-sorted
+    centroids: a tie goes to the smallest label, and a zero or NULL
+    vector (every cosine NULL) gets the smallest label and a NULL
+    cosine — the oracle's ``ORDER BY cos DESC, pred_label``."""
+    X, y = corpus(90, labels=True)
+    rows = [(i, int(c % 3) + 5, [float(x) for x in v])
+            for i, (c, v) in enumerate(zip(y, X))]
+    # label 4 holds copies of label 6's vectors: equal centroids, so
+    # every label-4 and label-6 vector ties between them
+    rows += [(100 + i, 4, v) for i, c, v in rows if c == 6]
+    rows += [(200, 7, [0.0] * DIM), (201, 7, None)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<double>"
+    )
+    cents = {r.label: r.centroid for r in centroids(df).collect()}
+    assert cents[4] == cents[6]
+    got = {r.vec_id: (r.pred_label, r.cosine, r.correct)
+           for r in nearest_centroid(df).collect()}
+    assert got[200] == got[201] == (4, None, False)
+    preds = [p for p, _, _ in got.values()]
+    assert 4 in preds and 6 not in preds
+    # every row as DuckDB replays it
+    con = duckdb.connect()
+    con.register("embeddings", pa.table(
+        {"vec_id": [r[0] for r in rows], "label": [r[1] for r in rows],
+         "embedding": [r[2] for r in rows]},
+        pa.schema([("vec_id", pa.int64()), ("label", pa.int32()),
+                   ("embedding", pa.list_(pa.float64()))]),
+    ))
+    want = {
+        v: (p, c) for v, p, c in con.execute(
+            f"WITH {_NN_CTES.strip()} "
+            "SELECT vec_id, pred_label, round(cos, 6) FROM best WHERE rn = 1"
+        ).fetchall()
+    }
+    assert {v: (p, c) for v, (p, c, _) in got.items()} == want
