@@ -50,9 +50,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # DuckDB's exact truncation).
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views (for spark.sql paths)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

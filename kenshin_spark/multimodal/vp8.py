@@ -500,13 +500,6 @@ def _large_value(bd, p) -> int:
 
 # -- display-space conversion (libwebp-compatible) --------------------------
 
-def _clip8_fix6(v):
-    """libwebp VP8Clip8: >>6 with saturation (YUV_FIX2 = 6)."""
-    return np.clip(v >> 6, 0, 255) if isinstance(v, np.ndarray) else (
-        0 if v < 0 else (255 if (v >> 6) > 255 else v >> 6)
-    )
-
-
 def yuv_to_rgb(Y, U, V):
     """Full-size Y + FULL-SIZE (already upsampled) U/V → HxWx3 uint8,
     libwebp's fixed-point BT.601 constants (dsp/yuv.h): bit-compatible

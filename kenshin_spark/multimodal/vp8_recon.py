@@ -86,10 +86,6 @@ def _avg2(a, b):
     return (a + b + 1) >> 1
 
 
-def _clip8(v):
-    return 0 if v < 0 else (255 if v > 255 else v)
-
-
 def _pred_dc(S, y0, x0, n, has_above, has_left):
     if has_above and has_left:
         s = int(sum(S[y0 - 1, x0:x0 + n])) + int(sum(S[y0:y0 + n, x0 - 1]))

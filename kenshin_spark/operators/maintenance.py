@@ -158,8 +158,3 @@ def glob_to_regex(pattern: str) -> str:
     ``sys.cpu.core0.user``). Unbalanced ``{``/``[`` are literals."""
     return "^" + _glob_body(pattern) + "$"
 
-
-def glob_search(points: DataFrame, target: str) -> DataFrame:
-    """Graphite-style glob target resolution over the metric namespace —
-    the front half of every render request."""
-    return metric_search(points, [glob_to_regex(target)])

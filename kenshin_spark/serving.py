@@ -1,7 +1,6 @@
 """S3 — the network-facing query serving layer.
 
-Two surfaces, both thin wrappers around caller-supplied lookups so the
-Spark session stays the single execution engine:
+Two surfaces, both thin wrappers around caller-supplied lookups:
 
 - ``CacheQueryServer`` — the reference's cache-query wire protocol
   (rurouni/protocols.py:65-84: 4-byte big-endian length framing, a
@@ -16,9 +15,11 @@ Spark session stays the single execution engine:
   ``{"datapoints": [[ts, value], ...]}``.
 
 Both servers run on daemon threads with OS-assigned ports (``port=0``)
-and are driver-side by design: at scale each serving replica holds its
-own SparkSession (or Spark Connect client); the lookups they wrap are
-partition-pruned reads, not scans.
+and are driver-side by design. ``store_serving_fns`` and
+``store_render_fn`` wire them to a ``ParquetTieredStore``: a request
+reads the few files the committed manifest lists for it, with pyarrow
+on the driver (``store.ArrowReader``), and runs no Spark job; only a
+``/render`` function chain runs on Spark.
 """
 
 from __future__ import annotations
@@ -208,9 +209,9 @@ class HttpFetchServer:
 def reader_clone(store):
     """A READER clone of *store* on an isolated child ``SparkSession``
     (same SparkContext/executors, separate SQL conf), planning from the
-    same committed manifest. Serving scans then scope their planning
-    conf overrides (``kenshin_spark.store._explicit_list_planning``) to
-    their own session, never the writer's."""
+    same committed manifest with its own commit-protocol instance. A
+    render chain runs on the clone's session, so any conf it sets stays
+    off the writer's."""
     session = store.spark.newSession()
     session.conf.set(
         "spark.sql.legacy.parquet.nanosAsLong",
@@ -224,58 +225,30 @@ def store_serving_fns(store, reader=None) -> tuple[
     Callable[[list[str], int, int, int], list[tuple]],
 ]:
     """``(lookup, fetch_fn)`` over a ``ParquetTieredStore`` for the two
-    servers, each one plain call — a scan planned from
-    the committed manifest, so a response is never a torn read against
-    a concurrent compaction/expiry commit (reference analog: cache
-    queries answered mid-writeForever flush,
-    rurouni/protocols.py:65-84). ``lookup`` serves the tier-0 points
-    for one metric (the cache-query shape); ``fetch_fn`` the R1 grid
-    fetch.
+    servers. ``lookup`` serves the tier-0 points of one metric (the
+    cache-query shape); ``fetch_fn`` the R1 grid fetch. Both run on the
+    store's ``ArrowReader``: the files the committed manifest lists for
+    the request, read with pyarrow on the driver — no Spark job, as the
+    reference answers a fetch by reading one file
+    (kenshin/__init__.py:14-19). Each request plans at one manifest
+    seq, so a response is never a torn read against a concurrent
+    compaction/expiry commit (reference analog: cache queries answered
+    mid-writeForever flush, rurouni/protocols.py:65-84).
 
-    Reads go through a ``reader_clone`` of the store on an isolated
-    child ``SparkSession``. Pass ``reader`` explicitly to override
-    (tests, or to share one clone across endpoints).
-
-    Every lookup additionally tags its jobs with the ``serving``
-    scheduler pool (a per-thread local property — exactly right here,
-    since each socket handler runs on its own thread): under
-    ``get_spark(fair_pools=True)`` serving scans get a weighted fair
-    share of executors instead of FIFO-queueing behind a maintenance
-    pass's compaction jobs; under the default FIFO scheduler the tag is
-    inert."""
-    from pyspark.sql import functions as F
-
-    from kenshin_spark.session import SERVING_POOL
+    Plans come from a ``reader_clone`` of the store; pass ``reader`` to
+    share one clone across endpoints (``store_render_fn`` runs its
+    chain on the clone's session)."""
+    from kenshin_spark.store import ArrowReader
 
     if reader is None:
         reader = reader_clone(store)
-    sc = reader.spark.sparkContext
-
-    def _pooled(fn):
-        sc.setLocalProperty("spark.scheduler.pool", SERVING_POOL)
-        try:
-            return fn()
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
+    arrow = ArrowReader(reader)
 
     def lookup(metric: str) -> Datapoints:
-        return _pooled(
-            lambda: [
-                (r["ts"], r["value"])
-                for r in reader.read(0)
-                .where(F.col("metric") == metric)
-                .collect()
-            ]
-        )
+        return arrow.lookup(metric)
 
     def fetch_fn(metrics, frm, until, now):
-        def _go():
-            df = reader.fetch(metrics, frm, until, now)
-            if df is None:
-                return []
-            return [(r["metric"], r["ts"], r["value"]) for r in df.collect()]
-
-        return _pooled(_go)
+        return arrow.fetch(metrics, frm, until, now) or []
 
     lookup.reader_store = fetch_fn.reader_store = reader  # introspection
     return lookup, fetch_fn
@@ -286,38 +259,58 @@ def store_render_fn(
 ) -> Callable[[str, int, int, int], list[tuple]]:
     """Wire a ``ParquetTieredStore`` to the ``/render`` endpoint: parse
     the graphite target (nested function calls around a metric glob),
-    glob-fetch the grid, apply the chain — the same path the CLI render
-    verb runs, packaged for the HTTP server.
+    resolve the glob and fill the grid on the driver with the store's
+    ``ArrowReader`` (both at one manifest seq), then apply the chain to
+    the grid as one small local DataFrame — the only Spark jobs a
+    render runs are the chain's. The grid goes to Spark as an Arrow
+    table (a local relation: a Python-list DataFrame would start Python
+    workers in the chain's first stage), and the chain's output is
+    sorted on the driver (``orderBy`` would add a sampling job and a
+    shuffle). The CLI render verb runs the same target through
+    ``store.fetch_glob``.
 
-    Reads go through the same ``reader_clone`` + serving-pool treatment
-    as ``store_serving_fns``. Pass ``reader`` to share one clone across
-    endpoints."""
+    The chain's jobs are tagged with the ``serving`` scheduler pool (a
+    per-thread local property — each handler runs on its own thread):
+    under ``get_spark(fair_pools=True)`` they get a weighted fair share
+    of executors instead of FIFO-queueing behind a maintenance pass;
+    under the default FIFO scheduler the tag is inert. Pass ``reader``
+    to share one ``reader_clone`` across endpoints."""
+    import pyarrow as pa
+
     from kenshin_spark.functions.render import apply_chain
     from kenshin_spark.functions.targets import parse_target
-
     from kenshin_spark.session import SERVING_POOL
+    from kenshin_spark.store import ArrowReader
 
     if reader is None:
         reader = reader_clone(store)
+    arrow = ArrowReader(reader)
     sc = reader.spark.sparkContext
+    grid_schema = pa.schema(
+        [("metric", pa.string()), ("ts", pa.int64()), ("value", pa.float64())]
+    )
 
     def render_fn(target: str, frm: int, until: int, now: int) -> list[tuple]:
-        def _go():
-            glob, chain = parse_target(target)
-            grid = reader.fetch_glob(glob, frm, until, now)
-            if grid is None:
-                return []
-            out = apply_chain(grid, chain)
-            return [
-                (r["metric"], r["ts"], r["value"])
-                for r in out.orderBy("metric", "ts").collect()
-            ]
-
+        glob, chain = parse_target(target)
+        plan = reader.fetch_plan(frm, until, now)
+        if plan is None:
+            return []
+        rows = arrow.grid(plan, arrow.glob(glob, plan.seq))
+        if not chain:
+            return rows
+        cols = list(zip(*rows)) or [(), (), ()]
+        grid = reader.spark.createDataFrame(
+            pa.Table.from_arrays(cols, schema=grid_schema)
+        )
         sc.setLocalProperty("spark.scheduler.pool", SERVING_POOL)
         try:
-            return _go()
+            out = apply_chain(grid, chain).collect()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
+        return sorted(
+            ((r["metric"], r["ts"], r["value"]) for r in out),
+            key=lambda r: r[:2],
+        )
 
     render_fn.reader_store = reader  # introspection
     return render_fn

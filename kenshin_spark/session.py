@@ -113,10 +113,11 @@ def enable_rocksdb_state(spark: SparkSession) -> None:
     )
 
 
-#: FAIR-scheduler pool the serving layer tags its jobs with
-#: (serving.store_serving_fns) — weight 4 so a cache-query/fetch lands
-#: tasks promptly even while a maintenance pass (compaction, expiry,
-#: full-tier rewrites) has the executors busy. Pools are a per-thread
+#: FAIR-scheduler pool the serving layer tags its jobs with (the
+#: ``/render`` function chain, serving.store_render_fn; cache queries
+#: and fetches run no job) — weight 4 so a render lands tasks promptly
+#: even while a maintenance pass (compaction, expiry, full-tier
+#: rewrites) has the executors busy. Pools are a per-thread
 #: local property, so only jobs explicitly tagged land here; everything
 #: else stays in the default pool. In the (default) FIFO scheduler the
 #: tag is inert — opt in with ``get_spark(fair_pools=True)`` or

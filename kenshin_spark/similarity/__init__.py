@@ -25,8 +25,8 @@ iterations would recall more (on the sf0.001 corpus, 8 cells and 3
 probes find 23 of the 50 exact top-10 results; ten iterations find 33),
 but a mean's summation order does not replay across engines.
 
-Vectorization: signature and cell-assignment math is one Arrow
-``pandas_udf`` (numpy per batch) — Spark's higher-order functions
+Vectorization: signature and cell-assignment math is one Arrow UDF
+each (numpy per batch) — Spark's higher-order functions
 (``aggregate``/``zip_with``) are CodegenFallback (interpreted), and at
 64 planes x 64 dims the interpreted per-row cost would dominate the job
 at scale. Every exact cosine is the one numpy left-fold of
@@ -40,12 +40,13 @@ candidate corpus rows against the broadcast queries (``score_pairs``).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from kenshin_spark.functions.vectors import (
+    _matrix,
     _rounded,
     cells_udf,
     cosine_pairs,
@@ -134,9 +135,11 @@ def _hyperplane(dim: int, n_planes: int, seed: str = "ksp") -> list[list[float]]
 
 
 def band_signatures_udf(planes: list[list[float]], bands: int, rows_per_band: int):
-    """Arrow pandas_udf: embedding -> array of ``bands`` band signatures,
+    """Arrow UDF: embedding -> array of ``bands`` band signatures,
     band b's signature packing the sign bits of planes
-    ``[b*rows_per_band, (b+1)*rows_per_band)`` little-endian.
+    ``[b*rows_per_band, (b+1)*rows_per_band)`` little-endian; NULL for a
+    vector that is not whole (NULL, or holding a NULL), so it yields no
+    band rows, as the exact kernels give it no pair.
 
     One numpy matmul per Arrow batch ((n, dim) @ (dim, planes)); the sign
     test matches the oracle's ``list_dot_product(...) >= 0`` — summation
@@ -147,14 +150,16 @@ def band_signatures_udf(planes: list[list[float]], bands: int, rows_per_band: in
     P = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
     weights = 1 << np.arange(rows_per_band, dtype=np.int64)
 
-    @pandas_udf("array<long>")
-    def _sigs(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
+    @arrow_udf("array<long>")
+    def _sigs(vecs: pa.Array) -> pa.Array:
+        X, ok = _matrix(vecs, P.shape[0])
         bits = ((X @ P) >= 0).astype(np.int64)
         M = (bits.reshape(len(X), bands, rows_per_band) * weights).sum(axis=2)
-        return pd.Series(list(M))
+        return pa.ListArray.from_arrays(
+            np.arange(0, M.size + 1, bands, dtype=np.int32),
+            M.ravel(),
+            mask=pa.array(~ok),
+        )
 
     return _sigs
 

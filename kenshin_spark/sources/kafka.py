@@ -68,17 +68,3 @@ def kafka_lines(
         .select(F.col("value").cast("string").alias("value"))
     )
 
-
-def kafka_pickle_batches(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str = "metrics-pickle",
-    **kwargs,
-) -> DataFrame:
-    """S2 over Kafka: one pickled batch per record → a ``payload`` binary
-    column for ``parse_pickle_batches``."""
-    return (
-        kafka_reader(spark, bootstrap_servers, topic, **kwargs)
-        .load()
-        .select(F.col("value").alias("payload"))
-    )

@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 import threading
 from contextlib import contextmanager
+from dataclasses import dataclass
 
 from kenshin_spark.commit import ManifestCommitProtocol, ManifestConflict
 from kenshin_spark.config import AGG_SQL, Schema
@@ -50,12 +51,14 @@ HOUR = 3600
 #: Manifest scans pass EXPLICIT file lists; above the default threshold
 #: (32 paths) Spark's InMemoryFileIndex launches a parallel-listing JOB
 #: per scan, which FIFO-queues behind writer jobs — measured ~1 s added
-#: to EVERY serving read at 300 live files (and a 2x phase-A writer wall
-#: in the 1M load capture). Driver-side sequential stat of local/HDFS
-#: paths is micro-seconds per file. The override is scoped to the
-#: explicit-list planning call (set/restore under a refcount so stacked
-#: store scans don't flap it) instead of mutating the session conf for
-#: every other scan in the SparkSession (ADVICE r10).
+#: to every scan at 300 live files (and a 2x phase-A writer wall in the
+#: 1M load capture), back when serving reads were Spark scans; they
+#: are ``ArrowReader`` reads now, and the override serves the store's
+#: own scans (reads, merges, compaction). Driver-side sequential stat
+#: of local/HDFS paths is micro-seconds per file. The override is
+#: scoped to the explicit-list planning call (set/restore under a
+#: refcount so stacked store scans don't flap it) instead of mutating
+#: the session conf for every other scan in the SparkSession.
 _PPD_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _ppd_lock = threading.Lock()
 _ppd_depth: dict[int, tuple[int, str | None]] = {}  # id(spark) -> (n, prev)
@@ -136,6 +139,21 @@ def _unlogged_files(fs: HadoopFS, root: str, n_tiers: int):
 #: the retired row-stamp allocator's sidecar and CAS claim markers; rows
 #: it stamped can carry stamps above the manifest seq and outrank writes
 _ALLOCATOR_ARTEFACTS = ("_seq.json", "_seq.d")
+
+
+@dataclass(frozen=True)
+class FetchPlan:
+    """What one fetch reads (``ParquetTieredStore.fetch_plan``): tier
+    ``tier`` at step ``step``, the slots ``range(lo, hi, step)``, and
+    the tier's root-relative ``files`` of the window's partitions,
+    live at manifest seq ``seq``."""
+
+    tier: int
+    step: int
+    lo: int
+    hi: int
+    seq: int
+    files: list[str]
 
 
 class LegacyTreeError(RuntimeError):
@@ -253,20 +271,32 @@ class ParquetTieredStore:
 
     # -- manifest plumbing -------------------------------------------------
 
-    def _plan_abs(
+    def _plan(
         self,
         path: str,
         version: int | None = None,
         days: list[int] | None = None,
     ) -> list[str]:
-        """The committed live files under ``path`` as absolute paths.
+        """The committed live files under ``path``, root-relative.
         ``version`` pins a historical manifest seq (time travel);
         ``days`` keeps only those ``day=`` partitions."""
         files = self.commit.live_files(self.commit.rel(path), seq=version)
         if days is not None:
             keep = {f"day={d}" for d in days}
             files = [(r, sz) for r, sz in files if r.split("/")[1] in keep]
-        return [os.path.join(self.root, rel) for rel, _ in files]
+        return [rel for rel, _ in files]
+
+    def _plan_abs(
+        self,
+        path: str,
+        version: int | None = None,
+        days: list[int] | None = None,
+    ) -> list[str]:
+        """``_plan`` as absolute paths."""
+        return [
+            os.path.join(self.root, rel)
+            for rel in self._plan(path, version=version, days=days)
+        ]
 
     def _check_version(self, version: int | None) -> None:
         """Validate a time-travel pin: the seq must be a committed one
@@ -348,6 +378,21 @@ class ParquetTieredStore:
             .select("metric", "ts", F.col("_w.value").alias("value"))
         )
 
+    @staticmethod
+    def _resolve_arrow(table) -> dict[tuple[str, int], float | None]:
+        """``_resolve`` on the driver, over a pyarrow table of stored
+        rows: ``{(metric, ts): value}``. Sorting by ``(_seq, value)``
+        with nulls first and keeping each slot's last row is
+        ``max(struct(_seq, value))``: on a ``_seq`` tie a NULL value
+        loses to a non-NULL one, and NaN outranks every number."""
+        if "_seq" in table.column_names:
+            table = table.sort_by(
+                [("_seq", "ascending"), ("value", "ascending")],
+                null_placement="at_start",
+            )
+        slots = zip(table["metric"].to_pylist(), table["ts"].to_pylist())
+        return dict(zip(slots, table["value"].to_pylist()))
+
     def _tier_empty(self, path: str, version: int | None = None) -> bool:
         """True when the tier has no live data files — the committed
         file list is the truth (the directory may hold retired files
@@ -372,8 +417,12 @@ class ParquetTieredStore:
         version: int | None = None,
         days: list[int] | None = None,
     ) -> DataFrame:
+        return self._scan_files(
+            path, self._plan_abs(path, version=version, days=days)
+        )
+
+    def _scan_files(self, path: str, files: list[str]) -> DataFrame:
         reader = self.spark.read.schema(self._tier_schema())
-        files = self._plan_abs(path, version=version, days=days)
         # plan from the committed file list — partition values (day=) are
         # still derived from the paths via basePath; a retired file that
         # physically remains on disk (awaiting vacuum) is never scanned
@@ -815,19 +864,18 @@ class ParquetTieredStore:
 
     # -- fetch (R1-R3) ----------------------------------------------------
 
-    def fetch(
-        self, metrics, from_time: int, until_time: int, now: int,
+    def fetch_plan(
+        self, from_time: int, until_time: int, now: int,
         version: int | None = None,
-    ) -> DataFrame | None:
-        """Tier-selected, clamped, grid-filled read — the scan goes
-        through ``read_range`` so the day partitions outside the window
-        are pruned before any IO (R1-R3 with partition pruning).
-        ``version`` pins a historical manifest seq (see :meth:`read`):
-        the same render query replayed against yesterday's committed
-        snapshot."""
+    ) -> FetchPlan | None:
+        """The read plan of one fetch (R1-R2): clamp the window, select
+        the tier, round the bounds up to its step, and list the tier's
+        committed files of the window's partitions at one manifest seq
+        (``version``, default the latest). None when the window is
+        entirely outside retention; an inverted window raises. No file
+        is opened."""
         from kenshin_spark.operators.fetch import (
             clamp_range,
-            grid_fill,
             roundup,
             select_archive,
         )
@@ -838,14 +886,37 @@ class ParquetTieredStore:
         )
         if clamped is None:
             return None
-        from_time, until_time = clamped
-        idx = select_archive(archives, from_time, now)
+        self._check_version(version)
+        idx = select_archive(archives, clamped[0], now)
         step = archives[idx].sec_per_point
-        pts = self.read_range(
-            idx, roundup(from_time, step), roundup(until_time, step),
-            version=version,
-        )
-        return grid_fill(pts, metrics, from_time, until_time, step)
+        lo, hi = (roundup(t, step) for t in clamped)
+        unit = self.part_unit(idx)
+        days = list(range(lo // unit, (hi - 1) // unit + 1)) if hi > lo else []
+        seq = self.commit.epoch() if version is None else version
+        files = self._plan(self.tier_path(idx), version=seq, days=days)
+        return FetchPlan(idx, step, lo, hi, seq, files)
+
+    def fetch(
+        self, metrics, from_time: int, until_time: int, now: int,
+        version: int | None = None,
+    ) -> DataFrame | None:
+        """Tier-selected, clamped, grid-filled read (R1-R3): the scan
+        reads only the files ``fetch_plan`` lists for the window.
+        ``version`` pins a historical manifest seq (see :meth:`read`):
+        the same render query replayed against yesterday's committed
+        snapshot."""
+        from kenshin_spark.operators.fetch import grid_fill
+
+        plan = self.fetch_plan(from_time, until_time, now, version=version)
+        if plan is None:
+            return None
+        pts = self._empty()
+        if plan.files:
+            pts = self._resolve(self._scan_files(
+                self.tier_path(plan.tier),
+                [os.path.join(self.root, rel) for rel in plan.files],
+            ))
+        return grid_fill(pts, metrics, plan.lo, plan.hi, plan.step)
 
     def fetch_glob(
         self, target: str, from_time: int, until_time: int, now: int
@@ -1082,3 +1153,93 @@ class ParquetTieredStore:
         with self.commit.txn(op="catalog") as tx:
             for rel, size in adds:
                 tx.add(rel, size)
+
+
+class ArrowReader:
+    """The serving executor over a store: cache queries, fetches and
+    render globs answered by reading the manifest-planned files with
+    pyarrow on the driver — no Spark job. Each call plans at one
+    manifest seq, so a concurrent compaction or expiry commit never
+    tears an answer (retired files stay on disk until ``vacuum``).
+    Rows are resolved as ``_resolve`` does and grid-filled as
+    ``grid_fill`` does. The filesystem is resolved once, here: a root
+    pyarrow cannot open raises at construction, never per request."""
+
+    def __init__(self, store: ParquetTieredStore):
+        from pyarrow import fs as pafs
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.store = store
+        self._fs, self._base = pafs.FileSystem.from_uri(store.root)
+        self._tier_schema = to_arrow_schema(T.StructType(
+            [f for f in store._tier_schema() if f.name != "day"]
+        ))
+        self._metric_schema = to_arrow_schema(
+            T.StructType([CATALOG_SCHEMA["metric"]])
+        )
+
+    def _table(self, rels: list[str], schema, flt=None):
+        import pyarrow.dataset as ds
+
+        paths = [f"{self._base.rstrip('/')}/{rel}" for rel in rels]
+        return ds.dataset(
+            paths, schema=schema, format="parquet", filesystem=self._fs
+        ).to_table(filter=flt)
+
+    def _points(self, rels: list[str], flt) -> dict:
+        return self.store._resolve_arrow(
+            self._table(rels, self._tier_schema, flt)
+        )
+
+    def lookup(self, metric: str) -> list[tuple[int, float | None]]:
+        """Tier 0's resolved ``(ts, value)`` points of ``metric`` in ts
+        order — ``read(0).where(metric = …)``."""
+        import pyarrow.compute as pc
+
+        st = self.store
+        pts = self._points(
+            st._plan(st.tier_path(0)), pc.field("metric") == metric
+        )
+        return sorted(((ts, v) for (_, ts), v in pts.items()),
+                      key=lambda p: p[0])
+
+    def grid(self, plan: FetchPlan, metrics: list[str]) -> list[tuple]:
+        """``grid_fill`` of ``plan``: one ``(metric, ts, value)`` row
+        per requested metric (duplicates repeat) per slot, NULL where
+        no point is stored; no row for a zero-width window."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        pts = self._points(
+            plan.files,
+            pc.field("metric").isin(pa.array(metrics, pa.string()))
+            & (pc.field("ts") >= plan.lo)
+            & (pc.field("ts") < plan.hi),
+        )
+        return [
+            (m, ts, pts.get((m, ts)))
+            for m in metrics for ts in range(plan.lo, plan.hi, plan.step)
+        ]
+
+    def fetch(
+        self, metrics: list[str], from_time: int, until_time: int, now: int
+    ) -> list[tuple] | None:
+        """``store.fetch(...).collect()``: None outside retention."""
+        plan = self.store.fetch_plan(from_time, until_time, now)
+        return None if plan is None else self.grid(plan, metrics)
+
+    def glob(self, target: str, seq: int) -> list[str]:
+        """The metrics matching a graphite glob at manifest seq ``seq``,
+        sorted: the catalog's metric column when the catalog has files,
+        else tier 0's — the namespace ``fetch_glob`` resolves."""
+        import re
+
+        from kenshin_spark.operators.maintenance import glob_to_regex
+
+        st = self.store
+        rels = st._plan(st.catalog_path, version=seq) or st._plan(
+            st.tier_path(0), version=seq
+        )
+        names = self._table(rels, self._metric_schema)["metric"].unique()
+        pat = re.compile(glob_to_regex(target))
+        return sorted(m for m in names.to_pylist() if pat.search(m))

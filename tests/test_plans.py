@@ -395,19 +395,24 @@ class TestIoBudget:
                 total += int(m.apply("numFiles").value())
         return total
 
-    def test_one_day_fetch_reads_one_file_of_thirty(self, spark, tmp_path):
+    @staticmethod
+    def _thirty_days(spark, tmp_path):
+        """A one-tier store holding 30 daily partitions, one file each."""
         from kenshin_spark.config import Schema
         from kenshin_spark.store import ParquetTieredStore
 
         schema = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
         store = ParquetTieredStore(spark, schema, str(tmp_path / "st"))
-        day = 86400
         store.overwrite(0, spark.createDataFrame(
-            [("m", d * day + 60 * i, 1.0)
+            [("m", d * 86400 + 60 * i, 1.0)
              for d in range(30) for i in range(10)],
             ["metric", "ts", "value"]))
         store.compact(0, target_files_per_day=1)  # 30 files on disk
+        return store
 
+    def test_one_day_fetch_reads_one_file_of_thirty(self, spark, tmp_path):
+        store = self._thirty_days(spark, tmp_path)
+        day = 86400
         ranged = store.read_range(0, 5 * day, 6 * day)
         assert self._files_read(ranged) == 1
         # the full Graphite-style fetch (clamp + tier select + grid
@@ -417,6 +422,32 @@ class TestIoBudget:
         assert self._files_read(grid) <= 2
         # control: an unbounded read pays the whole store
         assert self._files_read(store.read(0)) == 30
+
+    def test_one_day_serving_fetch_opens_one_file_of_thirty(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The serving executor opens exactly the files the fetch plan
+        lists for the window: one day's file of thirty."""
+        import pyarrow.dataset as ds
+
+        from kenshin_spark.store import ArrowReader
+
+        store = self._thirty_days(spark, tmp_path)
+        day = 86400
+        opened = []
+        dataset = ds.dataset
+
+        def spying_dataset(paths, *a, **kw):
+            opened.extend(paths)
+            return dataset(paths, *a, **kw)
+
+        monkeypatch.setattr(ds, "dataset", spying_dataset)
+        now = 30 * day - 60
+        plan = store.fetch_plan(5 * day, 6 * day, now)
+        assert [rel.split("/")[1] for rel in plan.files] == ["day=5"]
+        rows = ArrowReader(store).fetch(["m"], 5 * day, 6 * day, now)
+        assert sum(v is not None for _, _, v in rows) == 10
+        assert len(opened) == 1 and opened[0].endswith(plan.files[0])
 
 
 class TestTpcPlanPins:

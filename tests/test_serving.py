@@ -396,48 +396,77 @@ class TestServingUnderCommits:
 
 
 class TestServingPool:
-    def test_lookup_tags_and_resets_scheduler_pool(self, spark, tmp_path):
-        """store_serving_fns must tag its jobs with the serving pool for
-        the duration of the lookup and reset the thread's local property
-        after — leaking the tag would put unrelated jobs on this thread
-        into the serving pool. (Pool WEIGHTING only applies under
-        get_spark(fair_pools=True); the tag itself is scheduler-mode
-        agnostic.)"""
-        from kenshin_spark.serving import store_serving_fns
-        from kenshin_spark.session import SERVING_POOL
-
+    @staticmethod
+    def _store(spark, tmp_path, name):
         st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "pool"), mode="mor"
+            spark, SCHEMA, str(tmp_path / name), mode="mor"
         )
         st.upsert(
             0,
             spark.createDataFrame(
-                [("m.p", 60, 1.0), ("m.p", 120, 2.0)],
+                [("m.p", 60, 1.0), ("m.p", 120, 2.0), ("m.q", 60, 3.0)],
                 ["metric", "ts", "value"],
             ),
         )
-        seen = {}
-        orig_read = st.read
+        return st
 
-        def spying_read(i):
+    def test_lookup_and_fetch_run_no_spark_job(self, spark, tmp_path):
+        """lookup and fetch_fn read the planned files with pyarrow on
+        the driver: no Spark job runs on the calling thread."""
+        from kenshin_spark.serving import store_serving_fns
+
+        st = self._store(spark, tmp_path, "nojob")
+        lookup, fetch_fn = store_serving_fns(st)
+        sc = spark.sparkContext
+        sc.setJobGroup("serving-no-job", "lookup and fetch")
+        try:
+            assert lookup("m.p") == [(60, 1.0), (120, 2.0)]
+            rows = fetch_fn(["m.p", "m.q"], 60, 180, 180)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rows == [
+            ("m.p", 60, 1.0), ("m.p", 120, 2.0),
+            ("m.q", 60, 3.0), ("m.q", 120, None),
+        ]
+        tracker = sc.statusTracker()
+        assert list(tracker.getJobIdsForGroup("serving-no-job")) == []
+
+    def test_render_chain_tags_and_resets_scheduler_pool(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The render chain — the only Spark work a /render runs — is
+        tagged with the serving pool while it runs, scans no parquet,
+        and the thread's local property is reset after: leaking the tag
+        would put unrelated jobs on this thread into the serving pool.
+        (Pool WEIGHTING only applies under get_spark(fair_pools=True);
+        the tag itself is scheduler-mode agnostic.)"""
+        from kenshin_spark.functions import render
+        from kenshin_spark.serving import store_render_fn
+        from kenshin_spark.session import SERVING_POOL
+
+        st = self._store(spark, tmp_path, "pool")
+        seen = {}
+        orig = render.apply_chain
+
+        def spying_chain(grid, chain):
             seen["pool"] = spark.sparkContext.getLocalProperty(
                 "spark.scheduler.pool"
             )
-            return orig_read(i)
+            out = orig(grid, chain)
+            seen["plan"] = out._jdf.queryExecution().executedPlan().toString()
+            return out
 
-        st.read = spying_read
-        # reader=st: tag behavior is what's under test, not the clone
-        lookup, fetch_fn = store_serving_fns(st, reader=st)
-        assert dict(lookup("m.p")) == {60: 1.0, 120: 2.0}
+        monkeypatch.setattr(render, "apply_chain", spying_chain)
+        render_fn = store_render_fn(st)
+        rows = render_fn("sumSeries(m.*)", 60, 180, 180)
+        assert [(ts, v) for _, ts, v in rows] == [(60, 4.0), (120, 2.0)]
         assert seen["pool"] == SERVING_POOL
+        assert "FileScan" not in seen["plan"]
         assert (
             spark.sparkContext.getLocalProperty("spark.scheduler.pool")
             is None
         )
-        rows = fetch_fn(["m.p"], 0, 180, 180)
-        assert {ts: v for _, ts, v in rows if v is not None} == {
-            60: 1.0, 120: 2.0,
-        }
 
     def test_default_reader_is_an_isolated_clone(self, spark, tmp_path):
         """The default serving reader is a clone of the store on a CHILD

@@ -26,6 +26,7 @@ from kenshin_spark.dedup.embedding import (
     cross_neardup_pairs,
     embedding_neardup_pairs,
     embedding_neardup_pairs_lsh,
+    hyperplane_band_index,
 )
 from kenshin_spark.functions import vectors
 from kenshin_spark.dedup.semantic import semantic_neardup_pairs
@@ -42,7 +43,7 @@ from kenshin_spark.functions.vectors import (
     score_pairs,
 )
 from kenshin_spark.queries._common import _NN_CTES
-from kenshin_spark.similarity import brute_force_topk, ivf_topk
+from kenshin_spark.similarity import brute_force_topk, ivf_topk, lsh_topk
 from kenshin_spark.similarity.classify import nearest_centroid
 
 T = 0.4
@@ -255,6 +256,21 @@ def test_zero_and_null_vectors_rank_last_in_topk(spark):
         assert [(n, c) for _, n, c in sorted(by_q[q])] == [
             (n, None) for n in range(8) if n != q
         ]
+
+
+def test_null_vectors_make_no_lsh_band_rows(spark):
+    """A vector that is not whole gets no band signature, so the LSH
+    paths give it no candidate, as the exact kernels give it no pair."""
+    df = degenerate(spark)
+    index = hyperplane_band_index(df)
+    assert {r[0] for r in index.select("vec_id").distinct().collect()} == (
+        set(range(8)) - {5, 6}
+    )
+    lsh = pairs(embedding_neardup_pairs_lsh(df, threshold=T))
+    assert (0, 4) in lsh
+    assert lsh.items() <= pairs(embedding_neardup_pairs(df, threshold=T)).items()
+    top = lsh_topk(df, df.where("vec_id in (0, 5)"), k=3).collect()
+    assert {r["query_id"] for r in top} == {0}
 
 
 def test_vectors_of_different_lengths_raise(spark):
