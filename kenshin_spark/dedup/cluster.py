@@ -1,53 +1,50 @@
-"""Duplicate-cluster assignment: distributed connected components over
-near-duplicate candidate pairs.
+"""Duplicate-cluster assignment: connected components over near-duplicate
+candidate pairs.
 
 Pair detectors (MinHash-LSH, SimHash, n-gram Jaccard, embedding near-dup)
 emit *edges*; a dedup pipeline needs *clusters* — "docs {3, 17, 96} are
 the same document, keep one". That grouping is connected components over
 the pair graph, and at 100 TB the pair set itself can be billions of
-edges, so the CC computation must be distributed too.
+edges, so the CC computation must be able to run distributed too.
 
-Algorithm: iterative min-label propagation —
+Two paths, one size gate (``DRIVER_CC_GATE``):
 
-    lbl(v) ← min(lbl(v), min_{(u,v) ∈ E} lbl(u))
+- at or under the gate the deduplicated edge set is collected (ids
+  only, one Arrow batch) and solved on the driver by a vectorized
+  hook + pointer-jumping union-find;
+- over it, the alternating large-star/small-star scheme of Kiveris et
+  al. ("Connected Components in MapReduce and Beyond", SoCC'14) runs
+  distributed. It converges in O(log n) rounds on any graph, long
+  chains included. Each star step is one window pass (``min(dst)``
+  partitioned by ``src``), then a filter (large-star) or an explode
+  and a ``distinct`` (small-star) — no aggregate joined back to the
+  edges.
 
-repeated to fixpoint. Each round is two shuffles (edge-label join keyed
-by node + a min-aggregate keyed by src), both AQE-sized; rounds needed is
-the graph diameter, and near-dup clusters are small-diameter by nature
-(every member pairs with most others), so 2-4 rounds is typical. For
-adversarially long path graphs the alternating large-star/small-star
-scheme of Kiveris et al. ("Connected Components in MapReduce and
-Beyond", SoCC'14) converges in O(log n) rounds; min-label propagation is
-chosen here because dedup graphs are dense-clustered, and it keeps every
-round a plain join+agg that Catalyst/AQE optimizes.
-
-Fixpoint detection is one scalar aggregate per round: labels only ever
-decrease, so Σ lbl is strictly decreasing until convergence — comparing
-successive sums needs no join against the previous labelling.
-
-``localCheckpoint`` truncates lineage each round (iterative plans
-otherwise grow exponentially); on a real cluster use ``checkpoint`` with
-a reliable dir instead — noted inline.
+Both label every node with its component minimum, so the output is the
+same whichever path runs. Star's fixpoint is one scalar fingerprint
+aggregate per round, and the edge set is pinned each round
+(``session.pin``): iterative plans otherwise grow lineage without
+bound. Star raises ``RuntimeError`` when ``max_iter`` runs out before
+a confirmed fixpoint, rather than return a partial labelling.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kenshin_spark.session import pin
 
 
-#: below this many (deduplicated, undirected) edges the pair graph is
+#: below this many (deduplicated, symmetric) edges the pair graph is
 #: collected to the driver and solved with union-find — the same
 #: size-gated reasoning as a broadcast join: 2M edges is ~32 MB of longs,
-#: and a driver union-find replaces 2-4 iterative rounds x (2 shuffles +
+#: and a driver union-find replaces 2-6 star rounds x (window shuffles +
 #: checkpoint + scalar fixpoint agg) of per-round scheduling latency.
 #: Near-dup pair graphs are SMALL relative to the corpus (Lee et al.
 #: 2022 report low-single-digit duplication on web corpora), so even a
-#: 100 TB run usually lands under the gate; past it the distributed
-#: propagation runs unchanged.
+#: 100 TB run usually lands under the gate; past it star runs.
 DRIVER_CC_GATE = 2_000_000
 
 
@@ -58,7 +55,6 @@ def connected_components(
     max_iter: int = 25,
     algorithm: str = "auto",
     stats: dict | None = None,
-    patience: int = 8,
 ) -> DataFrame:
     """``(node, cluster_id)`` for every node appearing in ``pairs``;
     ``cluster_id`` is the minimum node id of the component (stable,
@@ -67,69 +63,50 @@ def connected_components(
     ``algorithm="auto"`` (default) counts the deduplicated edge set: at
     or under ``DRIVER_CC_GATE`` edges it is collected and solved with
     driver-side union-find (exactly the broadcast-join trade — ids only,
-    never text/vectors), above the gate it falls through to ``"label"``.
-    ``algorithm="label"`` is min-label propagation — rounds = graph
-    diameter, the right trade for dense near-dup clusters.
-    ``algorithm="star"`` is the alternating large-star/small-star scheme
-    (Kiveris et al., SoCC'14) — O(log n) rounds on ANY graph, the
-    fallback for adversarially long path/chain graphs where label
-    propagation would need diameter rounds.
+    never text/vectors); above the gate the large-star/small-star
+    iteration runs distributed (``_star_components``).
+    ``algorithm="star"`` forces the star iteration at any size.
 
-    ``patience`` bounds how many label rounds may run WITHOUT a
-    confirmed fixpoint before escalating to star (capped by
-    ``max_iter``). Dedup graphs converge in 2-7 rounds (SCALING.md r8
-    profile), so the default 8 never fires on genuine near-dup graphs;
-    an adversarial long-chain graph escalates after 8 rounds instead of
-    burning the whole ``max_iter`` budget first. Escalation is a
-    HYBRID, not a restart: star runs on the label-CONTRACTED quotient
-    graph (every partially-converged cluster collapses to one node), so
-    the propagation work on the dense bulk is kept and star only pays
-    for the chain remnants that defeated label propagation.
+    ``max_iter`` caps star's rounds; running out of them before a
+    confirmed fixpoint raises ``RuntimeError``.
 
     ``stats``, when a dict is passed, is filled in-place with
-    ``{"algorithm", "rounds"}`` (and ``"edges"`` on the paths that
-    materialize the symmetric edge set; ``"escalated_from_label"`` +
-    ``"contracted_edges"`` on the hybrid path) — the observability hook
-    the sf1 profiling in SCALING.md reads; rounds is the
-    fixpoint-iteration count (0 for the driver path, which has none)."""
-    if algorithm == "star":
-        return _star_components(pairs, a, b, max_iter, stats)
-    if algorithm == "auto":
-        # symmetrize via ONE explode, not union-of-two-selects: the union
-        # referenced the `pairs` subtree twice, so the (expensive) pair
-        # detector executed twice inside the single checkpoint action
-        # (guide §2.4 — duplicated subtrees). explode(array(e, swap(e)))
-        # reads each pair once and emits both directions.
-        edges = pin(_sym_edges(pairs, a, b).distinct(), eager=True)
-        n_edges = edges.count()
-        if stats is not None:
-            stats["edges"] = n_edges
-        if n_edges <= DRIVER_CC_GATE:
-            if stats is not None:
-                stats.update(algorithm="driver", rounds=0)
-            return _driver_components(edges)
-        return _label_components(edges, max_iter, stats, patience)
-    if algorithm != "label":
+    ``{"edges", "algorithm", "rounds"}``: the symmetric edge count, the
+    path taken (``"driver"`` or ``"star"``) and the fixpoint-round count
+    (0 for the driver path, which has none)."""
+    if algorithm not in ("auto", "star"):
         raise ValueError(f"unknown CC algorithm {algorithm!r}")
-    edges = pin(
-        # one detector evaluation (see auto path); reused every round —
-        # pinned via the deployment-aware seam (session.pin)
-        _sym_edges(pairs, a, b).distinct(),
-        eager=True,
-    )
-    return _label_components(edges, max_iter, stats, patience)
+    # symmetrize via ONE explode, not union-of-two-selects: the union
+    # referenced the `pairs` subtree twice, so the (expensive) pair
+    # detector executed twice inside the single checkpoint action
+    # (guide §2.4 — duplicated subtrees). explode(array(e, swap(e)))
+    # reads each pair once and emits both directions.
+    edges = pin(_sym_edges(pairs, a, b).distinct(), eager=True)
+    n_edges = edges.count()
+    if stats is not None:
+        stats["edges"] = n_edges
+    if algorithm == "auto" and n_edges <= DRIVER_CC_GATE:
+        if stats is not None:
+            stats.update(algorithm="driver", rounds=0)
+        return _driver_components(edges)
+    return _star_components(edges, max_iter, stats)
 
 
 def _sym_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Symmetric (src, dst) edge stream from a pair set, evaluating the
     pair subtree ONCE: each input row explodes into both directions.
     Row-multiset-identical to ``und UNION ALL swap(und)``."""
-    return pairs.select(
+    return _explode_edges(pairs, (F.col(a), F.col(b)), (F.col(b), F.col(a)))
+
+
+def _explode_edges(df: DataFrame, *ends) -> DataFrame:
+    """One ``(src, dst)`` row per ``(src, dst)`` column pair in ``ends``
+    for every row of ``df`` — a single pass over ``df``."""
+    return df.select(
         F.explode(
-            F.array(
-                F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
-                F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
-            )
+            F.array(*[
+                F.struct(s.alias("src"), d.alias("dst")) for s, d in ends
+            ])
         ).alias("_e")
     ).select("_e.src", "_e.dst")
 
@@ -149,7 +126,7 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     replaces at 50 s for 4M symmetric edges; this form solves the same
     graph in well under a second, so the gate's cost is the Arrow
     collect, not the solve. Labels converge to component MINIMA, so the
-    output is row-identical to the distributed fixpoints'."""
+    output is row-identical to the star fixpoint's."""
     import numpy as np
 
     spark = edges.sparkSession
@@ -180,104 +157,12 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def _label_components(
-    edges: DataFrame, max_iter: int, stats: dict | None = None,
-    patience: int | None = None,
-) -> DataFrame:
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    budget = max_iter if patience is None else min(patience, max_iter)
-    prev_sum = None
-    rounds = 0
-    for _ in range(budget):
-        rounds += 1
-        nbr_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
-            .select(
-                labels["node"],
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias(
-                    "lbl"
-                ),
-            )
-        )
-        labels = pin(labels, eager=True)
-        cur_sum = labels.agg(F.sum("lbl")).first()[0]
-        if cur_sum == prev_sum:  # labels are non-increasing → fixpoint
-            break
-        prev_sum = cur_sum
-    else:
-        # patience exhausted without a CONFIRMED fixpoint. Label
-        # propagation needs diameter rounds, so a long-chain graph can
-        # outrun the budget — and returning the partial labelling would
-        # be silently wrong (components still split). Escalate to the
-        # star scheme, whose round count is O(log n) on ANY graph
-        # (measured: the r8 profile's 64-chain takes label 64 rounds,
-        # star 7) — but run it on the label-CONTRACTED quotient graph,
-        # not the raw edges: every partially-converged cluster collapses
-        # to a single node (dedup graphs are dense, so this is most of
-        # the mass), and star pays only for the chain remnants. The
-        # quotient preserves components, its minima ARE the component
-        # minima (the min node always labels itself), so composing the
-        # two labellings is row-identical to either pure algorithm.
-        if stats is not None:
-            stats["escalated_from_label"] = rounds
-        sl = labels.select(F.col("node").alias("src"), F.col("lbl").alias("sl"))
-        dl = labels.select(F.col("node").alias("dst"), F.col("lbl").alias("dl"))
-        contracted = pin(
-            edges.join(sl, "src")
-            .join(dl, "dst")
-            .select(F.col("sl").alias("src"), F.col("dl").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct(),
-            eager=True,
-        )
-        n_contracted = contracted.count()
-        if stats is not None:
-            stats["contracted_edges"] = n_contracted
-        if n_contracted == 0:  # converged on the last round, unconfirmed
-            if stats is not None:
-                stats.update(algorithm="label", rounds=rounds)
-            return labels.select("node", F.col("lbl").alias("cluster_id"))
-        if n_contracted <= DRIVER_CC_GATE:
-            # the contraction usually collapses the graph by orders of
-            # magnitude (the dense mass is gone); when what's left fits
-            # the driver gate, one Arrow collect + the vectorized
-            # union-find beats multiple star fixpoint rounds of
-            # scheduling latency — the same size-gated trade as the
-            # auto path's gate, applied to the quotient
-            if stats is not None:
-                stats.update(algorithm="label+driver", rounds=rounds)
-            roots = _driver_components(contracted)
-        else:
-            roots = _star_components(contracted, "src", "dst", max_iter,
-                                     stats)
-        return (
-            labels.join(
-                roots.withColumnRenamed("node", "lbl"), "lbl", "left"
-            )
-            # labels isolated in the quotient already converged
-            .select(
-                "node",
-                F.coalesce("cluster_id", F.col("lbl")).alias("cluster_id"),
-            )
-        )
-    if stats is not None:
-        stats.update(algorithm="label", rounds=rounds)
-    return labels.select("node", F.col("lbl").alias("cluster_id"))
-
-
 def _star_components(
-    pairs: DataFrame, a: str, b: str, max_iter: int,
-    stats: dict | None = None,
+    sym: DataFrame, max_iter: int, stats: dict | None = None
 ) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14).
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14)
+    over the pinned symmetric deduplicated edge set ``sym``.
 
     Each round rewires the edge set toward a union of stars centered on
     component minima:
@@ -287,73 +172,49 @@ def _star_components(
     - small-star: with edges directed larger→smaller, every node links
       its smaller neighbors (and itself) to the same m.
 
-    Both are one groupBy-min plus one join per round (AQE-sized
-    shuffles), and the edge set provably converges in O(log n) rounds
-    regardless of diameter — a chain of 1M nodes needs ~20 rounds where
-    label propagation needs 1M. Fixpoint = stable (count, Σsrc, Σdst)
-    edge fingerprint; at fixpoint the edges ARE the labelling
-    (non-center → center), so no separate label table is carried.
-    """
-    und = (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        # canonical undirected form: larger id on the src side
-        .select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
-    )
-    und = pin(und, eager=True)
-    nodes = (
-        und.select("src").unionAll(und.select(F.col("dst").alias("src")))
-        .distinct()
-        .select(F.col("src").alias("node"))
-    )
-    edges = und
+    Each step computes m as ``min(dst) over (partition by src)`` on the
+    edge rows themselves — one window shuffle, no aggregate joined back
+    — then filters (large-star) or explodes (small-star). Only
+    small-star's output is deduplicated: large-star emits one row per
+    undirected edge, and duplicates there change neither small-star's
+    minima nor its deduplicated output. The edge set provably converges
+    in O(log n) rounds regardless of diameter — a chain of 1M nodes
+    needs ~20 rounds. Fixpoint = stable (count, Σsrc, Σdst, Σhash) edge
+    fingerprint; the fingerprint aggregate is also the action that
+    materializes the round's lazy pin. At fixpoint the edges ARE the
+    labelling (non-center → center), so no separate label table is
+    carried. Under AQE a round is five Spark jobs: the two window
+    shuffles, small-star's ``distinct`` and the two-stage fingerprint."""
+    by_src = Window.partitionBy("src")
+    # every node, self-loop-only ones included (they label themselves)
+    nodes = sym.select(F.col("src").alias("node")).distinct()
+    # canonical undirected form: the pinned half with the larger id on
+    # the src side
+    edges = sym.where(F.col("src") > F.col("dst"))
     prev_fp = None
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, max_iter + 1):
         # -- large-star: needs both directions to see every neighbor
-        sym = edges.unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        m = sym.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
         edges = (
-            sym.join(m, "src")
+            _sym_edges(edges, "src", "dst").select(
+                "src", "dst",
+                F.least(F.min("dst").over(by_src), F.col("src")).alias("m"),
+            )
             .where(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
         )
-        # referenced twice below (small-star's min-agg AND its join) —
-        # pin it so the large-star join+distinct runs once per round,
-        # not twice (lazy: materializes inside the round-end pin action)
-        edges = pin(edges, eager=False)
-        # -- small-star: edges already directed larger→smaller
-        m = edges.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = edges.join(m, "src")
+        # -- small-star: edges already directed larger→smaller; link
+        # each smaller neighbor and the node itself to m
         edges = (
-            # both output directions from ONE pass over `joined` (the
-            # former unionAll-of-two-selects evaluated the join twice)
-            joined.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("dst").alias("src"), F.col("m").alias("dst")
-                        ),
-                        F.struct("src", F.col("m").alias("dst")),
-                    )
-                ).alias("_e")
+            _explode_edges(
+                edges.withColumn("m", F.min("dst").over(by_src)),
+                (F.col("dst"), F.col("m")),
+                (F.col("src"), F.col("m")),
             )
-            .select("_e.src", "_e.dst")
             .where(F.col("src") != F.col("dst"))
             .distinct()
         )
-        edges = pin(edges, eager=True)
+        # lazy pin: the fingerprint below is the action that fills it
+        edges = pin(edges, eager=False)
         fp = tuple(
             edges.agg(
                 F.count("*"), F.sum("src"), F.sum("dst"),
@@ -364,6 +225,13 @@ def _star_components(
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        # a partial star edge set is a wrong labelling (components still
+        # split) — never hand it back as an answer
+        raise RuntimeError(
+            f"star connected components: no fixpoint within "
+            f"max_iter={max_iter} rounds"
+        )
     if stats is not None:
         stats.update(algorithm="star", rounds=rounds)
     # fixpoint: union of stars — every edge is (member, component-min);

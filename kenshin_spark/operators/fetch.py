@@ -90,7 +90,13 @@ def grid_fill(
     from_r = roundup(from_time, step)
     until_r = roundup(until_time, step)
     if isinstance(metrics, list):
-        metrics_df = spark.createDataFrame([(m,) for m in metrics], ["metric"])
+        import pyarrow as pa
+
+        # an Arrow table is a local relation: no pickled-row RDD, no
+        # Python worker, and an empty list keeps its `metric string` schema
+        metrics_df = spark.createDataFrame(
+            pa.table({"metric": pa.array(metrics, pa.string())})
+        )
     else:
         metrics_df = metrics.select("metric").distinct()
 

@@ -123,7 +123,7 @@ def _clusters_oracle() -> str:
     # connected components by recursive label reachability: (node, lbl)
     # holds every label reachable from node along pair edges, so
     # min(lbl) per node is the component minimum — exactly the
-    # cluster_id the Spark min-label propagation converges to.
+    # cluster_id connected_components returns on either of its paths.
     return f"""
     WITH RECURSIVE pairs AS ({_minhash_oracle()}),
     edges AS (
@@ -146,10 +146,12 @@ def _clusters_oracle() -> str:
 @register(
     "dedup_clusters",
     _clusters_oracle(),
-    "Duplicate clusters: connected components (iterative min-label "
-    "propagation, localCheckpoint per round) over the MinHash-LSH pair "
-    "graph; cluster_id = min doc_id of the component. The oracle resolves "
-    "the same components with a recursive reachability CTE.",
+    "Duplicate clusters: connected components over the MinHash-LSH pair "
+    "graph — at every testdata scale that graph is under DRIVER_CC_GATE, "
+    "so it is collected and solved by the driver union-find; "
+    "cluster_id = min doc_id of the "
+    "component. The oracle resolves the same components with a recursive "
+    "reachability CTE.",
 )
 def q_dedup_clusters(spark, sf_dir):
     from kenshin_spark.dedup import duplicate_clusters
@@ -881,14 +883,14 @@ def q_dedup_prefix_groups(spark, sf_dir):
 @register(
     "dedup_clusters_star_distributed",
     _clusters_oracle(),
-    "DISTRIBUTED connected components (VERDICT r6 item 3): the same "
-    "MinHash-LSH pair graph as dedup_clusters, but solved by the "
-    "alternating large-star/small-star iteration (Kiveris et al. "
-    "SoCC'14, dedup/cluster.py:_star_components) — algorithm='star' "
-    "bypasses the DRIVER_CC_GATE union-find fallback entirely, so the "
-    "hash-matched answer is produced by the O(log n)-round shuffle "
-    "iteration that runs at 100 TB, not the driver path. Oracle: the "
-    "same recursive reachability CTE as dedup_clusters.",
+    "DISTRIBUTED connected components: the same MinHash-LSH pair graph "
+    "as dedup_clusters, but solved by the alternating "
+    "large-star/small-star iteration (Kiveris et al. SoCC'14, "
+    "dedup/cluster.py:_star_components; each step one window pass) — "
+    "algorithm='star' bypasses the DRIVER_CC_GATE union-find entirely, "
+    "so the hash-matched answer is produced by the O(log n)-round "
+    "iteration that runs over the gate, not the driver path. Oracle: "
+    "the same recursive reachability CTE as dedup_clusters.",
 )
 def q_dedup_clusters_star_distributed(spark, sf_dir):
     from kenshin_spark.dedup import minhash_lsh_pairs
@@ -907,25 +909,15 @@ def q_dedup_clusters_star_distributed(spark, sf_dir):
 @register(
     "dedup_clusters_label_distributed",
     _clusters_oracle(),
-    "DISTRIBUTED connected components, min-label propagation path "
-    "(dedup/cluster.py:_label_components): algorithm='label' forces "
-    "the per-round join+groupBy-min fixpoint that the over-gate auto "
-    "path falls through to — so BOTH distributed CC algorithms now "
-    "have a driver-oracled row, not just the size-gated driver "
-    "union-find. Oracle: the same recursive reachability CTE.",
+    "DISTRIBUTED connected components, the over-gate auto path: past "
+    "DRIVER_CC_GATE connected_components hands its pinned symmetric "
+    "edge set to the large-star/small-star iteration, which is what "
+    "this row runs (the body of dedup_clusters_star_distributed; the "
+    "name is kept from the deleted min-label propagation path). "
+    "Oracle: the same recursive reachability CTE.",
 )
 def q_dedup_clusters_label_distributed(spark, sf_dir):
-    from kenshin_spark.dedup import minhash_lsh_pairs
-    from kenshin_spark.dedup.cluster import connected_components
-
-    pairs = minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5
-    )
-    cc = connected_components(pairs, algorithm="label")
-    sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return cc.select(F.col("node").alias("doc_id"), "cluster_id").join(
-        sizes, "cluster_id"
-    )
+    return _REG["dedup_clusters_star_distributed"].fn(spark, sf_dir)
 
 
 @register(
@@ -1321,16 +1313,15 @@ def q_dedup_containment_bands(spark, sf_dir):
     FROM (SELECT doc_id FROM documents WHERE doc_id % 70 = 0) d,
          unnest(generate_series(0, 3)) AS u(k)
     """,
-    "the r9 hybrid CC escalation as a driver row: a mixed graph (a "
-    "32-node chain — fixed size, so the adversarial diameter is "
-    "SF-independent — plus 4-cliques on "
-    "synthetic ids per 70th doc, scaling with the data) forced down "
-    "the label path with patience=2 — label converges the cliques, "
-    "the chain defeats it, escalation contracts to the quotient and "
-    "solves it under the driver gate (dedup/cluster.py), and the composed "
-    "labelling must equal the component minima the oracle derives "
-    "from the construction (chain -> min chain id, clique -> its "
-    "block min)",
+    "distributed CC on a long chain: a mixed graph (a 32-node chain — "
+    "fixed size, so the adversarial diameter is SF-independent — plus "
+    "4-cliques on synthetic ids per 70th doc, scaling with the data) "
+    "forced through the large-star/small-star iteration "
+    "(algorithm='star', dedup/cluster.py), which converges on the "
+    "chain in O(log n) rounds; the labelling must equal the component "
+    "minima the oracle derives from the construction (chain -> min "
+    "chain id, clique -> its block min). The name is kept from the "
+    "deleted label->star escalation this row once exercised",
 )
 def q_dedup_clusters_hybrid_escalation(spark, sf_dir):
     from pyspark.sql import Window
@@ -1364,9 +1355,7 @@ def q_dedup_clusters_hybrid_escalation(spark, sf_dir):
         )
     )
     pairs = chain.unionByName(cliques)
-    return connected_components(
-        pairs, algorithm="label", max_iter=50, patience=2
-    ).select(
+    return connected_components(pairs, algorithm="star").select(
         F.col("node").cast("long").alias("node"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
     )

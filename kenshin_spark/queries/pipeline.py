@@ -304,8 +304,8 @@ def q_pipeline_quality_report(spark, sf_dir):
 
 def _leakage_split_oracle() -> str:
     # Replays the full chain in SQL: MinHash-LSH pairs -> connected
-    # components (recursive reachability, min label = the Spark
-    # min-label-propagation fixpoint) -> md5 split bucket on the cluster
+    # components (recursive reachability, min label = the component
+    # minimum connected_components returns) -> md5 split bucket on the cluster
     # representative (the sampling module's SQL twin), unpaired docs
     # falling through to their own id.
     return f"""

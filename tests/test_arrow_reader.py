@@ -104,6 +104,15 @@ class TestFetchEquality:
         want = _spark_fetch(store, metrics, *window, NOW)
         assert _arrow_fetch(store, metrics, *window, NOW) == want
 
+    @pytest.mark.parametrize("window", [
+        (NOW - 3600, NOW),
+        (NOW - 50, NOW - 10),              # zero-width after rounding
+    ])
+    def test_empty_metric_list_equals_store_fetch(self, store, window):
+        want = _spark_fetch(store, [], *window, NOW)
+        assert want == []
+        assert _arrow_fetch(store, [], *window, NOW) == want
+
     def test_outside_retention_and_zero_width_shapes(self, store):
         assert _arrow_fetch(store, ["n1"], NOW + 10, NOW + 100, NOW) is None
         assert _arrow_fetch(store, ["n1"], NOW - 50, NOW - 10, NOW) == []

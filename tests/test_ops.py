@@ -1240,9 +1240,9 @@ class TestAsofJoin:
 
 
 class TestConnectedComponents:
-    """Cluster assignment over near-dup pairs (dedup/cluster.py): min-label
-    propagation must resolve exactly the graph's connected components,
-    regardless of edge order or path length."""
+    """Cluster assignment over near-dup pairs (dedup/cluster.py): both
+    connected-components paths must resolve exactly the graph's
+    components, regardless of edge order or path length."""
 
     def test_components_on_mixed_graph(self, spark):
         from kenshin_spark.dedup import connected_components
@@ -1263,68 +1263,18 @@ class TestConnectedComponents:
     def test_long_path_converges(self, spark):
         from kenshin_spark.dedup import connected_components
 
-        # 12-node path: worst case for label propagation (diameter 11);
-        # must still reach the fixpoint within max_iter.
+        # 12-node path (diameter 11): must still resolve to one
+        # component.
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(1, 12)], ["doc_a", "doc_b"]
         )
         got = connected_components(pairs).collect()
         assert all(r["cluster_id"] == 1 for r in got) and len(got) == 12
 
-    def test_label_escalates_to_star_past_diameter_budget(self, spark):
-        """Label propagation needs diameter rounds; when the patience
-        budget is exhausted WITHOUT a confirmed fixpoint it must NOT
-        return the (silently wrong) partial labelling — it escalates to
-        the star scheme, which is O(log n) rounds on any graph (the r8
-        CC profile's finding: chain64 = label 64 rounds vs star 7).
-        Escalation runs star on the label-CONTRACTED quotient, keeping
-        the propagation work instead of restarting from raw edges."""
-        from kenshin_spark.dedup import connected_components
-
-        n = 40  # diameter 39 > the small budget below
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, n)], ["doc_a", "doc_b"]
-        )
-        stats: dict = {}
-        got = connected_components(
-            pairs, algorithm="label", max_iter=10, patience=4, stats=stats
-        ).collect()
-        assert stats["escalated_from_label"] == 4  # patience, not max_iter
-        # a sub-gate quotient is solved driver-side (one Arrow collect)
-        assert stats["algorithm"] == "label+driver"
-        # the quotient chain shrinks by ~patience hops, no more
-        assert 0 < stats["contracted_edges"] < 2 * n
-        assert len(got) == n
-        assert all(r["cluster_id"] == 1 for r in got)  # ONE component
-
-    def test_escalation_runs_star_past_the_quotient_gate(
-        self, spark, monkeypatch
-    ):
-        """When the contracted quotient is still over the driver gate,
-        escalation finishes with star — forced here by shrinking the
-        gate under the quotient size."""
-        from kenshin_spark.dedup import cluster
-
-        n = 40
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, n)], ["doc_a", "doc_b"]
-        )
-        monkeypatch.setattr(cluster, "DRIVER_CC_GATE", 1)
-        stats: dict = {}
-        got = cluster.connected_components(
-            pairs, algorithm="label", max_iter=25, patience=4, stats=stats
-        ).collect()
-        assert stats["escalated_from_label"] == 4
-        assert stats["algorithm"] == "star"  # quotient over the tiny gate
-        assert len(got) == n
-        assert all(r["cluster_id"] == 1 for r in got)
-
-    def test_hybrid_escalation_keeps_dense_cluster_work(self, spark):
-        """Mixed graph: dense cliques (label converges them within
-        patience) + one long chain (defeats label). The hybrid must (1)
-        contract the cliques away — the quotient carries ONLY chain
-        remnants — and (2) still produce the exact component minima for
-        every node."""
+    def test_long_chain_and_cliques_keep_component_minima(self, spark):
+        """Mixed graph: dense cliques + one long chain, the shape the
+        deleted label->star escalation was built for. Both paths must
+        produce the exact component minima for every node."""
         from kenshin_spark.dedup import connected_components
 
         cliques = [
@@ -1335,43 +1285,16 @@ class TestConnectedComponents:
         ]
         chain = [(1000 + i, 1001 + i) for i in range(30)]
         pairs = spark.createDataFrame(cliques + chain, ["doc_a", "doc_b"])
-        stats: dict = {}
-        got = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components(
-                pairs, algorithm="label", max_iter=25, patience=3,
-                stats=stats,
-            ).collect()
-        }
-        assert stats["escalated_from_label"] == 3
-        assert stats["algorithm"] == "label+driver"  # quotient fits the gate
-        # cliques (84 sym edges each) collapsed; only chain remnants left
-        assert stats["contracted_edges"] <= 2 * 30
-        for base in (100, 200, 300):
-            assert all(got[base + i] == base for i in range(8))
-        assert all(got[1000 + i] == 1000 for i in range(31))
-
-    def test_patience_never_fires_on_converging_graphs(self, spark):
-        """Dedup-shaped graphs converge in 2-7 rounds; with the default
-        patience the label path must finish WITHOUT escalation and with
-        identical output to before."""
-        from kenshin_spark.dedup import connected_components
-
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
-            ["doc_a", "doc_b"],
-        )
-        stats: dict = {}
-        got = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components(
-                pairs, algorithm="label", stats=stats
-            ).collect()
-        }
-        assert stats["algorithm"] == "label"
-        assert "escalated_from_label" not in stats
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10,
-                       20: 20, 21: 20}
+        for algorithm in ("auto", "star"):
+            got = {
+                r["node"]: r["cluster_id"]
+                for r in connected_components(
+                    pairs, algorithm=algorithm
+                ).collect()
+            }
+            for base in (100, 200, 300):
+                assert all(got[base + i] == base for i in range(8))
+            assert all(got[1000 + i] == 1000 for i in range(31))
 
     def test_cluster_sizes_and_survivors(self, spark):
         from kenshin_spark.dedup import canonical_survivors, duplicate_clusters
@@ -2456,10 +2379,10 @@ class TestMetricCorrelationScope:
 
 
 class TestStarConnectedComponents:
-    """The large-star/small-star CC fallback (Kiveris SoCC'14): same
-    labels as min-label propagation on random graphs, and it handles the
-    adversarial chain graph in O(log n) rounds where label propagation
-    needs diameter rounds."""
+    """The large-star/small-star CC iteration (Kiveris SoCC'14), the
+    only distributed path: same labels as the driver union-find on
+    random graphs, and it handles the adversarial chain graph in
+    O(log n) rounds."""
 
     def _labels(self, spark, edges, algorithm, max_iter=25):
         from kenshin_spark.dedup.cluster import connected_components
@@ -2472,7 +2395,7 @@ class TestStarConnectedComponents:
             ).collect()
         }
 
-    def test_star_matches_label_prop_on_random_graphs(self, spark):
+    def test_star_matches_auto_on_random_graphs(self, spark):
         import random
 
         rng = random.Random(7)
@@ -2483,8 +2406,8 @@ class TestStarConnectedComponents:
             ]
             edges = [(x, y) for x, y in edges if x != y]
             star = self._labels(spark, edges, "star")
-            label = self._labels(spark, edges, "label")
-            assert star == label, f"trial {trial}"
+            auto = self._labels(spark, edges, "auto")
+            assert star == auto, f"trial {trial}"
 
     def test_star_converges_on_chain_in_log_rounds(self, spark):
         """A 200-node chain has diameter 199; star must finish within
@@ -2503,7 +2426,7 @@ class TestStarConnectedComponents:
         with _pytest.raises(ValueError):
             connected_components(df, algorithm="bogus")
 
-    def test_auto_driver_unionfind_matches_label_prop(self, spark):
+    def test_auto_driver_unionfind_matches_star(self, spark):
         """Under the gate, auto solves with driver union-find; the
         labelling (component-min representatives) must be identical to
         the distributed fixpoint on random graphs incl. self-loops."""
@@ -2516,13 +2439,8 @@ class TestStarConnectedComponents:
                 (rng.randrange(n), rng.randrange(n)) for _ in range(60)
             ]
             auto = self._labels(spark, edges, "auto")
-            label = self._labels(spark, [
-                (x, y) for x, y in edges if x != y
-            ], "label")
-            # label-prop drops pure self-loop nodes with the filter
-            # above; auto keeps them as singletons — compare the union
-            for k, v in label.items():
-                assert auto[k] == v, f"trial {trial} node {k}"
+            star = self._labels(spark, edges, "star")
+            assert auto == star, f"trial {trial}"
 
     def test_auto_over_gate_falls_back_to_distributed(self, spark, monkeypatch):
         from kenshin_spark.dedup import cluster as mod

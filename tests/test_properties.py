@@ -494,7 +494,7 @@ def test_bpe_more_merges_never_lengthen(word_freqs):
 
 
 # ---------------------------------------------------------------------------
-# Connected components: three algorithms agree on arbitrary graphs
+# Connected components: driver union-find and star agree on arbitrary graphs
 # ---------------------------------------------------------------------------
 
 
@@ -502,17 +502,13 @@ def test_bpe_more_merges_never_lengthen(word_freqs):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)),
                 min_size=1, max_size=40))
-def test_cc_unionfind_label_star_agree(spark, edges):
+def test_cc_unionfind_star_agree(spark, edges):
     from kenshin_spark.dedup.cluster import connected_components
 
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
         return
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    lbl = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components(df, algorithm="label").collect()
-    }
     auto = {
         (r["node"], r["cluster_id"])
         for r in connected_components(df, algorithm="auto").collect()
@@ -521,7 +517,7 @@ def test_cc_unionfind_label_star_agree(spark, edges):
         (r["node"], r["cluster_id"])
         for r in connected_components(df, algorithm="star").collect()
     }
-    assert lbl == auto == star
+    assert auto == star
 
 
 @settings(max_examples=8, deadline=None,

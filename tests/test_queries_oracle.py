@@ -76,6 +76,18 @@ KERNEL_ROWS = [
     "dedup_semantic_cosine_agreement",
 ]
 
+#: the connected-components rows, gated at the same scale: the forced
+#: rows run the distributed star iteration (the over-gate path) on the
+#: bench-scale MinHash pair graph, not only on the sf0.001 one
+CLUSTER_ROWS = [
+    "dedup_clusters",
+    "dedup_clusters_star_distributed",
+    "dedup_clusters_label_distributed",
+    "dedup_clusters_hybrid_escalation",
+    "dedup_clusters_incremental",
+    "dedup_cluster_stats",
+]
+
 
 def _connect(sf_dir):
     con = duckdb.connect()
@@ -131,7 +143,7 @@ def test_query_matches_oracle(spark, duck, name):
     assert_matches_oracle(spark, duck, name, SF_DIR)
 
 
-@pytest.mark.parametrize("name", KERNEL_ROWS)
+@pytest.mark.parametrize("name", KERNEL_ROWS + CLUSTER_ROWS)
 def test_kernel_rows_match_oracle_at_sf01(spark, duck_sf01, name):
     assert_matches_oracle(spark, duck_sf01, name, SF01_DIR)
 
