@@ -135,6 +135,59 @@ _FAIR_ALLOCATION_XML = """<?xml version="1.0"?>
 """
 
 
+#: Long-running-driver settings. Each binds only when the SparkContext
+#: is created: a getOrCreate() onto a context built elsewhere keeps
+#: that context's values (``get_spark`` logs each one that differs).
+CONTEXT_CONF = {
+    # Long-running-driver hygiene (guide §5: "the driver should do
+    # almost no data work" — and it should not hoard metadata either).
+    # A session that runs hundreds of queries accumulates (a)
+    # broadcast/localCheckpoint blocks that the ContextCleaner only
+    # releases after a DRIVER GC — the default periodicGC interval
+    # (30min) is longer than a whole serving/bench session, so
+    # block-manager memory grows monotonically and every later query
+    # pays the GC/memory pressure (measured here: the same row 2-6x
+    # slower late in a 497-query session than in a fresh JVM), and (b)
+    # per-query UI/status bookkeeping (the full plan string per retained
+    # execution) that is never read with the UI disabled. Shorter GC
+    # cadence + small retained windows bound both; identical settings
+    # make sense on a cluster driver.
+    "spark.cleaner.periodicGC.interval": "45s",
+    # reliable pin mode (``pin``) writes RDD checkpoints under the
+    # checkpoint dir; without this the ContextCleaner never deletes
+    # them, so a long-running driver leaks disk without bound
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # Spark's generated-class cache (default 100 entries). A micro-batch
+    # re-plans the same operators every batch, and the driver reuses
+    # their compiled classes only while they stay cached. Measured on
+    # local[4]: one `ingest_under_reads` benchmark run needs 207
+    # distinct classes, its first ingest batch 116, a `dedup_embed` run
+    # 72. At 100 entries the cache thrashed: a steady-state
+    # `ingest_flush` batch compiled 73-89 classes (12-18 ms each, on the
+    # writer's critical path). At 1,000, with the census off its
+    # multi-distinct Expand (StreamingIngest._census), it compiles 12:
+    # the write stages that inline the batch's mor `_seq` stamp and the
+    # read_range filters that inline its propagation bound.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.sql.ui.retainedExecutions": "50",
+    "spark.ui.retainedJobs": "100",
+    "spark.ui.retainedStages": "200",
+    "spark.ui.retainedTasks": "1000",
+}
+
+
+def unbound_confs(
+    wanted: dict[str, str], running: dict[str, str]
+) -> list[str]:
+    """``key=running (wants wanted)`` for every key of ``wanted`` whose
+    value in the running context's conf ``running`` differs."""
+    return [
+        f"{key}={running.get(key)!r} (wants {value!r})"
+        for key, value in wanted.items()
+        if running.get(key) != value
+    ]
+
+
 def get_spark(
     app_name: str = "kenshin_spark",
     cpus: int | None = None,
@@ -167,29 +220,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # Long-running-driver hygiene (guide §5: "the driver should do
-        # almost no data work" — and it should not hoard metadata
-        # either). A session that runs hundreds of queries accumulates
-        # (a) broadcast/localCheckpoint blocks that the ContextCleaner
-        # only releases after a DRIVER GC — the default periodicGC
-        # interval (30min) is longer than a whole serving/bench session,
-        # so block-manager memory grows monotonically and every later
-        # query pays the GC/memory pressure (measured here: the same
-        # row 2-6x slower late in a 497-query session than in a fresh
-        # JVM), and (b) per-query UI/status bookkeeping (the full plan
-        # string per retained execution) that is never read with the UI
-        # disabled. Shorter GC cadence + small retained windows bound
-        # both; identical settings make sense on a cluster driver.
-        .config("spark.cleaner.periodicGC.interval", "45s")
-        # reliable pin mode (``pin``) writes RDD checkpoints under the
-        # checkpoint dir; without this the ContextCleaner never deletes
-        # them, so a long-running driver leaks disk without bound
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.sql.ui.retainedExecutions", "50")
-        .config("spark.ui.retainedJobs", "100")
-        .config("spark.ui.retainedStages", "200")
-        .config("spark.ui.retainedTasks", "1000")
     )
+    context_conf = dict(CONTEXT_CONF)
     if fair_pools:
         # scheduler mode + allocation file bind at CONTEXT creation —
         # a getOrCreate() onto an existing FIFO session won't apply them
@@ -203,11 +235,19 @@ def get_spark(
         )
         with os.fdopen(fd, "w", encoding="utf-8") as fh:
             fh.write(_FAIR_ALLOCATION_XML)
-        builder = builder.config("spark.scheduler.mode", "FAIR").config(
-            "spark.scheduler.allocation.file", alloc
-        )
-    spark = builder.getOrCreate()
+        builder = builder.config("spark.scheduler.allocation.file", alloc)
+        context_conf["spark.scheduler.mode"] = "FAIR"
+    spark = builder.config(map=context_conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    missed = unbound_confs(
+        context_conf, dict(spark.sparkContext.getConf().getAll())
+    )
+    if missed:
+        _LOG.warning(
+            "the running SparkContext was created without get_spark's "
+            "settings, which bind only at context creation: %s",
+            "; ".join(missed),
+        )
     if rocksdb_state:
         enable_rocksdb_state(spark)
     return spark

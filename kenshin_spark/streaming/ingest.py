@@ -42,12 +42,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kenshin_spark.config import Schema, SchemaSet
-from kenshin_spark.operators.align import last_write_wins
+from kenshin_spark.operators.align import align_ts, last_write_wins
 from kenshin_spark.ratelimit import TokenBucket, creates_per_minute_bucket
 from kenshin_spark.sources.line_protocol import parse_metric_lines
 from kenshin_spark.store import ParquetTieredStore
@@ -81,6 +81,16 @@ class IngestStats:
                 "update_operations",
             )
         ]
+
+
+def _arch_cond(schema: Schema, i: int, age: Column) -> Column:
+    """W4 age routing (kenshin/storage.py:384-425): archive ``i`` takes
+    the points of ``age`` its retention covers and the one before it
+    does not."""
+    cond = age <= F.lit(schema.archives[i].retention)
+    if i:
+        cond = cond & (age > F.lit(schema.archives[i - 1].retention))
+    return cond
 
 
 class StreamingIngest:
@@ -213,6 +223,107 @@ class StreamingIngest:
         # fits and falls back to shuffle join at fleet-scale catalogs
         return points.join(catalog, "metric")
 
+    def _census(
+        self,
+        frame: DataFrame,
+        schema_col: str,
+        age: Column,
+        clean: Column | None = None,
+        counters: dict[str, Column] | None = None,
+        new: Column | None = None,
+    ) -> DataFrame:
+        """The routing census of ``frame`` as a one-row frame. Each row
+        where ``clean`` holds (default: every row) routes by
+        ``schema_col`` and ``age`` (W4) to at most one archive of its
+        schema, or past its last one. Columns, for each schema ``s`` and
+        archive ``i``:
+
+        - ``_c_s_i``: routed rows;
+        - ``_n_s_i``: distinct (metric, aligned ts) slots, which is the
+          row count of the last_write_wins output the upsert writes;
+        - ``_lo_s_i``/``_hi_s_i``: the aligned-slot bounds propagate
+          needs;
+        - ``_d_s_i``: the touched partitions, ``slot // part_unit``, as
+          the upsert's ``day`` column computes them;
+        - ``_x_s``: rows older than every archive.
+
+        Plus one column per ``counters`` entry (rows where its condition
+        holds) and, with ``new``, ``_new``: distinct metrics with a row
+        where ``new`` holds.
+
+        Two levels: ``groupBy(metric, route, slot)`` first, so every
+        per-archive slot count is a plain count of groups and ``_new``
+        is the only distinct aggregate. (A multi-distinct aggregate
+        plans an Expand that multiplies each row by the route count, and
+        its generated classes differ from batch to batch.)"""
+        if clean is None:
+            clean = F.lit(True)
+        #: (label, condition, step, partition unit); no step past the
+        #: last archive
+        routes: list[tuple[str, Column, int | None, int | None]] = []
+        for schema in self.schemas.schemas:
+            in_schema = clean & (F.col(schema_col) == schema.name)
+            store = self.store_for(schema)
+            for i, arch in enumerate(schema.archives):
+                routes.append((
+                    f"{schema.name}_{i}",
+                    in_schema & _arch_cond(schema, i, age),
+                    arch.sec_per_point,
+                    store.part_unit(i),
+                ))
+            routes.append((
+                f"x_{schema.name}",
+                in_schema & (age > F.lit(schema.archives[-1].retention)),
+                None,
+                None,
+            ))
+        # routes[0] is an archive: every schema has at least one
+        ts = F.col("ts").cast("long")
+        route = F.when(routes[0][1], 0)
+        slot = F.when(F.col("_route") == 0, align_ts(ts, routes[0][2]))
+        for k, (_, cond, step, _) in enumerate(routes[1:], 1):
+            route = route.when(cond, k)
+            if step is not None:
+                slot = slot.when(F.col("_route") == k, align_ts(ts, step))
+        counters = counters or {}
+        level1 = [F.count(F.lit(1)).alias("_rows")]
+        level1 += [
+            F.count(F.when(cond, 1)).alias(name)
+            for name, cond in counters.items()
+        ]
+        level2 = [
+            F.coalesce(F.sum(name), F.lit(0)).alias(name) for name in counters
+        ]
+        if new is not None:
+            level1.append(F.max(new).alias("_new"))
+            level2.append(
+                F.count_distinct(F.when(F.col("_new"), F.col("metric")))
+                .alias("_new")
+            )
+        for k, (label, _, step, unit) in enumerate(routes):
+            on = F.col("_route") == k
+            rows = F.coalesce(F.sum(F.when(on, F.col("_rows"))), F.lit(0))
+            if step is None:
+                level2.append(rows.alias(f"_{label}"))
+                continue
+            slot_k = F.when(on, F.col("_slot"))
+            level2 += [
+                rows.alias(f"_c_{label}"),
+                F.count(F.when(on, 1)).alias(f"_n_{label}"),
+                F.min(slot_k).alias(f"_lo_{label}"),
+                F.max(slot_k).alias(f"_hi_{label}"),
+                F.collect_set((slot_k / unit).cast("long")).alias(
+                    f"_d_{label}"
+                ),
+            ]
+        return (
+            frame.withColumn("_route", route)
+            .withColumn("_slot", slot)
+            .groupBy("metric", "_route", "_slot")
+            .agg(*level1)
+            .agg(*level2)
+        )
+
     # -- the foreachBatch body (direct mode) ------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -226,13 +337,18 @@ class StreamingIngest:
         the new-metric count AND the routing census (plus each
         archive's touched-day set, which the cow upsert would otherwise
         probe with its own job) — previously three sequential actions
-        (stats pass, admission count, census pass). The census routes
-        not-yet-admitted metrics through the same declarative regex
-        CASE the admission insert writes, so it equals the
+        (stats pass, admission count, census pass). The census is a
+        two-level aggregate (:meth:`_census`): a first ``groupBy(metric,
+        archive, slot)`` routes each row to at most one archive, so the
+        second level sums, bounds and collects plain columns and its one
+        distinct aggregate is the new-metric count — no multi-distinct
+        Expand, and the same generated classes every batch. The census
+        routes not-yet-admitted metrics through the same declarative
+        regex CASE the admission insert writes, so it equals the
         post-admission routing join whenever every new metric is
         granted; under an active create-rate limit that denies some
         metrics (the only case where they can differ) the census is
-        recomputed the old way over the post-admission join."""
+        recomputed over the post-admission join."""
         self.stats.batches += 1
         # the batch is scanned several times (dead-letter split, admission,
         # one pass per schema) — persist so the source parse runs once
@@ -248,16 +364,14 @@ class StreamingIngest:
             )
             if viol is not None:
                 clean = clean & ~F.coalesce(viol, F.lit(False))
-            aggs = [F.count(F.lit(1)).alias("_all")]
+            counters = {"_all": F.lit(True)}
             if has_corrupt:
-                aggs.append(F.count("corrupt").alias("_bad"))
+                counters["_bad"] = F.col("corrupt").isNotNull()
             if viol is not None:
                 v = F.coalesce(viol, F.lit(False))
                 if has_corrupt:
                     v = F.col("corrupt").isNull() & v
-                aggs.append(
-                    F.count(F.when(v, F.lit(1))).alias("_rej")
-                )
+                counters["_rej"] = v
             # ---- the combined pass: catalog left-join, then counters +
             # new-metric count + per-(schema, archive) census in ONE job.
             # `_schema` is exactly what the post-admission routing join
@@ -269,81 +383,20 @@ class StreamingIngest:
             )
             now = int(self.clock())
             age = F.lit(now) - F.col("ts")
-            aggs.append(
-                F.count_distinct(
-                    F.when(
-                        clean & F.col("_cat_schema").isNull(),
-                        F.col("metric"),
-                    )
-                ).alias("_new")
-            )
-
-            def _arch_cond(schema, i):
-                cond = age <= F.lit(schema.archives[i].retention)
-                if i:
-                    cond = cond & (
-                        age > F.lit(schema.archives[i - 1].retention)
-                    )
-                return cond
-
-            def _arch_aggs(schema, i, in_schema):
-                """Per-(schema, archive) census columns: row count,
-                LWW-slot count (count of DISTINCT (metric, aligned ts) —
-                exactly the row count of the last_write_wins output the
-                upsert writes, so committed_points needs no follow-up
-                job), and the aligned ts bounds propagate() needs."""
-                step = schema.archives[i].sec_per_point
-                cond = in_schema & _arch_cond(schema, i)
-                slot = F.col("ts").cast("long") - (
-                    F.col("ts").cast("long") % F.lit(step)
-                )
-                return [
-                    F.count(F.when(cond, 1)).alias(f"_c_{schema.name}_{i}"),
-                    F.count_distinct(
-                        F.when(cond, F.struct(F.col("metric"), slot))
-                    ).alias(f"_n_{schema.name}_{i}"),
-                    F.min(F.when(cond, slot)).alias(f"_lo_{schema.name}_{i}"),
-                    F.max(F.when(cond, slot)).alias(f"_hi_{schema.name}_{i}"),
-                ]
-
-            for schema in self.schemas.schemas:
-                in_schema = clean & (F.col("_schema") == schema.name)
-                for i in range(len(schema.archives)):
-                    aggs.extend(_arch_aggs(schema, i, in_schema))
-                    unit = self.store_for(schema).part_unit(i)
-                    if unit % schema.archives[i].sec_per_point == 0:
-                        # raw-ts day == aligned-slot day when the tier's
-                        # partition unit is a multiple of its step —
-                        # hand the upsert its touched-day set for free
-                        aggs.append(
-                            F.collect_set(
-                                F.when(
-                                    in_schema & _arch_cond(schema, i),
-                                    F.col("ts").cast("long") / unit,
-                                ).cast("long")
-                            ).alias(f"_d_{schema.name}_{i}")
-                        )
-                aggs.append(
-                    F.count(
-                        F.when(
-                            in_schema
-                            & (age > F.lit(schema.archives[-1].retention)),
-                            1,
-                        )
-                    ).alias(f"_x_{schema.name}")
-                )
-            row = (
-                batch.join(catalog_pre, "metric", "left")
-                .withColumn(
+            row = self._census(
+                batch.join(catalog_pre, "metric", "left").withColumn(
                     "_schema",
                     F.coalesce(
                         F.col("_cat_schema"),
                         F.expr(self.schemas.match_sql_case()),
                     ),
-                )
-                .agg(*aggs)
-                .first()
-            )
+                ),
+                "_schema",
+                age,
+                clean=clean,
+                counters=counters,
+                new=clean & F.col("_cat_schema").isNull(),
+            ).first()
             n_bad = int(row["_bad"]) if has_corrupt else 0
             n_rej = int(row["_rej"]) if viol is not None else 0
             if has_corrupt:
@@ -377,28 +430,8 @@ class StreamingIngest:
                 # their points are dropped by the routing join, so the
                 # combined census (which routes unadmitted metrics
                 # through the CASE) may overcount. Recompute over the
-                # actual routed frame — the old pre-r12 pass, taken only
-                # on rate-limited batches.
-                census_aggs = []
-                for schema in self.schemas.schemas:
-                    in_schema = F.col("schema_name") == schema.name
-                    for i in range(len(schema.archives)):
-                        census_aggs.extend(
-                            _arch_aggs(schema, i, in_schema)
-                        )
-                    census_aggs.append(
-                        F.count(
-                            F.when(
-                                in_schema
-                                & (
-                                    age
-                                    > F.lit(schema.archives[-1].retention)
-                                ),
-                                1,
-                            )
-                        ).alias(f"_x_{schema.name}")
-                    )
-                census = routed.agg(*census_aggs).first()
+                # actual routed frame, on rate-limited batches only.
+                census = self._census(routed, "schema_name", age).first()
 
             for schema in self.schemas.schemas:
                 if all(
@@ -416,7 +449,7 @@ class StreamingIngest:
                 for i, arch in enumerate(schema.archives):
                     if census[f"_c_{schema.name}_{i}"] == 0:
                         continue
-                    sub = group.where(_arch_cond(schema, i))
+                    sub = group.where(_arch_cond(schema, i, age))
                     # NOT persisted: caching the LWW result here pins the
                     # write to the raw 32-partition shuffle output and
                     # skips AQE's small-partition coalescing — measured
@@ -437,18 +470,8 @@ class StreamingIngest:
                     # the write; with the days probe folded away, the
                     # merge write inside a streaming foreachBatch never
                     # delivers CollectMetrics and obs.get blocks — the
-                    # census columns are action-free and equivalent:
-                    # count(DISTINCT (metric, aligned ts)) IS the LWW
-                    # output row count, min/max aligned ts ARE the slot
-                    # bounds.)
-                    days_key = f"_d_{schema.name}_{i}"
-                    days = (
-                        sorted(census[days_key])
-                        if census is row
-                        and days_key in row.asDict()
-                        and census[days_key] is not None
-                        else None
-                    )
+                    # census columns are action-free and equivalent.)
+                    days = sorted(census[f"_d_{schema.name}_{i}"])
                     store.upsert(i, slots, days=days)
                     store.propagate(
                         slots,

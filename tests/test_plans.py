@@ -187,8 +187,13 @@ class TestParallelism:
 
 class TestStoreFetchPruning:
     def test_fetch_prunes_day_partitions(self, spark, tmp_path):
-        """store.fetch must reach the scan with a day-partition filter —
-        a ts-only filter reads every partition of a 100 TB tier."""
+        """store.fetch must scan only the window's day partitions — a
+        ts-only filter reads every partition of a 100 TB tier. The scan
+        reads the file list fetch_plan takes from the manifest, so the
+        pruning shows in that list, not as a plan PartitionFilter."""
+        import os
+        import re
+
         from kenshin_spark.config import Schema
         from kenshin_spark.store import ParquetTieredStore
 
@@ -204,12 +209,26 @@ class TestStoreFetchPruning:
             ),
         )
         now = 10 * day
+        plan = store.fetch_plan(now - 2 * day, now - day, now)
         grid = store.fetch(["m"], now - 2 * day, now - day, now)
-        p = plan_of(grid)
-        assert "PartitionFilters" in p
-        # the partition filter actually constrains day (not empty [])
-        pf_line = [ln for ln in p.splitlines() if "PartitionFilters" in ln][0]
-        assert "day" in pf_line
+        planned = {
+            os.path.realpath(os.path.join(store.root, rel))
+            for rel in plan.files
+        }
+        scanned = {
+            os.path.realpath(f.removeprefix("file:"))
+            for f in grid.inputFiles()
+        }
+        assert scanned == planned
+        unit = store.part_unit(plan.tier)
+        window = set(range(plan.lo // unit, (plan.hi - 1) // unit + 1))
+        days = {int(re.search(r"/day=(-?\d+)/", f).group(1)) for f in scanned}
+        assert days and days <= window
+        all_days = {
+            int(re.search(r"/day=(-?\d+)/", rel).group(1))
+            for rel in store._plan(store.tier_path(plan.tier))
+        }
+        assert len(all_days) == 10 and window < all_days
         # correctness unchanged: full grid, values where stored
         assert grid.count() == 1440  # 1 day at 60s
         assert grid.where("value is not null").count() == 3
