@@ -41,9 +41,12 @@ def last_write_wins(
     """Align to ``step`` and keep one value per (metric, slot).
 
     ``arrival_col`` orders duplicates (newest arrival wins,
-    rurouni/cache.py:264-280); when None, the raw timestamp orders them
-    (later point wins — the reference's within-batch sort order,
-    kenshin/storage.py:441-444).
+    rurouni/cache.py:264-280); when None, the raw timestamp orders them:
+    the point with the later raw ts wins its slot. That is the engine's
+    rule, pinned by ``perfbench/oracle.py``; the reference instead keeps
+    the tuple sorting last, i.e. the larger value
+    (kenshin/storage.py:441-444), and ``test_update_old_points`` in
+    ``tests/test_storage_goldens.py`` shows the two apart (PARITY W5).
 
     ``skew_salts``: the SURVEY §7.3 hot-key path. Spark's map-side
     partial aggregation already absorbs most metric skew, but when one

@@ -3,9 +3,12 @@
 Reference: after updating archive i, the affected window is re-aggregated
 into archive i+1, recursively (kenshin/storage.py:482-586); the aggregation
 kernel drops NULL sentinels per window and yields NULL for all-null windows
-(kenshin/storage.py:588-615). Cadence is gated by the repurposed
-xFilesFactor timeunit (kenshin/storage.py:505-521) — see
-``config.propagation_timeunit``.
+(kenshin/storage.py:588-615). The reference gates that cadence by the
+repurposed xFilesFactor timeunit (kenshin/storage.py:505-521); the store
+does not: ``ParquetTieredStore.propagate`` re-aggregates every coarse
+slot a batch touches, in that batch (PARITY W8). On the write path
+``xff`` only validates archive lists; ``ready_propagation_slots`` (row
+``ts_propagation_ready``) computes the reference's gate.
 
 Spark-first: each tier is ``groupBy(metric, window_slot).agg(fn)`` over the
 previous tier — a single shuffle per tier, map-side partial aggregation,

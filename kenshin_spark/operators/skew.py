@@ -1,14 +1,14 @@
-"""Skew-handling utilities: salting for hot keys.
+"""Skew handling: a deterministic salt for hot keys.
 
-At 100 TB a handful of metrics (or dedup buckets, or join keys) can carry
-orders of magnitude more rows than the median — one reducer drags the
-whole stage. AQE's skew-join handles sort-merge joins at runtime; these
-helpers cover the cases AQE doesn't: skewed *aggregations* and broadcast-
-ineligible skewed joins, via the classic salt-and-merge pattern.
+At 100 TB a handful of metrics can carry orders of magnitude more rows
+than the median — one reducer drags the whole stage. ``with_salt`` is the
+first half of the salt-and-merge pattern: ``last_write_wins(skew_salts=)``
+groups by (key, salt) to spread a hot key over several reducers, then
+merges the partial winners per key.
 
-Everything is deterministic (salt = xxhash64 of the row's non-key
-columns, not rand()) so replays/retries produce identical partitions —
-the same discipline the engine applies everywhere else.
+The salt is xxhash64 of the row's columns, not rand(), so replays and
+retries produce identical partitions — the same discipline the engine
+applies everywhere else.
 """
 
 from __future__ import annotations
@@ -16,80 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: two-stage decompositions for the algebraic aggregates (partial, merge)
-_SALTABLE = {
-    "sum": ("sum({v})", "sum"),
-    "count": ("count({v})", "sum"),
-    "max": ("max({v})", "max"),
-    "min": ("min({v})", "min"),
-}
-
 
 def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
     """Deterministic salt in [0, n_salts): xxhash64 over all columns."""
     return df.withColumn(
         salt_col, F.pmod(F.xxhash64(*df.columns), F.lit(n_salts))
     )
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    agg: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-stage aggregation for a skewed key: stage 1 aggregates per
-    (key, salt) — spreading a hot key over ``n_salts`` reducers — stage 2
-    merges the partials per key. Result column: ``<agg>_<value_col>``.
-
-    Supports sum/count/max/min directly and average via sum+count
-    (recomposed exactly). Spark's own partial aggregation usually makes
-    this unnecessary; it matters when the *grouped output* per key is
-    still huge (high-cardinality second-stage) or under
-    ``spark.sql.aggregate.partialaggregate`` fallbacks.
-    """
-    out_name = f"{agg}_{value_col}"
-    salted = with_salt(df, n_salts)
-    if agg == "average":
-        stage1 = salted.groupBy(*keys, "_salt").agg(
-            F.sum(value_col).alias("_s"),
-            F.count(value_col).alias("_c"),
-        )
-        return stage1.groupBy(*keys).agg(
-            (F.sum("_s") / F.sum("_c")).alias(out_name)
-        )
-    if agg not in _SALTABLE:
-        raise ValueError(f"agg {agg!r} is not salt-decomposable")
-    partial, merge = _SALTABLE[agg]
-    stage1 = salted.groupBy(*keys, "_salt").agg(
-        F.expr(partial.format(v=value_col)).alias("_p")
-    )
-    return stage1.groupBy(*keys).agg(
-        F.expr(f"{merge}(_p)").alias(out_name)
-    )
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a skewed large side against a (modest but not broadcastable)
-    small side: the large side gets a deterministic salt, the small side
-    is replicated once per salt value, and the join key becomes
-    (on..., salt) — a hot key's rows spread over n_salts tasks.
-    """
-    big = with_salt(skewed, n_salts)
-    replicated = small.withColumn(
-        "_salt",
-        F.explode(
-            F.sequence(
-                F.lit(0).cast("long"), F.lit(n_salts - 1).cast("long")
-            )
-        ),
-    )
-    joined = big.join(replicated, [*on, "_salt"], how)
-    return joined.drop("_salt")

@@ -701,10 +701,13 @@ class ParquetTieredStore:
         bounds: "tuple[int | None, int | None] | None" = None,
     ) -> None:
         """Cascade an upsert into tier ``from_tier`` through the coarser
-        tiers: for each tier i>from_tier re-aggregate the *touched coarse
-        slots* from tier i-1 — the write-time downsample of
-        kenshin/storage.py:510-586, bounded to the affected window exactly
-        like the reference's propagation range.
+        tiers: for each tier i>from_tier re-aggregate every coarse slot
+        the batch touches from tier i-1 — the write-time downsample of
+        kenshin/storage.py:510-586. No xff timeunit gates it: the
+        reference defers the still-open timeunit to a later update
+        (kenshin/storage.py:505-528), this store re-aggregates it in the
+        same batch (PARITY W8). The finer-tier scan is bounded to the
+        touched coarse-slot range.
 
         ``bounds``: the batch's (min ts, max ts) when the caller already
         knows them (StreamingIngest folds them into the upsert's write

@@ -396,48 +396,6 @@ class TestRenderFunctions:
                      ("b", 0): 6.0, ("b", 120): None}
 
 
-class TestSkewUtilities:
-    def skewed_df(self, spark):
-        # one hot metric with 1000 rows, two cold ones
-        rows = [("hot", i % 7, float(i)) for i in range(1000)]
-        rows += [("cold1", 1, 10.0), ("cold2", 2, 20.0)]
-        return spark.createDataFrame(rows, ["metric", "k", "value"])
-
-    def test_salted_agg_matches_plain(self, spark):
-        from kenshin_spark.operators.skew import salted_agg
-
-        df = self.skewed_df(spark)
-        for agg, col in [("sum", "sum_value"), ("max", "max_value"),
-                         ("min", "min_value"), ("count", "count_value"),
-                         ("average", "average_value")]:
-            got = {r["metric"]: r[col]
-                   for r in salted_agg(df, ["metric"], "value", agg).collect()}
-            plain_fn = {"sum": F.sum, "max": F.max, "min": F.min,
-                        "count": F.count, "average": F.avg}[agg]
-            want = {r["metric"]: r["w"]
-                    for r in df.groupBy("metric")
-                    .agg(plain_fn("value").alias("w")).collect()}
-            assert got == want, agg
-
-    def test_salted_join_matches_plain(self, spark):
-        from kenshin_spark.operators.skew import salted_join
-
-        big = self.skewed_df(spark)
-        small = spark.createDataFrame(
-            [("hot", "H"), ("cold1", "C")], ["metric", "tag"]
-        )
-        got = sorted(
-            (r["metric"], r["k"], r["value"], r["tag"])
-            for r in salted_join(big, small, ["metric"], n_salts=8).collect()
-        )
-        want = sorted(
-            (r["metric"], r["k"], r["value"], r["tag"])
-            for r in big.join(small, "metric").collect()
-        )
-        assert got == want
-        assert len(got) == 1001  # 1000 hot + 1 cold1
-
-
 class TestCli:
     def test_cli_fetch_search_info(self, spark, tmp_path, capsys):
         from kenshin_spark import cli
