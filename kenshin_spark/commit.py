@@ -524,28 +524,44 @@ class ManifestCommitProtocol:
         return posixpath.relpath(path, self.root)
 
     def adopt(
-        self, df, dest_path: str, partitioned: bool = True
+        self, df, dest_path: str, partitioned: bool | tuple[str, ...] = True
     ) -> list[tuple[str, int]]:
         """The write primitive: write ``df`` to a private
         ``_stage/<tag>`` directory (underscore-prefixed — invisible to
         partition discovery), then MOVE the data files into the live
-        tree under tag-unique names (``partitioned`` keeps the ``day=``
-        partition directories). Readers plan from the committed
-        manifest, so adopted files stay invisible until the caller's
-        transaction commits them; a crash at any point strands only
-        invisible files for ``vacuum`` to reclaim. Returns
-        ``(rel_path, size)`` pairs for the transaction."""
+        tree under tag-unique names, keeping the partition directories.
+        ``partitioned`` names the partition columns, outermost first
+        (``True`` is ``("day",)``, ``False`` none): a store writes one
+        tier under ``tier=<i>/`` with ``("day",)``, or several tiers in
+        one job from its root with ``("tier", "day")``. Readers plan
+        from the committed manifest, so adopted files stay invisible
+        until the caller's transaction commits them; a crash at any
+        point strands only invisible files for ``vacuum`` to reclaim.
+        Returns ``(rel_path, size)`` pairs for the transaction."""
         import uuid
 
+        if partitioned is True:
+            partitioned = ("day",)
+        cols = tuple(partitioned or ())
         tag = uuid.uuid4().hex[:12]
         stage = posixpath.join(self.root, "_stage", tag)
         writer = df.write.mode("overwrite")
-        if partitioned:
-            writer = writer.partitionBy("day")
+        if cols:
+            writer = writer.partitionBy(*cols)
         writer.parquet(stage)
         adopted: list[tuple[str, int]] = []
 
-        def _move(src_dir: str, dst_dir: str) -> None:
+        def _move(src_dir: str, dst_dir: str, depth: int) -> None:
+            if depth < len(cols):
+                prefix = cols[depth] + "="
+                for dname in self.fs.list_names(src_dir):
+                    if dname.startswith(prefix):
+                        _move(
+                            posixpath.join(src_dir, dname),
+                            posixpath.join(dst_dir, dname),
+                            depth + 1,
+                        )
+                return
             self.fs.mkdirs(dst_dir)
             for fname, size in self.fs.list_files(src_dir):
                 if not fname.endswith(".parquet"):
@@ -555,15 +571,7 @@ class ManifestCommitProtocol:
                     raise IOError(f"adopt: could not move {fname} -> {dst}")
                 adopted.append((self.rel(dst), size))
 
-        if partitioned:
-            for dname in self.fs.list_names(stage):
-                if dname.startswith("day="):
-                    _move(
-                        posixpath.join(stage, dname),
-                        posixpath.join(dest_path, dname),
-                    )
-        else:
-            _move(stage, dest_path)
+        _move(stage, dest_path, 0)
         self.fs.delete(stage)
         return adopted
 

@@ -167,7 +167,7 @@ CONTEXT_CONF = {
     # writer's critical path). At 1,000, with the census off its
     # multi-distinct Expand (StreamingIngest._census), it compiles 12:
     # the write stages that inline the batch's mor `_seq` stamp and the
-    # read_range filters that inline its propagation bound.
+    # finer-tier range filters that inline its propagation bounds.
     "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.sql.ui.retainedExecutions": "50",
     "spark.ui.retainedJobs": "100",

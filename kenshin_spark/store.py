@@ -15,11 +15,14 @@ Spark-native equivalent, designed for 100 TB:
   stats + pushed filters. At cluster scale add
   ``.bucketBy(metric)``/liquid clustering per tier — the layout below is
   identical, only the writer call changes.
-- **Upsert** (the ring overwrite, kenshin/storage.py:468-480): merge the
-  batch with the *touched day partitions only* under last-write-wins,
-  then replace exactly those days' files in one manifest commit. Untouched
-  partitions are never read or rewritten — the 100 TB analog of the
-  reference's "one sequential write per file" (README.md:63-66).
+- **Write** (the ring overwrite plus propagation, kenshin/storage.py:
+  468-492): a batch's slots and the re-aggregate of every coarser slot
+  they touch are staged in ONE write partitioned by ``(tier, day)`` and
+  published in ONE manifest commit; cow merges them with the *touched
+  partitions only* under last-write-wins and retires exactly those
+  partitions' old files. Untouched partitions are never read or
+  rewritten — the 100 TB analog of the reference's "one sequential
+  write per file" (README.md:63-66).
 - **Retention expiry** (the ring's self-overwrite, SURVEY O4): drop whole
   day partitions older than the tier's retention. Sub-day precision is
   enforced at fetch time by R1's clamping, so expiry never has to
@@ -90,6 +93,10 @@ def _explicit_list_planning(spark):
             else:
                 _ppd_depth[sid] = (depth - 1, prev)
 
+#: the rank a write's new rows take when they overlay a tier's stored
+#: rows (every stored mor ``_seq`` is a manifest seq, far below it)
+_STAGED_RANK = 1 << 62
+
 #: tiers whose whole retention fits in this many seconds partition hourly —
 #: hot tiers get fine-grained partitions so a micro-batch upsert rewrites
 #: ~an hour of data, not a whole day (the closest COW-parquet analog of the
@@ -154,6 +161,14 @@ class FetchPlan:
     hi: int
     seq: int
     files: list[str]
+
+
+def _union(frames: list[DataFrame]) -> DataFrame | None:
+    """``unionByName`` of ``frames``; None for none."""
+    out = None
+    for df in frames:
+        out = df if out is None else out.unionByName(df)
+    return out
 
 
 class LegacyTreeError(RuntimeError):
@@ -252,8 +267,7 @@ class ParquetTieredStore:
                 "retired files"
             )
         if artefacts:
-            for i in range(len(schema.archives)):
-                st.compact(i)
+            st.compact({i: None for i in range(len(schema.archives))})
             for path in artefacts:
                 st.fs.delete(path)
         return cls(spark, schema, root, mode=mode)
@@ -538,130 +552,504 @@ class ParquetTieredStore:
             (F.col("ts").cast("long") / unit).cast("long").alias("day"),
         )
 
-    def _commit_stamped(
-        self, i: int, out: DataFrame, op: str, replace: bool = False
+    def _stage_commit(
+        self,
+        plan,
+        op: str,
+        tiers: list[int],
+        drops=None,
+        stamped: bool | None = None,
     ) -> None:
-        """mor write: stamp ``out`` with the manifest seq its commit will
-        get and commit at exactly that seq. If a concurrent commit took
-        it first, ``commit_txn`` raises ``ManifestConflict`` and the write
-        re-stamps (``commit_txn``'s 64-attempt bound); a lost attempt's
-        files stay invisible until ``vacuum``. Sorts within tasks like
-        every write path (see ``upsert``)."""
+        """Stage one write and commit it once. ``plan(read_seq)`` builds
+        every row the commit adds — ``metric, ts, value, day, tier``
+        (plus ``_seq`` for an unstamped mor fold) — from the snapshot at
+        ``read_seq``; one ``adopt`` writes them partitioned by ``(tier,
+        day)`` (by ``day`` under the tier's directory when ``tiers``
+        holds one), sorted within tasks by ``(metric, ts)`` so parquet
+        row-group stats stay tight between compactions. The partition
+        prefix is the partitioned writer's own required ordering, so it
+        adds no (unstable) re-sort of its own; a one-tier write drops its
+        constant ``tier`` column first, because the optimizer removes a
+        constant from the sort and the writer would then re-sort.
+        ``drops(adds)`` names the prefixes
+        the commit retires; it may raise to refuse the adds, before
+        anything commits.
+
+        ``stamped`` (default: mor): every row carries ``_seq`` = the
+        manifest seq its commit takes. If a concurrent commit took it
+        first, ``commit_txn`` raises ``ManifestConflict`` and the write
+        re-plans and re-stamps (64 attempts, ``commit_txn``'s bound); a
+        lost attempt's files stay invisible until ``vacuum``. An
+        unstamped write commits once against ``read_seq``: a concurrent
+        add under a dropped prefix raises ``ManifestConflict`` to the
+        caller."""
+        if stamped is None:
+            stamped = self.mode == "mor"
         for _attempt in range(64):
-            seq = self.commit.epoch() + 1
-            stamped = out.withColumn("_seq", F.lit(seq))
-            adds = self.commit.adopt(
-                stamped.sortWithinPartitions("day", "metric", "ts"),
-                self.tier_path(i),
-            )
+            read_seq = self.commit.epoch()
+            out = plan(read_seq)
+            if out is None:
+                return
+            if stamped:
+                out = out.withColumn("_seq", F.lit(read_seq + 1))
+            if len(tiers) == 1:
+                adds = self.commit.adopt(
+                    out.drop("tier").sortWithinPartitions(
+                        "day", "metric", "ts"
+                    ),
+                    self.tier_path(tiers[0]),
+                )
+            else:
+                adds = self.commit.adopt(
+                    out.sortWithinPartitions("tier", "day", "metric", "ts"),
+                    self.root,
+                    partitioned=("tier", "day"),
+                )
             try:
-                with self.commit.txn(op=op) as tx:
-                    tx.seq = seq
-                    if replace:
-                        tx.drop(f"tier={i}")
+                with self.commit.txn(read_seq=read_seq, op=op) as tx:
+                    if stamped:
+                        tx.seq = read_seq + 1
+                    for prefix in drops(adds) if drops else ():
+                        tx.drop(prefix)
                     for rel, size in adds:
                         tx.add(rel, size)
                 return
             except ManifestConflict:
-                continue
+                if not stamped:
+                    raise
         raise RuntimeError(
-            f"mor {op} of tier {i} under {self.root}: lost 64 "
-            "consecutive commit races"
+            f"mor {op} under {self.root}: lost 64 consecutive commit races"
         )
 
     def overwrite(self, i: int, slots: DataFrame) -> None:
-        """Full rewrite of a tier (initial load / schema-change rebuild)."""
-        out = self._with_day(slots, i)
-        if self.mode == "mor":
-            self._commit_stamped(i, out, "overwrite", replace=True)
-            return
-        # stage + adopt invisibly, then one atomic pointer flip that
-        # retires the whole old tier — readers mid-scan keep their
-        # snapshot's files (vacuum reclaims them after the grace)
-        adds = self.commit.adopt(out, self.tier_path(i))
-        with self.commit.txn(op="overwrite") as tx:
-            tx.replace(f"tier={i}", adds)
+        """Full rewrite of a tier (initial load / schema-change rebuild):
+        one commit retires the whole old tier and adds the rewrite;
+        readers mid-scan keep their snapshot's files (vacuum reclaims
+        them after the grace)."""
+        self._stage_commit(
+            lambda _seq: self._with_day(slots, i).withColumn(
+                "tier", F.lit(i)
+            ),
+            "overwrite",
+            [i],
+            drops=lambda _adds: [f"tier={i}"],
+        )
 
     def upsert(
         self, i: int, slots: DataFrame, days: list[int] | None = None
     ) -> None:
         """Merge aligned slots into tier i, new values winning per
         (metric, ts) — NULLs included, matching the ring overwrite
-        (kenshin/storage.py:468-480). Reads and rewrites ONLY the day
-        partitions the batch touches.
+        (kenshin/storage.py:468-480). The one-tier, no-cascade case of
+        :meth:`write_tiers`: cow reads and rewrites ONLY the day
+        partitions the batch touches, mor appends.
 
         ``days``: the batch's exact touched-day set when the caller
-        already knows it (StreamingIngest folds it into its combined
-        bookkeeping pass) — skips the distinct-days probe job the cow
-        merge path otherwise runs. Must equal what the probe would
-        return; ignored on paths that never probe (mor append,
-        first write). A supplied set that misses a day the batch
+        already knows it — skips the distinct-days probe job the cow
+        merge otherwise runs. Must equal what the probe would return;
+        ignored by mor. A supplied set that misses a day the batch
         touches raises before anything commits — the merge would
         otherwise leave that day's old rows beside the new ones."""
-        path = self.tier_path(i)
-        new = self._with_day(slots, i)
-        # every write path sorts within tasks by (metric, ts) — a free
-        # in-task sort (no shuffle) that keeps parquet row-group min/max
-        # stats tight, so metric-predicate scans skip row groups even
-        # BETWEEN compactions (compact() re-sorts anyway)
-        if self.mode == "mor":
-            # O(batch) append; the read path resolves last-write-wins
-            self._commit_stamped(i, new, "upsert")
-            return
-        if self._tier_empty(path):
-            adds = self.commit.adopt(
-                new.sortWithinPartitions("day", "metric", "ts"), path
+        self.write_tiers(
+            {i: slots},
+            days=None if days is None else {i: days},
+            cascade=False,
+            op="upsert",
+        )
+
+    def write_tiers(
+        self,
+        slots: dict[int, DataFrame],
+        days: dict[int, list[int]] | None = None,
+        bounds: "dict[int, tuple[int | None, int | None]] | None" = None,
+        cascade: bool = True,
+        touched: dict[int, DataFrame] | None = None,
+        op: str = "write",
+    ) -> None:
+        """Write aligned ``(metric, ts, value)`` slots into the tiers
+        ``slots`` names and, with ``cascade``, re-downsample every
+        coarser tier they touch — all in ONE staged write partitioned by
+        ``(tier, day)`` and ONE manifest commit, so no reader ever sees
+        tier 0 ahead of its coarse tiers. The reference's ``update``
+        lands the batch in its archive and propagates it into the
+        coarser archives in one call on one file
+        (kenshin/storage.py:482-492, 510-586); this is that call.
+
+        Each tier's new rows, finest first:
+
+        - a tier in ``slots`` takes its slots, new values winning per
+          (metric, ts) over what it stores (cow merges the touched
+          partitions, mor appends);
+        - each tier coarser than the finest source re-aggregates every
+          coarse slot the sources below it touch (``config.AGG_SQL``)
+          from the finer tier's stored rows overlaid with the finer
+          tier's new rows of this write — the write-time downsample
+          (W7), with no xff gate (PARITY W8). A tier that also has
+          direct ``slots`` (points old enough to route straight to it,
+          W4) keeps those over the re-aggregate, as writing it after
+          the cascade from below would.
+
+        ``touched``: per source tier, a frame whose ``(metric, ts)``
+        rows pick the coarse slots the cascade re-aggregates, in place
+        of the tier's slots (StreamingIngest passes the routed raw
+        points, which align to the same coarse slots without the LWW
+        shuffle). A tier here but not in ``slots`` is a cascade-only
+        source: its stored rows feed the coarser tiers
+        (:meth:`propagate`).
+
+        ``bounds``: per source tier, its rows' ``(min ts, max ts)``
+        when the caller already knows them (StreamingIngest takes them
+        from its census) — they bound the finer-tier scans; ``(None,
+        None)`` marks an empty source. Missing ones cost one job.
+
+        ``days``: per tier in ``slots``, its exact touched-partition set
+        when the caller knows it. With every source's set (and bounds)
+        known, each cascade reads only the finer partitions its coarse
+        slots cover, and cow derives the coarser tiers' sets on the
+        driver; otherwise cow probes them all in one job. A cow set that
+        misses a partition the write touches raises before anything
+        commits (see :meth:`upsert`).
+
+        Plan shape: each cascaded tier is one hash-partitioning of the
+        finer tier's rows by (metric, coarse slot), the finer tier's new
+        rows passing through it, so every tier's new rows come out of
+        ONE stream and no intermediate is computed twice."""
+        n = len(self.schema.archives)
+        sources = {
+            i: df.select("metric", F.col("ts").cast("long"))
+            for i, df in {**slots, **(touched or {})}.items()
+        }
+        bounds = dict(bounds or {})
+        if cascade:
+            missing = [i for i in sources if i < n - 1 and i not in bounds]
+            if missing:
+                bounds.update(self._bounds({i: sources[i] for i in missing}))
+            # an empty source touches nothing
+            cascading = sorted(
+                i for i in sources
+                if i < n - 1 and bounds[i][0] is not None
             )
-            with self.commit.txn(op="upsert") as tx:
-                tx.replace(f"tier={i}", adds)
-            return
-        if days is None:
-            days = [r["day"] for r in new.select("day").distinct().collect()]
         else:
-            days = [int(d) for d in days]
-        # the merge below is planned from THIS snapshot — pin it so a
-        # concurrent writer's commit into a touched day conflicts
-        # loudly instead of being silently replaced un-merged
-        read_seq = self.commit.epoch()
-        existing = (
-            self._scan_tier(path)
-            .where(F.col("day").isin(days))
-            .select("metric", "ts", "value", "day")
-        )
-        # last-write-wins: the new batch outranks stored rows; max(struct)
-        # is NULL-safe in the payload position
-        merged = (
-            existing.withColumn("_seq", F.lit(0))
-            .unionByName(new.withColumn("_seq", F.lit(1)))
-            .groupBy("metric", "ts", "day")
-            .agg(F.max(F.struct("_seq", "value")).alias("_w"))
-            .select("metric", "ts", F.col("_w.value").alias("value"), "day")
-        )
-        # adopt the merged frame's files, then one transaction retires
-        # the touched days' old files and commits the rewrites; readers
-        # never see a half-merged partition and nothing is deleted
-        # in-commit
-        adds = self.commit.adopt(
-            merged.sortWithinPartitions("day", "metric", "ts"), path
-        )
-        # the drops below retire ONLY the supplied days: a rewrite file
-        # under any other day would land beside that day's old rows.
-        # The adopt result names every day written — no extra job
-        stray = sorted(
-            {rel.split("/")[1] for rel, _ in adds}
-            - {f"day={d}" for d in days}
-        )
-        if stray:
-            raise ValueError(
-                f"upsert(tier={i}, days={days}): the batch also touches "
-                f"{stray}; refusing to commit a merge that would keep "
-                "those partitions' old rows beside the new ones"
+            cascading = []
+        first = cascading[0] if cascading else n
+        tiers = sorted(set(slots) | set(range(first + 1, n)))
+        if not tiers:
+            return
+
+        def below(j: int) -> list[int]:
+            return [i for i in cascading if i < j]
+
+        days = days or {}
+        # the finer-tier partitions each cascade reads, when every
+        # source's days are known; else the range decides
+        scan_days = {
+            j: set().union(*(
+                self._coarse_days(i, days[i], bounds[i], j, finer=True)
+                for i in below(j)
+            ))
+            for j in tiers
+            if j > first and all(i in days for i in below(j))
+        }
+        touched_days: dict[int, list[int]] = {}
+        if self.mode == "cow":
+            touched_days = self._touched_days(
+                tiers, slots, sources, below, days, bounds
             )
-        with self.commit.txn(read_seq=read_seq, op="upsert") as tx:
-            for d in days:
-                tx.drop(f"tier={i}/day={d}")
-            for rel, size in adds:
-                tx.add(rel, size)
+
+        def new_rows(j: int) -> DataFrame:
+            return slots[j].select(
+                "metric",
+                F.col("ts").cast("long"),
+                F.col("value").cast("double"),
+                F.lit(j).alias("tier"),
+            )
+
+        def plan(read_seq: int) -> DataFrame | None:
+            stream = _union([new_rows(j) for j in tiers if j <= first])
+            for j in tiers:
+                if j > first:
+                    srcs = below(j)
+                    stream = self._cascade(
+                        j,
+                        read_seq,
+                        stream,
+                        new_rows(j) if j in slots else None,
+                        [sources[i] for i in srcs],
+                        min(bounds[i][0] for i in srcs),
+                        max(bounds[i][1] for i in srcs),
+                        scan_days.get(j),
+                    )
+            if stream is None:
+                return None
+            return self._merged(stream, read_seq, touched_days)
+
+        def drops(adds: list[tuple[str, int]]) -> list[str]:
+            # cow retires ONLY the touched partitions: a rewrite file
+            # under any other one would land beside that partition's
+            # old rows. The adopt result names every partition written
+            # — no extra job
+            out = []
+            for j, ds in touched_days.items():
+                tier = f"tier={j}"
+                stray = sorted(
+                    {rel.split("/")[1] for rel, _ in adds
+                     if rel.split("/")[0] == tier}
+                    - {f"day={d}" for d in ds}
+                )
+                if stray:
+                    raise ValueError(
+                        f"{op}(tier={j}, days={ds}): the batch also "
+                        f"touches {stray}; refusing to commit a merge "
+                        "that would keep those partitions' old rows "
+                        "beside the new ones"
+                    )
+                out += [f"{tier}/day={d}" for d in ds]
+            return out
+
+        self._stage_commit(plan, op, tiers, drops=drops)
+
+    def _bounds(
+        self, frames: dict[int, DataFrame]
+    ) -> dict[int, tuple[int | None, int | None]]:
+        """``(min ts, max ts)`` of each frame, ``(None, None)`` when
+        empty, in one job."""
+        probe = _union([
+            df.select(F.lit(i).alias("tier"), "ts")
+            for i, df in frames.items()
+        ])
+        got = {
+            r["tier"]: (r["lo"], r["hi"])
+            for r in probe.groupBy("tier")
+            .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
+            .collect()
+        }
+        return {i: got.get(i, (None, None)) for i in frames}
+
+    def _touched_days(
+        self, tiers, slots, sources, below, days, bounds
+    ) -> dict[int, list[int]]:
+        """The partitions each written tier's new rows fall in — what a
+        cow write retires and rewrites. A tier in ``slots`` touches its
+        ``days``; a coarser tier the coarse slots of the sources below
+        it, derived on the driver from each source's ``days`` and
+        ``bounds``. Without them, one job probes every tier's set.
+        Tiers with no committed file yet are skipped: there is nothing
+        to merge or retire."""
+        tiers = [j for j in tiers if not self._tier_empty(self.tier_path(j))]
+        if not tiers:
+            return {}
+        need = {i for j in tiers for i in below(j) + [j] if i in sources}
+        if all(i in slots and i in days for i in need):
+            out = {}
+            for j in tiers:
+                got = set(int(d) for d in days.get(j, []))
+                for i in below(j):
+                    got |= self._coarse_days(i, days[i], bounds[i], j)
+                out[j] = sorted(got)
+            return out
+        parts = []
+        for j in tiers:
+            step = self.schema.archives[j].sec_per_point
+
+            def day(df, ts, j=j):
+                return df.select(
+                    F.lit(j).alias("tier"),
+                    (ts / self.part_unit(j)).cast("long").alias("day"),
+                )
+
+            # a tier's own slots land where ``_with_day`` puts them; a
+            # source below it lands at its coarse slot
+            if j in slots:
+                parts.append(day(slots[j], F.col("ts").cast("long")))
+            parts += [
+                day(sources[i], align_ts(F.col("ts"), step))
+                for i in below(j)
+            ]
+        out = {j: [] for j in tiers}
+        for r in _union(parts).distinct().collect():
+            out[r["tier"]].append(r["day"])
+        return {j: sorted(ds) for j, ds in out.items()}
+
+    def _coarse_days(
+        self,
+        i: int,
+        days: list[int],
+        bounds: tuple[int, int],
+        j: int,
+        finer: bool = False,
+    ) -> set[int]:
+        """The partitions of tier j's coarse slots over tier i's slots in
+        partitions ``days`` within ``bounds``: tier j's own, where a
+        cascade from tier i rewrites them, or with ``finer`` tier
+        j-1's, whose rows the cascade re-aggregates. Each finer
+        partition's slot range aligns down to tier j's step; the set is
+        exact when the partition unit is a multiple of the step (every
+        shipped layout), a superset otherwise."""
+        ui = self.part_unit(i)
+        unit = self.part_unit(j - 1 if finer else j)
+        step = self.schema.archives[j].sec_per_point
+        lo, hi = int(bounds[0]), int(bounds[1])
+        out: set[int] = set()
+        for d in days:
+            a, b = max(int(d) * ui, lo), min((int(d) + 1) * ui - 1, hi)
+            if a <= b:
+                a, b = a - a % step, b - b % step
+                if finer:
+                    b += step - 1
+                out.update(range(a // unit, b // unit + 1))
+        return out
+
+    def _cascade(
+        self,
+        j: int,
+        read_seq: int,
+        stream: DataFrame | None,
+        direct: DataFrame | None,
+        srcs: list[DataFrame],
+        lo: int,
+        hi: int,
+        scan_days: set[int] | None,
+    ) -> DataFrame | None:
+        """Add tier j's new rows to ``stream`` — rows ``(metric, ts,
+        value, tier)`` whose tier j-1 rows are the finer tier's new rows
+        and whose finer tiers' rows pass through. Each coarse slot
+        ``srcs`` touch takes its ``direct`` row (tier j's own new row)
+        if any, else the aggregate of the finer tier's rows, where the
+        new rows win their slots over the rows stored at ``read_seq``
+        (read from the touched range, partitions ``scan_days``).
+
+        One shuffle: everything is hash-partitioned by (metric, coarse
+        slot), which the per-slot resolve and the per-coarse-slot
+        aggregate both need, and the rows passing through ride the
+        aggregate as a list (``explode`` restores them) — so the stream
+        is one chain and no part of it is planned twice. (Spark cannot
+        reuse an exchange whose plan reads a cached frame under AQE, and
+        the ingest batch is cached.)"""
+        step = self.schema.archives[j].sec_per_point
+        agg = AGG_SQL[self.schema.agg_method]
+        lo, hi = lo - lo % step, hi - hi % step + step
+        unit = self.part_unit(j - 1)
+        path = self.tier_path(j - 1)
+        span = range(lo // unit, (hi - 1) // unit + 1)
+        files = self._plan_abs(
+            path,
+            version=read_seq,
+            days=[d for d in span if scan_days is None or d in scan_days],
+        )
+        rank = F.lit(_STAGED_RANK).alias("_r")
+        parts = [
+            df.select("metric", "ts", "value", "tier", rank)
+            for df in (stream, direct)
+            if df is not None
+        ]
+        if files:
+            # the touched coarse slots, broadcast; the finer tier's
+            # stored rows are read only where they fall — the cascade's
+            # cost is ∝ batch, not table
+            touched = _union([
+                src.select(
+                    "metric", align_ts(F.col("ts"), step).alias("_slot")
+                )
+                for src in srcs
+            ]).distinct()
+            stored = self._scan_files(path, files).where(
+                (F.col("ts") >= lo) & (F.col("ts") < hi)
+            )
+            stored = stored.join(
+                F.broadcast(touched),
+                (stored["metric"] == touched["metric"])
+                & (align_ts(stored["ts"], step) == touched["_slot"]),
+                "left_semi",
+            )
+            parts.append(stored.select(
+                "metric", "ts", "value", F.lit(j - 1).alias("tier"),
+                (F.col("_seq") if self.mode == "mor" else F.lit(0))
+                .cast("long").alias("_r"),
+            ))
+        if not parts:
+            return None
+        tier = F.col("tier")
+        # one row per (slot, tier): a finer slot's stored and new rows
+        # resolve to the highest rank (every stored mor stamp is below
+        # _STAGED_RANK; cow's stored rank is 0)
+        rows = (
+            _union(parts)
+            .withColumn("_slot", align_ts(F.col("ts"), step))
+            .repartition("metric", "_slot")
+            .groupBy("metric", "_slot", "ts", "tier")
+            .agg(F.max(F.struct("_r", "value")).alias("_w"))
+            .select(
+                "metric", "_slot", "ts", "tier",
+                F.col("_w._r").alias("_r"), F.col("_w.value").alias("value"),
+            )
+        )
+        finer = f"CASE WHEN tier = {j - 1} THEN value END"
+        out = F.struct(tier, F.col("ts"), F.col("value"))
+        groups = rows.groupBy("metric", "_slot").agg(
+            F.expr(agg.format(v=finer, t="ts")).alias("_agg"),
+            F.max(F.when(tier == j, F.struct("value"))).alias("_direct"),
+            F.count(F.when(tier >= j - 1, 1)).alias("_n"),
+            # the rows that pass through: finer tiers' new rows
+            F.collect_list(F.when(
+                (tier < j - 1)
+                | ((tier == j - 1) & (F.col("_r") == _STAGED_RANK)),
+                out,
+            )).alias("_pass"),
+        )
+        coarse = F.struct(
+            F.lit(j).alias("tier"),
+            F.col("_slot").alias("ts"),
+            F.when(F.col("_direct").isNotNull(), F.col("_direct.value"))
+            .otherwise(F.col("_agg")).alias("value"),
+        )
+        return groups.select(
+            "metric",
+            F.explode(F.when(
+                F.col("_n") > 0, F.concat("_pass", F.array(coarse))
+            ).otherwise(F.col("_pass"))).alias("_o"),
+        ).select("metric", "_o.ts", "_o.value", "_o.tier")
+
+    def _merged(
+        self,
+        stream: DataFrame,
+        read_seq: int,
+        days: dict[int, list[int]],
+    ) -> DataFrame:
+        """The rows a write adds, from its new rows ``(metric, ts,
+        value, tier)``: each with its tier's ``day``. mor appends them;
+        cow merges them into the rows stored at ``read_seq`` in each
+        tier's touched partitions ``days`` (new values winning,
+        NULL-safe in the payload position), which the commit retires —
+        one shuffle for every tier."""
+        day = None
+        for j in range(len(self.schema.archives)):
+            unit = F.lit(self.part_unit(j))
+            day = (F.when(F.col("tier") == j, unit) if day is None
+                   else day.when(F.col("tier") == j, unit))
+        out = stream.select(
+            "metric", "ts", "value",
+            (F.col("ts") / day).cast("long").alias("day"), "tier",
+        )
+        existing = []
+        for j, ds in days.items():
+            path = self.tier_path(j)
+            files = self._plan_abs(path, version=read_seq, days=ds)
+            if files:
+                existing.append(self._scan_files(path, files).select(
+                    "metric", "ts", "value", "day", F.lit(j).alias("tier")
+                ))
+        if not existing:
+            return out
+        return (
+            _union(existing).withColumn("_r", F.lit(0))
+            .unionByName(out.withColumn("_r", F.lit(1)))
+            .groupBy("tier", "day", "metric", "ts")
+            .agg(F.max(F.struct("_r", "value")).alias("_w"))
+            .select(
+                "metric", "ts", F.col("_w.value").alias("value"), "day",
+                "tier",
+            )
+        )
 
     # -- retention (O4) ---------------------------------------------------
 
@@ -700,108 +1088,47 @@ class ParquetTieredStore:
         from_tier: int = 0,
         bounds: "tuple[int | None, int | None] | None" = None,
     ) -> None:
-        """Cascade an upsert into tier ``from_tier`` through the coarser
-        tiers: for each tier i>from_tier re-aggregate every coarse slot
-        the batch touches from tier i-1 — the write-time downsample of
-        kenshin/storage.py:510-586. No xff timeunit gates it: the
-        reference defers the still-open timeunit to a later update
-        (kenshin/storage.py:505-528), this store re-aggregates it in the
-        same batch (PARITY W8). The finer-tier scan is bounded to the
-        touched coarse-slot range.
+        """Cascade-only :meth:`write_tiers`: re-aggregate every coarse
+        slot of the tiers past ``from_tier`` that ``batch_slots``'s
+        ``(metric, ts)`` touch, from tier ``from_tier``'s stored rows up
+        — one staged write and one commit for the whole cascade. The
+        recovery path when a write bypassed the cascade
+        (:meth:`propagate_from_seq`, imports, manual upserts).
 
         ``bounds``: the batch's (min ts, max ts) when the caller already
-        knows them (StreamingIngest folds them into the upsert's write
-        action via ``observe``) — skips the bounds job here. ``(None,
-        None)`` means a provably empty batch (no-op), ``None`` means
-        unknown (compute them).
+        knows them — skips the bounds job. ``(None, None)`` means a
+        provably empty batch (no-op), ``None`` means unknown (compute
+        them).
 
-        Shape (r12, guide §1.3/§2.4): every tier's touched coarse-slot
-        set is derived by aligning the ORIGINAL batch slots — coarser
-        steps are validated integer multiples of finer ones
-        (config.py: "each coarser step is an integer multiple of the
-        next finer step"), so ``align(align(ts, s_fine), s_coarse) ==
-        align(ts, s_coarse)`` and the set is identical to the former
-        chain off the previous tier's re-aggregate. That makes each
-        re-aggregate single-consumer (its own upsert write), so the
-        per-tier persist + count job are gone: the mor append is
-        written straight from the plan and AQE's partition coalescing
-        shapes the output files by SIZE (scale-adaptive) instead of an
-        explicit coalesce sized by a dedicated count job. Cow tiers pin
-        the re-aggregate around their read-merge-rewrite (two
-        consumers: the touched-days probe and the merge)."""
-        agg = AGG_SQL[self.schema.agg_method]
-        touched = batch_slots.select(
-            "metric", F.col("ts").cast("long")
-        )
-        # the batch projection is consumed once per coarser tier (each
-        # tier's slot set aligns it down) plus once for the bounds job —
-        # pin it when there is more than one consumer so the upstream
-        # plan (e.g. a CDC exceptAll diff, or a foreachBatch frame that
-        # re-executes its stateful source per action) runs once. pin,
-        # NOT persist: the per-tier broadcast builds of the slot sets
-        # were measured missing the SQL cache (each tier's write
-        # re-evaluated the full upstream plan — 4 extra evaluations of
-        # the CDC diff per propagate_from_seq), while checkpoint blocks
-        # are reused unconditionally.
+        The batch projection is read by the bounds job, the cow
+        touched-day probe and, once per coarser tier, the write — pin
+        it when there is more than one consumer so the upstream plan
+        (e.g. a CDC exceptAll diff) runs once. pin, NOT persist: the
+        per-tier broadcast builds of the slot sets were measured missing
+        the SQL cache, while checkpoint blocks are reused
+        unconditionally."""
+        touched = batch_slots.select("metric", F.col("ts").cast("long"))
         n_consumers = (len(self.schema.archives) - from_tier - 1) + (
             1 if bounds is None else 0
-        )
+        ) + (1 if self.mode == "cow" else 0)
         if n_consumers > 1:
             from kenshin_spark.session import pin
 
             touched = pin(touched, eager=False)
         try:
-            if bounds is None:
-                row = touched.agg(
-                    F.min("ts").alias("lo"), F.max("ts").alias("hi")
-                ).collect()[0]
-                bounds = (row["lo"], row["hi"])
-            if bounds[0] is None:
-                return
-            lo, hi = int(bounds[0]), int(bounds[1])
-            for i in range(from_tier + 1, len(self.schema.archives)):
-                step = self.schema.archives[i].sec_per_point
-                slots = touched.select(
-                    "metric", align_ts(F.col("ts"), step).alias("slot")
-                ).distinct()
-                # bound the finer-tier scan to the touched coarse-slot
-                # range — partition pruning keeps propagation cost
-                # ∝ batch, not table
-                finer = self.read_range(
-                    i - 1, lo - lo % step, hi - hi % step + step
-                )
-                window = finer.join(
-                    F.broadcast(slots),
-                    (finer["metric"] == slots["metric"])
-                    & (align_ts(finer["ts"], step) == slots["slot"]),
-                ).select(finer["metric"], finer["ts"], finer["value"])
-                re_agg = window.groupBy(
-                    "metric", align_ts(F.col("ts"), step).alias("ts")
-                ).agg(
-                    F.expr(agg.format(v="value", t="ts")).alias("value")
-                )
-                if self.mode == "cow" and not self._tier_empty(
-                    self.tier_path(i)
-                ):
-                    # cow's merge probes the touched days, then unions
-                    # against them — two consumers; pin so the
-                    # re-aggregate evaluates once
-                    re_agg = re_agg.persist()
-                    try:
-                        self.upsert(i, re_agg)
-                    finally:
-                        re_agg.unpersist()
-                else:
-                    # mor append (or first cow write): single consumer —
-                    # written straight from the plan; AQE coalesces the
-                    # output partitions by size (guide §2.2/§6)
-                    self.upsert(i, re_agg)
+            self.write_tiers(
+                {},
+                bounds=None if bounds is None else {from_tier: bounds},
+                touched={from_tier: touched},
+                op="propagate",
+            )
         finally:
             # no-op unless a (replicated-persist) pin mode left the frame
             # cached; localCheckpoint blocks are reclaimed by the
             # ContextCleaner once the RDD is unreachable (session.py pins
             # the periodic-GC cadence at 45 s)
             touched.unpersist()
+
 
     def backup_to(self, dest_root: str) -> list[str]:
         """Copy every tier, the catalog, and the manifest log to
@@ -1003,10 +1330,10 @@ class ParquetTieredStore:
 
     def compact(
         self,
-        i: int,
+        i: "int | dict[int, list[int] | None]",
         target_files_per_day: int = 1,
         days: list[int] | None = None,
-    ) -> list[int] | None:
+    ) -> "list[int] | None | dict[int, list[int] | None]":
         """Rewrite tier i's day partitions into ``target_files_per_day``
         files each. Repeated micro-batch upserts leave one file per
         (day × shuffle task × batch); compaction restores the
@@ -1021,53 +1348,67 @@ class ParquetTieredStore:
         the necessary bytes. ``days=None`` keeps the full-tier rewrite
         (initial cleanup / schema maintenance).
 
-        Every rewrite is staged + adopted invisibly, then ONE
-        transaction retires the old files and commits the new; readers
-        mid-scan keep their snapshot (old files persist until
-        ``vacuum``). ONE fold job covers every requested day: the
-        day-partitioned rewrite gives each day its own task(s) (plus a
-        metric hash for target>1), so the per-day output shape is exact.
+        ``i`` may instead map several tiers to their ``days`` (None =
+        the whole tier): the maintenance pass compacts every degraded
+        tier of a store at once. Every requested partition is folded in
+        ONE job — the ``(tier, day)``-partitioned rewrite gives each
+        partition its own task(s) (plus a metric hash for target>1), so
+        the per-day output shape is exact — staged and adopted
+        invisibly, then ONE transaction retires the old files and
+        commits the new; readers mid-scan keep their snapshot (old files
+        persist until ``vacuum``).
 
         Returns the days actually compacted when ``days`` is given
         (requested days absent from this tier are skipped, not
-        reported), else None for the full rewrite."""
-        path = self.tier_path(i)
-        if self._tier_empty(path):
-            return [] if days is not None else None
-        # the fold below is planned from THIS snapshot: pin it so a
-        # concurrent writer's append to a folded partition raises
-        # ManifestConflict instead of being silently retired un-folded
-        read_seq = self.commit.epoch()
-        raw = self._scan_tier(path)
-        if days is None:
-            retired = [f"tier={i}"]
-        else:
-            live = set(self._live_days(i))
-            days = sorted(d for d in days if d in live)
-            if not days:
-                return []
-            raw = raw.where(F.col("day").isin(days))
-            retired = [f"tier={i}/day={d}" for d in days]
-        df = self._fold_log(raw)
-        if target_files_per_day == 1:
-            shaped = df.repartition("day")  # each day → exactly one task
-        else:
-            shaped = df.repartition(
+        reported), else None for the full rewrite; for a mapping, those
+        results per tier that had anything to compact."""
+        if not isinstance(i, dict):
+            return self.compact({i: days}, target_files_per_day).get(
+                i, None if days is None else []
+            )
+        todo: dict[int, list[int] | None] = {}
+        for t, ds in i.items():
+            if self._tier_empty(self.tier_path(t)):
+                continue
+            if ds is not None:
+                live = set(self._live_days(t))
+                ds = sorted(d for d in ds if d in live)
+                if not ds:
+                    continue
+            todo[t] = ds
+        if not todo:
+            return {}
+
+        def plan(read_seq: int) -> DataFrame:
+            # the fold is planned from the snapshot the commit is checked
+            # against: a concurrent writer's append to a folded partition
+            # raises ManifestConflict instead of being retired un-folded
+            df = _union([
+                self._fold_log(self._scan_tier(
+                    self.tier_path(t), version=read_seq, days=ds
+                )).withColumn("tier", F.lit(t))
+                for t, ds in todo.items()
+            ])
+            if target_files_per_day == 1:
+                return df.repartition("tier", "day")  # one task per day
+            return df.repartition(
+                "tier",
                 "day",
                 F.pmod(F.xxhash64("metric"), F.lit(target_files_per_day)),
             )
-        # day first: the partitioned writer's required ordering is a day
-        # prefix — satisfying it keeps the writer from inserting its own
-        # (unstable) re-sort that would undo (metric, ts)
-        adds = self.commit.adopt(
-            shaped.sortWithinPartitions("day", "metric", "ts"), path
+
+        self._stage_commit(
+            plan,
+            "compact",
+            list(todo),
+            drops=lambda _adds: [
+                f"tier={t}" if ds is None else f"tier={t}/day={d}"
+                for t, ds in todo.items()
+                for d in (ds or [None])
+            ],
+            stamped=False,
         )
-        with self.commit.txn(read_seq=read_seq, op="compact") as tx:
-            for prefix in retired:
-                tx.drop(prefix)
-            for rel, size in adds:
-                tx.add(rel, size)
-        return days
+        return todo
 
     def _fold_log(self, raw: DataFrame) -> DataFrame:
         """Collapse a mor append log to one row per slot (stamp 0); pass

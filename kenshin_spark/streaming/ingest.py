@@ -26,15 +26,18 @@ Spark mapping implemented here:
   buffer, rurouni/cache.py:219-338) and emits a window exactly once it
   closes (flush eligibility, rurouni/cache.py:259-262); state eviction
   past the watermark is the drain (rurouni/cache.py:288-338).
-- **update** (W4-W8): ``ParquetTieredStore.upsert`` + ``propagate`` —
-  align/LWW, partition-local merge, bounded write-time downsample.
+- **update** (W4-W8): one ``ParquetTieredStore.write_tiers`` per schema
+  and batch — align/LWW, the partition-local merge (cow) or append
+  (mor), and the bounded write-time downsample of every coarser tier,
+  in one staged write and one commit.
 - **instrumentation** (S8, rurouni/state/instrumentation.py:66-113):
   per-batch counters; ``self_metrics_points`` re-emits them as
   ``rurouni.*`` metric points that can be fed back into ingest.
 
-Exactly-once: the store upsert is idempotent per (metric, slot) and the
+Exactly-once: the tier write is idempotent per (metric, slot) and the
 checkpoint replays whole micro-batches, so replayed batches converge to
-the same stored state (the reference gets only best-effort via locks).
+the same stored state (the reference gets only best-effort via locks); a
+batch that dies before its commit leaves only invisible staged files.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import Window
 from pyspark.sql.streaming import StreamingQuery
 
 from kenshin_spark.config import Schema, SchemaSet
@@ -251,11 +255,17 @@ class StreamingIngest:
         holds) and, with ``new``, ``_new``: distinct metrics with a row
         where ``new`` holds.
 
-        Two levels: ``groupBy(metric, route, slot)`` first, so every
-        per-archive slot count is a plain count of groups and ``_new``
-        is the only distinct aggregate. (A multi-distinct aggregate
-        plans an Expand that multiplies each row by the route count, and
-        its generated classes differ from batch to batch.)"""
+        Two levels over ``frame`` hash-partitioned by ``metric``:
+        ``groupBy(metric, route, slot)`` first, so every per-archive slot
+        count is a plain count of groups, and ``_new`` counts each
+        metric once (a window per metric) — no distinct
+        aggregate at all. The first level, the window and the second
+        level's partial aggregate all run inside the metric partitions,
+        so the census plans two shuffles: the repartition and the final
+        single-partition merge. (A multi-distinct aggregate plans an
+        Expand that multiplies each row by the route count, and its
+        generated classes differ from batch to batch; a distinct
+        ``_new`` would need a shuffle of its own.)"""
         if clean is None:
             clean = F.lit(True)
         #: (label, condition, step, partition unit); no step past the
@@ -296,8 +306,14 @@ class StreamingIngest:
         ]
         if new is not None:
             level1.append(F.max(new).alias("_new"))
+            # a metric counts once, on its first group, which holds a
+            # `new` row if any of its groups does; the window runs inside
+            # the metric partitions, so it adds no shuffle
+            first = F.row_number().over(
+                Window.partitionBy("metric").orderBy(F.col("_new").desc())
+            ) == 1
             level2.append(
-                F.count_distinct(F.when(F.col("_new"), F.col("metric")))
+                F.count(F.when(F.col("_new") & F.col("_first"), 1))
                 .alias("_new")
             )
         for k, (label, _, step, unit) in enumerate(routes):
@@ -316,39 +332,50 @@ class StreamingIngest:
                     f"_d_{label}"
                 ),
             ]
-        return (
-            frame.withColumn("_route", route)
+        groups = (
+            frame.repartition("metric")
+            .withColumn("_route", route)
             .withColumn("_slot", slot)
             .groupBy("metric", "_route", "_slot")
             .agg(*level1)
-            .agg(*level2)
         )
+        if new is not None:
+            groups = groups.withColumn("_first", first)
+        return groups.agg(*level2)
 
     # -- the foreachBatch body (direct mode) ------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """One flush: admit → per-schema align/LWW → upsert tier0 →
-        propagate the cascade. Works on any ``(metric, ts, value
-        [, corrupt][, arrival])`` frame — streaming micro-batch or plain
-        batch backfill (same code path, per SURVEY §7.3 late-data note).
+        """One flush: admit → per-schema align/LWW → one tier write per
+        schema. Works on any ``(metric, ts, value[, corrupt][,
+        arrival])`` frame — streaming micro-batch or plain batch
+        backfill (same code path, per SURVEY §7.3 late-data note).
 
-        Job shape (r12, guide §1.3): ONE aggregate over the batch
-        left-joined with the catalog yields the bookkeeping counters,
-        the new-metric count AND the routing census (plus each
-        archive's touched-day set, which the cow upsert would otherwise
-        probe with its own job) — previously three sequential actions
-        (stats pass, admission count, census pass). The census is a
-        two-level aggregate (:meth:`_census`): a first ``groupBy(metric,
-        archive, slot)`` routes each row to at most one archive, so the
-        second level sums, bounds and collects plain columns and its one
-        distinct aggregate is the new-metric count — no multi-distinct
-        Expand, and the same generated classes every batch. The census
-        routes not-yet-admitted metrics through the same declarative
-        regex CASE the admission insert writes, so it equals the
-        post-admission routing join whenever every new metric is
-        granted; under an active create-rate limit that denies some
-        metrics (the only case where they can differ) the census is
-        recomputed over the post-admission join."""
+        Job shape: three actions and two commits per batch (dead
+        letters and a rate-limited census add their own).
+
+        - The census: ONE aggregate over the batch left-joined with the
+          catalog yields the bookkeeping counters, the new-metric count
+          AND the routing census — each archive's row and slot counts,
+          slot bounds and touched-day set. It is two levels over the
+          batch hash-partitioned by metric (:meth:`_census`): no
+          multi-distinct Expand, two shuffles, and the same generated
+          classes every batch. It routes not-yet-admitted metrics
+          through the same declarative regex CASE the admission insert
+          writes, so it equals the post-admission routing join whenever
+          every new metric is granted; under an active create-rate limit
+          that denies some metrics (the only case where they can
+          differ) it is recomputed over the post-admission join.
+        - The admission: the catalog insert, one commit of the root's
+          catalog store (only when the batch has new metrics).
+        - Per schema, ONE ``ParquetTieredStore.write_tiers``: every
+          archive's last-write-wins slots (W4 routing, W5) and the
+          re-aggregate of every coarse slot they touch (W7), staged in
+          one ``(tier, day)``-partitioned write and published in one
+          commit of the schema store. The census supplies the bounds
+          and touched days it would otherwise compute, so the write is
+          the only action; a reader sees the whole cascade of a batch
+          or none of it."""
         self.stats.batches += 1
         # the batch is scanned several times (dead-letter split, admission,
         # one pass per schema) — persist so the source parse runs once
@@ -446,18 +473,21 @@ class StreamingIngest:
                 # W4 age routing (kenshin/storage.py:384-425): the FIRST
                 # archive whose retention covers the point's age takes it;
                 # older-than-everything points are dropped.
+                slots, touched, days, bounds = {}, {}, {}, {}
                 for i, arch in enumerate(schema.archives):
-                    if census[f"_c_{schema.name}_{i}"] == 0:
+                    label = f"{schema.name}_{i}"
+                    if census[f"_c_{label}"] == 0:
                         continue
                     sub = group.where(_arch_cond(schema, i, age))
+                    touched[i] = sub.select("metric", "ts")
                     # NOT persisted: caching the LWW result here pins the
                     # write to the raw 32-partition shuffle output and
                     # skips AQE's small-partition coalescing — measured
                     # 189 → 2,880 files/batch and a 2x direct-path
-                    # slowdown. The re-run LWW over the (persisted) batch
-                    # is the cheaper side of that trade; propagate caches
-                    # its own projections internally.
-                    slots = last_write_wins(
+                    # slowdown. The one write consumes it once: the
+                    # cascade picks its touched coarse slots from the
+                    # routed points instead (``touched``).
+                    slots[i] = last_write_wins(
                         sub,
                         arch.sec_per_point,
                         arrival_col=arrival,
@@ -465,22 +495,19 @@ class StreamingIngest:
                     )
                     # the committed-slot count, the propagation bounds
                     # AND the cow merge's touched-day set all come from
-                    # the census pass — the upsert write is the ONLY
-                    # action per archive. (r11 used an Observation on
-                    # the write; with the days probe folded away, the
-                    # merge write inside a streaming foreachBatch never
-                    # delivers CollectMetrics and obs.get blocks — the
-                    # census columns are action-free and equivalent.)
-                    days = sorted(census[f"_d_{schema.name}_{i}"])
-                    store.upsert(i, slots, days=days)
-                    store.propagate(
-                        slots,
-                        from_tier=i,
-                        bounds=(
-                            census[f"_lo_{schema.name}_{i}"],
-                            census[f"_hi_{schema.name}_{i}"],
-                        ),
+                    # the census pass — the write is the ONLY action.
+                    # (r11 used an Observation on the write; inside a
+                    # streaming foreachBatch a merge write never delivers
+                    # CollectMetrics and obs.get blocks — the census
+                    # columns are action-free and equivalent.)
+                    days[i] = sorted(census[f"_d_{label}"])
+                    bounds[i] = (census[f"_lo_{label}"], census[f"_hi_{label}"])
+                if slots:
+                    store.write_tiers(
+                        slots, days=days, bounds=bounds, touched=touched,
+                        op="ingest",
                     )
+                for i in slots:
                     self.stats.update_operations += 1
                     self.stats.committed_points += int(
                         census[f"_n_{schema.name}_{i}"]
@@ -578,10 +605,10 @@ class StreamingIngest:
                 # shape the append explicitly: ~500k rows per output
                 # task keeps the mor log at a few files per batch
                 # instead of one per state partition per day
-                store.upsert(0, batch.coalesce(1 + n // 500_000))
-                store.propagate(
-                    batch.select("metric", "ts"),
-                    bounds=(row["lo"], row["hi"]),
+                store.write_tiers(
+                    {0: batch.coalesce(1 + n // 500_000)},
+                    bounds={0: (row["lo"], row["hi"])},
+                    op="ingest",
                 )
                 self.stats.update_operations += 1
                 self.stats.committed_points += n
@@ -650,9 +677,7 @@ class StreamingIngest:
         hot = self.hot_points(checkpoint)
         if hot.isEmpty():
             return
-        store = self.store_for(schema)
-        store.upsert(0, hot)
-        store.propagate(hot.select("metric", "ts"))
+        self.store_for(schema).write_tiers({0: hot}, op="flush")
         self.stats.update_operations += 1
 
     # -- maintenance -------------------------------------------------------
@@ -679,7 +704,8 @@ class StreamingIngest:
             if name == "_root":
                 continue  # catalog-only handle, no tiers
             expired = store.expire(now)
-            compacted: dict[int, list[int]] = {}
+            # every degraded tier folds in one write and one commit
+            degraded = {}
             for i in range(len(store.schema.archives)):
                 days = store.needs_compaction(
                     i,
@@ -687,13 +713,10 @@ class StreamingIngest:
                     min_file_bytes=min_file_bytes,
                 )
                 if days:
-                    done = store.compact(
-                        i,
-                        target_files_per_day=target_files_per_day,
-                        days=days,
-                    )
-                    if done:
-                        compacted[i] = done
+                    degraded[i] = days
+            compacted = store.compact(
+                degraded, target_files_per_day=target_files_per_day
+            ) if degraded else {}
             # expiry and compaction retire files logically; maintenance
             # is where the physical reclaim belongs. The grace is the
             # VACUUM-retention contract: any scan planned more than

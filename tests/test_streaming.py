@@ -245,23 +245,23 @@ class TestAggregatedMode:
             ("fast.x", 1100, 3.0),
         ]
 
-    def test_flush_passes_bounds_to_propagate(
+    def test_flush_passes_bounds_to_write_tiers(
         self, spark, tmp_path, monkeypatch
     ):
         """The aggregated flush derives the propagation window from the
         same materializing aggregate that sizes the tier-0 append, so
-        propagate never re-runs its own min/max job per micro-batch —
+        the cascade never re-runs its own min/max job per micro-batch —
         the bounds must arrive explicit, correct, and non-None."""
         from kenshin_spark.store import ParquetTieredStore
 
         seen = []
-        orig = ParquetTieredStore.propagate
+        orig = ParquetTieredStore.write_tiers
 
-        def recording(self, batch_slots, from_tier=0, bounds=None):
-            seen.append(bounds)
-            return orig(self, batch_slots, from_tier, bounds)
+        def recording(self, slots, *a, bounds=None, **kw):
+            seen.append(None if bounds is None else bounds.get(0))
+            return orig(self, slots, *a, bounds=bounds, **kw)
 
-        monkeypatch.setattr(ParquetTieredStore, "propagate", recording)
+        monkeypatch.setattr(ParquetTieredStore, "write_tiers", recording)
         in_dir, cp, root = (
             str(tmp_path / "in"),
             str(tmp_path / "cp"),
@@ -289,7 +289,7 @@ class TestAggregatedMode:
         )
         q.awaitTermination(120)
         flushed = [b for b in seen if b is not None]
-        assert flushed, "flush must pass explicit bounds to propagate"
+        assert flushed, "flush must pass explicit bounds to write_tiers"
         # the flushed windows are the two closed 10s slots (1000, 1010)
         assert flushed[0] == (1000, 1010)
         assert None not in seen
