@@ -20,25 +20,42 @@ from kenshin_spark.queries import QUERIES, driver_order  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001: the full engine read path —
-    ingest events as points, build the downsample cascade, fetch a 24 h
-    window as a NULL-filled regular grid (SURVEY §3.2)."""
+    """Flagship query on the sf0.001 events: the shipped write and read
+    paths end to end — ingest events as points into a temporary
+    tiered store with one ``StreamingIngest.process_batch`` on a clock
+    fixed at the newest point, then ``store.fetch`` a 24 h window as a
+    NULL-filled regular grid (SURVEY §3.2). The grid is pinned before
+    the store is removed, so it reads no deleted file and nothing is
+    left on disk."""
     # the driver may pass a session without our parquet-nanos setting
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    import shutil
+    import tempfile
+
     from pyspark.sql import functions as F
 
-    from kenshin_spark.engine import KenshinEngine
+    from kenshin_spark.config import SchemaSet
     from kenshin_spark.io import load_table
     from kenshin_spark.queries import TS_SCHEMA
+    from kenshin_spark.session import pin
     from kenshin_spark.sources import events_as_points
+    from kenshin_spark.streaming.ingest import StreamingIngest
 
     sf_dir = "/root/testdata/sf0.001"
     points = events_as_points(load_table(spark, sf_dir, "events"))
-    eng = KenshinEngine(TS_SCHEMA)
-    tiers = eng.tiers(points, arrival_col="arrival")
     now = int(points.agg(F.max("ts")).collect()[0][0])
-    metrics = points.select("metric").distinct()
-    return eng.fetch(tiers, metrics, now - 86400, now, now)
+    root = tempfile.mkdtemp(prefix="kenshin_entry_")
+    try:
+        ingest = StreamingIngest(
+            spark, SchemaSet((TS_SCHEMA,)), root, clock=lambda: now
+        )
+        ingest.process_batch(points, 0)
+        grid = ingest.store_for(TS_SCHEMA).fetch(
+            points.select("metric").distinct(), now - 86400, now, now
+        )
+        return pin(grid, eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -19,15 +19,12 @@ replace the co-location trick (README.md:63-71).
 from kenshin_spark.config import (
     AGG_REGISTRY,
     Archive,
-    CacheConfig,
     RetentionParser,
     Schema,
     SchemaSet,
-    default_schemas,
     parse_storage_schemas,
     validate_archive_list,
 )
-from kenshin_spark.engine import KenshinEngine
 from kenshin_spark.store import ParquetTieredStore
 
 __version__ = "0.1.0"
@@ -35,13 +32,10 @@ __version__ = "0.1.0"
 __all__ = [
     "AGG_REGISTRY",
     "Archive",
-    "CacheConfig",
     "RetentionParser",
     "Schema",
     "SchemaSet",
-    "KenshinEngine",
     "ParquetTieredStore",
-    "default_schemas",
     "parse_storage_schemas",
     "validate_archive_list",
     "__version__",

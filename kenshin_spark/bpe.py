@@ -212,9 +212,3 @@ def tokenize(
             )
 
     return docs.select(id_col, text_col).mapInPandas(kern, out_schema)
-
-
-def vocab_of(merges: list[tuple[str, str]]) -> list[str]:
-    """The learned subword units (merged symbols), training order =
-    rank order."""
-    return [a + b for a, b in merges]

@@ -57,11 +57,6 @@ def agg_id(name: str) -> int:
     return AGG_REGISTRY.index(name)
 
 
-def agg_name(aid: int) -> str:
-    """Reference agg id → name (kenshin/agg.py:24-28)."""
-    return AGG_REGISTRY[aid]
-
-
 # ---------------------------------------------------------------------------
 # Retention parsing — kenshin/storage.py:130-181
 # ---------------------------------------------------------------------------
@@ -312,28 +307,6 @@ class SchemaSet:
         return f"CASE {whens} ELSE '{DEFAULT_SCHEMA.name}' END"
 
 
-def default_schemas() -> SchemaSet:
-    """The example production config (conf/storage-schemas.conf.example:22-44)."""
-    return SchemaSet(
-        (
-            Schema.from_strings(
-                "metric-test", r".*metric_test.*", "1s:1h,6s:2h", xff=1.0,
-                agg_method="average", cache_retention=10, metrics_per_file=2,
-            ),
-            Schema.from_strings(
-                "rurouni-stats", r"^rurouni\.", "60s:2d,300s:7d,15m:25w,12h:5y",
-                xff=20.0, agg_method="average", cache_retention=600,
-                metrics_per_file=8,
-            ),
-            Schema.from_strings(
-                "default", r".*", "10s:12h,60s:2d,300s:7d,15m:25w,12h:5y",
-                xff=20.0, agg_method="average", cache_retention=620,
-                metrics_per_file=8,
-            ),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Config-file parsing (M11) — the reference's conf formats
 # ---------------------------------------------------------------------------
@@ -369,37 +342,3 @@ def parse_storage_schemas(text: str) -> SchemaSet:
             )
         )
     return SchemaSet(tuple(schemas))
-
-
-@dataclass(frozen=True)
-class CacheConfig:
-    """The ``rurouni.conf`` [cache] section surface we reproduce
-    (rurouni/conf.py:14-36, conf/rurouni.conf.example). Network/daemon
-    fields are parsed for parity but unused — Spark replaces the TCP
-    listeners with stream sources and instances with shuffle partitions."""
-
-    max_creates_per_minute: int = 1000
-    num_all_instance: int = 1
-    default_wait_time: int = 1
-    line_receiver_port: int = 2003
-    pickle_receiver_port: int = 2004
-    cache_query_port: int = 7002
-
-    @classmethod
-    def parse(cls, text: str, instance: int | None = None) -> "CacheConfig":
-        import configparser
-
-        cp = configparser.ConfigParser()
-        cp.read_string(text)
-        base = dict(cp["cache"]) if cp.has_section("cache") else {}
-        if instance is not None and cp.has_section(f"cache:{instance}"):
-            base.update(dict(cp[f"cache:{instance}"]))
-        get = lambda k, d: int(base.get(k.lower(), d))
-        return cls(
-            max_creates_per_minute=get("MAX_CREATES_PER_MINUTE", 1000),
-            num_all_instance=get("NUM_ALL_INSTANCE", 1),
-            default_wait_time=get("DEFAULT_WAIT_TIME", 1),
-            line_receiver_port=get("LINE_RECEIVER_PORT", 2003),
-            pickle_receiver_port=get("PICKLE_RECEIVER_PORT", 2004),
-            cache_query_port=get("CACHE_QUERY_PORT", 7002),
-        )

@@ -6,7 +6,7 @@ from kenshin_spark.dedup.cluster import (
     incremental_components,
 )
 from kenshin_spark.dedup.exact import exact_dedup
-from kenshin_spark.dedup.minhash import minhash_lsh_pairs, minhash_signatures
+from kenshin_spark.dedup.minhash import minhash_lsh_pairs
 from kenshin_spark.dedup.ngram import ngram_jaccard_pairs
 from kenshin_spark.dedup.simhash import simhash_fingerprints
 from kenshin_spark.dedup.embedding import embedding_neardup_pairs
@@ -18,7 +18,6 @@ __all__ = [
     "incremental_component_deltas",
     "incremental_components",
     "exact_dedup",
-    "minhash_signatures",
     "minhash_lsh_pairs",
     "ngram_jaccard_pairs",
     "simhash_fingerprints",

@@ -29,12 +29,6 @@ N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
 
-def _hash64(col):
-    """Portable 60-bit hash: first 15 hex chars of md5 as a BIGINT —
-    bit-identical in DuckDB via ('0x'||substr(md5(x),1,15))::BIGINT."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def shingles(
     docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -60,15 +54,6 @@ def shingles(
     return fan_out(docs).select(
         F.col(id_col).alias("doc_id"), F.explode(grams).alias("shingle")
     )
-
-
-def minhash_signatures(sh: DataFrame, k: int = N_HASHES) -> DataFrame:
-    """``(doc_id, h0..h{k-1})`` — one shuffle, k min-aggregates."""
-    aggs = [
-        F.min(_hash64(F.concat(F.lit(f"{s}|"), F.col("shingle")))).alias(f"h{s}")
-        for s in range(k)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_lsh_pairs(

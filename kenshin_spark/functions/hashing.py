@@ -50,28 +50,3 @@ def shard_of(metric: Column | str, num_instances: int) -> Column:
     semantics on the signed digest (rurouni/utils.py:107-108)."""
     col = F.col(metric) if isinstance(metric, str) else metric
     return F.pmod(fnv1a_udf(col), F.lit(num_instances)).alias("shard")
-
-
-class HashRing:
-    """P3 — node lookup ring (kenshin/tools/hash.py:4-20): a key maps to
-    ``nodes[fnv1a(key) % n]``; ``get_nodes`` returns the preference list
-    (the ring rotated to start at the owner). Used by the reference's
-    relay fan-out; in Spark the shuffle partitioner plays this role, but
-    the ring is kept for placement-parity tooling (e.g. reading a live
-    reference fleet's layout during migration)."""
-
-    def __init__(self, nodes: list):
-        self.nodes = list(nodes)
-
-    def add_node(self, node) -> None:
-        self.nodes.append(node)
-
-    def remove_node(self, node) -> None:
-        self.nodes.remove(node)
-
-    def get_node(self, key: str):
-        return self.nodes[fnv1a_32(key) % len(self.nodes)]
-
-    def get_nodes(self, key: str) -> list:
-        idx = fnv1a_32(key) % len(self.nodes)
-        return self.nodes[idx:] + self.nodes[:idx]

@@ -89,42 +89,3 @@ def stratified_hash_sample(
             F.col(stratum_col) == stratum, F.lit(int(rate * DEN))
         ).otherwise(thr)
     return df.where(sample_bucket(key_col, seed) < thr)
-
-
-def weighted_bottom_k_sample(
-    df: DataFrame,
-    k: int,
-    key_col: str,
-    weight_col: str,
-    seed: str = "ksp",
-) -> DataFrame:
-    """Fixed-size weighted sample WITHOUT replacement (Efraimidis &
-    Spirakis 2006, algorithm A-ES — the public weighted-reservoir
-    construction): each row draws a deterministic uniform u from its
-    seeded 60-bit key hash and scores ``-ln(u) / w``; the k smallest
-    scores are the sample. Inclusion odds scale with the row's weight
-    (quality score, domain boost, dedup-cluster mass), and like every
-    sampler here the draw is layout- and cluster-independent and
-    re-run-stable because the randomness IS the key hash.
-
-    Scale shape: one projection + ``TakeOrderedAndProject`` (each
-    partition forwards at most k rows) — no shuffle of the data, no
-    rand() (replays/retries can't disagree). NULL or non-positive
-    weights are excluded (a zero-weight row must never be sampled).
-
-    The exponential-score transform uses ``ln`` (libm-dependent in the
-    last ulp), so this sampler is engine-side + pytest-verified rather
-    than a DuckDB hash-matched driver row — the one sampler in the
-    family whose oracle would not be bit-stable across engines.
-    """
-    u = (hash60(key_col, seed).cast("double") + F.lit(1.0)) / F.lit(
-        float(2**60 + 1)
-    )  # u in (0, 1]: +1 keeps ln() finite at hash 0
-    score = -F.log(u) / F.col(weight_col).cast("double")
-    return (
-        df.where(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
-        .withColumn("_wscore", score)
-        .orderBy("_wscore", key_col)
-        .limit(k)
-        .drop("_wscore")
-    )

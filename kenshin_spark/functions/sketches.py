@@ -1,72 +1,27 @@
-"""Mergeable sketches: HLL cardinality (Apache DataSketches, built into
-Spark 3.5+) and a count-min frequency sketch in relational form.
+"""Mergeable sketches in relational form: count-min frequency cells,
+fixed-bin histograms and KMV (bottom-k) distinct-count states.
 
-At 100 TB, "distinct users per day/week/month" cannot re-scan the events
-stream per rollup window. The sketch pattern: aggregate each day ONCE
-into a fixed-size (~2^lgk bytes) HLL sketch, persist the sketches, and
-answer every coarser rollup by UNIONING sketches — associative,
-re-aggregable, and exact-cost-free. Estimates are within ~1.6% at
-lgk=12 (the DataSketches published bound, ±2σ).
+At 100 TB, "how often did key k occur per day/week/month" cannot re-scan
+the events stream per rollup window. The sketch pattern: aggregate each
+day ONCE into a fixed-size sketch, persist the sketches, and answer every
+coarser rollup by merging them — associative and re-aggregable.
 
-No DuckDB oracle for HLL: approximation internals differ across engines
-by design; correctness is pinned by tolerance tests against exact counts
-(tests/test_ops.py::TestHllSketches).
-
-The count-min sketch (Cormode & Muthukrishnan 2005) answers the
-FREQUENCY twin of the same problem — "how often did key k occur per
-day/week/month" over a key domain too large to materialize exactly.
+The count-min sketch (Cormode & Muthukrishnan 2005) answers that
+frequency question over a key domain too large to materialize exactly.
 Here a sketch is a plain DataFrame of at most ``depth × width`` cells
 (``row, bucket, c``): constant-size per group regardless of key
-cardinality, merged across groups by cell-wise SUM (associative, like
-the HLL union), and estimated as min over a key's ``depth`` cells —
-overestimates only, by at most ``2n/width`` with probability
-``1 - 2^-depth``. Because the cells are ordinary rows built from a
-seeded-md5 hash (the same replayable construction the MinHash oracles
-use), the whole sketch IS expressible in ANSI SQL — unlike the opaque
-HLL binary, CMS rows get a real DuckDB hash-match oracle.
+cardinality, merged across groups by cell-wise SUM, and estimated as
+min over a key's ``depth`` cells — overestimates only, by at most
+``2n/width`` with probability ``1 - 2^-depth``. Because the cells are
+ordinary rows built from a seeded-md5 hash (the same replayable
+construction the MinHash oracles use), the whole sketch IS expressible
+in ANSI SQL and gets a real DuckDB hash-match oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-LGK = 12  # DataSketches default; ~1.6% relative standard error
-
-
-def hll_distinct(
-    df: DataFrame, key_col: str, *group_cols: str, lgk: int = LGK
-) -> DataFrame:
-    """Approximate distinct ``key_col`` per group — one pass, map-side
-    partial sketches, constant-size shuffle rows."""
-    est = F.expr(f"hll_sketch_estimate(hll_sketch_agg({key_col}, {lgk}))")
-    if not group_cols:
-        return df.agg(est.alias("approx_distinct"))
-    return df.groupBy(*group_cols).agg(est.alias("approx_distinct"))
-
-
-def hll_sketches(
-    df: DataFrame, key_col: str, *group_cols: str, lgk: int = LGK
-) -> DataFrame:
-    """Persistable per-group sketches: ``(*group_cols, sketch binary)``.
-    Write these once per ingest window; every coarser rollup unions them
-    instead of re-scanning the raw data."""
-    return df.groupBy(*group_cols).agg(
-        F.expr(f"hll_sketch_agg({key_col}, {lgk})").alias("sketch")
-    )
-
-
-def hll_rollup(
-    sketches: DataFrame, *group_cols: str, sketch_col: str = "sketch"
-) -> DataFrame:
-    """Union persisted sketches up to a coarser grouping and estimate:
-    ``(*group_cols, approx_distinct)``. ``hll_union_agg`` is associative,
-    so this re-aggregates already-aggregated state — the property raw
-    distinct counts fundamentally lack."""
-    est = F.expr(f"hll_sketch_estimate(hll_union_agg({sketch_col}))")
-    if not group_cols:
-        return sketches.agg(est.alias("approx_distinct"))
-    return sketches.groupBy(*group_cols).agg(est.alias("approx_distinct"))
 
 
 # ---------------------------------------------------------------------------
@@ -136,8 +91,7 @@ def cms_sketches(
 def cms_merge(cells: DataFrame, *group_cols: str) -> DataFrame:
     """Re-aggregate persisted cells to a coarser grouping: cell-wise
     SUM over (row, bucket) — associative, so day cells roll into
-    week/month/all-time without touching raw data (the CMS analog of
-    ``hll_rollup``)."""
+    week/month/all-time without touching raw data."""
     return cells.groupBy(*group_cols, "row", "bucket").agg(
         F.sum("c").alias("c")
     )
@@ -401,42 +355,4 @@ def kmv_set_estimates(
         jac_ppm.cast("long").alias("jaccard_ppm"),
         F.col("_n").alias("n_sample"),
         F.col("_nb").alias("n_both"),
-    )
-
-
-def kmv_difference(
-    a: DataFrame, b: DataFrame, k: int = 256
-) -> DataFrame:
-    """Directional set differences from two KMV states: one row
-    ``(a_minus_b_est, b_minus_a_est, union_est)``. Same theta-sketch
-    construction as ``kmv_set_estimates`` — the union sample M is
-    uniform over A ∪ B, so the fraction of M in A-only (resp. B-only)
-    scales the union estimate. "How many users clicked but never
-    purchased" from two 256-row states; floors to BIGINT like the
-    other oracle-facing estimators."""
-    m = kmv_union([a, b], k)
-    flagged = (
-        m.join(a.withColumnRenamed("h", "ha"), m["h"] == F.col("ha"), "left")
-        .join(b.withColumnRenamed("h", "hb"), m["h"] == F.col("hb"), "left")
-        .select(
-            "h",
-            (F.col("ha").isNotNull() & F.col("hb").isNull())
-            .cast("long").alias("_a_only"),
-            (F.col("hb").isNotNull() & F.col("ha").isNull())
-            .cast("long").alias("_b_only"),
-        )
-    )
-    agg = flagged.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.max("h").alias("_hk"),
-        F.sum("_a_only").alias("_na"),
-        F.sum("_b_only").alias("_nb"),
-    )
-    est = _kmv_estimate_cols(F.col("_n"), F.col("_hk"), k)
-    return agg.select(
-        F.floor(est * F.col("_na") / F.col("_n")).cast("long")
-        .alias("a_minus_b_est"),
-        F.floor(est * F.col("_nb") / F.col("_n")).cast("long")
-        .alias("b_minus_a_est"),
-        F.floor(est).cast("long").alias("union_est"),
     )

@@ -147,50 +147,6 @@ def quality_verdict(text: Column | str) -> dict[str, Column]:
     }
 
 
-def unigram_logprob_score(
-    docs, id_col: str = "doc_id", text_col: str = "text", vocab_limit: int = 10_000
-):
-    """CCNet-style unigram language-model quality score: the corpus'
-    own token distribution is the LM; each document scores the mean
-    log-probability of its tokens (OOV tokens get the floor probability
-    of an unseen token under add-one smoothing). Low scores flag
-    boilerplate/garbage relative to the corpus register; extreme HIGH
-    scores flag degenerate repetition of frequent tokens — both tails
-    are filter candidates.
-
-    Plan: one token-count aggregation builds the LM table (≤vocab_limit
-    rows, broadcast); the per-doc score is an explode + broadcast join +
-    doc-keyed mean, so the only exchange carries per-doc partials.
-    Returns ``(doc_id, n_tokens, mean_logprob)``.
-    """
-    from pyspark.sql import functions as F
-
-    occ = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        ).alias("tok"),
-    ).where(F.col("tok") != "")
-    lm = (
-        occ.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), "tok")
-        .limit(vocab_limit)
-    )
-    total = occ.count()
-    vsize = lm.count()
-    # add-one smoothing over the truncated vocab; OOV → 1/(total+V+1)
-    logp = F.log((F.coalesce(F.col("cnt"), F.lit(0)) + 1.0) / (total + vsize + 1.0))
-    return (
-        occ.join(F.broadcast(lm), "tok", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg(logp), 6).alias("mean_logprob"),
-        )
-    )
-
-
 # Pinned-integer-weight linear quality model (fasttext-style classifier
 # distilled to exact arithmetic). A monotone link function (sigmoid)
 # never changes a thresholded keep decision, so the logit is kept in

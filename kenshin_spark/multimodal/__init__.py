@@ -63,11 +63,6 @@ def _real_decode(payload: bytes) -> tuple[str, int, int, str]:
     )
 
 
-def _fake_decode(payload: bytes) -> tuple[str, int, int, str]:
-    digest, width, height, fmt, _ = _decode_with_flag(payload)
-    return digest, width, height, fmt
-
-
 def _decode_with_flag(payload: bytes) -> tuple[str, int, int, str, bool]:
     """Codec step, in preference order: (1) the pure-stdlib codecs
     (PNG/BMP/baseline-JPEG/progressive-JPEG/lossless-WebP — REAL

@@ -26,11 +26,11 @@ Supported natively (struct/zlib/wave + numpy only):
   decoder is pinned by roundtrips, not fixtures.
 
 Paletted PNG (color type 3, incl. tRNS palette alpha) decodes natively
-since r11 (:func:`decode_png` PLTE expansion, write half
-:func:`encode_png_paletted`). VP8-lossy WebP pixels still route to the
-PIL seam in ``multimodal/__init__.py`` (VP8's boolean arithmetic
-decoder + loop filter is a whole video codec and does not belong here;
-WebP DIMENSIONS parse natively for all variants).
+since r11 (:func:`decode_png` PLTE expansion). VP8-lossy WebP pixels
+still route to the PIL seam in ``multimodal/__init__.py`` (VP8's
+boolean arithmetic decoder + loop filter is a whole video codec and
+does not belong here; WebP DIMENSIONS parse natively for all
+variants).
 
 Scale posture: these are per-payload kernels invoked from Arrow
 ``mapInPandas`` batches — decode cost rides in the executors, and the
@@ -317,81 +317,6 @@ def decode_png(payload: bytes) -> np.ndarray:
         # 1-bit x255, 2-bit x85, 4-bit x17 (spec 11.2.2 note)
         samples = samples * np.uint8(255 // ((1 << depth) - 1))
     return samples
-
-
-def _png_chunk(tag: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data)) + tag + data
-        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(arr: np.ndarray) -> bytes:
-    """Minimal 8-bit RGB PNG (color type 2, filter 0 rows) — the
-    write half of the decode_png loop, for engine-built fixtures and
-    re-encode paths."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("encode_png: expects HxWx3 uint8")
-    h, w, _ = arr.shape
-    raw = b"".join(b"\x00" + arr[r].tobytes() for r in range(h))
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        PNG_SIG + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_png16(arr: np.ndarray) -> bytes:
-    """16-bit PNG (filter 0 rows, big-endian samples per spec 7.1):
-    HxW or HxWx1 uint16 → grayscale (color type 0), HxWx3 → RGB
-    (color type 2) — the write half of decode_png's depth-16 branch,
-    for engine-built fixtures (scientific/scanner imagery is where
-    16-bit PNG ships in real corpora)."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint16)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    if arr.ndim != 3 or arr.shape[2] not in (1, 3):
-        raise ValueError("encode_png16: expects HxW[x1|x3] uint16")
-    h, w, ch = arr.shape
-    ctype = 0 if ch == 1 else 2
-    be = arr.astype(">u2")
-    raw = b"".join(b"\x00" + be[r].tobytes() for r in range(h))
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, ctype, 0, 0, 0)
-    return (
-        PNG_SIG + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_png_paletted(arr: np.ndarray) -> bytes:
-    """8-bit paletted PNG (color type 3): palette = the image's unique
-    RGB colors (≤256, else ValueError), IDAT = filter-0 index rows.
-    Together with decode_png's PLTE expansion this closes the
-    'paletted containers route to the PIL seam' gap — index maps,
-    sprites, and quantized thumbnails are the common real-corpus case
-    (W3C PNG §4.1.2 / §11.2.3)."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("encode_png_paletted: expects HxWx3 uint8")
-    h, w, _ = arr.shape
-    flat = arr.reshape(-1, 3)
-    palette, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if palette.shape[0] > 256:
-        raise ValueError(
-            f"encode_png_paletted: {palette.shape[0]} colors > 256"
-        )
-    idx = inverse.astype(np.uint8).reshape(h, w)
-    raw = b"".join(b"\x00" + idx[r].tobytes() for r in range(h))
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-    return (
-        PNG_SIG + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", palette.tobytes())
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
 
 
 # -- BMP --------------------------------------------------------------------
@@ -1620,5 +1545,3 @@ def encode_jpeg_progressive(arr, subsample="444", levels=1, restart=0):
                 out += ac_refine(ci, bs, be, b - 1)
     out += b"\xff\xd9"
     return bytes(out)
-
-

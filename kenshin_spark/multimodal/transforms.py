@@ -51,11 +51,6 @@ def _real_resize(payload: bytes, width: int, height: int) -> bytes:
     return buf.getvalue()
 
 
-def _stub_resize(payload: bytes, width: int, height: int) -> bytes:
-    out, _ = _resize_with_flag(payload, width, height)
-    return out
-
-
 def _encode_resized(arr, out_format: str) -> bytes:
     from kenshin_spark.multimodal import codecs, webp
 

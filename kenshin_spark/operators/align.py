@@ -25,11 +25,6 @@ def align_ts(ts: Column, step: int) -> Column:
     return ts - (ts % F.lit(step))
 
 
-def align_points(df: DataFrame, step: int, ts_col: str = "ts") -> DataFrame:
-    """Align the ts column down to the step grid, keeping other columns."""
-    return df.withColumn(ts_col, align_ts(F.col(ts_col).cast("long"), step))
-
-
 def last_write_wins(
     df: DataFrame,
     step: int,

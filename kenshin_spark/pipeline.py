@@ -586,8 +586,8 @@ def bigram_coherence(
 
     Shuffled/garbled text draws improbable transitions and scores low;
     degenerate repetition scores near ``scale`` — both tails are filter
-    candidates (the bigram companion to ``unigram_logprob_score``; the
-    arithmetic mean of probabilities stands in for perplexity).
+    candidates (the arithmetic mean of probabilities stands in for
+    perplexity).
 
     Cross-engine float discipline: each transition probability is the
     INTEGER ``(bigram_count * scale) DIV prefix_count`` (libm-free,

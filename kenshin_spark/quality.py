@@ -183,12 +183,6 @@ def violations(df: DataFrame, check: Check, limit: int = 100) -> DataFrame:
     raise ValueError(f"no violation view for kind {check.kind!r}")
 
 
-def suite_passed(report: DataFrame) -> bool:
-    """Gate decision: True iff every check passed (scalar collect on the
-    check-sized report)."""
-    return report.where(~F.col("passed")).limit(1).count() == 0
-
-
 #: the default gate for the documents corpus — what an ingest job runs
 #: before admitting a batch into the training pool
 DOCUMENT_CHECKS: list[Check] = [

@@ -62,7 +62,7 @@ DRIVER_VERIFIED = frozenset({
     "config_retention_matrix", "dedup_banding_auto_plan",
     "dedup_bloom_fpr_audit", "dedup_bloom_prefilter", "dedup_cluster_stats",
     "dedup_clusters", "dedup_clusters_incremental",
-    "dedup_clusters_label_distributed", "dedup_clusters_star_distributed",
+    "dedup_clusters_star_distributed",
     "dedup_containment", "dedup_cross_neardup",
     "dedup_embedding_incremental", "dedup_embedding_lsh",
     "dedup_embedding_neardup", "dedup_exact", "dedup_minhash_capped",

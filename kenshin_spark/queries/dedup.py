@@ -907,20 +907,6 @@ def q_dedup_clusters_star_distributed(spark, sf_dir):
 
 
 @register(
-    "dedup_clusters_label_distributed",
-    _clusters_oracle(),
-    "DISTRIBUTED connected components, the over-gate auto path: past "
-    "DRIVER_CC_GATE connected_components hands its pinned symmetric "
-    "edge set to the large-star/small-star iteration, which is what "
-    "this row runs (the body of dedup_clusters_star_distributed; the "
-    "name is kept from the deleted min-label propagation path). "
-    "Oracle: the same recursive reachability CTE.",
-)
-def q_dedup_clusters_label_distributed(spark, sf_dir):
-    return _REG["dedup_clusters_star_distributed"].fn(spark, sf_dir)
-
-
-@register(
     "dedup_clusters_incremental",
     f"""
     WITH RECURSIVE pairs AS ({_minhash_oracle()}),

@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kenshin_spark.config import propagation_timeunit
-from kenshin_spark.engine import KenshinEngine
 from kenshin_spark.functions.hashing import shard_of
 from kenshin_spark.io import load_table
 from kenshin_spark.operators.align import last_write_wins
@@ -539,14 +538,16 @@ def q_ts_propagation_ready(spark, sf_dir):
 def q_ts_hot_cold_union(spark, sf_dir):
     pts = _points(spark, sf_dir)
     now = _now(pts)
-    eng = KenshinEngine(TS_SCHEMA)
     cold = last_write_wins(
         pts.where(F.col("ts") < now - 600), 60, arrival_col="arrival"
     )
     hot = last_write_wins(
         pts.where(F.col("ts") >= now - 720), 60, arrival_col="arrival"
+    ).withColumnRenamed("value", "_hot")
+    # on a slot both sides hold, the hot (unflushed, newer) point wins
+    return hot.join(cold, ["metric", "ts"], "full").select(
+        "metric", "ts", F.coalesce("_hot", "value").alias("value")
     )
-    return eng.fetch_union(cold, hot)
 
 
 @register(

@@ -38,10 +38,11 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
       configured ``SparkContext.setCheckpointDir`` (HDFS/object store):
       survives any executor loss, the production posture. Chosen
       automatically on a non-local master when a checkpoint dir is set.
-    - ``replicated`` — ``persist(MEMORY_AND_DISK_2)`` (2x-replicated
-      blocks, lineage KEPT): the fallback on a cluster with no checkpoint
-      dir — one executor loss is survivable via the replica, and the
-      retained lineage covers the rest.
+    - ``replicated`` — ``localCheckpoint`` at ``MEMORY_AND_DISK_2``
+      (2x-replicated blocks, lineage cut): the fallback on a cluster
+      with no checkpoint dir — one executor loss is survivable via the
+      replica, and an iterative caller's plan stays one leaf per round
+      instead of growing with every round.
 
     Override with the ``spark.kenshin.pin.mode`` SQL conf. Local-mode
     behavior is byte-identical to the former direct
@@ -63,10 +64,9 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     if mode == "replicated":
         from pyspark import StorageLevel
 
-        out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        if eager:
-            out.count()
-        return out
+        return df.localCheckpoint(
+            eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK_2
+        )
     raise ValueError(
         f"unknown {PIN_MODE_CONF}={mode!r} "
         "(expected auto|local|reliable|replicated)"

@@ -222,55 +222,6 @@ def read_kenshin_headers(spark: SparkSession, path_glob: str) -> DataFrame:
     return files.mapInPandas(_header_kernel(), HEADER_SCHEMA)
 
 
-def write_kenshin_hs(
-    path: str,
-    metrics: list[str],
-    archives: list[tuple[int, int]],
-    points_per_archive: list[list[tuple[int, list[float | None]]]],
-    agg_method: str = "average",
-    xff: float = 0.5,
-) -> None:
-    """Minimal .hs writer (tests/fixtures only): packs the documented
-    layout the reader decodes — metadata + TAB-joined tags (with the
-    trailing reserved element) + archive infos + point rings, exactly as
-    ``Storage.pack_header`` lays it out (kenshin/storage.py:281-311).
-    ``points_per_archive`` values are per-metric lists; None packs the
-    NULL sentinel."""
-    agg_id = KENSHIN_AGG.index(agg_method)
-    inter_tag = "\t".join(list(metrics) + [""])  # trailing reserved space
-    tag_bytes = inter_tag.encode("utf-8")
-    point_fmt = f"!L{len(metrics)}d"
-    point_size = struct.calcsize(point_fmt)
-    meta_size = struct.calcsize(METADATA_FMT)
-    info_size = struct.calcsize(ARCHIVE_INFO_FMT)
-    max_ret = max(spp * cnt for spp, cnt in archives)
-    out = bytearray()
-    out += struct.pack(
-        METADATA_FMT,
-        agg_id,
-        max_ret,
-        xff,
-        len(archives),
-        len(tag_bytes),
-        point_size,
-    )
-    out += tag_bytes
-    offset = meta_size + len(tag_bytes) + info_size * len(archives)
-    for spp, cnt in archives:
-        out += struct.pack(ARCHIVE_INFO_FMT, offset, spp, cnt)
-        offset += cnt * point_size
-    for (spp, cnt), pts in zip(archives, points_per_archive):
-        ring = bytearray(cnt * point_size)
-        for j, (ts, vals) in enumerate(pts[:cnt]):
-            packed_vals = [
-                NULL_VALUE if v is None else float(v) for v in vals
-            ]
-            struct.pack_into(point_fmt, ring, j * point_size, ts, *packed_vals)
-        out += ring
-    with open(path, "wb") as f:
-        f.write(bytes(out))
-
-
 def export_kenshin_hs(
     tiers: list[DataFrame],
     archives: list[tuple[int, int]],
@@ -352,9 +303,8 @@ def _write_rings(
     agg_method: str,
     xff: float,
 ) -> None:
-    """Pack one .hs file with ring-positioned slots — shares the layout
-    code path with ``write_kenshin_hs`` but places each point at its
-    wraparound position ``(ts // spp) % count`` instead of sequentially."""
+    """Pack one .hs file with ring-positioned slots: each point sits at
+    its wraparound position ``(ts // spp) % count``."""
     agg_id = KENSHIN_AGG.index(agg_method)
     inter_tag = "\t".join(list(metrics) + [""])
     tag_bytes = inter_tag.encode("utf-8")

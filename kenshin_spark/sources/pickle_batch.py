@@ -65,12 +65,6 @@ def parse_pickle_batches(blobs: DataFrame, payload_col: str = "payload") -> Data
     return src.select("payload").mapInPandas(_unpickle_batches, POINT_SCHEMA)
 
 
-def pack_pickle_batch(points: list[tuple[str, tuple[int, float]]]) -> bytes:
-    """Producer-side helper (tests/stress): the reference's wire format
-    (rurouni/protocols.py:45-62)."""
-    return pickle.dumps(points, protocol=2)
-
-
 def pack_points_to_batches(points: DataFrame, batch_size: int = 500) -> DataFrame:
     """Producer side, distributed: pack a points frame into the wire
     format, ``batch_size`` points per pickled blob, one group per input

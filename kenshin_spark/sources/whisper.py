@@ -192,36 +192,6 @@ def read_whisper_headers(
     return files.mapInPandas(_header_kernel(base), HEADER_SCHEMA)
 
 
-def write_whisper(
-    path: str,
-    archives: list[tuple[int, int]],
-    points_per_archive: list[list[tuple[int, float]]],
-    agg_method: str = "average",
-    xff: float = 0.5,
-) -> None:
-    """Minimal .wsp writer (tests/fixtures only): packs the same public
-    format the reader decodes. ``archives`` = [(sec_per_point, count)]."""
-    agg_id = {v: k for k, v in WHISPER_AGG.items()}[agg_method]
-    meta_size = struct.calcsize(METADATA_FMT)
-    info_size = struct.calcsize(ARCHIVE_INFO_FMT)
-    point_size = struct.calcsize(POINT_FMT)
-    header_size = meta_size + info_size * len(archives)
-    max_ret = max(spp * cnt for spp, cnt in archives)
-    out = bytearray()
-    out += struct.pack(METADATA_FMT, agg_id, max_ret, xff, len(archives))
-    offset = header_size
-    for spp, cnt in archives:
-        out += struct.pack(ARCHIVE_INFO_FMT, offset, spp, cnt)
-        offset += cnt * point_size
-    for (spp, cnt), pts in zip(archives, points_per_archive):
-        ring = bytearray(cnt * point_size)
-        for j, (ts, val) in enumerate(pts[:cnt]):
-            struct.pack_into(POINT_FMT, ring, j * point_size, ts, val)
-        out += ring
-    with open(path, "wb") as f:
-        f.write(bytes(out))
-
-
 def export_whisper(
     tiers: list[DataFrame],
     archives: list[tuple[int, int]],

@@ -1115,19 +1115,15 @@ class ParquetTieredStore:
             from kenshin_spark.session import pin
 
             touched = pin(touched, eager=False)
-        try:
-            self.write_tiers(
-                {},
-                bounds=None if bounds is None else {from_tier: bounds},
-                touched={from_tier: touched},
-                op="propagate",
-            )
-        finally:
-            # no-op unless a (replicated-persist) pin mode left the frame
-            # cached; localCheckpoint blocks are reclaimed by the
-            # ContextCleaner once the RDD is unreachable (session.py pins
-            # the periodic-GC cadence at 45 s)
-            touched.unpersist()
+        # checkpoint blocks are reclaimed by the ContextCleaner once the
+        # RDD is unreachable (session.py pins the periodic-GC cadence at
+        # 45 s)
+        self.write_tiers(
+            {},
+            bounds=None if bounds is None else {from_tier: bounds},
+            touched={from_tier: touched},
+            op="propagate",
+        )
 
 
     def backup_to(self, dest_root: str) -> list[str]:

@@ -1,10 +1,8 @@
 """Structured Streaming ingest — the rurouni daemon re-expressed.
 
 - ``ingest.StreamingIngest``: the cache/writer pipeline (S1/S4, W1-W3, P4-P6)
-- ``stress.stress_lines``: the metric firehose generator (M12)
 """
 
 from kenshin_spark.streaming.ingest import IngestStats, StreamingIngest
-from kenshin_spark.streaming.stress import stress_lines
 
-__all__ = ["IngestStats", "StreamingIngest", "stress_lines"]
+__all__ = ["IngestStats", "StreamingIngest"]

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -62,9 +61,3 @@ class ObservedMetricsListener(StreamingQueryListener):
             (f"rurouni.observed.{k}", int(now), float(v))
             for k, v in sorted(self.totals.items())
         ]
-
-
-def attach(spark: SparkSession, name: str = "kenshin_ingest") -> ObservedMetricsListener:
-    listener = ObservedMetricsListener(name)
-    spark.streams.addListener(listener)
-    return listener

@@ -180,7 +180,7 @@ class TestImporterFencing:
         import os
         import tempfile
 
-        from kenshin_spark.sources.kenshin_hs import write_kenshin_hs
+        from _writers import write_kenshin_hs
 
         with tempfile.TemporaryDirectory() as td:
             p = os.path.join(td, "f.hs")
@@ -196,7 +196,7 @@ class TestImporterFencing:
         import os
         import tempfile
 
-        from kenshin_spark.sources.whisper import write_whisper
+        from _writers import write_whisper
 
         with tempfile.TemporaryDirectory() as td:
             p = os.path.join(td, "m.wsp")

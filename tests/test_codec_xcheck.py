@@ -20,6 +20,8 @@ import pytest
 
 from kenshin_spark.multimodal import codecs
 
+from _writers import encode_png16, encode_png_paletted
+
 # heavyweight tier: excluded from the driver's fast default run
 pytestmark = pytest.mark.slow
 
@@ -151,7 +153,7 @@ def test_paletted_png_engine_encode_vs_jvm_decode(spark, tmp_path):
     rng = np.random.RandomState(11)
     colors = rng.randint(0, 256, (48, 3)).astype(np.uint8)
     img = colors[rng.randint(0, 48, (21, 33))]
-    payload = codecs.encode_png_paletted(img)
+    payload = encode_png_paletted(img)
     mine = codecs.decode_png(payload)
     np.testing.assert_array_equal(mine, img)
 
@@ -176,7 +178,7 @@ def test_paletted_png_flows_through_image_metadata_and_real_pixels(
         8, 1,
     )
     img = np.repeat(g[:, :, None], 3, axis=2)  # equal-RGB 64x64
-    payload = codecs.encode_png_paletted(img)
+    payload = encode_png_paletted(img)
 
     df = spark.createDataFrame(
         [(1, bytearray(payload))], "doc_id long, payload binary"
@@ -203,7 +205,7 @@ def test_png16_engine_encode_vs_jvm_raster(spark, tmp_path):
     rng = np.random.RandomState(16)
     img = rng.randint(0, 65536, (9, 12)).astype(np.uint16)
     p = tmp_path / "g16.png"
-    p.write_bytes(codecs.encode_png16(img))
+    p.write_bytes(encode_png16(img))
 
     ours = codecs.decode_png(p.read_bytes())
     assert ours.dtype == np.uint16

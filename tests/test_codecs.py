@@ -17,6 +17,8 @@ import hashlib
 
 import pytest
 
+from _writers import encode_png16, encode_png_paletted, png_chunk
+
 pytestmark = [pytest.mark.codecs, pytest.mark.slow]
 
 try:
@@ -78,11 +80,11 @@ class TestSeamDegradesNotCrashes:
     def test_stand_in_is_deterministic(self):
         """Stand-in metadata must hash identically with and without
         codec libraries installed (the fake corpus is oracle-replayed)."""
-        from kenshin_spark.multimodal import _fake_decode
+        from kenshin_spark.multimodal import _decode_with_flag
 
         payload = b"just text, no magic"
-        a = _fake_decode(payload)
-        b = _fake_decode(payload)
+        a = _decode_with_flag(payload)[:4]
+        b = _decode_with_flag(payload)[:4]
         assert a == b and a[3] == "fake"
         assert a[0] == hashlib.md5(payload).hexdigest()
 
@@ -240,7 +242,7 @@ class TestPalettedPng:
 
         codecs = self._codecs
         img = self._img()
-        payload = codecs.encode_png_paletted(img)
+        payload = encode_png_paletted(img)
         assert codecs.png_info(payload) == (14, 9, 3)
         np.testing.assert_array_equal(codecs.decode_png(payload), img)
 
@@ -252,7 +254,7 @@ class TestPalettedPng:
 
         codecs = self._codecs
         img = self._img(seed=5)
-        payload = codecs.encode_png_paletted(img)
+        payload = encode_png_paletted(img)
         # splice a tRNS chunk after PLTE: alpha[k] = (11k) % 256 for the
         # first 8 palette entries, implicit 255 for the rest
         trns_data = bytes((11 * k) % 256 for k in range(8))
@@ -290,12 +292,12 @@ class TestPalettedPng:
         rng = np.random.RandomState(9)
         img = rng.randint(0, 256, (32, 32, 3)).astype(np.uint8)
         with pytest.raises(ValueError, match="colors > 256"):
-            codecs.encode_png_paletted(img)
+            encode_png_paletted(img)
 
     def test_missing_plte_rejected(self):
         codecs = self._codecs
         img = self._img(seed=6)
-        payload = codecs.encode_png_paletted(img)
+        payload = encode_png_paletted(img)
         plte_at = payload.index(b"PLTE")
         import struct
 
@@ -329,7 +331,7 @@ class TestPng16:
 
         codecs = self._codecs
         img = self._img(ch=1)
-        payload = codecs.encode_png16(img)
+        payload = encode_png16(img)
         assert codecs.png_info(payload) == (13, 11, 1)
         got = codecs.decode_png(payload)
         assert got.dtype == np.uint16
@@ -340,7 +342,7 @@ class TestPng16:
 
         codecs = self._codecs
         img = self._img(ch=3)
-        payload = codecs.encode_png16(img)
+        payload = encode_png16(img)
         got = codecs.decode_png(payload)
         assert got.dtype == np.uint16 and got.shape == (11, 13, 3)
         np.testing.assert_array_equal(got, img)
@@ -350,7 +352,7 @@ class TestPng16:
 
         codecs = self._codecs
         img = self._img(ch=3)
-        arr = codecs.decode_image(codecs.encode_png16(img))
+        arr = codecs.decode_image(encode_png16(img))
         assert arr.dtype == np.uint8
         np.testing.assert_array_equal(arr, (img >> 8).astype(np.uint8))
 
@@ -402,9 +404,9 @@ class TestPng16:
         ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0)
         payload = (
             codecs.PNG_SIG
-            + codecs._png_chunk(b"IHDR", ihdr)
-            + codecs._png_chunk(b"IDAT", _z.compress(raw))
-            + codecs._png_chunk(b"IEND", b"")
+            + png_chunk(b"IHDR", ihdr)
+            + png_chunk(b"IDAT", _z.compress(raw))
+            + png_chunk(b"IEND", b"")
         )
         np.testing.assert_array_equal(
             codecs.decode_png(payload)[:, :, 0], img
@@ -414,7 +416,7 @@ class TestPng16:
         from kenshin_spark.multimodal import _decode_with_flag
 
         codecs = self._codecs
-        payload = codecs.encode_png16(self._img(ch=1))
+        payload = encode_png16(self._img(ch=1))
         _digest, width, height, fmt, degraded = _decode_with_flag(payload)
         assert (width, height, fmt, degraded) == (13, 11, "png", False)
 
@@ -427,8 +429,8 @@ class TestPng16:
         ihdr = struct.pack(">IIBBBBB", 4, 4, 16, 3, 0, 0, 0)
         payload = (
             codecs.PNG_SIG
-            + codecs._png_chunk(b"IHDR", ihdr)
-            + codecs._png_chunk(b"IEND", b"")
+            + png_chunk(b"IHDR", ihdr)
+            + png_chunk(b"IEND", b"")
         )
         with _pytest.raises(ValueError):
             codecs.png_info(payload)
@@ -453,10 +455,10 @@ class TestSubByteAndInterlacedPng:
         ihdr = struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, il)
         return (
             codecs.PNG_SIG
-            + codecs._png_chunk(b"IHDR", ihdr)
+            + png_chunk(b"IHDR", ihdr)
             + extra
-            + codecs._png_chunk(b"IDAT", _z.compress(raw))
-            + codecs._png_chunk(b"IEND", b"")
+            + png_chunk(b"IDAT", _z.compress(raw))
+            + png_chunk(b"IEND", b"")
         )
 
     def test_gray_1_2_4_bit_scale_by_replication(self):
@@ -506,8 +508,8 @@ class TestSubByteAndInterlacedPng:
                 )
             )
         extra = (
-            codecs._png_chunk(b"PLTE", palette.tobytes())
-            + codecs._png_chunk(b"tRNS", bytes([0]))  # entry 0 clear
+            png_chunk(b"PLTE", palette.tobytes())
+            + png_chunk(b"tRNS", bytes([0]))  # entry 0 clear
         )
         payload = self._png(w, h, 4, 3, 0, b"".join(rows), extra=extra)
         got = codecs.decode_png(payload)
@@ -586,10 +588,10 @@ class TestColorKeyTransparency:
         ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
         payload = (
             codecs.PNG_SIG
-            + codecs._png_chunk(b"IHDR", ihdr)
-            + codecs._png_chunk(b"tRNS", struct.pack(">HHH", 1, 2, 3))
-            + codecs._png_chunk(b"IDAT", _z.compress(raw))
-            + codecs._png_chunk(b"IEND", b"")
+            + png_chunk(b"IHDR", ihdr)
+            + png_chunk(b"tRNS", struct.pack(">HHH", 1, 2, 3))
+            + png_chunk(b"IDAT", _z.compress(raw))
+            + png_chunk(b"IEND", b"")
         )
         assert codecs.png_info(payload) == (2, 2, 4)
         got = codecs.decode_png(payload)
@@ -613,10 +615,10 @@ class TestColorKeyTransparency:
         ihdr = struct.pack(">IIBBBBB", 2, 2, 16, 0, 0, 0, 0)
         payload = (
             codecs.PNG_SIG
-            + codecs._png_chunk(b"IHDR", ihdr)
-            + codecs._png_chunk(b"tRNS", struct.pack(">H", 123))
-            + codecs._png_chunk(b"IDAT", _z.compress(raw))
-            + codecs._png_chunk(b"IEND", b"")
+            + png_chunk(b"IHDR", ihdr)
+            + png_chunk(b"tRNS", struct.pack(">H", 123))
+            + png_chunk(b"IDAT", _z.compress(raw))
+            + png_chunk(b"IEND", b"")
         )
         assert codecs.png_info(payload) == (2, 2, 2)
         got = codecs.decode_png(payload)

@@ -9,9 +9,8 @@ from kenshin_spark.config import (
     Archive,
     RetentionParser,
     Schema,
+    SchemaSet,
     agg_id,
-    agg_name,
-    default_schemas,
     propagation_timeunit,
     validate_archive_list,
 )
@@ -37,7 +36,6 @@ def test_agg_registry_ids():
     # kenshin/agg.py:9-36 — order defines ids
     assert AGG_REGISTRY == ("average", "sum", "last", "max", "min")
     assert agg_id("average") == 0 and agg_id("min") == 4
-    assert agg_name(2) == "last"
 
 
 @pytest.mark.parametrize(
@@ -65,7 +63,16 @@ def test_validate_archive_list_accepts_reference_configs():
 
 
 def test_schema_first_regex_wins():
-    ss = default_schemas()
+    # the example production config (conf/storage-schemas.conf.example:22-44)
+    ss = SchemaSet((
+        Schema.from_strings("metric-test", r".*metric_test.*", "1s:1h,6s:2h",
+                            xff=1.0),
+        Schema.from_strings("rurouni-stats", r"^rurouni\.",
+                            "60s:2d,300s:7d,15m:25w,12h:5y", xff=20.0),
+        Schema.from_strings("default", r".*",
+                            "10s:12h,60s:2d,300s:7d,15m:25w,12h:5y",
+                            xff=20.0),
+    ))
     assert ss.match("foo.metric_test.bar").name == "metric-test"
     assert ss.match("rurouni.cache.size").name == "rurouni-stats"
     assert ss.match("sys.cpu.user").name == "default"

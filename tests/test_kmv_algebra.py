@@ -86,26 +86,3 @@ def test_disjoint_sets(spark):
     assert row.jaccard_ppm == 0
 
 
-def test_difference_exact_below_k(spark):
-    from kenshin_spark.functions.sketches import kmv_difference
-
-    a = _ids(spark, 0, 120)
-    b = _ids(spark, 100, 180)
-    row = kmv_difference(
-        kmv_bottom_set(a, "k", 256), kmv_bottom_set(b, "k", 256), 256
-    ).collect()[0]
-    assert row.a_minus_b_est == 100
-    assert row.b_minus_a_est == 60
-    assert row.union_est == 180
-
-
-def test_difference_estimate_large(spark):
-    from kenshin_spark.functions.sketches import kmv_difference
-
-    a = _ids(spark, 0, 6000)
-    b = _ids(spark, 4000, 9000)
-    row = kmv_difference(
-        kmv_bottom_set(a, "k", 256), kmv_bottom_set(b, "k", 256), 256
-    ).collect()[0]
-    assert abs(row.a_minus_b_est - 4000) / 4000 < 0.4
-    assert abs(row.b_minus_a_est - 3000) / 3000 < 0.4

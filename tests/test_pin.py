@@ -2,9 +2,10 @@
 
 VERDICT r11 item 5: all the localCheckpoint pin sites route through one
 helper that picks localCheckpoint under a local master and a reliable
-checkpoint / replicated persist on a cluster — these tests assert the
-local-mode choice (byte-identical to the former direct calls) and the
-conf override paths, without needing a real cluster.
+checkpoint / replicated local checkpoint on a cluster — these tests
+assert the local-mode choice (byte-identical to the former direct
+calls), the conf override paths and that every mode cuts lineage,
+without needing a real cluster.
 """
 
 import pytest
@@ -42,11 +43,33 @@ def test_pin_replicated_mode_persists_and_keeps_rows(spark):
         df = pin(spark.range(10), eager=True)
     finally:
         spark.conf.unset(PIN_MODE_CONF)
+    # the 2x replica is the storage level of the RDD the leaf scans
+    level = df._jdf.queryExecution().logical().rdd().getStorageLevel()
+    assert level.replication() == 2 and level.useDisk()
+    assert df.count() == 10
+
+
+@pytest.mark.parametrize("eager", [True, False])
+@pytest.mark.parametrize("mode", ["local", "reliable", "replicated"])
+def test_pin_cuts_lineage_in_every_mode(spark, tmp_path, mode, eager):
+    """Every mode returns a frame whose logical plan is one leaf (an
+    iterative caller's plan does not grow per round) over the same
+    rows."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    base = (
+        spark.range(40)
+        .select((F.col("id") % 7).alias("k"), F.col("id"))
+        .where("id % 3 <> 0")
+    )
+    spark.conf.set(PIN_MODE_CONF, mode)
     try:
-        assert df.storageLevel.replication == 2
-        assert df.count() == 10
+        df = pin(base, eager=eager)
     finally:
-        df.unpersist()
+        spark.conf.unset(PIN_MODE_CONF)
+    assert df._jdf.queryExecution().logical().children().isEmpty()
+    assert sorted(map(tuple, df.collect())) == sorted(
+        map(tuple, base.collect())
+    )
 
 
 def test_session_cleans_reliable_checkpoints(spark):

@@ -82,7 +82,6 @@ KERNEL_ROWS = [
 CLUSTER_ROWS = [
     "dedup_clusters",
     "dedup_clusters_star_distributed",
-    "dedup_clusters_label_distributed",
     "dedup_clusters_hybrid_escalation",
     "dedup_clusters_incremental",
     "dedup_cluster_stats",

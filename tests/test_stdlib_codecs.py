@@ -200,7 +200,7 @@ class TestSparkWiring:
 class TestMalformedPayloads:
     """Codec entry points promise ValueError on ANY malformed payload
     (struct.error / zlib.error / wave.Error are coerced), so the
-    _fake_decode / _stub_resize fallbacks always fire instead of the
+    stand-in decode / resize fallbacks always fire instead of the
     whole mapInPandas job crashing on text bytes that happen to start
     with a container magic (ADVICE r5: 'BM25 ranking')."""
 
@@ -229,9 +229,9 @@ class TestMalformedPayloads:
             codecs.wav_features(b"RIFFxxxxWAVEnot a real wav")
 
     def test_fake_decode_falls_through_on_bmish_text(self):
-        from kenshin_spark.multimodal import _fake_decode
+        from kenshin_spark.multimodal import _decode_with_flag
 
-        digest, w, h, fmt = _fake_decode(self.BMISH)
+        digest, w, h, fmt, _ = _decode_with_flag(self.BMISH)
         assert fmt == "fake" and w >= 64 and h >= 64
 
     def test_image_metadata_survives_text_payloads(self, spark):

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from kenshin_spark.config import Schema, SchemaSet
 from kenshin_spark.ratelimit import FakeClock, TokenBucket
 from kenshin_spark.store import ParquetTieredStore
-from kenshin_spark.streaming import StreamingIngest, stress_lines
+from kenshin_spark.streaming import StreamingIngest
 
 # heavyweight tier: excluded from the driver's fast default run
 pytestmark = pytest.mark.slow
@@ -449,32 +449,6 @@ class TestStore:
         assert ("m", now - 60, 6.0) in got
 
 
-class TestStress:
-    def test_stress_lines_parse_clean(self, spark, tmp_path):
-        q = (
-            stress_lines(spark, rows_per_second=500, n_metrics=7)
-            .writeStream.format("memory")
-            .queryName("stress_smoke")
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            import time as _t
-
-            deadline = _t.time() + 30
-            while _t.time() < deadline:
-                if spark.table("stress_smoke").count() > 0:
-                    break
-                _t.sleep(0.5)
-        finally:
-            q.stop()
-        from kenshin_spark.sources.line_protocol import parse_metric_lines
-
-        parsed = parse_metric_lines(spark.table("stress_smoke"), line_col="value")
-        assert parsed.where(F.col("corrupt").isNotNull()).count() == 0
-        assert parsed.where(F.col("metric").startswith("stress.metric_")).count() > 0
-
-
 def test_token_bucket_semantics():
     clock = FakeClock()
     b = TokenBucket(capacity=10, fill_rate=1, clock=clock)
@@ -496,7 +470,8 @@ class TestInstrumentation:
             str(tmp_path / "cp"),
             str(tmp_path / "store"),
         )
-        lst = L.attach(spark)
+        lst = L.ObservedMetricsListener("kenshin_ingest")
+        spark.streams.addListener(lst)
         try:
             write_lines(
                 in_dir, "b1.txt",
