@@ -132,9 +132,7 @@ def _bench_ingest(spark, sf_dir: str) -> dict:
         ).drop("_r").localCheckpoint(eager=True)
         now = int(pts.agg(F.max("ts")).collect()[0][0])
         n_rows = n_base * reps
-        ing = StreamingIngest(
-            spark, schemas, root, clock=lambda: now, store_mode="mor"
-        )
+        ing = StreamingIngest(spark, schemas, root, clock=lambda: now)
         n_batches = 10
         t0 = _time.perf_counter()
         for b in range(n_batches):
@@ -206,8 +204,7 @@ def _bench_ingest_aggregated(spark, pts, now: int) -> dict:
             xff=20.0, agg_method="average", cache_retention=600,
         )
         ing = StreamingIngest(
-            spark, SchemaSet((schema,)), root, clock=lambda: now,
-            store_mode="mor",
+            spark, SchemaSet((schema,)), root, clock=lambda: now
         )
         # 10 time-ordered slices, one file each (sequential writes →
         # ascending mtime → the file source replays them in time order)

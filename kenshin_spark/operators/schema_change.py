@@ -169,7 +169,7 @@ def change_schema(
     if action in (NO_CHANGE, CHANGE_META):
         return SchemaChangeResult(
             action,
-            ParquetTieredStore(spark, new_schema, store.root, mode=store.mode),
+            ParquetTieredStore(spark, new_schema, store.root),
         )
     tmp_root = tmp_root or store.root + ".tmp"
     rebuild_store(spark, store, new_schema, tmp_root, now)
@@ -184,5 +184,5 @@ def change_schema(
     os.rename(tmp_root, store.root)
     return SchemaChangeResult(
         REBUILD,
-        ParquetTieredStore(spark, new_schema, store.root, mode=store.mode),
+        ParquetTieredStore(spark, new_schema, store.root),
     )

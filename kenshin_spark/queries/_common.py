@@ -379,10 +379,9 @@ def _week_slots(spark, sf_dir):
     return last_write_wins(pts, 60, arrival_col="arrival")
 
 
-def _store(spark, sf_dir, name, schema=_BANK, mode="cow"):
+def _store(spark, sf_dir, name, schema=_BANK):
     return ParquetTieredStore(
-        spark, schema, os.path.join(_workdir(sf_dir, name), "store"),
-        mode=mode,
+        spark, schema, os.path.join(_workdir(sf_dir, name), "store")
     )
 
 

@@ -49,11 +49,10 @@ DAY1_END = 1704153600
 @register(
     "store_cow_upsert_roundtrip",
     f"WITH {_W} SELECT metric, ts, value FROM t0",
-    "S4/W6 — COW upsert round-trip: the week's 60s LWW grid split into "
-    "even/odd-minute batches, upserted into tier0 in two merges "
-    "(partition-bounded read-merge-rewrite, store.py upsert), read back "
-    "via the tier read path; the merge must reassemble exactly the "
-    "one-pass LWW grid",
+    "S4/W6 — upsert round-trip: the week's 60s LWW grid split into "
+    "even/odd-minute batches, upserted into tier0 as two stamped appends "
+    "(store.py upsert), read back via the tier read path; the resolve "
+    "must reassemble exactly the one-pass LWW grid",
 )
 def q_store_cow_upsert_roundtrip(spark, sf_dir):
     st = _store(spark, sf_dir, "store_cow_upsert_roundtrip")
@@ -71,8 +70,8 @@ def q_store_cow_upsert_roundtrip(spark, sf_dir):
            CASE WHEN metric = 'click' THEN value + 1.0 ELSE value END AS value
     FROM t0
     """,
-    "W6 — the ring overwrite semantics on the COW path: a second upsert "
-    "re-writes every 'click' slot with value+1; the batch must win "
+    "W6 — the ring overwrite semantics: a second upsert appends every "
+    "'click' slot with value+1 under a later stamp; the batch must win "
     "last-write-wins against the stored rows (kenshin/storage.py:468-480 "
     "overwrite-in-place analog) while other metrics pass through "
     "untouched",
@@ -94,13 +93,13 @@ def q_store_cow_lww_overwrite(spark, sf_dir):
     "store_mor_append_resolve",
     f"WITH {_W} SELECT metric, ts, value FROM t0",
     "S4 (mor) — merge-on-read: the same two-batch upsert lands as "
-    "O(batch) appends stamped with CAS-allocated sequence numbers, and "
-    "the read path's resolve aggregation collapses the log to the "
-    "winning row per slot — same result as the COW merge, write cost "
+    "O(batch) appends stamped with the manifest seq that commits each, "
+    "and the read path's resolve aggregation collapses the log to the "
+    "winning row per slot — the one-pass LWW grid, at the write cost "
     "shape of the reference's ring write (kenshin/storage.py:499-503)",
 )
 def q_store_mor_append_resolve(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_mor_append_resolve", mode="mor")
+    st = _store(spark, sf_dir, "store_mor_append_resolve")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots.where(F.col("ts") % 120 == 0))
     st.upsert(0, slots.where(F.col("ts") % 120 == 60))
@@ -122,7 +121,7 @@ def q_store_mor_append_resolve(spark, sf_dir):
     "value)) is NULL-safe in the payload position",
 )
 def q_store_mor_null_overwrite(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_mor_null_overwrite", mode="mor")
+    st = _store(spark, sf_dir, "store_mor_null_overwrite")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots)
     st.upsert(
@@ -138,12 +137,12 @@ def q_store_mor_null_overwrite(spark, sf_dir):
     "store_mor_compact_invariance",
     f"WITH {_W} SELECT metric, ts, value FROM t0",
     "M8 — full-tier compaction folds the mor append log to one row per "
-    "slot (stamp 0) under the .bak swap protocol; the read after "
+    "slot (stamp 0) in one manifest commit; the read after "
     "compact must be byte-identical to the resolved log before it "
     "(read invariance — compaction is pure IO-shape maintenance)",
 )
 def q_store_mor_compact_invariance(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_mor_compact_invariance", mode="mor")
+    st = _store(spark, sf_dir, "store_mor_compact_invariance")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots.where(F.col("ts") % 120 == 0))
     st.upsert(0, slots.where(F.col("ts") % 120 == 60))
@@ -164,12 +163,12 @@ def q_store_mor_compact_invariance(spark, sf_dir):
     "single-file mor appends leave exactly 2 files in every touched day "
     "partition; needs_compaction flags every day, compact(days=...) "
     "rewrites exactly those days to 1 sorted file each (store.py "
-    "file_report/needs_compaction/_compact_day — the maintenance pass a "
-    "COW/MOR parquet store needs where the reference's preallocated .hs "
-    "files can't fragment, README.md:63-71)",
+    "file_report/needs_compaction/compact — the maintenance pass an "
+    "append-log parquet store needs where the reference's preallocated "
+    ".hs files can't fragment, README.md:63-71)",
 )
 def q_store_compact_day_targeted(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_compact_day_targeted", mode="mor")
+    st = _store(spark, sf_dir, "store_compact_day_targeted")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots.where(F.col("ts") % 120 == 0).coalesce(1))
     st.upsert(0, slots.where(F.col("ts") % 120 == 60).coalesce(1))
@@ -203,7 +202,7 @@ def q_store_compact_day_targeted(spark, sf_dir):
     "upsert never rewrites partitions it doesn't touch)",
 )
 def q_store_upsert_bounded_rewrite(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_upsert_bounded_rewrite", mode="mor")
+    st = _store(spark, sf_dir, "store_upsert_bounded_rewrite")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots.coalesce(1))
     first_day = DAY1_START // 86400
@@ -280,10 +279,9 @@ def q_store_read_range_pruning(spark, sf_dir):
     """,
     "S4 — hot-tier partition granularity: a tier whose whole retention "
     "is <= 2 days partitions HOURLY (store.py part_unit), so a "
-    "micro-batch upsert rewrites ~an hour of data, not a whole day — "
-    "the closest COW analog of the reference's O(1) ring write; the "
-    "row reads the physical partition column back (day = ts//3600 for "
-    "hot tiers)",
+    "compaction folds and a fetch plans ~an hour of appends, not a "
+    "whole day; the row reads the physical partition column back "
+    "(day = ts//3600 for hot tiers)",
 )
 def q_store_hot_tier_hourly_units(spark, sf_dir):
     schema = Schema.from_strings(
@@ -428,15 +426,15 @@ def q_store_fetch_glob_catalog(spark, sf_dir):
     {_grid_sql("now - 86400", "now", 60)}
     """,
     "R1-R3 + M8 composed — fetch over a compacted mor tier: after two "
-    "append batches and a full-tier compaction (day directories swapped "
-    "under the .bak protocol), the clamp/select/prune/grid-fill read "
-    "path must see exactly the resolved grid — partition discovery is "
-    "intact across the swap and the folded log resolves identically",
+    "append batches and a full-tier compaction (one manifest commit "
+    "retiring the logs and adding the folds), the clamp/select/prune/"
+    "grid-fill read path must see exactly the resolved grid — the fetch "
+    "plans the folded files and they resolve identically",
 )
 def q_store_fetch_after_compact(spark, sf_dir):
     from pyspark.sql import Observation
 
-    st = _store(spark, sf_dir, "store_fetch_after_compact", mode="mor")
+    st = _store(spark, sf_dir, "store_fetch_after_compact")
     # `now` rides the eager checkpoint's own materialization via
     # observe() (measured: eager localCheckpoint fires CollectMetrics)
     # instead of a dedicated max(ts) job over the pinned slots
@@ -498,7 +496,7 @@ def q_store_propagate_cascade(spark, sf_dir):
 def q_store_propagate_from_seq_cdc(spark, sf_dir):
     from pyspark.sql import Observation
 
-    st = _store(spark, sf_dir, "store_propagate_from_seq_cdc", mode="mor")
+    st = _store(spark, sf_dir, "store_propagate_from_seq_cdc")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     a = slots.where(F.col("ts") % 120 == 0)
     b = slots.where(F.col("ts") % 120 == 60)
@@ -532,7 +530,7 @@ def q_store_propagate_from_seq_cdc(spark, sf_dir):
     "to incremental downstream jobs instead of re-reading the tier)",
 )
 def q_store_changed_between_cdc(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_changed_between_cdc", mode="mor")
+    st = _store(spark, sf_dir, "store_changed_between_cdc")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots)
     seq1 = st.commit.epoch()
@@ -554,7 +552,7 @@ def q_store_changed_between_cdc(spark, sf_dir):
     "later click-overwrite batch (seq2) must be invisible",
 )
 def q_store_read_at_snapshot(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_read_at_snapshot", mode="mor")
+    st = _store(spark, sf_dir, "store_read_at_snapshot")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots)
     seq1 = st.commit.epoch()
@@ -576,8 +574,8 @@ def q_store_read_at_snapshot(spark, sf_dir):
     """,
     "M5 — metric delete: remove two metrics' rows from every tier "
     "(bin/kenshin-delete.py:39-96 blanks header slots; real tables "
-    "remove the rows) via the tier rewrite + .bak swap; survivors are "
-    "untouched",
+    "remove the rows) via a tier rewrite in one manifest commit; "
+    "survivors are untouched",
 )
 def q_store_delete_metrics(spark, sf_dir):
     st = _store(spark, sf_dir, "store_delete_metrics")
@@ -606,11 +604,12 @@ def q_store_backup_restore(spark, sf_dir):
 @register(
     "store_recover_crash_swap",
     f"WITH {_W} SELECT metric, ts, value FROM t0",
-    "crash recovery: a compaction/delete swap that died between stage "
-    "and promote leaves the live tier missing and its .bak present; "
-    "recover() restores the .bak (the reference's change-schema .bak "
-    "dance, bin/kenshin-change-schema.py:103-112) and the read is whole "
-    "again",
+    "crash recovery: a tier directory swap that died between stage and "
+    "promote (how pre-manifest trees compacted and deleted; migrate "
+    "runs recover() before adopting one) leaves the live tier missing "
+    "and its .bak present; recover() restores the .bak (the reference's "
+    "change-schema .bak dance, bin/kenshin-change-schema.py:103-112) "
+    "and the read is whole again",
 )
 def q_store_recover_crash_swap(spark, sf_dir):
     st = _store(spark, sf_dir, "store_recover_crash_swap")
@@ -1036,7 +1035,7 @@ def q_store_catalog_routing(spark, sf_dir):
     "ever reused or skipped on the happy path",
 )
 def q_store_mor_seq_stamps(spark, sf_dir):
-    st = _store(spark, sf_dir, "store_mor_seq_stamps", mode="mor")
+    st = _store(spark, sf_dir, "store_mor_seq_stamps")
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots.where(F.col("ts") % 120 == 0))
     st.upsert(0, slots.where(F.col("ts") % 120 == 60))
@@ -1819,11 +1818,12 @@ def q_ingest_self_metrics(spark, sf_dir):
     WITH {_W}
     SELECT metric, ts, value FROM t0 WHERE metric <> 'click'
     """,
-    "maintenance composition: metric delete (tier rewrite + .bak swap) "
-    "followed by full compaction (one file per day partition) — the "
-    "two maintenance passes must compose without resurrecting deleted "
-    "rows (the .bak from the delete must not leak back into the "
-    "compaction's read) and survivors stay bit-identical",
+    "maintenance composition: metric delete (tier rewrite in one "
+    "manifest commit) followed by full compaction (one file per day "
+    "partition) — the two maintenance passes must compose without "
+    "resurrecting deleted rows (the files the delete retired must not "
+    "leak back into the compaction's read) and survivors stay "
+    "bit-identical",
 )
 def q_store_delete_then_compact(spark, sf_dir):
     st = _store(spark, sf_dir, "store_delete_then_compact")
@@ -2003,7 +2003,6 @@ def q_store_manifest_snapshot_lifecycle(spark, sf_dir):
         os.path.join(
             _workdir(sf_dir, "store_manifest_snapshot_lifecycle"), "store"
         ),
-        mode="mor",
     )
     slots = _week_slots(spark, sf_dir).localCheckpoint(eager=True)
     st.upsert(0, slots.where(F.col("ts") % 120 == 0))

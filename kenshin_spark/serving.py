@@ -217,7 +217,7 @@ def reader_clone(store):
         "spark.sql.legacy.parquet.nanosAsLong",
         store.spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
     )
-    return type(store)(session, store.schema, store.root, mode=store.mode)
+    return type(store)(session, store.schema, store.root)
 
 
 def store_serving_fns(store, reader=None) -> tuple[

@@ -17,12 +17,14 @@ Spark-native equivalent, designed for 100 TB:
   identical, only the writer call changes.
 - **Write** (the ring overwrite plus propagation, kenshin/storage.py:
   468-492): a batch's slots and the re-aggregate of every coarser slot
-  they touch are staged in ONE write partitioned by ``(tier, day)`` and
-  published in ONE manifest commit; cow merges them with the *touched
-  partitions only* under last-write-wins and retires exactly those
-  partitions' old files. Untouched partitions are never read or
-  rewritten — the 100 TB analog of the reference's "one sequential
-  write per file" (README.md:63-66).
+  they touch are APPENDED in ONE staged write partitioned by ``(tier,
+  day)`` and published in ONE manifest commit, every row stamped
+  ``_seq`` = that commit's manifest seq. Nothing stored is read or
+  rewritten but the finer rows a coarse slot re-aggregates — the write
+  costs O(batch), the analog of the reference's O(1) ring-offset write
+  (kenshin/storage.py:499-503). Reads resolve each slot to its
+  highest-stamped row (merge-on-read); ``compact`` folds a partition's
+  log back to one row per slot.
 - **Retention expiry** (the ring's self-overwrite, SURVEY O4): drop whole
   day partitions older than the tier's retention. Sub-day precision is
   enforced at fetch time by R1's clamping, so expiry never has to
@@ -94,21 +96,25 @@ def _explicit_list_planning(spark):
                 _ppd_depth[sid] = (depth - 1, prev)
 
 #: the rank a write's new rows take when they overlay a tier's stored
-#: rows (every stored mor ``_seq`` is a manifest seq, far below it)
+#: rows (every stored ``_seq`` is a manifest seq, far below it)
 _STAGED_RANK = 1 << 62
 
 #: tiers whose whole retention fits in this many seconds partition hourly —
-#: hot tiers get fine-grained partitions so a micro-batch upsert rewrites
-#: ~an hour of data, not a whole day (the closest COW-parquet analog of the
-#: reference's O(1) ring write, kenshin/storage.py:499-503)
+#: hot tiers get fine-grained partitions so a compaction folds (and a
+#: read resolves) ~an hour of appends, not a whole day
 HOT_RETENTION_CUTOFF = 2 * DAY
 
+#: the physical schema of every tier, known a priori: every write stores
+#: ``_seq`` (a file without it reads NULL). Handing it to the reader skips
+#: planning-time schema inference entirely: one less footer read per scan
+#: at 100 TB
 STORED_SCHEMA = T.StructType(
     [
         T.StructField("metric", T.StringType(), False),
         T.StructField("ts", T.LongType(), False),
         T.StructField("value", T.DoubleType(), True),
         T.StructField("day", T.LongType(), False),
+        T.StructField("_seq", T.LongType(), True),
     ]
 )
 
@@ -178,26 +184,19 @@ class LegacyTreeError(RuntimeError):
 
 
 class ParquetTieredStore:
-    """``mode="cow"`` (default): every upsert merges and rewrites the
-    touched partitions — reads are cheapest, writes pay partition-sized
-    amplification. ``mode="mor"`` (merge-on-read): upserts APPEND rows
-    stamped with a sequence number and reads resolve last-write-wins per
-    slot — writes cost O(batch) like the reference's ring write
+    """A merge-on-read tiered store: every write APPENDS rows stamped
+    with a sequence number and reads resolve last-write-wins per slot —
+    writes cost O(batch) like the reference's ring write
     (kenshin/storage.py:499-503), reads pay a resolve aggregation until
-    ``compact()`` folds the log back to one row per slot. Pick per tier
-    usage: mor for high-frequency hot ingest, cow for read-heavy tiers.
-    The stamp is the manifest seq that commits the write, so LWW follows
-    commit order (as the reference's single writer's flush order does,
-    kenshin/storage.py:468-480) and time travel uses the same numbers."""
+    ``compact()`` folds the log back to one row per slot. The stamp is
+    the manifest seq that commits the write, so LWW follows commit order
+    (as the reference's single writer's flush order does,
+    kenshin/storage.py:468-480) and time travel uses the same numbers.
+    A row without a stamp (a file of the retired copy-on-write layout)
+    reads ``_seq`` NULL and ranks below every stamped row."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        schema: Schema,
-        root: str,
-        mode: str = "cow",
-    ):
-        self._open(spark, schema, root, mode)
+    def __init__(self, spark: SparkSession, schema: Schema, root: str):
+        self._open(spark, schema, root)
         if self._allocator_artefacts() or (
             self.commit.epoch() == 0
             and any(_unlogged_files(self.fs, root, len(schema.archives)))
@@ -210,15 +209,10 @@ class ParquetTieredStore:
                 f"kenshin_spark.cli --root {root} migrate"
             )
 
-    def _open(
-        self, spark: SparkSession, schema: Schema, root: str, mode: str
-    ) -> None:
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown store mode {mode!r}")
+    def _open(self, spark: SparkSession, schema: Schema, root: str) -> None:
         self.spark = spark
         self.schema = schema
         self.root = root
-        self.mode = mode
         #: all non-Spark filesystem ops go through the Hadoop FS API so
         #: the store behaves identically on file:/hdfs:/object stores
         self.fs = HadoopFS(spark, root)
@@ -233,11 +227,7 @@ class ParquetTieredStore:
 
     @classmethod
     def migrate(
-        cls,
-        spark: SparkSession,
-        schema: Schema,
-        root: str,
-        mode: str = "cow",
+        cls, spark: SparkSession, schema: Schema, root: str
     ) -> "ParquetTieredStore":
         """Bring a root the constructor refuses under the manifest log,
         then open it; the CLI verb ``migrate`` runs this. A tree written
@@ -251,7 +241,7 @@ class ParquetTieredStore:
         neither: after retirements, a listing would resurrect files
         awaiting vacuum."""
         st = cls.__new__(cls)
-        st._open(spark, schema, root, "mor")  # the fold must read _seq
+        st._open(spark, schema, root)
         artefacts = st._allocator_artefacts()
         if st.commit.epoch() == 0:
             st.recover()
@@ -270,7 +260,7 @@ class ParquetTieredStore:
             st.compact({i: None for i in range(len(schema.archives))})
             for path in artefacts:
                 st.fs.delete(path)
-        return cls(spark, schema, root, mode=mode)
+        return cls(spark, schema, root)
 
     # -- paths ------------------------------------------------------------
 
@@ -383,9 +373,7 @@ class ParquetTieredStore:
     # -- read -------------------------------------------------------------
 
     def _resolve(self, df: DataFrame) -> DataFrame:
-        """mor: collapse the append log to the winning row per slot."""
-        if "_seq" not in df.columns:
-            return df.select("metric", "ts", "value")
+        """Collapse the append log to the winning row per slot."""
         return (
             df.groupBy("metric", "ts")
             .agg(F.max(F.struct("_seq", "value")).alias("_w"))
@@ -399,11 +387,10 @@ class ParquetTieredStore:
         with nulls first and keeping each slot's last row is
         ``max(struct(_seq, value))``: on a ``_seq`` tie a NULL value
         loses to a non-NULL one, and NaN outranks every number."""
-        if "_seq" in table.column_names:
-            table = table.sort_by(
-                [("_seq", "ascending"), ("value", "ascending")],
-                null_placement="at_start",
-            )
+        table = table.sort_by(
+            [("_seq", "ascending"), ("value", "ascending")],
+            null_placement="at_start",
+        )
         slots = zip(table["metric"].to_pylist(), table["ts"].to_pylist())
         return dict(zip(slots, table["value"].to_pylist()))
 
@@ -412,18 +399,6 @@ class ParquetTieredStore:
         file list is the truth (the directory may hold retired files
         awaiting vacuum)."""
         return not self.commit.live_files(self.commit.rel(path), seq=version)
-
-    def _tier_schema(self) -> T.StructType:
-        """The physical schema of every tier, known a priori from the
-        store mode (mor tiers ALWAYS carry ``_seq`` — every write path
-        stamps it; cow tiers never do). Handing it to the reader skips
-        planning-time schema inference entirely: one less footer read
-        per scan at 100 TB."""
-        if self.mode == "mor":
-            return T.StructType(
-                list(STORED_SCHEMA) + [T.StructField("_seq", T.LongType(), True)]
-            )
-        return STORED_SCHEMA
 
     def _scan_tier(
         self,
@@ -436,7 +411,7 @@ class ParquetTieredStore:
         )
 
     def _scan_files(self, path: str, files: list[str]) -> DataFrame:
-        reader = self.spark.read.schema(self._tier_schema())
+        reader = self.spark.read.schema(STORED_SCHEMA)
         # plan from the committed file list — partition values (day=) are
         # still derived from the paths via basePath; a retired file that
         # physically remains on disk (awaiting vacuum) is never scanned
@@ -500,8 +475,8 @@ class ParquetTieredStore:
         has no deletes below metric granularity). Implemented as
         ``read(version=b) EXCEPT ALL read(version=a)``, so the diff is
         over resolved states, not raw appends; feed downstream
-        incremental jobs instead of re-reading the tier. Works on cow
-        and mor stores and across compactions; ``seq_a = 0`` diffs
+        incremental jobs instead of re-reading the tier. Works across
+        compactions; ``seq_a = 0`` diffs
         against the empty store; a seq past the vacuum horizon raises
         (``_check_version``). Both sides read only the files of
         ``_days_added`` (VERDICT r8 "What's missing" #4): two resolves
@@ -557,12 +532,12 @@ class ParquetTieredStore:
         plan,
         op: str,
         tiers: list[int],
-        drops=None,
-        stamped: bool | None = None,
+        drops: list[str] = (),
+        stamped: bool = True,
     ) -> None:
         """Stage one write and commit it once. ``plan(read_seq)`` builds
         every row the commit adds — ``metric, ts, value, day, tier``
-        (plus ``_seq`` for an unstamped mor fold) — from the snapshot at
+        (plus ``_seq`` for an unstamped fold) — from the snapshot at
         ``read_seq``; one ``adopt`` writes them partitioned by ``(tier,
         day)`` (by ``day`` under the tier's directory when ``tiers``
         holds one), sorted within tasks by ``(metric, ts)`` so parquet
@@ -571,20 +546,16 @@ class ParquetTieredStore:
         adds no (unstable) re-sort of its own; a one-tier write drops its
         constant ``tier`` column first, because the optimizer removes a
         constant from the sort and the writer would then re-sort.
-        ``drops(adds)`` names the prefixes
-        the commit retires; it may raise to refuse the adds, before
-        anything commits.
+        ``drops`` names the prefixes the commit retires.
 
-        ``stamped`` (default: mor): every row carries ``_seq`` = the
-        manifest seq its commit takes. If a concurrent commit took it
-        first, ``commit_txn`` raises ``ManifestConflict`` and the write
-        re-plans and re-stamps (64 attempts, ``commit_txn``'s bound); a
-        lost attempt's files stay invisible until ``vacuum``. An
-        unstamped write commits once against ``read_seq``: a concurrent
-        add under a dropped prefix raises ``ManifestConflict`` to the
-        caller."""
-        if stamped is None:
-            stamped = self.mode == "mor"
+        ``stamped`` (every write but a compaction): every row carries
+        ``_seq`` = the manifest seq its commit takes. If a concurrent
+        commit took it first, ``commit_txn`` raises ``ManifestConflict``
+        and the write re-plans and re-stamps (64 attempts,
+        ``commit_txn``'s bound); a lost attempt's files stay invisible
+        until ``vacuum``. An unstamped write commits once against
+        ``read_seq``: a concurrent add under a dropped prefix raises
+        ``ManifestConflict`` to the caller."""
         for _attempt in range(64):
             read_seq = self.commit.epoch()
             out = plan(read_seq)
@@ -609,7 +580,7 @@ class ParquetTieredStore:
                 with self.commit.txn(read_seq=read_seq, op=op) as tx:
                     if stamped:
                         tx.seq = read_seq + 1
-                    for prefix in drops(adds) if drops else ():
+                    for prefix in drops:
                         tx.drop(prefix)
                     for rel, size in adds:
                         tx.add(rel, size)
@@ -618,7 +589,7 @@ class ParquetTieredStore:
                 if not stamped:
                     raise
         raise RuntimeError(
-            f"mor {op} under {self.root}: lost 64 consecutive commit races"
+            f"{op} under {self.root}: lost 64 consecutive commit races"
         )
 
     def overwrite(self, i: int, slots: DataFrame) -> None:
@@ -632,30 +603,15 @@ class ParquetTieredStore:
             ),
             "overwrite",
             [i],
-            drops=lambda _adds: [f"tier={i}"],
+            drops=[f"tier={i}"],
         )
 
-    def upsert(
-        self, i: int, slots: DataFrame, days: list[int] | None = None
-    ) -> None:
-        """Merge aligned slots into tier i, new values winning per
-        (metric, ts) — NULLs included, matching the ring overwrite
-        (kenshin/storage.py:468-480). The one-tier, no-cascade case of
-        :meth:`write_tiers`: cow reads and rewrites ONLY the day
-        partitions the batch touches, mor appends.
-
-        ``days``: the batch's exact touched-day set when the caller
-        already knows it — skips the distinct-days probe job the cow
-        merge otherwise runs. Must equal what the probe would return;
-        ignored by mor. A supplied set that misses a day the batch
-        touches raises before anything commits — the merge would
-        otherwise leave that day's old rows beside the new ones."""
-        self.write_tiers(
-            {i: slots},
-            days=None if days is None else {i: days},
-            cascade=False,
-            op="upsert",
-        )
+    def upsert(self, i: int, slots: DataFrame) -> None:
+        """Append aligned slots to tier i, new values winning per
+        (metric, ts) at read — NULLs included, matching the ring
+        overwrite (kenshin/storage.py:468-480). The one-tier, no-cascade
+        case of :meth:`write_tiers`."""
+        self.write_tiers({i: slots}, cascade=False, op="upsert")
 
     def write_tiers(
         self,
@@ -677,9 +633,8 @@ class ParquetTieredStore:
 
         Each tier's new rows, finest first:
 
-        - a tier in ``slots`` takes its slots, new values winning per
-          (metric, ts) over what it stores (cow merges the touched
-          partitions, mor appends);
+        - a tier in ``slots`` takes its slots, appended: they win their
+          (metric, ts) over what it stores when read;
         - each tier coarser than the finest source re-aggregates every
           coarse slot the sources below it touch (``config.AGG_SQL``)
           from the finer tier's stored rows overlaid with the finer
@@ -705,10 +660,7 @@ class ParquetTieredStore:
         ``days``: per tier in ``slots``, its exact touched-partition set
         when the caller knows it. With every source's set (and bounds)
         known, each cascade reads only the finer partitions its coarse
-        slots cover, and cow derives the coarser tiers' sets on the
-        driver; otherwise cow probes them all in one job. A cow set that
-        misses a partition the write touches raises before anything
-        commits (see :meth:`upsert`).
+        slots cover; otherwise the source's ts range decides.
 
         Plan shape: each cascaded tier is one hash-partitioning of the
         finer tier's rows by (metric, coarse slot), the finer tier's new
@@ -744,17 +696,12 @@ class ParquetTieredStore:
         # source's days are known; else the range decides
         scan_days = {
             j: set().union(*(
-                self._coarse_days(i, days[i], bounds[i], j, finer=True)
+                self._finer_days(i, days[i], bounds[i], j)
                 for i in below(j)
             ))
             for j in tiers
             if j > first and all(i in days for i in below(j))
         }
-        touched_days: dict[int, list[int]] = {}
-        if self.mode == "cow":
-            touched_days = self._touched_days(
-                tiers, slots, sources, below, days, bounds
-            )
 
         def new_rows(j: int) -> DataFrame:
             return slots[j].select(
@@ -781,32 +728,9 @@ class ParquetTieredStore:
                     )
             if stream is None:
                 return None
-            return self._merged(stream, read_seq, touched_days)
+            return self._with_tier_day(stream)
 
-        def drops(adds: list[tuple[str, int]]) -> list[str]:
-            # cow retires ONLY the touched partitions: a rewrite file
-            # under any other one would land beside that partition's
-            # old rows. The adopt result names every partition written
-            # — no extra job
-            out = []
-            for j, ds in touched_days.items():
-                tier = f"tier={j}"
-                stray = sorted(
-                    {rel.split("/")[1] for rel, _ in adds
-                     if rel.split("/")[0] == tier}
-                    - {f"day={d}" for d in ds}
-                )
-                if stray:
-                    raise ValueError(
-                        f"{op}(tier={j}, days={ds}): the batch also "
-                        f"touches {stray}; refusing to commit a merge "
-                        "that would keep those partitions' old rows "
-                        "beside the new ones"
-                    )
-                out += [f"{tier}/day={d}" for d in ds]
-            return out
-
-        self._stage_commit(plan, op, tiers, drops=drops)
+        self._stage_commit(plan, op, tiers)
 
     def _bounds(
         self, frames: dict[int, DataFrame]
@@ -825,77 +749,28 @@ class ParquetTieredStore:
         }
         return {i: got.get(i, (None, None)) for i in frames}
 
-    def _touched_days(
-        self, tiers, slots, sources, below, days, bounds
-    ) -> dict[int, list[int]]:
-        """The partitions each written tier's new rows fall in — what a
-        cow write retires and rewrites. A tier in ``slots`` touches its
-        ``days``; a coarser tier the coarse slots of the sources below
-        it, derived on the driver from each source's ``days`` and
-        ``bounds``. Without them, one job probes every tier's set.
-        Tiers with no committed file yet are skipped: there is nothing
-        to merge or retire."""
-        tiers = [j for j in tiers if not self._tier_empty(self.tier_path(j))]
-        if not tiers:
-            return {}
-        need = {i for j in tiers for i in below(j) + [j] if i in sources}
-        if all(i in slots and i in days for i in need):
-            out = {}
-            for j in tiers:
-                got = set(int(d) for d in days.get(j, []))
-                for i in below(j):
-                    got |= self._coarse_days(i, days[i], bounds[i], j)
-                out[j] = sorted(got)
-            return out
-        parts = []
-        for j in tiers:
-            step = self.schema.archives[j].sec_per_point
-
-            def day(df, ts, j=j):
-                return df.select(
-                    F.lit(j).alias("tier"),
-                    (ts / self.part_unit(j)).cast("long").alias("day"),
-                )
-
-            # a tier's own slots land where ``_with_day`` puts them; a
-            # source below it lands at its coarse slot
-            if j in slots:
-                parts.append(day(slots[j], F.col("ts").cast("long")))
-            parts += [
-                day(sources[i], align_ts(F.col("ts"), step))
-                for i in below(j)
-            ]
-        out = {j: [] for j in tiers}
-        for r in _union(parts).distinct().collect():
-            out[r["tier"]].append(r["day"])
-        return {j: sorted(ds) for j, ds in out.items()}
-
-    def _coarse_days(
+    def _finer_days(
         self,
         i: int,
         days: list[int],
         bounds: tuple[int, int],
         j: int,
-        finer: bool = False,
     ) -> set[int]:
-        """The partitions of tier j's coarse slots over tier i's slots in
-        partitions ``days`` within ``bounds``: tier j's own, where a
-        cascade from tier i rewrites them, or with ``finer`` tier
-        j-1's, whose rows the cascade re-aggregates. Each finer
-        partition's slot range aligns down to tier j's step; the set is
-        exact when the partition unit is a multiple of the step (every
-        shipped layout), a superset otherwise."""
+        """The partitions of tier j-1 whose rows a cascade from tier i's
+        slots in partitions ``days`` within ``bounds`` re-aggregates
+        into tier j's coarse slots. Each partition's slot range widens
+        to whole tier-j steps; the set is exact when the partition unit
+        is a multiple of the step (every shipped layout), a superset
+        otherwise."""
         ui = self.part_unit(i)
-        unit = self.part_unit(j - 1 if finer else j)
+        unit = self.part_unit(j - 1)
         step = self.schema.archives[j].sec_per_point
         lo, hi = int(bounds[0]), int(bounds[1])
         out: set[int] = set()
         for d in days:
             a, b = max(int(d) * ui, lo), min((int(d) + 1) * ui - 1, hi)
             if a <= b:
-                a, b = a - a % step, b - b % step
-                if finer:
-                    b += step - 1
+                a, b = a - a % step, b - b % step + step - 1
                 out.update(range(a // unit, b // unit + 1))
         return out
 
@@ -963,15 +838,14 @@ class ParquetTieredStore:
             )
             parts.append(stored.select(
                 "metric", "ts", "value", F.lit(j - 1).alias("tier"),
-                (F.col("_seq") if self.mode == "mor" else F.lit(0))
-                .cast("long").alias("_r"),
+                F.col("_seq").alias("_r"),
             ))
         if not parts:
             return None
         tier = F.col("tier")
         # one row per (slot, tier): a finer slot's stored and new rows
-        # resolve to the highest rank (every stored mor stamp is below
-        # _STAGED_RANK; cow's stored rank is 0)
+        # resolve to the highest rank (every stored stamp is below
+        # _STAGED_RANK; a missing one is NULL, below every stamp)
         rows = (
             _union(parts)
             .withColumn("_slot", align_ts(F.col("ts"), step))
@@ -1009,46 +883,17 @@ class ParquetTieredStore:
             ).otherwise(F.col("_pass"))).alias("_o"),
         ).select("metric", "_o.ts", "_o.value", "_o.tier")
 
-    def _merged(
-        self,
-        stream: DataFrame,
-        read_seq: int,
-        days: dict[int, list[int]],
-    ) -> DataFrame:
-        """The rows a write adds, from its new rows ``(metric, ts,
-        value, tier)``: each with its tier's ``day``. mor appends them;
-        cow merges them into the rows stored at ``read_seq`` in each
-        tier's touched partitions ``days`` (new values winning,
-        NULL-safe in the payload position), which the commit retires —
-        one shuffle for every tier."""
+    def _with_tier_day(self, stream: DataFrame) -> DataFrame:
+        """A write's new rows ``(metric, ts, value, tier)``, each with
+        its tier's ``day``."""
         day = None
         for j in range(len(self.schema.archives)):
             unit = F.lit(self.part_unit(j))
             day = (F.when(F.col("tier") == j, unit) if day is None
                    else day.when(F.col("tier") == j, unit))
-        out = stream.select(
+        return stream.select(
             "metric", "ts", "value",
             (F.col("ts") / day).cast("long").alias("day"), "tier",
-        )
-        existing = []
-        for j, ds in days.items():
-            path = self.tier_path(j)
-            files = self._plan_abs(path, version=read_seq, days=ds)
-            if files:
-                existing.append(self._scan_files(path, files).select(
-                    "metric", "ts", "value", "day", F.lit(j).alias("tier")
-                ))
-        if not existing:
-            return out
-        return (
-            _union(existing).withColumn("_r", F.lit(0))
-            .unionByName(out.withColumn("_r", F.lit(1)))
-            .groupBy("tier", "day", "metric", "ts")
-            .agg(F.max(F.struct("_r", "value")).alias("_w"))
-            .select(
-                "metric", "ts", F.col("_w.value").alias("value"), "day",
-                "tier",
-            )
         )
 
     # -- retention (O4) ---------------------------------------------------
@@ -1100,9 +945,9 @@ class ParquetTieredStore:
         provably empty batch (no-op), ``None`` means unknown (compute
         them).
 
-        The batch projection is read by the bounds job, the cow
-        touched-day probe and, once per coarser tier, the write — pin
-        it when there is more than one consumer so the upstream plan
+        The batch projection is read by the bounds job and, once per
+        coarser tier, the write — pin it when there is more than one
+        consumer so the upstream plan
         (e.g. a CDC exceptAll diff) runs once. pin, NOT persist: the
         per-tier broadcast builds of the slot sets were measured missing
         the SQL cache, while checkpoint blocks are reused
@@ -1110,7 +955,7 @@ class ParquetTieredStore:
         touched = batch_slots.select("metric", F.col("ts").cast("long"))
         n_consumers = (len(self.schema.archives) - from_tier - 1) + (
             1 if bounds is None else 0
-        ) + (1 if self.mode == "cow" else 0)
+        )
         if n_consumers > 1:
             from kenshin_spark.session import pin
 
@@ -1269,7 +1114,7 @@ class ParquetTieredStore:
         ``{"day", "n_files", "bytes", "min_file_bytes"}``, sorted by
         day. This is the IO-shape health check the reference never
         needs (its preallocated .hs files can't fragment,
-        README.md:63-71) but a COW/MOR parquet store must watch:
+        README.md:63-71) but an append-log parquet store must watch:
         every micro-batch upsert adds ~one file per touched (day ×
         shuffle task), and scan cost degrades with file COUNT long
         before it degrades with bytes (per-file open + footer read ≈
@@ -1397,7 +1242,7 @@ class ParquetTieredStore:
             plan,
             "compact",
             list(todo),
-            drops=lambda _adds: [
+            drops=[
                 f"tier={t}" if ds is None else f"tier={t}/day={d}"
                 for t, ds in todo.items()
                 for d in (ds or [None])
@@ -1407,10 +1252,7 @@ class ParquetTieredStore:
         return todo
 
     def _fold_log(self, raw: DataFrame) -> DataFrame:
-        """Collapse a mor append log to one row per slot (stamp 0); pass
-        cow frames through."""
-        if "_seq" not in raw.columns:
-            return raw.select("metric", "ts", "value", "day")
+        """Collapse an append log to one row per slot (stamp 0)."""
         return (
             raw.groupBy("metric", "ts", "day")
             .agg(F.max(F.struct("_seq", "value")).alias("_w"))
@@ -1479,7 +1321,7 @@ class ParquetTieredStore:
         files = self._plan_abs(self.catalog_path)
         if not files:
             return self.spark.createDataFrame([], CATALOG_SCHEMA)
-        # explicit schema: no planning-time footer read (see _tier_schema)
+        # explicit schema: no planning-time footer read (see STORED_SCHEMA)
         with _explicit_list_planning(self.spark):
             return self.spark.read.schema(CATALOG_SCHEMA).parquet(*files)
 
@@ -1512,7 +1354,7 @@ class ArrowReader:
         self.store = store
         self._fs, self._base = pafs.FileSystem.from_uri(store.root)
         self._tier_schema = to_arrow_schema(T.StructType(
-            [f for f in store._tier_schema() if f.name != "day"]
+            [f for f in STORED_SCHEMA if f.name != "day"]
         ))
         self._metric_schema = to_arrow_schema(
             T.StructType([CATALOG_SCHEMA["metric"]])

@@ -27,9 +27,8 @@ Spark mapping implemented here:
   closes (flush eligibility, rurouni/cache.py:259-262); state eviction
   past the watermark is the drain (rurouni/cache.py:288-338).
 - **update** (W4-W8): one ``ParquetTieredStore.write_tiers`` per schema
-  and batch — align/LWW, the partition-local merge (cow) or append
-  (mor), and the bounded write-time downsample of every coarser tier,
-  in one staged write and one commit.
+  and batch — align/LWW, the stamped append, and the bounded write-time
+  downsample of every coarser tier, in one staged write and one commit.
 - **instrumentation** (S8, rurouni/state/instrumentation.py:66-113):
   per-batch counters; ``self_metrics_points`` re-emits them as
   ``rurouni.*`` metric points that can be fed back into ingest.
@@ -106,7 +105,7 @@ class StreamingIngest:
         max_creates_per_minute: int | None = None,
         clock=time.time,
         dead_letter_path: str | None = None,
-        store_mode: str = "cow",
+        store_mode: str = "mor",
         skew_salts: int | None = None,
         quality_checks=None,
     ):
@@ -120,10 +119,14 @@ class StreamingIngest:
         #: them, rurouni/protocols.py:40-42 — a dead-letter table is the
         #: replayable upgrade)
         self.dead_letter_path = dead_letter_path
-        #: "cow" rewrites touched partitions per flush; "mor" appends a
-        #: log and resolves at read (O(batch) writes — pick for
-        #: high-frequency triggers, run store.compact() periodically)
-        self.store_mode = store_mode
+        # ``store_mode`` names the store's one layout, merge-on-read: an
+        # appended log resolved at read (O(batch) writes; run
+        # store.compact() periodically). It takes no other value.
+        if store_mode != "mor":
+            raise ValueError(
+                f"unknown store mode {store_mode!r}: the store has one "
+                "layout, merge-on-read ('mor')"
+            )
         #: optional row-local quality gate (quality.Check list): rows
         #: violating ANY check are routed to the dead-letter path instead
         #: of the store — one filter expression folded into the batch
@@ -153,7 +156,6 @@ class StreamingIngest:
                 self.spark,
                 schema,
                 f"{self.root}/{schema.name}",
-                mode=self.store_mode,
             )
         return self._stores[schema.name]
 
@@ -494,7 +496,7 @@ class StreamingIngest:
                         skew_salts=self.skew_salts,
                     )
                     # the committed-slot count, the propagation bounds
-                    # AND the cow merge's touched-day set all come from
+                    # AND the cascade's finer-partition set all come from
                     # the census pass — the write is the ONLY action.
                     # (r11 used an Observation on the write; inside a
                     # streaming foreachBatch a merge write never delivers

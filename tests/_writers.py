@@ -1,7 +1,8 @@
 """Test-side writers for the binary formats the engine reads.
 
 The engine decodes Whisper (.wsp) and Kenshin (.hs) files and PNG
-payloads but never writes these files from a product path, so the
+payloads, and reads store roots written in the retired copy-on-write
+layout, but never writes any of these from a product path, so the
 writers that build their fixtures live here, next to the tests that use
 them.
 """
@@ -152,3 +153,18 @@ def encode_png_paletted(arr: np.ndarray) -> bytes:
         + png_chunk(b"IDAT", zlib.compress(raw))
         + png_chunk(b"IEND", b"")
     )
+
+
+def write_cow_layout(store, tiers: dict) -> int:
+    """Commit ``tiers`` (tier index -> ``(metric, ts, value)`` frame, one
+    row per slot) to ``store`` as the retired copy-on-write layout
+    stored them: day-partitioned parquet files without a ``_seq``
+    column, adopted and published in one manifest commit. Returns the
+    commit's seq."""
+    adds = []
+    for i, df in tiers.items():
+        adds += store.commit.adopt(store._with_day(df, i), store.tier_path(i))
+    with store.commit.txn(op="upsert") as tx:
+        for rel, size in adds:
+            tx.add(rel, size)
+    return store.commit.epoch()

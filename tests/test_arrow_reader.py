@@ -1,7 +1,8 @@
 """The serving executor (``store.ArrowReader``) against the Spark
 DataFrame API it replaces on the request path: every answer must equal
 ``store.fetch(...).collect()``, ``read(0).where(metric)`` and
-``fetch_glob`` on the same store — cow and mor, NULLs, NULL overwrites,
+``fetch_glob`` on the same store — a stamped append log and the same
+rows in the retired copy-on-write layout, NULLs, NULL overwrites,
 same-``_seq`` ties, tier selection, clamping and glob resolution."""
 
 import math
@@ -9,6 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from _writers import write_cow_layout
 from kenshin_spark.config import Schema
 from kenshin_spark.serving import HttpFetchServer, store_render_fn
 from kenshin_spark.store import ArrowReader, ParquetTieredStore
@@ -44,20 +46,25 @@ def _fill(spark, st):
 
 @pytest.fixture(scope="module", params=["cow", "mor"])
 def store(request, spark, tmp_path_factory):
-    mode = request.param
-    st = ParquetTieredStore(
-        spark, SCHEMA, str(tmp_path_factory.mktemp(mode) / "st"), mode=mode
-    )
+    """``mor``: the store's own stamped append log. ``cow``: the same
+    resolved rows in the retired copy-on-write layout (unstamped, one
+    row per slot), which every read must still answer identically."""
+    tmp = tmp_path_factory.mktemp(request.param)
+    st = ParquetTieredStore(spark, SCHEMA, str(tmp / "st"))
     _fill(spark, st)
     slot = NOW - 60 * 3
-    # a NULL overwrite, then (mor) one batch holding a slot twice: the
-    # two rows share a _seq, and the non-NULL one must win the tie
+    # a NULL overwrite, then one batch holding a slot twice: the two
+    # rows share a _seq, and the non-NULL one must win the tie
     st.upsert(0, _rows(spark, [("sys.cpu", slot, None)]))
     st.upsert(0, _rows(spark, [
         ("sys.mem", slot, None), ("sys.mem", slot, 4.0),
         ("n1", slot, 2.0), ("n1", slot, 3.0),
-    ] if mode == "mor" else [("sys.mem", slot, 4.0), ("n1", slot, 3.0)]))
-    return st
+    ]))
+    if request.param == "mor":
+        return st
+    cow = ParquetTieredStore(spark, SCHEMA, str(tmp / "cow"))
+    write_cow_layout(cow, {0: st.read(0), 1: st.read(1)})
+    return cow
 
 
 @pytest.fixture(scope="module")

@@ -4,7 +4,7 @@
 points old enough to route straight to a coarser archive (W4), and the
 re-aggregate of every coarse slot they touch (W7) in one staged write
 and one manifest commit of the schema store
-(``ParquetTieredStore.write_tiers``). The contract, on cow and mor:
+(``ParquetTieredStore.write_tiers``). The contract:
 
 - each call adds exactly one commit to the schema store;
 - at every committed seq, each coarse tier is the downsample of its
@@ -15,6 +15,10 @@ and one manifest commit of the schema store
 - a crash after the files are staged and before the commit changes no
   read, a re-run reaches the no-crash state, and ``vacuum`` reclaims
   the stranded files.
+
+Each check also runs on a root whose first batch is stored in the
+retired copy-on-write layout (unstamped, one row per slot): the later
+batches must win their slots over those rows and cascade from them.
 """
 
 import os
@@ -23,6 +27,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from _writers import write_cow_layout
 from kenshin_spark.config import SchemaSet, Schema
 from kenshin_spark.operators.align import align_ts, last_write_wins
 from kenshin_spark.store import ParquetTieredStore
@@ -33,7 +38,7 @@ SCHEMA = Schema.from_strings(
     "c", ".*", "60s:1h,300s:1d,3600s:7d", xff=1.0, agg_method="sum"
 )
 NOW = 1_000_050
-MODES = ("cow", "mor")
+LAYOUTS = ("cow", "mor")
 #: NOW - 3600 (the tier-0 retention edge) falls inside tier-1 slot
 #: 996_300, which sits in tier-2 slot 993_600: tier-0 points and aged
 #: tier-1 points below share both
@@ -101,11 +106,30 @@ def reference_batch(store, batch):
             store.upsert(j, re_agg)
 
 
-def reference_tiers(spark, root, mode):
-    store = ParquetTieredStore(spark, SCHEMA, root, mode=mode)
+def reference_tiers(spark, root):
+    store = ParquetTieredStore(spark, SCHEMA, root)
     for rows in BATCHES:
         reference_batch(store, frame(spark, rows))
     return tiers(store)
+
+
+def start(spark, tmp_path, layout):
+    """The ingest, its schema store and the batches left to process:
+    all of them on an empty root (``mor``), or the rest after the first
+    batch's tiers are committed in the retired cow layout (``cow``)."""
+    ing = StreamingIngest(
+        spark, SchemaSet((SCHEMA,)), str(tmp_path / "ing"),
+        clock=lambda: NOW,
+    )
+    store = ing.store_for(SCHEMA)
+    if layout == "mor":
+        return ing, store, BATCHES
+    seed = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "seed"))
+    reference_batch(seed, frame(spark, BATCHES[0]))
+    write_cow_layout(
+        store, {i: seed.read(i) for i in range(len(SCHEMA.archives))}
+    )
+    return ing, store, BATCHES[1:]
 
 
 def downsample(rows, step):
@@ -116,20 +140,17 @@ def downsample(rows, step):
     return out
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_cascade_lands_in_one_commit(spark, tmp_path, mode):
-    ing = StreamingIngest(
-        spark, SchemaSet((SCHEMA,)), str(tmp_path / "ing"),
-        clock=lambda: NOW, store_mode=mode,
-    )
-    store = ing.store_for(SCHEMA)
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_cascade_lands_in_one_commit(spark, tmp_path, layout):
+    ing, store, batches = start(spark, tmp_path, layout)
     seqs = []
-    for b, rows in enumerate(BATCHES):
+    for b, rows in enumerate(batches):
         before = store.commit.epoch()
         ing.process_batch(frame(spark, rows), b)
         assert store.commit.epoch() == before + 1
         seqs.append(store.commit.epoch())
-    assert ing.stats.update_operations == 4  # (tier 0 + tier 1) x 2
+    # tier 0 + tier 1 per batch
+    assert ing.stats.update_operations == 2 * len(batches)
 
     for seq in seqs:
         t0, t1, t2 = tiers(store, version=seq)
@@ -144,9 +165,7 @@ def test_cascade_lands_in_one_commit(spark, tmp_path, mode):
     t1 = tiers(store)[1]
     assert (t1[("m", 996_300)], t1[("m", 994_800)]) == (256.0, 16.0)
 
-    assert tiers(store) == reference_tiers(
-        spark, str(tmp_path / "ref"), mode
-    )
+    assert tiers(store) == reference_tiers(spark, str(tmp_path / "ref"))
 
 
 def _parquet_files(root):
@@ -158,14 +177,12 @@ def _parquet_files(root):
     }
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_crash_before_the_commit_changes_nothing(spark, tmp_path, mode):
-    ing = StreamingIngest(
-        spark, SchemaSet((SCHEMA,)), str(tmp_path / "ing"),
-        clock=lambda: NOW, store_mode=mode,
-    )
-    store = ing.store_for(SCHEMA)
-    ing.process_batch(frame(spark, BATCHES[0]), 0)
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_crash_before_the_commit_changes_nothing(spark, tmp_path, layout):
+    ing, store, batches = start(spark, tmp_path, layout)
+    *done, last = batches
+    for b, rows in enumerate(done):
+        ing.process_batch(frame(spark, rows), b)
     epoch, state = store.commit.epoch(), tiers(store)
     on_disk = _parquet_files(store.root)
 
@@ -180,17 +197,17 @@ def test_crash_before_the_commit_changes_nothing(spark, tmp_path, mode):
 
     store.commit.commit_txn = fail_once
     with pytest.raises(OSError):
-        ing.process_batch(frame(spark, BATCHES[1]), 1)
+        ing.process_batch(frame(spark, last), len(done))
     assert calls == ["ingest"]
     stranded = _parquet_files(store.root) - on_disk
     assert stranded  # staged into the live tree, never committed
     assert store.commit.epoch() == epoch
     assert tiers(store) == state
 
-    ing.process_batch(frame(spark, BATCHES[1]), 1)
+    ing.process_batch(frame(spark, last), len(done))
     assert store.commit.epoch() == epoch + 1
     final = tiers(store)
-    assert final == reference_tiers(spark, str(tmp_path / "ref"), mode)
+    assert final == reference_tiers(spark, str(tmp_path / "ref"))
 
     removed = store.vacuum(grace_s=0, now=time.time() + 1)
     assert {os.path.join(store.root, rel) for rel in removed} >= stranded

@@ -103,7 +103,7 @@ def points(spark, rows):
 def ingest(spark, tmp_path):
     return StreamingIngest(
         spark, SCHEMAS, str(tmp_path / "store"),
-        max_creates_per_minute=3, clock=FakeClock(NOW), store_mode="mor",
+        max_creates_per_minute=3, clock=FakeClock(NOW),
         quality_checks=[in_range("value", 0.0, 1e6)],
     )
 

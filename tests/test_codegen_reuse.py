@@ -55,7 +55,7 @@ def batch(spark, b: int):
 
 def test_third_batch_compiles_only_per_batch_literals(spark, tmp_path):
     ing = StreamingIngest(spark, SCHEMAS, str(tmp_path / "st"),
-                          clock=FakeClock(NOW), store_mode="mor")
+                          clock=FakeClock(NOW))
     deltas = []
     for b in range(3):
         before = compiles(spark)
@@ -68,7 +68,7 @@ def test_third_batch_compiles_only_per_batch_literals(spark, tmp_path):
 
 def test_repeated_census_compiles_nothing(spark, tmp_path):
     ing = StreamingIngest(spark, SCHEMAS, str(tmp_path / "st"),
-                          clock=FakeClock(NOW), store_mode="mor")
+                          clock=FakeClock(NOW))
     age = F.lit(NOW) - F.col("ts")
 
     def census(b):

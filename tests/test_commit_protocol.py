@@ -1,17 +1,20 @@
 """Opening a store root under the one commit protocol, the manifest log:
 fresh and logged roots open on it, a tree written outside the log is
 refused until ``migrate`` adopts it, and a first write that crashed
-before its commit stays invisible. Also the write paths' commit-shape
-invariants: a multi-day compaction is one commit, and a cow upsert
-refuses a day set that misses a day its batch touches."""
+before its commit stays invisible. A root written in the retired
+copy-on-write layout opens, reads and takes writes without migration,
+and the store has no layout option left. Also the write paths'
+commit-shape invariant: a multi-day compaction is one commit."""
 
 import os
 
 import pytest
 
+from _writers import write_cow_layout
 from kenshin_spark.commit import ManifestCommitProtocol
-from kenshin_spark.config import Schema
-from kenshin_spark.store import LegacyTreeError, ParquetTieredStore
+from kenshin_spark.config import Schema, SchemaSet
+from kenshin_spark.store import ArrowReader, LegacyTreeError, ParquetTieredStore
+from kenshin_spark.streaming.ingest import StreamingIngest
 
 SCHEMA = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
 DAY = 86400
@@ -89,7 +92,7 @@ class TestRootOpening:
         taken for a legacy tree — it opens at epoch 0 and the
         never-committed rows stay invisible."""
         root = str(tmp_path / "st")
-        st = ParquetTieredStore(spark, SCHEMA, root, mode="mor")
+        st = ParquetTieredStore(spark, SCHEMA, root)
 
         def crash(tx, now=None):
             raise OSError("died before publishing the commit record")
@@ -100,7 +103,7 @@ class TestRootOpening:
         on_disk = [f for _, _, fs in os.walk(os.path.join(root, "tier=0"))
                    for f in fs if f.endswith(".parquet")]
         assert on_disk  # the adopted file sits in the live tree
-        reopened = ParquetTieredStore(spark, SCHEMA, root, mode="mor")
+        reopened = ParquetTieredStore(spark, SCHEMA, root)
         assert reopened.commit.epoch() == 0
         assert _points(reopened) == []
 
@@ -111,7 +114,7 @@ class TestBatchedCompactionGuard:
         commits them in ONE transaction: the epoch moves by exactly one
         regardless of day count."""
         st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "st"), mode="mor"
+            spark, SCHEMA, str(tmp_path / "st")
         )
         rows = [("m", d * DAY + 60 * k, 1.0) for d in range(6) for k in range(3)]
         for _ in range(3):  # fragment: 3 appends per day
@@ -124,23 +127,83 @@ class TestBatchedCompactionGuard:
         assert st.read(0).count() == 18
 
 
-class TestCowDaySetInvariant:
-    def test_upsert_days_missing_a_touched_day_raises(self, spark, tmp_path):
-        """A cow merge drops only the supplied days before adding its
-        rewrites: a batch touching d1 and d2 upserted with
-        ``days=[d1]`` would leave d2's old row beside the new one. The
-        upsert must raise instead, committing nothing."""
-        st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "st"), mode="cow"
+class TestCowLayoutRoot:
+    """A root the retired copy-on-write layout wrote — tier files
+    without ``_seq``, one row per slot, under the manifest log — needs
+    no migration: a missing ``_seq`` reads NULL and ranks below every
+    stamp."""
+
+    SCHEMA = Schema.from_strings(
+        "c", ".*", "60s:1d,300s:7d", xff=1.0, agg_method="sum"
+    )
+    NOW = 10 * DAY  # a multiple of both steps
+
+    def _grid(self, st):
+        """The last 15 min of both metrics through ``store.fetch`` and
+        ``ArrowReader.fetch``, which must agree."""
+        args = (["m", "n"], self.NOW - 900, self.NOW, self.NOW)
+        grid = sorted(map(tuple, st.fetch(*args).collect()))
+        assert sorted(ArrowReader(st).fetch(*args)) == grid
+        return {(m, ts): v for m, ts, v in grid if v is not None}
+
+    def test_reads_takes_writes_and_compacts(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        now = self.NOW
+        root = str(tmp_path / "c")
+        seeded = ParquetTieredStore(spark, self.SCHEMA, root)
+        write_cow_layout(seeded, {
+            0: _rows(spark, [("m", now - 600, 1.0), ("m", now - 540, 2.0),
+                             ("m", now - 480, 3.0), ("n", now - 600, 4.0)]),
+            1: _rows(spark, [("m", now - 600, 6.0), ("n", now - 600, 4.0)]),
+        })
+        st = ParquetTieredStore(spark, self.SCHEMA, root)  # no LegacyTreeError
+        for rel, _ in st.commit.live_files():
+            names = pq.read_schema(os.path.join(root, rel)).names
+            assert "_seq" not in names
+        assert _points(st) == [("m", now - 600, 1.0), ("m", now - 540, 2.0),
+                               ("m", now - 480, 3.0), ("n", now - 600, 4.0)]
+        assert self._grid(st) == {
+            ("m", now - 600): 1.0, ("m", now - 540): 2.0,
+            ("m", now - 480): 3.0, ("n", now - 600): 4.0,
+        }
+
+        # a later batch wins its slots over the unstamped rows, and
+        # cascades from them
+        ing = StreamingIngest(
+            spark, SchemaSet((self.SCHEMA,)), str(tmp_path),
+            clock=lambda: now,
         )
-        st.upsert(0, _rows(spark, [("m", 60, 1.0), ("m", DAY + 60, 2.0)]))
-        before = _points(st)
-        epoch = st.commit.epoch()
-        with pytest.raises(ValueError, match="day=1"):
-            st.upsert(
-                0,
-                _rows(spark, [("m", 60, 5.0), ("m", DAY + 60, 6.0)]),
-                days=[0],
-            )
-        assert st.commit.epoch() == epoch
-        assert _points(st) == before
+        assert ing.store_for(self.SCHEMA).root == root
+        ing.process_batch(
+            _rows(spark, [("m", now - 540, 10.0), ("n", now - 300, 5.0)]), 0
+        )
+        want0 = [("m", now - 600, 1.0), ("m", now - 540, 10.0),
+                 ("m", now - 480, 3.0), ("n", now - 600, 4.0),
+                 ("n", now - 300, 5.0)]
+        want1 = [("m", now - 600, 14.0), ("n", now - 600, 4.0),
+                 ("n", now - 300, 5.0)]
+        assert (_points(st, 0), _points(st, 1)) == (want0, want1)
+        assert self._grid(st) == {(m, ts): v for m, ts, v in want0}
+
+        # compaction folds each tier to one row per slot
+        st.compact({0: None, 1: None})
+        for i, want in enumerate((want0, want1)):
+            assert st._scan_tier(st.tier_path(i)).count() == len(want)
+            assert _points(st, i) == want
+        assert self._grid(st) == {(m, ts): v for m, ts, v in want0}
+
+
+class TestOneLayout:
+    def test_no_layout_option(self, spark, tmp_path):
+        """The store takes no ``mode``; the ingest's ``store_mode``
+        accepts only the one layout's name."""
+        import inspect
+
+        for fn in (ParquetTieredStore, ParquetTieredStore.migrate):
+            assert "mode" not in inspect.signature(fn).parameters
+        schemas = SchemaSet((SCHEMA,))
+        with pytest.raises(ValueError, match="cow"):
+            StreamingIngest(spark, schemas, str(tmp_path), store_mode="cow")
+        ing = StreamingIngest(spark, schemas, str(tmp_path), store_mode="mor")
+        assert ing.store_for(SCHEMA).commit.epoch() == 0

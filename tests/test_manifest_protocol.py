@@ -12,6 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from _writers import write_cow_layout
 from kenshin_spark.commit import ManifestCommitProtocol
 from kenshin_spark.config import Schema
 from kenshin_spark.store import ParquetTieredStore
@@ -20,10 +21,8 @@ SCHEMA = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
 DAY = 86400
 
 
-def _mk(spark, tmp_path, mode="mor", schema=SCHEMA, name="st"):
-    return ParquetTieredStore(
-        spark, schema, str(tmp_path / name), mode=mode
-    )
+def _mk(spark, tmp_path, schema=SCHEMA, name="st"):
+    return ParquetTieredStore(spark, schema, str(tmp_path / name))
 
 
 def _rows(spark, pts):
@@ -72,18 +71,6 @@ class TestManifestStoreRoundtrip:
         st.upsert(0, _rows(spark, [("m", 120, 9.0)]))  # LWW overwrite
         got = {r["ts"]: r["value"] for r in st.read(0).collect()}
         assert got == {60: 1.0, 120: 9.0}
-
-    def test_cow_upsert_merges_touched_days(self, spark, tmp_path):
-        st = _mk(spark, tmp_path, mode="cow")
-        st.upsert(0, _rows(
-            spark, [("m", 60, 1.0), ("m", DAY + 60, 2.0)]))
-        st.upsert(0, _rows(spark, [("m", 60, 7.0)]))  # day 0 only
-        got = {r["ts"]: r["value"] for r in st.read(0).collect()}
-        assert got == {60: 7.0, DAY + 60: 2.0}
-        # day 1's original file is still the live one (untouched days
-        # are never rewritten); day 0 has exactly the rewrite
-        days = {rel.split("/")[1] for rel, _ in st.commit.live_files("tier=0")}
-        assert days == {"day=0", "day=1"}
 
     def test_read_range_prunes_and_resolves(self, spark, tmp_path):
         st = _mk(spark, tmp_path)
@@ -203,7 +190,7 @@ class TestSnapshotIsolation:
         assert st.read(0).count() == 12
         # cold re-open reconstructs from checkpoint + deltas
         cold = ParquetTieredStore(
-            st.spark, SCHEMA, st.root, mode="mor"
+            st.spark, SCHEMA, st.root
         )
         assert cold.commit.epoch() == 12
         assert cold.read(0).count() == 12
@@ -263,7 +250,7 @@ class TestManifestMaintenance:
         dest = str(tmp_path / "bak")
         st.backup_to(dest)
         restored = ParquetTieredStore(
-            spark, SCHEMA, dest, mode="mor"
+            spark, SCHEMA, dest
         )
         got = {r["ts"]: r["value"] for r in restored.read(0).collect()}
         assert got == {60: 1.0}
@@ -793,7 +780,7 @@ class TestTimeTravel:
         v1 = st.commit.epoch()
         st.upsert(0, _rows(spark, [("m", 60, 3.0)]))
         cold = ParquetTieredStore(
-            spark, SCHEMA, st.root, mode="mor"
+            spark, SCHEMA, st.root
         )
         assert cold.read(0, version=v1).collect()[0].value == 1.0
         assert [r["op"] for r in cold.history()] == ["upsert", "upsert"]
@@ -852,13 +839,18 @@ class TestOneVersionCounter:
     def test_diff_works_on_cow_and_refuses_past_the_horizon(
         self, spark, tmp_path
     ):
-        st = _mk(spark, tmp_path, mode="cow")
-        st.upsert(0, _rows(spark, [("m", 60, 1.0), ("n", DAY + 60, 2.0)]))
-        s1 = st.commit.epoch()
+        """The diff reaches back over rows stored in the retired
+        copy-on-write layout (unstamped); once compaction retired those
+        files and vacuum reclaimed them, a diff from that seq raises."""
+        st = _mk(spark, tmp_path)
+        s1 = write_cow_layout(
+            st, {0: _rows(spark, [("m", 60, 1.0), ("n", DAY + 60, 2.0)])}
+        )
         st.upsert(0, _rows(spark, [("m", 60, 3.0)]))
         s2 = st.commit.epoch()
         assert [tuple(r) for r in st.changed_between(0, s1, s2).collect()
                 ] == [("m", 60, 3.0)]
+        st.compact(0)
         st.vacuum(grace_s=0.0, now=time.time() + 60)
         with pytest.raises(ValueError, match="retention horizon"):
             st.changed_between(0, s1, s2)
@@ -888,8 +880,8 @@ class TestOneVersionCounter:
         with open(os.path.join(root, "_seq.json"), "w") as fh:
             fh.write('{"last_seq": 100}')
         with pytest.raises(LegacyTreeError, match="migrate"):
-            ParquetTieredStore(spark, SCHEMA, root, mode="mor")
-        st = ParquetTieredStore.migrate(spark, SCHEMA, root, mode="mor")
+            ParquetTieredStore(spark, SCHEMA, root)
+        st = ParquetTieredStore.migrate(spark, SCHEMA, root)
         assert not os.path.exists(os.path.join(root, "_seq.json"))
         assert st.history()[0]["op"] == "compact"
         st.upsert(0, _rows(spark, [("m", 60, 2.0)]))

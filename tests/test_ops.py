@@ -421,7 +421,7 @@ class TestCli:
 
         root = str(tmp_path / "st")
         schema = Schema.from_strings("cli", ".*", "60s:30d", xff=1.0)
-        store = ParquetTieredStore(spark, schema, root, mode="mor")
+        store = ParquetTieredStore(spark, schema, root)
         store.upsert(0, spark.createDataFrame(
             [("m", 60, 1.0)], ["metric", "ts", "value"]))
         store.upsert(0, spark.createDataFrame(
@@ -446,7 +446,7 @@ class TestCli:
 
         root = str(tmp_path / "st")
         schema = Schema.from_strings("cli", ".*", "60s:30d", xff=1.0)
-        store = ParquetTieredStore(spark, schema, root, mode="mor")
+        store = ParquetTieredStore(spark, schema, root)
         store.upsert(0, spark.createDataFrame(
             [("m", 60, 1.0)], ["metric", "ts", "value"]))
         store.upsert(0, spark.createDataFrame(
@@ -469,7 +469,7 @@ class TestCli:
 
         root = str(tmp_path / "st")
         schema = Schema.from_strings("cli", ".*", "60s:30d", xff=1.0)
-        store = ParquetTieredStore(spark, schema, root, mode="mor")
+        store = ParquetTieredStore(spark, schema, root)
         store.upsert(0, spark.createDataFrame(
             [("m", 60, 1.0)], ["metric", "ts", "value"]))
         good = store.commit.epoch()
@@ -479,7 +479,7 @@ class TestCli:
                   "--version", str(good)])
         rep = _json.loads(capsys.readouterr().out)
         assert rep["restored_to"] == good
-        reopened = ParquetTieredStore(spark, schema, root, mode="mor")
+        reopened = ParquetTieredStore(spark, schema, root)
         assert reopened.read(0).collect()[0].value == 1.0
 
     def test_cli_audit_and_compact(self, spark, tmp_path, capsys):
@@ -493,7 +493,7 @@ class TestCli:
 
         root = str(tmp_path / "st")
         schema = Schema.from_strings("cli", ".*", "60s:30d", xff=20.0)
-        store = ParquetTieredStore(spark, schema, root, mode="mor")
+        store = ParquetTieredStore(spark, schema, root)
         for b in range(5):
             store.upsert(0, spark.createDataFrame(
                 [("m", 86400 + 60 * b, float(b))],
@@ -3594,7 +3594,7 @@ class TestAdviceR8Hardening:
             "metric string, ts long, value double, day long",
         )
         legacy.write.partitionBy("day").parquet(f"{root}/tier=0")
-        store = ParquetTieredStore.migrate(spark, self.SCHEMA, root, mode="mor")
+        store = ParquetTieredStore.migrate(spark, self.SCHEMA, root)
         df = spark.createDataFrame(
             [("m", 60, 2.0)], "metric string, ts long, value double"
         )

@@ -402,14 +402,30 @@ class TestIoBudget:
     a time-bounded fetch must read a number of files proportional to
     the WINDOW, never the store."""
 
-    @staticmethod
-    def _files_read(df) -> int:
+    @classmethod
+    def _leaves(cls, node) -> list:
+        """The executed plan's leaves, looking through adaptive query
+        stages (a read that resolves the append log shuffles, so AQE
+        wraps its scan in a stage)."""
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return cls._leaves(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return cls._leaves(node.plan())
+        kids = node.children()
+        if kids.size() == 0:
+            return [node]
+        return [
+            leaf for i in range(kids.size())
+            for leaf in cls._leaves(kids.apply(i))
+        ]
+
+    @classmethod
+    def _files_read(cls, df) -> int:
         df.collect()  # materialize so scan metrics are populated
-        plan = df._jdf.queryExecution().executedPlan()
         total = 0
-        leaves = plan.collectLeaves()
-        for i in range(leaves.size()):
-            m = leaves.apply(i).metrics()
+        for leaf in cls._leaves(df._jdf.queryExecution().executedPlan()):
+            m = leaf.metrics()
             if m.contains("numFiles"):
                 total += int(m.apply("numFiles").value())
         return total
@@ -643,7 +659,7 @@ class TestCdcDayPruning:
 
         schema = Schema.from_strings("s", ".*", "60s:90d", xff=1.0)
         store = ParquetTieredStore(
-            spark, schema, str(tmp_path / "st"), mode="mor"
+            spark, schema, str(tmp_path / "st")
         )
         day = 86400
         # seq 1: 30 days of base data

@@ -860,7 +860,7 @@ def test_targeted_day_compaction_is_read_invariant(
         "s", ".*", "60s:30d", xff=1.0, agg_method="last"
     )
     root = str(tmp_path_factory.mktemp("st"))
-    store = ParquetTieredStore(spark, schema, root, mode="mor")
+    store = ParquetTieredStore(spark, schema, root)
     for b in batches:
         slots = {}
         for m, ts, v in b:

@@ -185,7 +185,6 @@ class TestConcurrentServingDuringWrites:
             SchemaSet((schema,)),
             str(tmp_path / "root"),
             clock=lambda: now,
-            store_mode="mor",
         )
 
         def batch_points(b: int):
@@ -329,9 +328,8 @@ class TestServingUnderCommits:
     files stay on disk until vacuum, and each scan reads exactly the
     snapshot it planned from."""
 
-    def _mk(self, spark, tmp_path, mode="mor"):
-        st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "sl"),
-                                mode=mode)
+    def _mk(self, spark, tmp_path):
+        st = ParquetTieredStore(spark, SCHEMA, str(tmp_path / "sl"))
         st.upsert(
             0,
             spark.createDataFrame(
@@ -399,7 +397,7 @@ class TestServingPool:
     @staticmethod
     def _store(spark, tmp_path, name):
         st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / name), mode="mor"
+            spark, SCHEMA, str(tmp_path / name)
         )
         st.upsert(
             0,
@@ -475,7 +473,7 @@ class TestServingPool:
         from kenshin_spark.serving import store_serving_fns
 
         st = ParquetTieredStore(
-            spark, SCHEMA, str(tmp_path / "iso"), mode="mor"
+            spark, SCHEMA, str(tmp_path / "iso")
         )
         st.upsert(
             0,

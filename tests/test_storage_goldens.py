@@ -1,8 +1,8 @@
 """Golden end-to-end tests ported from the reference suite
 (tests/test_storage.py, tests/test_agg.py), run on the shipped write
 path: same inputs, same expected grids. Each golden feeds its points to
-``StreamingIngest.process_batch`` on the golden's fixed clock, once on a
-cow store and once on a mor store, and reads the grid through both
+``StreamingIngest.process_batch`` on the golden's fixed clock and reads
+the grid through both
 ``ParquetTieredStore.fetch`` and ``ArrowReader.fetch``, which must agree.
 
 The reference's ``update(..., mtime)`` argument has no counterpart: the
@@ -31,7 +31,6 @@ from kenshin_spark.store import ArrowReader
 from kenshin_spark.streaming.ingest import StreamingIngest
 
 NOW = 1411628779  # fixed `now` used by every reference golden
-MODES = ("cow", "mor")
 POINT_SCHEMA = "metric string, ts long, value double"
 NULL = (None, None)
 
@@ -92,12 +91,11 @@ def points_df(spark, seeds, num_metrics=2, null_seeds=()):
     return spark.createDataFrame(rows, POINT_SCHEMA)
 
 
-def ingest(spark, root, schema, mode, *batches):
+def ingest(spark, root, schema, *batches):
     """Feed each point frame to ``process_batch`` on a clock fixed at
     NOW; return the schema's store."""
     ing = StreamingIngest(
-        spark, SchemaSet((schema,)), str(root / mode), clock=lambda: NOW,
-        store_mode=mode,
+        spark, SchemaSet((schema,)), str(root), clock=lambda: NOW
     )
     for batch_id, points in enumerate(batches):
         ing.process_batch(points, batch_id)
@@ -164,11 +162,10 @@ def later_ts_wins(seeds, slot, step, num_metrics=2):
 
 def test_basic_update_fetch(spark, tmp_path):
     # tests/test_storage.py:73-85
-    for mode in MODES:
-        store = ingest(spark, tmp_path, SMALL, mode, points_df(spark, range(1, 6)))
-        res = run_fetch(store, NOW - 5, NOW, NOW)
-        expected = [(float(i), float(10 + i)) for i in range(5, 0, -1)]
-        assert grid_as_list(res, NOW - 5, NOW, 1) == expected, mode
+    store = ingest(spark, tmp_path, SMALL, points_df(spark, range(1, 6)))
+    res = run_fetch(store, NOW - 5, NOW, NOW)
+    expected = [(float(i), float(10 + i)) for i in range(5, 0, -1)]
+    assert grid_as_list(res, NOW - 5, NOW, 1) == expected
 
 
 def test_update_propagate(spark, tmp_path):
@@ -178,10 +175,9 @@ def test_update_propagate(spark, tmp_path):
     want = with_slots(
         REF_UPDATE_PROPAGATE, NOW - 7, 3, {NOW - 1: propagated(seeds, NOW - 1, 3)}
     )
-    for mode in MODES:
-        store = ingest(spark, tmp_path, SMALL, mode, points_df(spark, seeds))
-        res = run_fetch(store, NOW - 7, NOW, NOW)
-        assert grid_as_list(res, NOW - 7, roundup(NOW, 3), 3) == want, mode
+    store = ingest(spark, tmp_path, SMALL, points_df(spark, seeds))
+    res = run_fetch(store, NOW - 7, NOW, NOW)
+    assert grid_as_list(res, NOW - 7, roundup(NOW, 3), 3) == want
 
 
 def test_null_point(spark, tmp_path):
@@ -191,13 +187,12 @@ def test_null_point(spark, tmp_path):
         REF_NULL_POINT, NOW - 7, 3,
         {NOW - 1: propagated(seeds, NOW - 1, 3, null_seeds=nulls)},
     )
-    for mode in MODES:
-        store = ingest(
-            spark, tmp_path, SMALL, mode,
-            points_df(spark, seeds, null_seeds=nulls),
-        )
-        res = run_fetch(store, NOW - 7, NOW, NOW)
-        assert grid_as_list(res, NOW - 7, roundup(NOW, 3), 3) == want, mode
+    store = ingest(
+        spark, tmp_path, SMALL,
+        points_df(spark, seeds, null_seeds=nulls),
+    )
+    res = run_fetch(store, NOW - 7, NOW, NOW)
+    assert grid_as_list(res, NOW - 7, roundup(NOW, 3), 3) == want
 
 
 def test_update_old_points(spark, tmp_path):
@@ -211,18 +206,16 @@ def test_update_old_points(spark, tmp_path):
         REF_UPDATE_OLD_POINTS, lo, 3,
         {slot: later_ts_wins(seeds, slot, 3) for slot in (lo, lo + 3)},
     )
-    for mode in MODES:
-        store = ingest(spark, tmp_path, SMALL, mode, points_df(spark, seeds))
-        res = run_fetch(store, NOW - 13, NOW, NOW)
-        assert grid_as_list(res, lo, roundup(NOW, 3), 3) == want, mode
+    store = ingest(spark, tmp_path, SMALL, points_df(spark, seeds))
+    res = run_fetch(store, NOW - 13, NOW, NOW)
+    assert grid_as_list(res, lo, roundup(NOW, 3), 3) == want
 
 
 def test_fetch_empty_metric(spark, tmp_path):
     # tests/test_storage.py:127-133 — empty series → all-null grid
-    for mode in MODES:
-        store = ingest(spark, tmp_path, SMALL, mode)
-        res = run_fetch(store, NOW - 4, NOW, NOW)
-        assert grid_as_list(res, NOW - 4, NOW, 1) == [NULL] * 4, mode
+    store = ingest(spark, tmp_path, SMALL)
+    res = run_fetch(store, NOW - 4, NOW, NOW)
+    assert grid_as_list(res, NOW - 4, NOW, 1) == [NULL] * 4
 
 
 def test_lost_points_update_propagate(spark, tmp_path):
@@ -236,13 +229,12 @@ def test_lost_points_update_propagate(spark, tmp_path):
         REF_LOST_POINTS_UPDATE_PROPAGATE, lo, 3,
         {slot: propagated(seeds, slot, 3) for slot in (hi - 6, hi - 3)},
     )
-    for mode in MODES:
-        store = ingest(
-            spark, tmp_path, LOST, mode,
-            *(points_df(spark, s) for s in seeds_list),
-        )
-        res = run_fetch(store, NOW - 61, NOW, NOW)
-        assert grid_as_list(res, lo, hi, 3) == want, mode
+    store = ingest(
+        spark, tmp_path, LOST,
+        *(points_df(spark, s) for s in seeds_list),
+    )
+    res = run_fetch(store, NOW - 61, NOW, NOW)
+    assert grid_as_list(res, lo, hi, 3) == want
 
 
 def test_lost_points_special_start_time(spark, tmp_path):
@@ -250,26 +242,24 @@ def test_lost_points_special_start_time(spark, tmp_path):
     # boundary must still propagate.
     from_ts = 1411628760
     until_ts = from_ts + 15
-    for mode in MODES:
-        store = ingest(
-            spark, tmp_path, LOST, mode,
-            points_df(spark, range(10, 20)), points_df(spark, range(1, 7)),
-        )
-        res = run_fetch(store, from_ts, until_ts, from_ts + 61)
-        assert grid_as_list(res, from_ts, roundup(until_ts, 3), 3) == [
-            (17.0, 27.0), (14.0, 24.0), (11.0, 21.0), (10.0, 20.0),
-            (5.0, 15.0),
-        ], mode
+    store = ingest(
+        spark, tmp_path, LOST,
+        points_df(spark, range(10, 20)), points_df(spark, range(1, 7)),
+    )
+    res = run_fetch(store, from_ts, until_ts, from_ts + 61)
+    assert grid_as_list(res, from_ts, roundup(until_ts, 3), 3) == [
+        (17.0, 27.0), (14.0, 24.0), (11.0, 21.0), (10.0, 20.0),
+        (5.0, 15.0),
+    ]
 
 
 def test_lost_points_basic_update(spark, tmp_path):
     # tests/test_storage.py:207-218 — gap inside one batch
-    for mode in MODES:
-        store = ingest(spark, tmp_path, LOST, mode, points_df(spark, [1, 2, 4, 5]))
-        res = run_fetch(store, NOW - 5, NOW, NOW)
-        assert grid_as_list(res, NOW - 5, NOW, 1) == [
-            (5.0, 15.0), (4.0, 14.0), NULL, (2.0, 12.0), (1.0, 11.0),
-        ], mode
+    store = ingest(spark, tmp_path, LOST, points_df(spark, [1, 2, 4, 5]))
+    res = run_fetch(store, NOW - 5, NOW, NOW)
+    assert grid_as_list(res, NOW - 5, NOW, 1) == [
+        (5.0, 15.0), (4.0, 14.0), NULL, (2.0, 12.0), (1.0, 11.0),
+    ]
 
 
 def test_multi_archive_time_range(spark, tmp_path):
@@ -278,16 +268,15 @@ def test_multi_archive_time_range(spark, tmp_path):
     schema = make_schema([(1, 60), (3, 60), (6, 60)], 5.0)
     from_ts = 1411628760 - 2 * 6
     until_ts = 1411628760
-    for mode in MODES:
-        store = ingest(
-            spark, tmp_path, schema, mode,
-            points_df(spark, range(19, 30), num_metrics=3),
-        )
-        res = run_fetch(store, from_ts, until_ts, from_ts + 181, num_metrics=3)
-        assert grid_as_list(res, from_ts, roundup(until_ts, 6), 6) == [
-            (26.0, 36.0, 46.0),
-            (20.0, 30.0, 40.0),
-        ], mode
+    store = ingest(
+        spark, tmp_path, schema,
+        points_df(spark, range(19, 30), num_metrics=3),
+    )
+    res = run_fetch(store, from_ts, until_ts, from_ts + 181, num_metrics=3)
+    assert grid_as_list(res, from_ts, roundup(until_ts, 6), 6) == [
+        (26.0, 36.0, 46.0),
+        (20.0, 30.0, 40.0),
+    ]
 
 
 def test_agg_goldens(spark, tmp_path):
@@ -307,33 +296,27 @@ def test_agg_goldens(spark, tmp_path):
                agg_method=agg)
         for agg in expected
     ))
-    for mode in MODES:
-        ing = StreamingIngest(
-            spark, schemas, str(tmp_path / mode), clock=lambda: 110,
-            store_mode=mode,
-        )
-        ing.process_batch(df, 0)
-        for schema in schemas.schemas:
-            tier1 = ing.store_for(schema).read(1).select("metric", "ts", "value")
-            assert [tuple(r) for r in tier1.collect()] == [
-                (schema.name, 100, expected[schema.name])
-            ], mode
+    ing = StreamingIngest(spark, schemas, str(tmp_path), clock=lambda: 110)
+    ing.process_batch(df, 0)
+    for schema in schemas.schemas:
+        tier1 = ing.store_for(schema).read(1).select("metric", "ts", "value")
+        assert [tuple(r) for r in tier1.collect()] == [
+            (schema.name, 100, expected[schema.name])
+        ]
 
 
 def test_fetch_outside_retention_returns_none(spark, tmp_path):
     # kenshin/storage.py:630-634 — window entirely older than retention
-    for mode in MODES:
-        store = ingest(spark, tmp_path, SMALL, mode)
-        assert run_fetch(store, NOW - 100, NOW - 50, NOW) is None, mode
+    store = ingest(spark, tmp_path, SMALL)
+    assert run_fetch(store, NOW - 100, NOW - 50, NOW) is None
 
 
 def test_fetch_inverted_range_raises(spark, tmp_path):
-    for mode in MODES:
-        store = ingest(spark, tmp_path, SMALL, mode)
-        with pytest.raises(ValueError):
-            store.fetch(["m0"], NOW, NOW - 5, NOW)
-        with pytest.raises(ValueError):
-            ArrowReader(store).fetch(["m0"], NOW, NOW - 5, NOW)
+    store = ingest(spark, tmp_path, SMALL)
+    with pytest.raises(ValueError):
+        store.fetch(["m0"], NOW, NOW - 5, NOW)
+    with pytest.raises(ValueError):
+        ArrowReader(store).fetch(["m0"], NOW, NOW - 5, NOW)
 
 
 def test_fetch_zero_width_window_empty(spark, tmp_path):
@@ -345,11 +328,10 @@ def test_fetch_zero_width_window_empty(spark, tmp_path):
     # last 30 s: from/until round to the same 60 s boundary
     from_ts = roundup(NOW, 60) - 59
     until_ts = from_ts + 30
-    for mode in MODES:
-        store = ingest(spark, tmp_path, schema, mode, points_df(spark, range(1, 6)))
-        df = store.fetch(["m0"], from_ts, until_ts, NOW)
-        assert df is not None and df.count() == 0, mode
-        assert df.columns == ["metric", "ts", "value"]
-        assert ArrowReader(store).fetch(["m0"], from_ts, until_ts, NOW) == []
-        # direct grid_fill with an equal rounded window behaves the same
-        assert grid_fill(store.read(0), ["m0"], 121, 130, 60).count() == 0
+    store = ingest(spark, tmp_path, schema, points_df(spark, range(1, 6)))
+    df = store.fetch(["m0"], from_ts, until_ts, NOW)
+    assert df is not None and df.count() == 0
+    assert df.columns == ["metric", "ts", "value"]
+    assert ArrowReader(store).fetch(["m0"], from_ts, until_ts, NOW) == []
+    # direct grid_fill with an equal rounded window behaves the same
+    assert grid_fill(store.read(0), ["m0"], 121, 130, 60).count() == 0

@@ -348,38 +348,35 @@ class TestStore:
         import pandas as pd
         import pyarrow.parquet as pq
 
-        for mode in ("cow", "mor"):
-            schema = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
-            store = ParquetTieredStore(
-                spark, schema, str(tmp_path / f"st_{mode}"), mode=mode
-            )
-            # deliberately unsorted input, one day partition
-            pts = spark.createDataFrame(
-                [("z", 120, 1.0), ("a", 60, 2.0), ("m", 0, 3.0),
-                 ("a", 0, 4.0), ("z", 0, 5.0)],
+        schema = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
+        store = ParquetTieredStore(spark, schema, str(tmp_path / "st"))
+        # deliberately unsorted input, one day partition
+        pts = spark.createDataFrame(
+            [("z", 120, 1.0), ("a", 60, 2.0), ("m", 0, 3.0),
+             ("a", 0, 4.0), ("z", 0, 5.0)],
+            ["metric", "ts", "value"],
+        ).coalesce(1)
+        store.upsert(0, pts)
+        store.upsert(  # second write exercises the append path
+            0,
+            spark.createDataFrame(
+                [("q", 60, 6.0), ("b", 0, 7.0)],
                 ["metric", "ts", "value"],
-            ).coalesce(1)
-            store.upsert(0, pts)
-            store.upsert(  # second write exercises merge/append paths
-                0,
-                spark.createDataFrame(
-                    [("q", 60, 6.0), ("b", 0, 7.0)],
-                    ["metric", "ts", "value"],
-                ).coalesce(1),
+            ).coalesce(1),
+        )
+        day_dir = os.path.join(store.tier_path(0), "day=0")
+        for f in os.listdir(day_dir):
+            if not f.endswith(".parquet"):
+                continue
+            pdf = pq.read_table(
+                os.path.join(day_dir, f), columns=["metric", "ts"]
+            ).to_pandas()
+            ordered = pdf.sort_values(
+                ["metric", "ts"], ignore_index=True
             )
-            day_dir = os.path.join(store.tier_path(0), "day=0")
-            for f in os.listdir(day_dir):
-                if not f.endswith(".parquet"):
-                    continue
-                pdf = pq.read_table(
-                    os.path.join(day_dir, f), columns=["metric", "ts"]
-                ).to_pandas()
-                ordered = pdf.sort_values(
-                    ["metric", "ts"], ignore_index=True
-                )
-                pd.testing.assert_frame_equal(
-                    pdf.reset_index(drop=True), ordered
-                ), (mode, f)
+            pd.testing.assert_frame_equal(
+                pdf.reset_index(drop=True), ordered
+            )
 
     def test_sorted_writes_give_tight_row_group_stats(
         self, spark, tmp_path
@@ -650,7 +647,7 @@ class TestCompaction:
             "s", ".*", "60s:30d", xff=1.0, agg_method="last"
         )
         store = ParquetTieredStore(
-            spark, schema, str(tmp_path / "st"), mode="mor"
+            spark, schema, str(tmp_path / "st")
         )
         day = 86400
         # cold day: one clean write
@@ -700,11 +697,9 @@ class TestCompaction:
             str(tmp_path / "store"),
         )
         now0 = 10 * 86400
-        # mor mode: every micro-batch APPENDS, so the hot hour
-        # fragments (cow rewrites the touched partition per flush)
+        # every micro-batch APPENDS, so the hot hour fragments
         ingest = StreamingIngest(
-            spark, SCHEMAS, root, clock=FakeClock(now0),
-            store_mode="mor",
+            spark, SCHEMAS, root, clock=FakeClock(now0)
         )
         # several micro-batches into the same HOUR fragment tier 0
         # (slow schema 60s:1d → hourly partitions)
@@ -872,26 +867,31 @@ class TestStatefulHolt:
 
 
 class TestMergeOnRead:
-    def test_mor_equals_cow_semantics(self, spark, tmp_path):
-        """Same upsert sequence through both modes → identical reads;
-        mor compaction folds the log without changing results."""
+    def test_resolve_equals_one_pass_lww(self, spark, tmp_path):
+        """An upsert sequence reads back as one last-write-wins pass
+        over every batch in arrival order; compaction folds the log
+        without changing results."""
         schema = Schema.from_strings("s", ".*", "60s:1d,300s:7d", xff=1.0)
-        cow = ParquetTieredStore(spark, schema, str(tmp_path / "cow"))
-        mor = ParquetTieredStore(
-            spark, schema, str(tmp_path / "mor"), mode="mor"
-        )
+        mor = ParquetTieredStore(spark, schema, str(tmp_path / "mor"))
         batches = [
             [("m1", 0, 1.0), ("m2", 60, 2.0)],
             [("m1", 0, 9.0), ("m1", 120, 3.0)],   # overwrite + new
             [("m2", 60, None), ("m3", 0, 5.0)],   # NULL overwrite + create
         ]
         for b in batches:
-            df = spark.createDataFrame(b, "metric string, ts long, value double")
-            cow.upsert(0, df)
-            mor.upsert(0, df)
-        assert rows(cow.read(0)) == rows(mor.read(0))
-        # range reads resolve identically
-        assert rows(cow.read_range(0, 0, 100)) == rows(mor.read_range(0, 0, 100))
+            mor.upsert(0, spark.createDataFrame(
+                b, "metric string, ts long, value double"
+            ))
+        lww = {}
+        for b in batches:
+            for m, ts, v in b:
+                lww[(m, ts)] = v
+        want = sorted((m, ts, v) for (m, ts), v in lww.items())
+        assert rows(mor.read(0)) == want
+        # range reads resolve the same way
+        assert rows(mor.read_range(0, 0, 100)) == [
+            r for r in want if r[1] < 100
+        ]
         before = rows(mor.read(0))
         mor.compact(0)
         assert rows(mor.read(0)) == before
@@ -907,24 +907,21 @@ class TestMergeOnRead:
     def test_snapshot_read_by_version(self, spark, tmp_path):
         """read(version=seq) pins the store state after that manifest
         commit: later appends are invisible and snapshots are
-        batch-atomic — in cow mode too, which keeps history in the log."""
+        batch-atomic."""
         schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
-        for mode in ("mor", "cow"):
-            st = ParquetTieredStore(
-                spark, schema, str(tmp_path / mode), mode=mode
-            )
-            st.upsert(0, spark.createDataFrame(
-                [("m1", 0, 1.0), ("m2", 60, 2.0)],
-                "metric string, ts long, value double"))
-            s1 = st.commit.epoch()
-            st.upsert(0, spark.createDataFrame(
-                [("m1", 0, 9.0), ("m3", 0, 5.0)],
-                "metric string, ts long, value double"))
-            assert rows(st.read(0, version=s1)) == [
-                ("m1", 0, 1.0), ("m2", 60, 2.0)]
-            assert rows(st.read(0, version=st.commit.epoch())) == rows(
-                st.read(0))
-            assert ("m1", 0, 9.0) in rows(st.read(0))
+        st = ParquetTieredStore(spark, schema, str(tmp_path / "st"))
+        st.upsert(0, spark.createDataFrame(
+            [("m1", 0, 1.0), ("m2", 60, 2.0)],
+            "metric string, ts long, value double"))
+        s1 = st.commit.epoch()
+        st.upsert(0, spark.createDataFrame(
+            [("m1", 0, 9.0), ("m3", 0, 5.0)],
+            "metric string, ts long, value double"))
+        assert rows(st.read(0, version=s1)) == [
+            ("m1", 0, 1.0), ("m2", 60, 2.0)]
+        assert rows(st.read(0, version=st.commit.epoch())) == rows(
+            st.read(0))
+        assert ("m1", 0, 9.0) in rows(st.read(0))
 
     def test_mor_append_is_o_batch(self, spark, tmp_path):
         """mor upsert appends exactly the batch's rows — no rewrite of
@@ -933,7 +930,7 @@ class TestMergeOnRead:
 
         schema = Schema.from_strings("s", ".*", "60s:30d", xff=1.0)
         mor = ParquetTieredStore(
-            spark, schema, str(tmp_path / "mor"), mode="mor"
+            spark, schema, str(tmp_path / "mor")
         )
         big = spark.createDataFrame(
             [("m%d" % i, 0, 1.0) for i in range(1000)],
@@ -964,7 +961,7 @@ class TestObjectStoreSafety:
     def test_store_ops_on_file_uri_root(self, spark, tmp_path):
         schema = Schema.from_strings("s", ".*", "60s:1d,300s:7d", xff=1.0)
         root = "file://" + str(tmp_path / "uri_store")
-        st = ParquetTieredStore(spark, schema, root, mode="mor")
+        st = ParquetTieredStore(spark, schema, root)
         st.upsert(0, spark.createDataFrame(
             [("m1", 0, 1.0), ("m2", 60, 2.0)],
             "metric string, ts long, value double"))
@@ -1016,7 +1013,7 @@ class TestObjectStoreSafety:
         errors = []
 
         def writer(w):
-            st = ParquetTieredStore(spark, schema, root, mode="mor")
+            st = ParquetTieredStore(spark, schema, root)
             try:
                 for k in range(2):
                     st.upsert(0, spark.createDataFrame(
@@ -1040,7 +1037,7 @@ class TestObjectStoreSafety:
             sys.setswitchinterval(interval)
         assert not any(t.is_alive() for t in threads)
         assert not errors
-        st = ParquetTieredStore(spark, schema, root, mode="mor")
+        st = ParquetTieredStore(spark, schema, root)
         assert st.commit.epoch() == 2 * n_writers
         for seq in range(1, 2 * n_writers + 1):
             added = set(st.commit.snapshot(seq)) - set(
@@ -1104,7 +1101,7 @@ class TestChangeDataFeed:
         untouched rows."""
         schema = Schema.from_strings("s", ".*", "60s:1d", xff=1.0)
         mor = ParquetTieredStore(
-            spark, schema, str(tmp_path / "cdc"), mode="mor"
+            spark, schema, str(tmp_path / "cdc")
         )
         mor.upsert(0, spark.createDataFrame(
             [("m1", 0, 1.0), ("m2", 60, 2.0)],
@@ -1129,7 +1126,7 @@ class TestCatchUpPropagation:
             "s", ".*", "60s:1d,300s:7d", xff=1.0, agg_method="average"
         )
         mor = ParquetTieredStore(
-            spark, schema, str(tmp_path / "cb"), mode="mor"
+            spark, schema, str(tmp_path / "cb")
         )
         # normal cascaded write
         first = spark.createDataFrame(
@@ -1154,7 +1151,7 @@ class TestBackup:
     def test_backup_to_copies_everything_restorable(self, spark, tmp_path):
         schema = Schema.from_strings("s", ".*", "60s:1d,300s:7d", xff=1.0)
         src = ParquetTieredStore(
-            spark, schema, str(tmp_path / "live"), mode="mor"
+            spark, schema, str(tmp_path / "live")
         )
         src.upsert(0, spark.createDataFrame(
             [("m", 0, 1.0), ("m", 60, 2.0)],
@@ -1165,7 +1162,7 @@ class TestBackup:
         # tier0 + catalog + the manifest log (tier1 empty)
         assert len(copied) == 3
         restored = ParquetTieredStore(
-            spark, schema, str(tmp_path / "bak"), mode="mor"
+            spark, schema, str(tmp_path / "bak")
         )
         assert rows(restored.read(0)) == rows(src.read(0))
         assert restored.commit.epoch() == src.commit.epoch()

@@ -293,8 +293,7 @@ def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
     root = tempfile.mkdtemp(prefix="kenshin_load_a_")
     try:
         ing = StreamingIngest(
-            spark, SchemaSet((schema,)), root, clock=lambda: now,
-            store_mode="mor",
+            spark, SchemaSet((schema,)), root, clock=lambda: now
         )
         ing.process_batch(pts.where(F.col("arrival") % n_batches == 0), 0)
         store = ing.store_for(schema)
@@ -344,8 +343,7 @@ def run(spark, sf_dir: str, target_rows: int, n_clients: int = 8,
     in_dir, cp, root = f"{tmp}/in", f"{tmp}/cp", f"{tmp}/store"
     try:
         ing = StreamingIngest(
-            spark, SchemaSet((schema,)), root, clock=lambda: now,
-            store_mode="mor",
+            spark, SchemaSet((schema,)), root, clock=lambda: now
         )
         lo, hi = [int(v) for v in pts.agg(F.min("ts"), F.max("ts")).first()]
         span = max(1, hi - lo + 1)
